@@ -1,6 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Bench mirror roots under `tmp` built for a layout other than
+    * `layout`, the current layout's root prefix. */
+  private[graft] def staleMirrors(tmp: java.io.File, layout: String): Seq[java.io.File] =
+    Option(tmp.listFiles()).toSeq.flatten.filter(f =>
+      f.getName.startsWith("graft_bench_mirror_") && !f.getName.startsWith(layout))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -52,17 +58,17 @@ object Bench {
         // processes, so a split-rule change must land in a FRESH root —
         // otherwise a host that ever built the old layout silently
         // benches against it forever
-        val root = s"/tmp/graft_bench_mirror_v5_$hex"
+        val layout = "graft_bench_mirror_v5_"
+        val root = s"/tmp/$layout$hex"
         val ready = Paths.get(root, "_MIRROR_READY")
         if (!Files.exists(ready)) {
-          // building a fresh layout: delete every OTHER mirror root
-          // (prior layout versions, prior fixture dirs) so orphaned
-          // full-dataset copies don't accumulate in /tmp across layout
-          // bumps (round-15 advice). Best-effort — a failure here can
-          // only leave the nuisance it was cleaning.
-          Option(new java.io.File("/tmp").listFiles()).toSeq.flatten
-            .filter(f => f.getName.startsWith("graft_bench_mirror_") &&
-              f.getPath != root)
+          // building a fresh layout: delete the mirror roots of prior
+          // layout versions so orphaned full-dataset copies don't
+          // accumulate in /tmp across layout bumps. Roots of the current
+          // layout stay: another process may be building or scanning one
+          // (a mirror of another fixture dir). Best-effort — a failure
+          // here can only leave the nuisance it was cleaning.
+          staleMirrors(new java.io.File("/tmp"), layout)
             .foreach(f => try graft.ops.Staging.deleteTree(f.getPath)
               catch { case _: Throwable => () })
           for (t <- Tables.all) {

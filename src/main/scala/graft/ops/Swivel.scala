@@ -15,7 +15,7 @@ object Swivel {
 
   /** Shared DuckDB CTE prefix: tokens → vocab → id-mapped tokens → ordered
     * in-window pairs (both orientations) → per-distance counts per cell.
-    * Weight = fixed-order Σ_d n_d/d (matches SwivelPrep.weightExpr). */
+    * Weight = fixed-order Σ_d n_d/d (matches SwivelPrep.cellsFromCounts). */
   private val weightSql: String =
     (1 to WindowSize).map(k => s"sum(CASE WHEN dd = $k THEN 1 ELSE 0 END) / $k.0")
       .mkString(" + ")

@@ -7,9 +7,13 @@ import graft.sources.Sources
   * reference driver's flag surface (SURVEY.md §3.1 E1: --input,
   * --output_dir, --shard_size, --min_count, --window_size).
   *
-  * Reads a corpus (plain-text lines or a parquet documents table), runs
-  * tokenize → vocab → cooc → marginals → shard, and writes:
+  * Reads a corpus (plain-text lines or a parquet documents table), builds
+  * the vocab, then derives the windowed pairs ONCE: their per-cell integer
+  * distance counts (`SwivelPrep.cellCounts`) are landed a single time, and
+  * the cells, the marginals, the shards and the final cell count all read
+  * that one landed relation. Writes:
   *   <output_dir>/shards/   parquet partitioned by (row_shard, col_shard)
+  *                          (or shards_pb/ + the .txt side files for pb)
   *   <output_dir>/vocab/    (id, token, cnt)
   *   <output_dir>/row_sums/ (id, marginal)   [= col sums; matrix symmetric]
   */
@@ -19,18 +23,28 @@ object SwivelMain {
       |        [--input_format text|parquet] [--shard_size 4096]
       |        [--min_count 5] [--window_size 10] [--output_format parquet|pb]""".stripMargin
 
-  def main(args: Array[String]): Unit = {
+  /** The CLI flags, with the reference driver's defaults. */
+  final case class Options(input: String, outDir: String, shardSize: Int = 4096,
+      minCount: Int = 5, windowSize: Int = 10, inputFormat: String = "text",
+      outputFormat: String = "parquet")
+
+  /** Flag parsing; prints the usage and exits 2 without --input/--output_dir. */
+  private def parse(args: Array[String]): Options = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val input = opts.getOrElse("input", { System.err.println(usage); sys.exit(2) })
-    val outDir = opts.getOrElse("output_dir", { System.err.println(usage); sys.exit(2) })
-    val shardSize = opts.getOrElse("shard_size", "4096").toInt
-    val minCount = opts.getOrElse("min_count", "5").toInt
-    val windowSize = opts.getOrElse("window_size", "10").toInt
-    val fmt = opts.getOrElse("input_format", "text")
-    val outFmt = opts.getOrElse("output_format", "parquet")
+    def required(k: String) = opts.getOrElse(k, { System.err.println(usage); sys.exit(2) })
+    val d = Options(required("input"), required("output_dir"))
+    d.copy(
+      shardSize = opts.get("shard_size").fold(d.shardSize)(_.toInt),
+      minCount = opts.get("min_count").fold(d.minCount)(_.toInt),
+      windowSize = opts.get("window_size").fold(d.windowSize)(_.toInt),
+      inputFormat = opts.getOrElse("input_format", d.inputFormat),
+      outputFormat = opts.getOrElse("output_format", d.outputFormat))
+  }
 
+  def main(args: Array[String]): Unit = {
+    val opts = parse(args)
     val builder = SparkSession.builder()
       .appName("swivel-prep")
       .config("spark.sql.session.timeZone", "UTC")
@@ -38,62 +52,61 @@ object SwivelMain {
     // to local[*] for direct java invocation
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master("local[*]")).getOrCreate()
-    try {
-      val docs = fmt match {
-        case "parquet" => spark.read.parquet(input).select("doc_id", "text")
-        case _         => Sources.textCorpus(spark, input)
-      }
-      val vocab = SwivelPrep.buildVocab(docs, minCount, shardSize)
-      // vocab is reused by cooc/marginals/shard — tiny (≤ truncated size),
-      // cache instead of recomputing the corpus-wide count per stage
-      vocab.cache()
-      val cells = SwivelPrep.cooc(docs, vocab, windowSize)
-      val sharded = SwivelPrep.shard(cells, vocab, shardSize)
-      // materialized once: both output branches read marginals, and the
-      // pb branch reads them twice (text sums + parquet side output) —
-      // without this the most expensive stage (cooc pair derivation)
-      // would re-run per consumer
-      val marg = SwivelPrep.marginals(docs, vocab, windowSize).localCheckpoint()
-      val vocabSize = vocab.count().toInt
-      if (vocabSize == 0) {
-        // corpus smaller than one shard: vocab truncates to zero — mirror
-        // the parquet path's graceful empty output instead of crashing in
-        // the .pb writer's require
-        System.err.println(
-          s"swivel-prep: vocabulary is empty after truncation to a multiple " +
-            s"of shard_size=$shardSize — no shards to write")
-      } else if (outFmt == "pb") {
-        // the reference trainer's own input layout: one serialized
-        // tensorflow.Example per shard (shard-RRR-CCC.pb) plus the
-        // vocab/sums TEXT side files it loads alongside them. Vocab and
-        // sums are driver-bounded (truncated vocabulary), so a driver-side
-        // text write is the honest scale story; the matrix is symmetric,
-        // so row and col files are identical.
-        graft.sources.TfExample.writeSwivelPbShards(sharded,
-          vocabSize / shardSize, vocabSize, s"$outDir/shards_pb")
-        import org.apache.spark.sql.functions.{col, coalesce, lit}
-        import spark.implicits._
-        val tokens = vocab.orderBy("id").select("token").as[String].collect()
-        // every vocab id gets a sum line; ids with no in-window pairs are 0
-        val sums = vocab.select(col("id"))
-          .join(marg, Seq("id"), "left")
-          .select(col("id"), coalesce(col("marginal"), lit(0.0)).as("m"))
-          .orderBy("id").select("m").as[Double].collect()
-        def writeLines(name: String, lines: Iterable[String]): Unit =
-          java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
-            (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        writeLines("row_vocab.txt", tokens)
-        writeLines("col_vocab.txt", tokens)
-        // plain-decimal, never scientific: Double.toString renders small
-        // 4dp-rounded marginals as "1.0E-4", which diverges from the
-        // reference tooling's one-plain-value-per-line sums layout. The
-        // marginals are 4dp-rounded upstream, so fixed %.4f is exact.
-        writeLines("row_sums.txt", sums.map(v => f"$v%.4f"))
-        writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
-      } else Sources.writeShards(sharded, s"$outDir/shards")
-      Sources.writeSideOutput(vocab, s"$outDir/vocab")
-      Sources.writeSideOutput(marg, s"$outDir/row_sums")
-      println(s"swivel-prep done: vocab=${vocab.count()} cells=${cells.count()} -> $outDir")
-    } finally spark.stop()
+    try run(spark, opts) finally spark.stop()
+  }
+
+  /** The whole pipeline on `spark`, corpus to every output file. */
+  def run(spark: SparkSession, opts: Options): Unit = {
+    import opts._
+    val docs = inputFormat match {
+      case "parquet" => spark.read.parquet(input).select("doc_id", "text")
+      case _         => Sources.textCorpus(spark, input)
+    }
+    // an eager local checkpoint: every consumer reads the landed vocab
+    val vocab = SwivelPrep.buildVocab(docs, minCount, shardSize)
+    val vocabSize = vocab.count().toInt
+    // the one pair pass: exact per-cell distance counts, landed eagerly
+    val counts = SwivelPrep.cellCounts(docs, vocab, windowSize).localCheckpoint()
+    val cells = SwivelPrep.cellsFromCounts(counts, windowSize)
+    val sharded = SwivelPrep.shard(cells, vocab, shardSize)
+    val marg = SwivelPrep.marginalsFromCounts(counts, windowSize)
+    if (vocabSize == 0) {
+      // corpus smaller than one shard: vocab truncates to zero — mirror
+      // the parquet path's graceful empty output instead of crashing in
+      // the .pb writer's require
+      System.err.println(
+        s"swivel-prep: vocabulary is empty after truncation to a multiple " +
+          s"of shard_size=$shardSize — no shards to write")
+    } else if (outputFormat == "pb") {
+      // the reference trainer's own input layout: one serialized
+      // tensorflow.Example per shard (shard-RRR-CCC.pb) plus the
+      // vocab/sums TEXT side files it loads alongside them. Vocab and
+      // sums are driver-bounded (truncated vocabulary), so a driver-side
+      // text write is the honest scale story; the matrix is symmetric,
+      // so row and col files are identical.
+      graft.sources.TfExample.writeSwivelPbShards(sharded,
+        vocabSize / shardSize, vocabSize, s"$outDir/shards_pb")
+      import spark.implicits._
+      val tokens = vocab.orderBy("id").select("token").as[String].collect()
+      // every vocab id gets a sum line; ids with no in-window pairs are 0
+      val sums = Array.fill(vocabSize)(0.0)
+      marg.as[(Long, Double)].collect().foreach { case (id, m) => sums(id.toInt) = m }
+      def writeLines(name: String, lines: Iterable[String]): Unit =
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
+          (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      writeLines("row_vocab.txt", tokens)
+      writeLines("col_vocab.txt", tokens)
+      // plain-decimal, never scientific: Double.toString renders small
+      // 4dp-rounded marginals as "1.0E-4", which diverges from the
+      // reference tooling's one-plain-value-per-line sums layout. The
+      // marginals are 4dp-rounded upstream, so fixed %.4f is exact.
+      writeLines("row_sums.txt", sums.map(v => f"$v%.4f"))
+      writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
+    } else Sources.writeShards(sharded, s"$outDir/shards")
+    Sources.writeSideOutput(vocab, s"$outDir/vocab")
+    Sources.writeSideOutput(marg, s"$outDir/row_sums")
+    println(s"swivel-prep done: vocab=$vocabSize cells=${counts.count()} -> $outDir")
+    // free the landed blocks: `run` may share a long-lived session
+    Seq(counts, vocab).foreach(org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint)
   }
 }

@@ -114,18 +114,50 @@ object SwivelPrep {
       .union(pairs.select(col("y").as("row_id"), col("x").as("col_id"), col("dd")))
   }
 
-  /** Fixed-order Σ_d n_d/d over the conditional per-distance counts —
+  /** Exact integer per-distance counts n1..nW grouped by `keys`: counted
+    * from the `dd` column of a pair relation, or summed from the n_k
+    * columns of a counts relation (integer sums, so any grouping order
+    * lands the same totals). */
+  private def distanceCounts(df: DataFrame, windowSize: Int, keys: String*): DataFrame = {
+    val fromPairs = df.columns.contains("dd")
+    val n = (1 to windowSize).map(k =>
+      (if (fromPairs) sum(when(col("dd") === k, 1L).otherwise(0L)) else sum(col(s"n$k")))
+        .as(s"n$k"))
+    df.groupBy(keys.map(col): _*).agg(n.head, n.tail: _*)
+  }
+
+  /** Fixed-order left-to-right Σ_k term(n_k, k) over the count columns —
     * see the determinism note in the object scaladoc. */
-  private def weightExpr(windowSize: Int): Column =
-    (1 to windowSize).map(k => sum(when(col("dd") === k, 1L).otherwise(0L)) / lit(k.toDouble))
-      .reduceLeft(_ + _)
+  private def fromCounts(windowSize: Int)(term: (Column, Int) => Column): Column =
+    (1 to windowSize).map(k => term(col(s"n$k"), k)).reduceLeft(_ + _)
+
+  /** Σ_k n_k/k rounded 4dp at the boundary. */
+  private def weight(windowSize: Int): Column =
+    round(fromCounts(windowSize)((n, k) => n / lit(k.toDouble)), 4)
+
+  /** Per-cell pair counts: (row_id, col_id, n1..nW), n_k the number of
+    * in-window co-occurrences at distance k. Every other Swivel relation
+    * (cells, marginals, shards) derives from these exact integers, so a
+    * pipeline can land them once and read them per consumer. */
+  def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
+    distanceCounts(coocPairs(docs, vocab, windowSize), windowSize, "row_id", "col_id")
+
+  /** Co-occurrence cells from `cellCounts`: (row_id, col_id, weight). */
+  def cellsFromCounts(counts: DataFrame, windowSize: Int): DataFrame =
+    counts.select(col("row_id"), col("col_id"), weight(windowSize).as("weight"))
+
+  /** Row sums of the (symmetric) co-occurrence matrix per token id from
+    * `cellCounts` (or straight from `coocPairs`): the per-row integer
+    * totals of each n_k, then the same fixed-order weight, so marginals
+    * sum the UNROUNDED cell weights. */
+  def marginalsFromCounts(counts: DataFrame, windowSize: Int): DataFrame =
+    distanceCounts(counts, windowSize, "row_id")
+      .select(col("row_id").as("id"), weight(windowSize).as("marginal"))
 
   /** Co-occurrence cells: (row_id, col_id, weight) with weight = Σ 1/d
     * over all in-window co-occurrences, rounded 4dp at the boundary. */
   def cooc(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
-    coocPairs(docs, vocab, windowSize)
-      .groupBy("row_id", "col_id")
-      .agg(round(weightExpr(windowSize), 4).as("weight"))
+    cellsFromCounts(cellCounts(docs, vocab, windowSize), windowSize)
 
   /** Skew-hardened variant: Zipfian corpora make the hot tokens' cells
     * (e.g. (the,the)) receive a large share of all pairs, so a single
@@ -138,25 +170,17 @@ object SwivelPrep {
     */
   def coocSalted(docs: DataFrame, vocab: DataFrame, windowSize: Int,
       saltBuckets: Int = 64): DataFrame = {
-    val partials = coocPairs(docs, vocab, windowSize)
+    val salted = coocPairs(docs, vocab, windowSize)
       .withColumn("salt", pmod(hash(col("row_id"), col("col_id"), monotonically_increasing_id()), lit(saltBuckets)))
-      .groupBy("row_id", "col_id", "salt")
-      .agg((1 to windowSize).map(k =>
-        sum(when(col("dd") === k, 1L).otherwise(0L)).as(s"n$k")).head,
-        (2 to windowSize).map(k =>
-          sum(when(col("dd") === k, 1L).otherwise(0L)).as(s"n$k")): _*)
-    val merged = partials.groupBy("row_id", "col_id")
-      .agg((1 to windowSize).map(k => sum(col(s"n$k")).as(s"n$k")).head,
-        (2 to windowSize).map(k => sum(col(s"n$k")).as(s"n$k")): _*)
-    val w = (1 to windowSize).map(k => col(s"n$k") / lit(k.toDouble)).reduceLeft(_ + _)
-    merged.select(col("row_id"), col("col_id"), round(w, 4).as("weight"))
+    val partials = distanceCounts(salted, windowSize, "row_id", "col_id", "salt")
+    cellsFromCounts(distanceCounts(partials, windowSize, "row_id", "col_id"), windowSize)
   }
 
   /** Positive-PMI report over the co-occurrence matrix — the quantity
     * Swivel's training objective approximates, surfaced as a gated
     * relation with EVERY step exact: the Σ n_d/d cell weight is rescaled
-    * by LCM(1..windowSize) into an exact integer (n_d · (L/d) term sums
-    * — no double ever forms), marginals and the matrix total are integer
+    * by LCM(1..windowSize) into an exact integer (Σ n_d · (L/d) — no
+    * double ever forms), marginals and the matrix total are integer
     * sums of those, and the PMI ratio x_ij·T / (x_i·x_j) is carried in
     * micro-units through a DECIMAL(38,0) product with an integral `div`
     * (the 128-bit-safe path: x_ij·T·10⁶ overflows BIGINT on hub cells).
@@ -170,11 +194,8 @@ object SwivelPrep {
       minScaled: Long, topK: Int): DataFrame = {
     val lcm = (1 to windowSize).foldLeft(1L)((a, k) =>
       a * k / BigInt(a).gcd(BigInt(k)).toLong)
-    val scaled = (1 to windowSize).map(k =>
-      sum(when(col("dd") === k, lit(lcm / k)).otherwise(0L)))
-      .reduceLeft(_ + _)
-    val cells = coocPairs(docs, vocab, windowSize)
-      .groupBy("row_id", "col_id").agg(scaled.as("sw"))
+    val cells = cellCounts(docs, vocab, windowSize).select(col("row_id"), col("col_id"),
+      fromCounts(windowSize)((n, k) => n * lit(lcm / k)).as("sw"))
     val marg = cells.groupBy("row_id").agg(sum(col("sw")).as("smi"))
     val tot = cells.agg(sum(col("sw")).as("st"))
     cells
@@ -191,13 +212,10 @@ object SwivelPrep {
       .limit(topK)
   }
 
-  /** Row sums of the (symmetric) co-occurrence matrix per token id —
-    * computed from the pair relation with the same fixed-order weight
-    * expression, so marginals sum the UNROUNDED cell weights. */
+  /** Row sums of the (symmetric) co-occurrence matrix per token id,
+    * aggregated straight from the pair relation. */
   def marginals(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
-    coocPairs(docs, vocab, windowSize)
-      .groupBy(col("row_id").as("id"))
-      .agg(round(weightExpr(windowSize), 4).as("marginal"))
+    marginalsFromCounts(coocPairs(docs, vocab, windowSize), windowSize)
 
   /** Shard assignment: row_shard = id % numShards, local index
     * id / numShards, with numShards = vocabSize / shardSize (vocabSize is

@@ -46,6 +46,18 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("cells and marginals derived from cellCounts equal cooc and marginals exactly") {
+    for (texts <- samples(corpusGen, 4)) {
+      val d = toDf(texts)
+      val vocab = SwivelPrep.buildVocab(d, minCount = 1, shardSize = 1)
+      val counts = SwivelPrep.cellCounts(d, vocab, windowSize = 3)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(SwivelPrep.cellsFromCounts(counts, 3)) == rows(SwivelPrep.cooc(d, vocab, 3)))
+      assert(rows(SwivelPrep.marginalsFromCounts(counts, 3)) ==
+        rows(SwivelPrep.marginals(d, vocab, 3)))
+    }
+  }
+
   test("vocab: size is a multiple of shard_size and ids are dense") {
     for {
       texts <- samples(corpusGen, 3)

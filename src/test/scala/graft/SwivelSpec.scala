@@ -1,8 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
-import graft.swivel.SwivelPrep
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.graft.ListenerBus
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.swivel.{SwivelMain, SwivelPrep}
 
 /** Hand-computed goldens for the Swivel prep pipeline (SURVEY §5.2-3). */
 class SwivelSpec extends AnyFunSuite {
@@ -33,6 +39,14 @@ class SwivelSpec extends AnyFunSuite {
       .orderBy("id").as[(Long, Double)].collect().toSeq
     // row sums: a: 1.0 + 2.0 = 3.0 ; b: 2.0
     assert(marg == Seq((0L, 3.0), (1L, 2.0)))
+    // the same relations derived from the per-cell distance counts (n1, n2)
+    val counts = SwivelPrep.cellCounts(d, vocab, windowSize = 2)
+    assert(counts.orderBy("row_id", "col_id").as[(Long, Long, Long, Long)].collect().toSeq ==
+      Seq((0L, 0L, 0L, 2L), (0L, 1L, 2L, 0L), (1L, 0L, 2L, 0L)))
+    assert(SwivelPrep.cellsFromCounts(counts, 2).orderBy("row_id", "col_id")
+      .as[(Long, Long, Double)].collect().toSeq == cells)
+    assert(SwivelPrep.marginalsFromCounts(counts, 2).orderBy("id")
+      .as[(Long, Double)].collect().toSeq == marg)
   }
 
   test("vocab: count ties break token-ASC; truncation to shard_size multiple") {
@@ -83,5 +97,60 @@ class SwivelSpec extends AnyFunSuite {
         "row_shard <> global_row % 2 OR local_row <> global_row div 2 OR " +
         "col_shard <> global_col % 2 OR local_col <> global_col div 2"))
     assert(bad.count() == 0)
+  }
+
+  private def corpus(lines: String*): Path = {
+    val dir = Files.createTempDirectory("swivel-main")
+    Files.write(dir.resolve("corpus.txt"), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    dir
+  }
+
+  /** Counts the executed plans holding a join keyed on doc_id on both
+    * sides — the windowed pair self-join. */
+  private def pairJoinPlans(f: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      private def onDocId(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "doc_id"))
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (collectWithSubqueries(qe.executedPlan) {
+              case j: BaseJoinExec if onDocId(j.leftKeys) && onDocId(j.rightKeys) => j
+            }.nonEmpty) n.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(spark)
+    spark.listenerManager.register(listener)
+    try { f; ListenerBus.drain(spark) } finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  test("SwivelMain.run: one pair join feeds shards, side files and marginals") {
+    val dir = corpus("a b a c b a", "c a b b a", "b c a a c b")
+    val out = dir.resolve("out").toString
+    val opts = SwivelMain.Options(input = dir.resolve("corpus.txt").toString, outDir = out,
+      shardSize = 1, minCount = 1, windowSize = 3, outputFormat = "pb")
+    assert(pairJoinPlans(SwivelMain.run(spark, opts)) == 1)
+    val d = graft.sources.Sources.textCorpus(spark, opts.input)
+    val vocab = SwivelPrep.buildVocab(d, 1, 1)
+    val marg = SwivelPrep.marginals(d, vocab, 3).orderBy("id").as[(Long, Double)].collect()
+    def lines(name: String) = scala.io.Source.fromFile(s"$out/$name").getLines().toSeq
+    assert(lines("row_sums.txt") == marg.toSeq.map { case (_, m) => f"$m%.4f" })
+    assert(lines("col_vocab.txt") == Seq("a", "b", "c"))
+    val cells = graft.sources.TfExample.readSwivelPbShards(spark, s"$out/shards_pb")
+      .select("global_row", "global_col", "weight").as[(Long, Long, Float)].collect().toSet
+    assert(cells == SwivelPrep.cooc(d, vocab, 3).as[(Long, Long, Double)].collect()
+      .map { case (r, c, w) => (r, c, w.toFloat) }.toSet)
+  }
+
+  test("SwivelMain.run: an empty vocabulary writes no shards and does not throw") {
+    val dir = corpus("a b", "c")
+    for (fmt <- Seq("pb", "parquet")) {
+      val out = dir.resolve(s"out_$fmt")
+      SwivelMain.run(spark, SwivelMain.Options(input = dir.resolve("corpus.txt").toString,
+        outDir = out.toString, shardSize = 8, minCount = 1, outputFormat = fmt))
+      assert(!Files.exists(out.resolve("shards_pb")) && !Files.exists(out.resolve("shards")))
+      assert(spark.read.parquet(out.resolve("vocab").toString).count() == 0)
+      assert(spark.read.parquet(out.resolve("row_sums").toString).count() == 0)
+    }
   }
 }
