@@ -7,6 +7,39 @@ object Bench {
     Option(tmp.listFiles()).toSeq.flatten.filter(f =>
       f.getName.startsWith("graft_bench_mirror_") && !f.getName.startsWith(layout))
 
+  /** What the interleaved rep loop measured: per key the best time over
+    * its successful reps, the rep-1 time of every key whose first rep
+    * performed session-scoped one-time work (`ColdWork`), and the keys
+    * with at least one failed rep. A failed rep never feeds `best` or
+    * `coldS`: its elapsed time measures the failure, not the plan. */
+  private[graft] final case class Reps(best: Map[String, Double],
+      coldS: Map[String, Double], failed: Seq[String])
+
+  /** Runs rep 1 of every key, then rep 2 of every key, and so on. */
+  private[graft] def timeReps(keys: Seq[String], reps: Int)(
+      run: String => Unit): Reps = {
+    val best = scala.collection.mutable.HashMap[String, Double]()
+    val coldS = scala.collection.mutable.HashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    for (rep <- 1 to reps; name <- keys) {
+      val c0 = graft.ops.ColdWork.count
+      val t0 = System.nanoTime()
+      val ok =
+        try { run(name); true }
+        catch { case e: Throwable =>
+          System.err.println(s"bench key $name rep $rep FAILED: $e")
+          false
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      if (!ok) failed += name
+      else {
+        if (rep == 1 && graft.ops.ColdWork.count != c0) coldS(name) = dt
+        if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
+      }
+    }
+    Reps(best.toMap, coldS.toMap, failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -121,7 +154,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val best = scala.collection.mutable.HashMap[String, Double]()
     // sql_tpch_parity caches its 22-query certification per (session,
     // dataset), so min-of-3 measures the cached rep — honest for a
     // deterministic CI certification, but the artifact must also carry
@@ -142,23 +174,17 @@ object Bench {
     val parityWasCached =
       try graft.ops.TpchSqlParity.hasPersistedReport(benchDir)
       catch { case _: Throwable => false }
-    // GENERALIZED cold_s (round 16, r15 verdict #1): rep-1 wall time is
-    // recorded for EVERY key whose first invocation performed session-
-    // scoped one-time work (Landed.once landings, bucketed catalog
-    // tables, vocab/index/parity memos — each bumps ColdWork when it
-    // actually computes). min-of-reps stays the plan-cost stat, but the
-    // amortized work now always appears in the artifact instead of
-    // vanishing behind warm reps (the dedup_embed_lsh_recall finding).
-    val coldS = scala.collection.mutable.LinkedHashMap[String, Double]()
-    for (rep <- 1 to reps; (name, fn) <- keys) {
-      val c0 = graft.ops.ColdWork.count
-      val t0 = System.nanoTime()
-      try { fn(spark, benchDir).count() } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (rep == 1 && graft.ops.ColdWork.count != c0) coldS(name) = dt
-      if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
-    }
-    val results = keys.map { case (name, _) => name -> best(name) }
+    // cold_s: rep-1 wall time is recorded for EVERY key whose first
+    // invocation performed session-scoped one-time work (a Memo.once
+    // build bumps ColdWork when it actually computes). min-of-reps stays
+    // the plan-cost stat, but the amortized work always appears in the
+    // artifact instead of vanishing behind warm reps.
+    val fns = keys.toMap
+    val r = timeReps(keys.map(_._1), reps)(n => fns(n)(spark, benchDir).count())
+    val coldS = r.coldS
+    // a key with any failed rep is listed under "failed" and left out of
+    // the per-key map and the total
+    val results = keys.map(_._1).filterNot(r.failed.contains).map(n => n -> r.best(n))
     // Centisecond precision: the round-7 artifact of record truncated
     // mid-line at 133 keys even at ms precision (47 keys lost from the
     // driver's tail window). 10 ms resolution halves the fractional
@@ -175,6 +201,7 @@ object Bench {
     // a filtered A/B run marks itself in the JSON so a partial-suite
     // total can never masquerade as a full-suite artifact
     val filteredTag = if (only.isDefined) s""","filtered":${keys.size}""" else ""
+    val failedTag = r.failed.map(k => "\"" + k + "\"").mkString(",\"failed\":[", ",", "]")
     // cold_s: every rep-1 wall time that covered disclosed one-time work
     // (see the ColdWork note above) — the full map rides the long line
     // and BENCH.json; "cold_cached" qualifies sql_tpch_parity's entry
@@ -195,7 +222,7 @@ object Bench {
     // "cpus":<n> in every record (round 16, r15 verdict #2): the 8-core
     // scaling run's artifact was byte-indistinguishable from the 32-core
     // artifact of record and silently clobbered BENCH.json
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"repeat-and-min-v5-mirror","reps":$reps,"stat":"min"$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"repeat-and-min-v5b-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
     // The "metric" stdout line prints FIRST, the moment it exists:
     // the driver's artifact window lost the line's head in r5 (tail-only
     // capture) and its tail in r7 — printing the line before any other
@@ -209,7 +236,11 @@ object Bench {
     // cwd-relative by the snapshot contract — print WHERE it landed (or
     // that it failed) so a run from the wrong directory can't leave a
     // stale committed BENCH.json masquerading as this run's result.
-    if (only.isDefined) {
+    if (r.failed.nonEmpty) {
+      // a failed key has no time: never record a partial map as the
+      // artifact; the stdout line (with its "failed" list) is the record
+      println(s"BENCH.json NOT written (${r.failed.size} keys failed)")
+    } else if (only.isDefined) {
       // never overwrite the committed full-suite artifact with a
       // filtered A/B's partial total — the stdout line is the record
       println("BENCH.json NOT written (SPARK_GRAFT_BENCH_ONLY filter active)")
@@ -254,7 +285,8 @@ object Bench {
     // it whole; the full per-query map lives in BENCH.json and the long
     // line. Flushed so the final line cannot be lost to stream
     // buffering when the driver kills the process at exit.
-    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"repeat-and-min-v5-mirror","reps":$reps,"stat":"min"$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"repeat-and-min-v5b-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
     System.out.flush()
+    if (r.failed.nonEmpty) sys.exit(1)
   }
 }

@@ -6,9 +6,9 @@ import graft.ops._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` holds one entry per declared operator from SURVEY.md §2;
-  * `oracleSql` holds the DuckDB-dialect equivalent for every
-  * oracle-checkable key. Both are assembled from the per-area modules so
-  * each operator's Spark implementation and oracle live side by side.
+  * `oracleSql` holds the DuckDB-dialect equivalent for every key. Both
+  * are assembled from the per-area modules so each operator's Spark
+  * implementation and oracle live side by side.
   */
 object SparkEntry {
   /** All declared operators, grouped by module. */
@@ -30,7 +30,7 @@ object SparkEntry {
     defs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    defs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    defs.map(q => q.name -> q.oracle).toMap
 }

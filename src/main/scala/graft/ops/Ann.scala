@@ -164,13 +164,6 @@ object Ann {
     v.filter(col("vec_id").isin(centroidIds: _*))
       .select(col("vec_id").as("cid"), col("ve").as("cve"), col("nrm").as("cnrm"))
 
-  /** (vec_id, ve, nrm, bucket): nearest-centroid assignment by cosine,
-    * ties → lowest centroid id. */
-  def ivfAssign(emb: DataFrame, centroidIds: Seq[Long]): DataFrame = {
-    val v = prep(emb)
-    assignTo(v, centroidsFromIds(v, centroidIds))
-  }
-
   /** Top-k by cosine for the query vector against an explicit centroid
     * relation, scanning only the nprobe buckets nearest the query. */
   /** The nprobe coarse buckets nearest a prepped 1-row query relation
@@ -521,11 +514,11 @@ object Ann {
     // from the fixed planted corpus (splitmix64 planes, no RNG).
     // dedup_embed_lsh keeps its own UNLANDED derivation — it IS the
     // derivation under measurement; this key measures the RECALL.
-    val exact = Landed.once(s, d, "elshexp") {
+    val exact = Landed.once(s, d, "ann.elshexp") {
       Dedup.embeddingNearDup(plantNearDups(Tables.embeddings(s, d)), 0.99)
         .select("i", "j")
     }
-    val lsh = Landed.once(s, d, "elshp") {
+    val lsh = Landed.once(s, d, "ann.elshp") {
       lshNearDup(plantNearDups(Tables.embeddings(s, d)),
         threshold = 0.99, dim = 64).select("i", "j")
     }
@@ -878,7 +871,6 @@ object Ann {
     s"""$kmeansOraclePrefixScaled2,
        |$semanticDedupOracleBody""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    // model forced OUTSIDE the Landed closure (non-reentrancy), then
     // membership = the shared landed serving lists
     val cents = cachedKmeansCentsScaled(s, d)
     semanticDedupFromLists(servingLists(s, d, v, cents), v)
@@ -958,31 +950,20 @@ object Ann {
   private val NCentroids = 8
   private val centroidIds: Seq[Long] = (1L to NCentroids.toLong)
 
-  /** Trained-index cache: the k-means centroid relation and the PQ
+  /** Trained-index memos: the k-means centroid relation and the PQ
     * index are each trained IDENTICALLY by a gate key and its recall
     * key (`sim_ann_kmeans`/`sim_ann_kmeans_recall`,
     * `sim_ann_pq`/`sim_ann_pq_recall`) — one training per
-    * (session, sfDir), shared by both consumers: the graph family's
-    * landed-relation discipline applied to ANN (a production system
+    * (session, sfDir), shared by both consumers (a production system
     * trains an index once and amortizes it over the query stream, never
     * per query). Training is deterministic (quantized Lloyd,
-    * deterministic seeds), so sharing cannot move any hash. Dead-session
-    * entries dropped first (the coocCache hygiene). */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-
-  private def cachedIndex[T <: AnyRef](s: SparkSession, d: String, tag: String)(
-      build: => T): T = {
-    indexCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    indexCache.computeIfAbsent((s, d, tag),
-      _ => { ColdWork.note(); build }).asInstanceOf[T]
-  }
-
-  /** The quantized-Lloyd centroids of the gated kmeans keys (c=8,
-    * iters=3), trained once per (session, sfDir). The returned relation
-    * is a broadcast local DF of driver-held state — safe to share. */
+    * deterministic seeds), so sharing cannot move any hash.
+    *
+    * This one holds the quantized-Lloyd centroids of the gated kmeans
+    * keys (c=8, iters=3). The returned relation is a broadcast local DF
+    * of driver-held state — safe to share. */
   private def cachedKmeansCents(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s, d, "kmc") {
+    Memo.once(s, d, "ann.kmc") {
       kmeansCentroidsQuantized(prep(Tables.embeddings(s, d)), c = 8, iters = 3)
     }
 
@@ -993,30 +974,30 @@ object Ann {
     * the count() that sizes c is one bounded job, and driver state is
     * still c·dim mean components.
     *
-    * Training runs on the BOUNDED lowest-TrainSample-ids sample (round
-    * 14 — SemDeDup's train-on-a-sample/assign-everything recipe): per
-    * Lloyd round the cost is TrainSample·c ∝ n instead of the unsampled
-    * n·c ∝ n²/200, which the r13 study measured at 175 s cold at 100×.
+    * Training runs on the BOUNDED lowest-TrainSample-ids sample
+    * (SemDeDup's train-on-a-sample/assign-everything recipe): per Lloyd
+    * round the cost is TrainSample·c ∝ n instead of the unsampled
+    * n·c ∝ n²/200 (measured at 175 s cold at 100×).
     * The seed is unchanged (first min(c, TrainSample) vectors by id —
     * the lowest ids are in the sample by construction), and the oracle
     * replays the same sample predicate (`kmeansOraclePrefixScaled`). */
   private def cachedKmeansCentsScaled(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s, d, "kmcs") {
+    Memo.once(s, d, "ann.kmcs") {
       val v = prep(Tables.embeddings(s, d)).localCheckpoint()
       val c = math.max(8L, v.count() / 200L).toInt
       val vs = v.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
       kmeansCentroidsQuantized(vs, c, iters = 3)
     }
 
-  /** The CAPPED production model (round 15): c_eff = min(max(8,
+  /** The CAPPED production model: c_eff = min(max(8,
     * n div 200), CapC) — see CapC's scaladoc for why the cap is the
     * 100 TB boundary fix. Same bounded-sample recipe; at the gate SFs
     * the cap is non-binding so this model coincides with the scaled
-    * one, but it is trained/cached independently (separate tag) — the
+    * one, but it is trained/memoized independently (separate tag) — the
     * two builds must never share state the gate doesn't prove they
     * share. */
   private def cachedKmeansCentsCapped(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s, d, "kmcc") {
+    Memo.once(s, d, "ann.kmcc") {
       val v = prep(Tables.embeddings(s, d)).localCheckpoint()
       val c = math.min(math.max(8L, v.count() / 200L), CapC.toLong).toInt
       val vs = v.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
@@ -1030,7 +1011,7 @@ object Ann {
     * the whole point of the key). Same bounded-sample recipe as
     * `cachedKmeansCentsScaled`, c from the BASE count. */
   private def cachedKmeansCentsUpsertBase(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s, d, "kmcu") {
+    Memo.once(s, d, "ann.kmcu") {
       val b = prep(Tables.embeddings(s, d))
         .filter(col("vec_id") % 10 =!= 7).localCheckpoint()
       val c = math.max(8L, b.count() / 200L).toInt
@@ -1043,7 +1024,7 @@ object Ann {
     * localCheckpointed so consumers re-read the encoded relation
     * instead of re-running the assignment join per action. */
   private def cachedPqIndex(s: SparkSession, d: String): PqIndex =
-    cachedIndex(s, d, "pqi") {
+    Memo.once(s, d, "ann.pqi") {
       val ix = pqIndex(Tables.embeddings(s, d), dim = 64)
       ix.copy(codes = ix.codes.localCheckpoint())
     }
@@ -1886,7 +1867,7 @@ object Ann {
     * which is why construction is behind `Landed.once` (the amortized
     * index discipline of `cachedKmeansCents`). */
   def knnGraph(s: SparkSession, d: String, m: Int): DataFrame =
-    Landed.once(s, d, s"knng$m") {
+    Landed.once(s, d, s"ann.knng$m") {
       val v = prep(Tables.embeddings(s, d))
       val p = Similarity.allPairsCos(v.select("vec_id", "ve", "nrm"))
       val dir = p.select(col("i"), col("j"), col("cos_raw"))
@@ -1988,11 +1969,8 @@ object Ann {
     * hash-gates both its edge recall against the all-pairs graph and
     * the beam-search recall it supports. */
   def knnGraphIvf(s: SparkSession, d: String, m: Int, nprobe: Int): DataFrame = {
-    // train/force the shared kmeans model OUTSIDE the Landed closure
-    // (Landed.once must not recurse into cachedIndex-triggered jobs
-    // mid-computeIfAbsent on a shared map — the documented discipline)
     val cents = cachedKmeansCentsScaled(s, d)
-    Landed.once(s, d, s"knngivfs${m}p$nprobe") {
+    Landed.once(s, d, s"ann.knngivfs${m}p$nprobe") {
       val v = prep(Tables.embeddings(s, d))
       // both per-group ranks run as the COMBINABLE bounded top-k
       // aggregate (TopKAgg, round 14): a rank window has no partial
@@ -2641,13 +2619,11 @@ object Ann {
   /** The maintained index's frozen base: (model, landed base lists) —
     * ONE definition for both ingestion paths (review finding: the two
     * inline copies had to stay byte-identical or the Landed artifact
-    * would silently depend on which key ran first). Model forced
-    * OUTSIDE the Landed closure (the documented non-reentrancy
-    * discipline). */
+    * would silently depend on which key ran first). */
   private def upsertBaseIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val cents = cachedKmeansCentsUpsertBase(s, d)
-    val baseLists = Landed.once(s, d, "ivfupsb") {
+    val baseLists = Landed.once(s, d, "ann.ivfupsb") {
       twoLevelAssign(prep(Tables.embeddings(s, d))
           .filter(col("vec_id") % 10 =!= 7), cents)
     }
@@ -2751,11 +2727,10 @@ object Ann {
     * all four consumers (`sim_ann_ivf2`/`simAnnDelete`/`simAnnFiltered`/
     * `simAnnRebalance`), so the artifact can never depend on key
     * execution order — the shared-builder discipline `upsertBaseIndex`
-    * got from the same class of review finding. Forced OUTSIDE any
-    * other Landed closure (non-reentrancy). */
+    * got from the same class of review finding. */
   private def servingLists(s: SparkSession, d: String, v: DataFrame,
       cents: DataFrame): DataFrame =
-    Landed.once(s, d, "ivfdell") { twoLevelAssign(v, cents) }
+    Landed.once(s, d, "ann.ivfdell") { twoLevelAssign(v, cents) }
 
   /** The capped model's landed lists — ONE builder for both capped
     * consumers (`sim_ann_ivf2_capped`, `dedup_semantic_capped`), the
@@ -2763,7 +2738,7 @@ object Ann {
     * a different model must never alias the scaled artifact. */
   private def cappedServingLists(s: SparkSession, d: String, v: DataFrame,
       cents: DataFrame): DataFrame =
-    Landed.once(s, d, "ivfdellcap") { twoLevelAssign(v, cents) }
+    Landed.once(s, d, "ann.ivfdellcap") { twoLevelAssign(v, cents) }
 
   /** TWO-LEVEL IVF BUILD (round 14 — clears the last named superlinear
     * build in the family): the serving-index lists (`ivfdell`, the
@@ -2942,7 +2917,7 @@ object Ann {
     val lists = servingLists(s, d, v, cents)
     val del = v.filter(col("vec_id") % 10 === 3).select("vec_id")
     val tomb = tombstoneApplied(lists, del)
-    val compacted = Landed.once(s, d, "ivfdelc") {
+    val compacted = Landed.once(s, d, "ann.ivfdelc") {
       lists.join(v.filter(col("vec_id") % 10 === 3).select("vec_id"),
         Seq("vec_id"), "left_anti")
     }

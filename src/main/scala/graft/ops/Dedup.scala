@@ -171,20 +171,19 @@ object Dedup {
     * representatives, and (c) the banded-LSH near-dup pairs between
     * them. One landing feeds all consumers; every derivation is
     * deterministic (md5 collapse, xxhash64 banding), so sharing cannot
-    * move a hash. `reps` forces OUTSIDE the dependent closures (the
-    * Landed.once non-reentrancy contract). */
+    * move a hash. */
   private def landedReps(s: SparkSession, d: String): DataFrame =
-    graft.ops.Landed.once(s, d, "mhreps")(repsOf(Tables.documents(s, d)))
+    graft.ops.Landed.once(s, d, "dedup.mhreps")(repsOf(Tables.documents(s, d)))
 
   private def landedRepShingles(s: SparkSession, d: String): DataFrame = {
     val reps = landedReps(s, d)
-    graft.ops.Landed.once(s, d, "mhsh")(
+    graft.ops.Landed.once(s, d, "dedup.mhsh")(
       Functions.shingles(reps.select("doc_id", "text")))
   }
 
   private def landedRepLshPairs(s: SparkSession, d: String): DataFrame = {
     val sh = landedRepShingles(s, d)
-    graft.ops.Landed.once(s, d, "mhlshp")(
+    graft.ops.Landed.once(s, d, "dedup.mhlshp")(
       minHashNearDupFromShingles(sh).select("i", "j"))
   }
 
@@ -194,7 +193,7 @@ object Dedup {
     * deterministically from the landed shingles). */
   private def landedRepExactPairs(s: SparkSession, d: String): DataFrame = {
     val sh = landedRepShingles(s, d)
-    graft.ops.Landed.once(s, d, "mhexp")(
+    graft.ops.Landed.once(s, d, "dedup.mhexp")(
       Text.nearDupPairsFromShingles(sh).select("i", "j"))
   }
 

@@ -295,21 +295,9 @@ object Extras {
     joinBucketedPlan(s, d)
   }
 
-  /** One bucketed-table landing per (session, dataset) — the exact
-    * amortization the key's own scaladoc claims ("the one-time
-    * bucket-write shuffle is amortized over every subsequent join"): the
-    * first invocation in a session pays the two bucketed writes, every
-    * later invocation (bench reps 2..n, repeated joins in a real
-    * pipeline) runs ONLY the co-located join against the landed layout.
-    * The Landed.once discipline applied to catalog tables; table names
-    * are dataset-suffixed so two datasets in one session can never alias
-    * each other's catalog entries. */
-  private val bucketedOnce = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
   /** (Session, dataset)-scoped suffix for the bucketed catalog table
     * names (shared with SourcesSpec's cleanup). The SESSION identity
-    * rides in the name as well as the path (round-15 advice): two live
+    * rides in the name as well as the path: two live
     * sessions in one JVM share one catalog, so dataset-only names would
     * let the second session's saveAsTable(overwrite) re-point the shared
     * name at its own directory — data-equivalent, but it silently
@@ -322,15 +310,15 @@ object Extras {
 
   /** The declared plan for `join_bucketed`, exposed so SourcesSpec can pin
     * the zero-Exchange-below-join shape on exactly what the driver runs.
-    * Bucketed tables land in a deterministic temp location per
-    * (session, sfDir) so repeat runs (Bench reps) reuse the layout.
+    * Bucketed tables land once per (session, sfDir) in a deterministic
+    * temp location: the first invocation pays the two bucketed writes,
+    * every later one (bench reps, repeated joins in a real pipeline)
+    * runs ONLY the co-located join against the landed layout.
     */
   def joinBucketedPlan(s: org.apache.spark.sql.SparkSession, d: String) = {
     import graft.sources.Sources
     val sfx = bucketedTableSuffix(s, d)
-    bucketedOnce.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bucketedOnce.computeIfAbsent((s, d), { _ =>
-      ColdWork.note() // bucketed landing = disclosed one-time work
+    Memo.once(s, d, "extras.bucketed") {
       // session identity in the path (the Landed.once rule): a second
       // live session in the same JVM must not overwrite the directory
       // the first session's catalog tables point at
@@ -345,7 +333,7 @@ object Extras {
         s"graft_bkt_lineitem_$sfx", base + "/lineitem", buckets = 8,
         key = "l_orderkey")
       base
-    })
+    }
     // hint("merge") pins SMJ so the plan is bucket-exercising at every SF
     // (a broadcast join at sf0.001 would also be shuffle-free, but then the
     // key wouldn't prove the bucketed layout carries the join).

@@ -19,26 +19,13 @@ import graft.Tables
   */
 object Graph {
 
-  /** Landed-relation cache: ONE parquet materialization per
-    * (session, sfDir, tag), shared by every kernel that consumes the
-    * same base relation — the `sharedVocabCooc` discipline
-    * (Swivel.scala) lifted to the graph family. Before round 10 each of
-    * the six graph keys re-derived its edge relation from the fact
-    * self-join per invocation (the family was 19.8 s / 16% of the whole
-    * bench, ~a third of it six redundant reruns of the same lineitem
-    * self-join); a real pipeline lands a graph once and fans out
-    * kernels. Entries owned by stopped sessions are dropped first (the
-    * coocCache hygiene); the landed path is tmpRoot-stable within a
-    * process, so bench reps overwrite nothing and reuse the file. */
-  private def landedOnce(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    Landed.once(s, d, "gr_" + tag)(build)
-
   /** The 1996 supplier co-engagement graph, degree-carrying (u, v, d) —
     * the shared base of `graph_pagerank` and (via orientation)
-    * `graph_triangles`. */
+    * `graph_triangles`. Like every edge relation below it is landed once
+    * per (session, dataset): a real pipeline lands a graph once and fans
+    * out kernels, instead of re-deriving the fact self-join per kernel. */
   private def supplier96Edges(s: SparkSession, d: String): DataFrame =
-    landedOnce(s, d, "sup96") {
+    Landed.once(s, d, "graph.sup96") {
       val ord96 = Tables.orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
           col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))
@@ -54,18 +41,17 @@ object Graph {
   /** Degree-oriented (x, y, yd) form of the 1996 supplier graph, landed
     * separately: the wedge self-join scans it three times. */
   private def supplier96Oriented(s: SparkSession, d: String): DataFrame = {
-    val base = supplier96Edges(s, d) // forced BEFORE the closure (no re-entry)
-    // landed MULTI-SPLIT (round 16, r15 verdict #6): the wedge join's
-    // probe side inherits its parallelism from this file's split count —
-    // a single-split landing serialized the whole quadratic wedge stage
-    // on one task, and the round-15 fix (an unconditional repartition on
-    // every read) was a per-invocation shuffle of a relation that never
-    // changes. Writing the landed relation with session-parallelism
+    val base = supplier96Edges(s, d)
+    // landed MULTI-SPLIT: the wedge join's probe side inherits its
+    // parallelism from this file's split count — a single-split landing
+    // serializes the whole quadratic wedge stage on one task, and a
+    // repartition on every read would be a per-invocation shuffle of a
+    // relation that never changes. Writing the landed relation with session-parallelism
     // splits pays the spread ONCE at land time — the bench-mirror
     // lesson applied to a landed intermediate; at 100 TB the writer of
     // this relation produces many splits anyway and the repartition is
     // the write's natural clustering, not a tuning knob.
-    landedOnce(s, d, "sup96or")(
+    Landed.once(s, d, "graph.sup96or")(
       orientByDegree(base.select("u", "v"))
         .repartition(s.sparkContext.defaultParallelism))
   }
@@ -77,7 +63,7 @@ object Graph {
     * (u < v projection), `graph_linkpred` / `graph_khop` (bare pairs)
     * and `graph_sssp` (w = 1000 div c edge costs). */
   private def partCoEdges(s: SparkSession, d: String): DataFrame =
-    landedOnce(s, d, "partco") {
+    Landed.once(s, d, "graph.partco") {
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
       li.toDF("ok", "u").join(li.toDF("ok", "v"), Seq("ok"))
         .filter(col("u") =!= col("v"))
@@ -90,8 +76,8 @@ object Graph {
     * smallest-id neighbors), landed: the wedge self-join reads the
     * capped file twice instead of re-running the window per side. */
   private def partCoCapped(s: SparkSession, d: String): DataFrame = {
-    val base = partCoEdges(s, d) // forced BEFORE the closure (no re-entry)
-    landedOnce(s, d, "partco_cap") {
+    val base = partCoEdges(s, d)
+    Landed.once(s, d, "graph.partco_cap") {
       base.withColumn("rn",
           row_number().over(Window.partitionBy("u").orderBy("v")))
         .filter(col("rn") <= 32).select("u", "v")
@@ -874,7 +860,7 @@ object Graph {
     * This emits the top-200 heaviest edges of the landed shared relation
     * (u < v half, weight = distinct co-orders, total (c, u, v) order) —
     * so the derivation the whole family rides is now pinned byte-exact,
-    * and the landedOnce cache means the key costs one parquet read when
+    * and the Landed.once memo means the key costs one parquet read when
     * any kernel already ran. Scale: the projection meets on l_orderkey
     * (pairs bounded by per-order basket size, never |parts|²) and the
     * ≥2-distinct-orders filter keeps it sparse — the standard
@@ -1197,7 +1183,7 @@ object Graph {
     // the directed (c, s) edge relation lands ONCE per (session, dataset)
     // — the supplier96Edges discipline: the fact join + distinct is the
     // expensive pass, and SIX iteration joins consume the relation
-    val e = landedOnce(s, d, "hits96") {
+    val e = Landed.once(s, d, "graph.hits96") {
       val ord96 = Tables.orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
           col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))

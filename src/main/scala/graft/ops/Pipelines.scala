@@ -796,7 +796,7 @@ object Pipelines {
     // landed once per (session, dataset) — four keys consume it, and at
     // 100 TB partsupp is a maintained table beside the facts, not a
     // per-query derivation (Landed scaladoc, QueryDef.scala)
-    Landed.once(s, d, "ps") {
+    Landed.once(s, d, "pipelines.ps") {
       Tables.lineitem(s, d)
         .select(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .distinct()

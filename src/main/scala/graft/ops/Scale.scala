@@ -1010,13 +1010,6 @@ object Scale {
       .orderBy("status")
   }
 
-  /** Landed materialized-view cache for `maintenance_incremental_agg` —
-    * one base-rollup parquet per (session, sfDir), the Graph.landedOnce
-    * discipline: a real pipeline lands the MV once and every refresh
-    * touches only the increment. */
-  private val mvCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** The combinable daily partial behind `maintenance_incremental_agg`:
     * per (epoch-day, event_type), row count and exact-DECIMAL value sum —
     * both MERGEABLE partials (sum of counts, sum of decimal sums), which
@@ -1054,15 +1047,8 @@ object Scale {
       |FROM e GROUP BY day, event_type
       |ORDER BY day, event_type""".stripMargin) { (s, d) =>
     val cut = lit("2024-01-25 12:00:00").cast("timestamp_ntz")
-    mvCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val path = mvCache.computeIfAbsent((s, d), { _ =>
-      ColdWork.note()
-      val root = QueryDef.tmpRoot("mv_daily", d)
-      dailyPartial(Tables.events(s, d).filter(col("ts") < cut))
-        .write.mode("overwrite").parquet(root)
-      root
-    })
-    val base = s.read.parquet(path)
+    val base = Landed.once(s, d, "scale.mv_daily")(
+      dailyPartial(Tables.events(s, d).filter(col("ts") < cut)))
     val inc = dailyPartial(Tables.events(s, d).filter(col("ts") >= cut))
     base.unionByName(inc)
       .groupBy("day", "event_type")

@@ -74,30 +74,17 @@ object Swivel {
     * `.cache()` — leaves no storage blocks behind after the query
     * (repeated Verify/Bench sweeps in one session stay clean).
     *
-    * The collected rows memoize per (session, dataset) — round 15: the
-    * reference builds the vocab file ONCE and feeds it to every
-    * downstream stage, but each of the four cooc-derivation keys
-    * (cooc, cooc_salted, marginals, pmi) re-tokenized the corpus and
-    * re-ranked the vocabulary on every invocation (~0.4 s each). The
-    * derivation-under-measurement of those keys is the MATRIX, not the
-    * vocab (swivel_vocab is the vocab's own gated key), so sharing the
-    * bounded collected rows is the join_bucketed/sharedVocabCooc
-    * amortization, not result caching: every value is still computed
-    * from the parquet inputs once per (session, dataset). */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Long, String, Long)]]()
-
-  private def cachedVocab(docs: org.apache.spark.sql.DataFrame) = {
-    val s = docs.sparkSession
+    * The collected rows memoize per (session, dataset): the reference
+    * builds the vocab file ONCE and feeds it to every downstream stage.
+    * The derivation under measurement of the four cooc-derivation keys
+    * (cooc, cooc_salted, marginals, pmi) is the MATRIX, not the vocab
+    * (swivel_vocab is the vocab's own gated key), so sharing the bounded
+    * collected rows is amortization, not result caching: every value is
+    * still computed from the parquet inputs once per (session, dataset). */
+  private def cachedVocab(s: org.apache.spark.sql.SparkSession, d: String) = {
     import s.implicits._
-    vocabCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // keyed by the scan's input files (a stable per-dataset identity the
-    // caller's DataFrame already carries) — two datasets in one session
-    // can never alias
-    val key = (s, docs.inputFiles.sorted.mkString(","))
-    val rows = vocabCache.computeIfAbsent(key, { _ =>
-      ColdWork.note()
-      val vocab = SwivelPrep.buildVocab(docs, MinCount, ShardSize)
+    val rows = Memo.once(s, d, "swivel.vocab") {
+      val vocab = SwivelPrep.buildVocab(Tables.documents(s, d), MinCount, ShardSize)
       val r = vocab.select(col("id"), col("token"), col("cnt"))
         .as[(Long, String, Long)].collect().toSeq
       // buildVocab materializes via localCheckpoint; its blocks are dead
@@ -105,7 +92,7 @@ object Swivel {
       // sweeps in one session leave no storage residue.
       org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint(vocab)
       r
-    })
+    }
     rows.toDF("id", "token", "cnt")
   }
 
@@ -113,8 +100,7 @@ object Swivel {
     "swivel_cooc",
     s"""$baseCte
        |SELECT row_id, col_id, weight FROM cells ORDER BY row_id, col_id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    SwivelPrep.cooc(docs, cachedVocab(docs), WindowSize)
+    SwivelPrep.cooc(Tables.documents(s, d), cachedVocab(s, d), WindowSize)
       .orderBy("row_id", "col_id")
   }
 
@@ -128,8 +114,7 @@ object Swivel {
     "swivel_cooc_salted",
     s"""$baseCte
        |SELECT row_id, col_id, weight FROM cells ORDER BY row_id, col_id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    SwivelPrep.coocSalted(docs, cachedVocab(docs), WindowSize)
+    SwivelPrep.coocSalted(Tables.documents(s, d), cachedVocab(s, d), WindowSize)
       .orderBy("row_id", "col_id")
   }
 
@@ -138,8 +123,7 @@ object Swivel {
     s"""$baseCte
        |SELECT row_id AS id, round($weightSql, 4) AS marginal
        |FROM pboth GROUP BY id ORDER BY id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    SwivelPrep.marginals(docs, cachedVocab(docs), WindowSize)
+    SwivelPrep.marginals(Tables.documents(s, d), cachedVocab(s, d), WindowSize)
       .orderBy("id")
   }
 
@@ -174,8 +158,7 @@ object Swivel {
        |WHERE c.sw >= 7560
        |ORDER BY ratio_ppm DESC, c.row_id, c.col_id LIMIT 30""".stripMargin) {
     (s, d) =>
-      val docs = Tables.documents(s, d)
-      SwivelPrep.pmiCells(docs, cachedVocab(docs), WindowSize,
+      SwivelPrep.pmiCells(Tables.documents(s, d), cachedVocab(s, d), WindowSize,
         minScaled = 7560L, topK = 30)
   }
 
@@ -188,26 +171,16 @@ object Swivel {
     * the derivation under measurement. localCheckpoint keeps the blocks
     * session-resident (cells are vocab²-bounded, MBs at these SFs); at
     * cluster scale the equivalent is writing the matrix to parquet once
-    * (`Sources.writeShards`) and reading it back per consumer.
-    */
-  private val coocCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-  /** (vocab, cooc) per (session, sfDir) — vocab rides in the same cache
-    * entry so a cold shard key derives the corpus-wide vocabulary ONCE,
-    * not once for the cache fill and again for its own shard call. */
-  private def sharedVocabCooc(s: org.apache.spark.sql.SparkSession, d: String) = {
-    // Drop entries owned by stopped sessions first: they pin checkpoint
-    // blocks and the dead SparkSession itself for the process lifetime
-    // otherwise (test suites / long-lived drivers that cycle sessions).
-    coocCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    coocCache.computeIfAbsent((s, d), { case (sess, dir) =>
-      ColdWork.note()
-      val docs = Tables.documents(sess, dir)
-      val vocab = cachedVocab(docs)
-      (vocab, SwivelPrep.cooc(docs, vocab, WindowSize).localCheckpoint())
-    })
-  }
+    * (`Sources.writeShards`) and reading it back per consumer. The
+    * memoized value is (vocab, cooc): vocab rides along so a cold shard
+    * key reads the one memoized vocabulary for both the matrix and its
+    * own shard call. */
+  private def sharedVocabCooc(s: org.apache.spark.sql.SparkSession, d: String) =
+    Memo.once(s, d, "swivel.cooc") {
+      val vocab = cachedVocab(s, d)
+      (vocab, SwivelPrep.cooc(Tables.documents(s, d), vocab, WindowSize)
+        .localCheckpoint())
+    }
 
   private val shardCte =
     s""", nsh AS (

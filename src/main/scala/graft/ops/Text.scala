@@ -96,12 +96,12 @@ object Text {
     * siblings. Values are unchanged — every consumer applies its score
     * formula to the same integers. */
   private def landedShingleStats(s: SparkSession, d: String): DataFrame =
-    Landed.once(s, d, "shstats") {
+    Landed.once(s, d, "text.shstats") {
       shingleStatsFromShingles(Functions.shingles(Tables.documents(s, d)))
     }
 
   private def landedShingleStatsKd(s: SparkSession, d: String): DataFrame =
-    Landed.once(s, d, "shstats_kd") {
+    Landed.once(s, d, "text.shstats_kd") {
       shingleStatsFromShingles(Functions.shingles(keeperDocs(Tables.documents(s, d))))
     }
 

@@ -1067,26 +1067,19 @@ object TextAnalysis {
 
   /** One corpus-vocabulary BPE training per (session, sfDir), shared by
     * `text_bpe_merge` (consumes the merge table) and `text_bpe_encode`
-    * (consumes the trained vocabulary) — the trained-index discipline
-    * (Ann.cachedKmeansCents / Graph.landedOnce): training is
-    * deterministic, so sharing cannot move a hash, and the 8 driver-
-    * collect rounds run once instead of once per consumer. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame)]()
-
+    * (consumes the trained vocabulary): training is deterministic, so
+    * sharing cannot move a hash, and the 8 driver-collect rounds run
+    * once instead of once per consumer. */
   private def cachedBpe(s: SparkSession,
-      d: String): (Seq[(Int, String, String, Long)], DataFrame) = {
-    bpeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bpeCache.computeIfAbsent((s, d), { case (sess, dir) =>
-      ColdWork.note()
-      val vocab = Tables.documents(sess, dir)
+      d: String): (Seq[(Int, String, String, Long)], DataFrame) =
+    Memo.once(s, d, "text_analysis.bpe") {
+      val vocab = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w").rlike("^[a-z]{2,}$"))
         .groupBy("w").agg(count(lit(1)).as("wc"))
       val (merges, vfinal) = bpeTrainFull(vocab, BpeRounds)
       (merges, vfinal.localCheckpoint())
-    })
-  }
+    }
 
   val textBpeMerge = QueryDef(
     "text_bpe_merge",

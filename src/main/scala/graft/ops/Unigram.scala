@@ -259,20 +259,11 @@ object Unigram {
 
   /** One training run per (session, sfDir), shared by
     * `text_unigram_train` (emits the inventory) and
-    * `text_unigram_encode` (applies it) — the cachedBpe /
-    * cachedKmeansCents trained-index discipline: training is
-    * deterministic, so sharing cannot move a hash, and the EM collect
-    * rounds run once instead of once per consumer. */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Long)]]()
-
-  private def cachedTrain(s: SparkSession, d: String): Seq[(String, Long)] = {
-    trainCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    trainCache.computeIfAbsent((s, d), { case (sess, dir) =>
-      ColdWork.note()
-      trainFinal(Tables.documents(sess, dir))
-    })
-  }
+    * `text_unigram_encode` (applies it): training is deterministic, so
+    * sharing cannot move a hash, and the EM collect rounds run once
+    * instead of once per consumer. */
+  private def cachedTrain(s: SparkSession, d: String): Seq[(String, Long)] =
+    Memo.once(s, d, "unigram.train")(trainFinal(Tables.documents(s, d)))
 
   /** Full training run as the raw (piece, cnt) inventory. */
   private def trainFinal(docs: DataFrame): Seq[(String, Long)] = {

@@ -116,9 +116,6 @@ object Wordpiece {
     * vocab words plus the top-`SeedMulti` multi-char spans by
     * (Σ wc DESC, piece ASC). Bounded driver state (≤ 26 + 60 rows —
     * the trained-index collect discipline). */
-  def corpusInventory(docs: DataFrame): Seq[String] =
-    corpusInventoryFromVocab(vocabOf(docs))
-
   private def corpusInventoryFromVocab(v: DataFrame): Seq[String] = {
     val s = v.sparkSession
     import s.implicits._

@@ -47,9 +47,6 @@ object Sources {
   def csv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
 
-  def jsonLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
   /** ORC passthroughs — the other columnar format Spark bundles natively
     * (same pushdown/pruning surface as parquet; Avro is absent from this
     * distribution's jars, so it is deliberately NOT offered). */

@@ -294,33 +294,25 @@ object StreamOps {
   /** `tagged` carries the stream's data columns plus the int batch tag
     * `b`; the tag becomes the partition directory and never reaches the
     * data files. */
-  /** STAGED-INPUT LANDING shared across reps (round-13 verdict task):
-    * the real checkpointed streaming gates each staged their own input
-    * files per invocation — at 3 bench reps that is 3 identical staging
-    * writes per key, ~16% of the whole bench. The staged input derives
+  /** STAGED-INPUT LANDING shared across reps: staging each checkpointed
+    * streaming gate's input files per invocation would be identical
+    * staging writes on every rep. The staged input derives
     * deterministically from the fixture, so it lands ONCE per (session,
-    * dataset, tag) — the `Landed.once`/`cachedKmeansCents` amortization
-    * — while every invocation keeps its OWN fresh checkpoint + sink
-    * root, so the gates stay real (the streaming query, its offset log,
-    * its state store and its landed output are all per-run). The landed
-    * dir lives under a pid-scoped tmpRoot (shutdown-hook cleaned) that
-    * no per-rep deleteTree touches, and the landed input is IMMUTABLE
-    * across reps by contract: keys that need a watermark-flush sentinel
-    * STAGE it as the final pinned-mtime batch (the stageBatches order
-    * contract makes it the last file consumed) rather than appending
-    * into the watched dir mid-run — a per-rep append would both mutate
-    * the shared landing and cost one extra full-state checkpoint commit
-    * per rep. */
-  private val stagedCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    (String, org.apache.spark.sql.types.StructType)]()
-
+    * dataset, tag) through `Memo.once` — while every invocation keeps
+    * its OWN fresh checkpoint + sink root, so the gates stay real (the
+    * streaming query, its offset log, its state store and its landed
+    * output are all per-run). The landed dir lives under a pid-scoped
+    * tmpRoot (shutdown-hook cleaned) that no per-rep deleteTree touches,
+    * and the landed input is IMMUTABLE across reps by contract: keys
+    * that need a watermark-flush sentinel STAGE it as the final
+    * pinned-mtime batch (the stageBatches order contract makes it the
+    * last file consumed) rather than appending into the watched dir
+    * mid-run — a per-rep append would both mutate the shared landing
+    * and cost one extra full-state checkpoint commit per rep. */
   def stagedOnce(s: org.apache.spark.sql.SparkSession, d: String, tag: String)(
       build: String => org.apache.spark.sql.types.StructType)
-      : (String, org.apache.spark.sql.types.StructType) = {
-    stagedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    stagedCache.computeIfAbsent((s, d, tag), _ => {
-      graft.ops.ColdWork.note()
+      : (String, org.apache.spark.sql.types.StructType) =
+    graft.ops.Memo.once(s, d, "stream." + tag) {
       // the path embeds the OWNING SESSION (identity hash), not just
       // pid+dataset — the Landed.once discipline: without it a second
       // live session in the same JVM would deleteTree and restage the
@@ -329,8 +321,7 @@ object StreamOps {
         "_s" + Integer.toHexString(System.identityHashCode(s)), d) + "/in"
       graft.ops.Staging.deleteTree(inDir)
       (inDir, build(inDir))
-    })
-  }
+    }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily sized
     * for a checkpointed streaming query, restoring the session conf

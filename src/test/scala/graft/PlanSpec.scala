@@ -352,7 +352,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("maintenance_incremental_agg: refresh reads the LANDED MV; only the increment scans events") {
     val p = plan(graft.ops.Scale.maintenanceIncrementalAgg)
-    assert(p.contains("graft_mv_daily"),
+    assert(p.contains("graft_ld_scale.mv_daily_"),
       s"base rollup not read from the landed file — history recomputed:\n$p")
     // the increment's cutoff must reach the events scan (one slice read,
     // never the whole history)

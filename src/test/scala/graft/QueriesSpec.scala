@@ -12,8 +12,8 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys ⊆ queries keys") {
-    assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
+  test("oracleSql keys = queries keys") {
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
   // Keys audited to legitimately carry a global (partition-less) window
