@@ -216,14 +216,13 @@ object Swivel {
       .orderBy("row_shard", "col_shard")
   }
 
-  /** The `.pb` shard sink + source under the driver's hash — the ONE
-    * reference surface (its own `shard-RRR-CCC.pb` tensorflow.Example
-    * output format) that until round 8 had only golden-byte specs: write
-    * the sharded cooc matrix through `TfExample.writeSwivelPbShards`,
-    * read the files back via `readSwivelPbShards` (one `binaryFile`
-    * scan), and emit the cell relation — the same promotion csv/json/orc/
-    * xml/bucketed/partitioned sinks got in r6/r7, completing the format
-    * surface. The oracle is `swivel_shard`'s SQL with ONE honest change:
+  /** The `.pb` shard sink + source under the driver's hash — the
+    * reference's own `shard-RRR-CCC.pb` tensorflow.Example output format,
+    * gated end to end rather than only by golden-byte specs: write the
+    * sharded cooc matrix through `TfExample.writeSwivelPbShards`, read
+    * the files back via `readSwivelPbShards` (one `binaryFile` scan), and
+    * emit the cell relation, as the csv/json/orc/xml/bucketed/partitioned
+    * sinks are gated. The oracle is `swivel_shard`'s SQL with ONE honest change:
     * the wire format stores float32 (`sparse_value` is a FloatList), so
     * both engines quantize the 4dp weight double→FLOAT — the same
     * round-to-nearest-even cast on the same double yields identical bits,
@@ -240,15 +239,9 @@ object Swivel {
     val vocabSize = vocab.count().toInt
     val numShards = vocabSize / ShardSize
     val shards = SwivelPrep.shard(cooc, vocab, ShardSize)
-    // deterministic temp dir per sfDir (join_bucketed/scan_csv convention),
-    // wiped first so a stale grid from an older vocab can't leak files
-    // into the pathGlobFilter scan
+    // deterministic temp dir per sfDir (join_bucketed/scan_csv convention);
+    // the sink deletes a stale grid from an older vocab before writing
     val dir = QueryDef.tmpRoot("pb", d)
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.isDirectory(p)) {
-      val old = java.nio.file.Files.list(p)
-      try old.forEach(f => java.nio.file.Files.delete(f)) finally old.close()
-    }
     graft.sources.TfExample.writeSwivelPbShards(shards, numShards, vocabSize, dir)
     graft.sources.TfExample.readSwivelPbShards(s, dir)
       .select("row_shard", "col_shard", "local_row", "local_col",

@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Avro OBJECT CONTAINER FILE sink + source built on the avro core
   * runtime Spark already bundles (`avro-1.12.1.jar`) — the external
   * `spark-avro` DataSource module is NOT on this classpath, so the
   * format surface is completed the `TfExample` way: executors own the
-  * files, the driver never sees a row, and the read side is one
-  * `binaryFile` scan fanned out through the container decoder.
+  * files through the shared `Sources.writeShardFiles` sink, the driver
+  * never sees a row, and the read side is one `Sources.readShardFiles`
+  * scan fanned out through the container decoder.
   *
   * OCF layout (public spec, file format version 1): magic `Obj\x01`,
   * a metadata map carrying `avro.schema` (the writer schema JSON) and
@@ -39,87 +40,61 @@ object AvroFile {
       |{"name":"c_mktsegment","type":"string"}]}""".stripMargin
 
   /** Write `(shard, c_custkey, c_name, c_nationkey, c_acctbal,
-    * c_mktsegment)` rows as one OCF per shard under `dir`. Shards are
-    * owned by the executor task holding them after the repartition
-    * (the writeDocTfRecords discipline); records are custkey-sorted
-    * within a shard so each file's record SEQUENCE is deterministic
-    * even though its sync-marker bytes are not. */
-  def writeCustomerAvro(rows: DataFrame, dir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    import rows.sparkSession.implicits._
-    val schemaJson = CustomerSchemaJson
-    val written = rows
-      .select(col("shard").cast("long"), col("c_custkey").cast("long"),
+    * c_mktsegment)` rows as one `customer-SSS.avro` OCF per shard under
+    * `dir`, on `Sources.writeShardFiles`; records are custkey-sorted
+    * within a shard so each file's record SEQUENCE is deterministic even
+    * though its sync-marker bytes are not. */
+  def writeCustomerAvro(rows: DataFrame, dir: String): Unit =
+    Sources.writeShardFiles(
+      rows.select(col("shard").cast("long"), col("c_custkey").cast("long"),
         col("c_name"), col("c_nationkey").cast("int"),
-        col("c_acctbal").cast("double"), col("c_mktsegment"))
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "c_custkey")
-      .mapPartitions { it: Iterator[Row] =>
-        // schema parsed task-side from the JSON literal: avro Schema
-        // serializability is a version detail this closure never bets on
-        val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
-        val buf = it.buffered
-        val shards = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (buf.hasNext) {
-          val shard = buf.head.getLong(0)
-          val w = new org.apache.avro.file.DataFileWriter(
-            new org.apache.avro.generic.GenericDatumWriter[
-              org.apache.avro.generic.GenericRecord](schema))
-          w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-          w.create(schema, new java.io.File(f"$dir/customer-$shard%03d.avro"))
-          try {
-            // records STREAM through the encoder's block buffer — task
-            // heap holds one record plus one compressed block, never
-            // the shard (the TfExample BufferedOutputStream discipline)
-            while (buf.hasNext && buf.head.getLong(0) == shard) {
-              val r = buf.next()
-              val rec = new org.apache.avro.generic.GenericData.Record(schema)
-              rec.put("c_custkey", r.getLong(1))
-              rec.put("c_name", r.getString(2))
-              rec.put("c_nationkey", r.getInt(3))
-              rec.put("c_acctbal", r.getDouble(4))
-              rec.put("c_mktsegment", r.getString(5))
-              w.append(rec)
-            }
-          } finally w.close()
-          shards += shard
-        }
-        shards.iterator
-      }
-      .collect() // shard-count-bounded
-    val invisible = written.filterNot(sh =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(f"$dir/customer-$sh%03d.avro")))
-    require(invisible.isEmpty, s"avro shards not visible: $invisible")
-  }
+        col("c_acctbal").cast("double"), col("c_mktsegment")),
+      dir, "customer-*.avro", Seq("shard"), Seq("c_custkey"),
+      r => f"customer-${r.getLong(0)}%03d.avro") { (out, shard) =>
+      // schema parsed task-side from the JSON literal: avro Schema
+      // serializability is a version detail this closure never bets on
+      val schema = new org.apache.avro.Schema.Parser().parse(CustomerSchemaJson)
+      val w = new org.apache.avro.file.DataFileWriter(
+        new org.apache.avro.generic.GenericDatumWriter[
+          org.apache.avro.generic.GenericRecord](schema))
+      w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
+      w.create(schema, out)
+      // records STREAM through the encoder's block buffer — task heap
+      // holds one record plus one compressed block, never the shard
+      try shard.foldLeft(0L) { (n, r) =>
+        val rec = new org.apache.avro.generic.GenericData.Record(schema)
+        rec.put("c_custkey", r.getLong(1))
+        rec.put("c_name", r.getString(2))
+        rec.put("c_nationkey", r.getInt(3))
+        rec.put("c_acctbal", r.getDouble(4))
+        rec.put("c_mktsegment", r.getString(5))
+        w.append(rec)
+        n + 1
+      } finally w.close()
+    }
 
-  /** Read every OCF under `dir` back as customer rows: one binaryFile
-    * scan (file-parallel), per-file container decode inside the
-    * iterator. The reader takes the schema FROM the container (null
-    * reader schema → writer schema), certifying the self-describing
-    * path end to end; `Utf8` values are materialized to String at the
-    * row boundary. */
+  /** Read every `customer-SSS.avro` OCF under `dir` back as customer
+    * rows, decoding each container inside the reading task. The reader
+    * takes the schema FROM the container (null reader schema → writer
+    * schema), certifying the self-describing path end to end; `Utf8`
+    * values are materialized to String at the row boundary. */
   def readCustomerAvro(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.format("binaryFile").load(dir + "/*.avro")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions { files =>
-        files.flatMap { bytes =>
-          val rd = new org.apache.avro.file.DataFileReader(
-            new org.apache.avro.file.SeekableByteArrayInput(bytes),
-            new org.apache.avro.generic.GenericDatumReader[
-              org.apache.avro.generic.GenericRecord]())
-          new Iterator[(Long, String, Int, Double, String)] {
-            def hasNext: Boolean = { val h = rd.hasNext; if (!h) rd.close(); h }
-            def next(): (Long, String, Int, Double, String) = {
-              val g = rd.next()
-              (g.get("c_custkey").asInstanceOf[Long],
-                g.get("c_name").toString,
-                g.get("c_nationkey").asInstanceOf[Int],
-                g.get("c_acctbal").asInstanceOf[Double],
-                g.get("c_mktsegment").toString)
-            }
+    Sources.readShardFiles(s, dir, "customer-*.avro")
+      .flatMap { case (_, bytes) =>
+        val rd = new org.apache.avro.file.DataFileReader(
+          new org.apache.avro.file.SeekableByteArrayInput(bytes),
+          new org.apache.avro.generic.GenericDatumReader[
+            org.apache.avro.generic.GenericRecord]())
+        new Iterator[(Long, String, Int, Double, String)] {
+          def hasNext: Boolean = { val h = rd.hasNext; if (!h) rd.close(); h }
+          def next(): (Long, String, Int, Double, String) = {
+            val g = rd.next()
+            (g.get("c_custkey").asInstanceOf[Long],
+              g.get("c_name").toString,
+              g.get("c_nationkey").asInstanceOf[Int],
+              g.get("c_acctbal").asInstanceOf[Double],
+              g.get("c_mktsegment").toString)
           }
         }
       }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MDS-style sized-index binary shard sink + source — the MosaicML
@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
   * shard: a leading little-endian uint32 sample count, a (n+1)-entry
   * uint32 offset table, then the concatenated sample bytes, plus an
   * `index.json` manifest beside the shards), hand-rolled like the
-  * TFRecord/Avro/WebDataset drivers (no format library offline; the
-  * format IS the byte arithmetic). The offset table is the point of the
-  * format: sample i occupies [off(i), off(i+1)), so a training loader
-  * seeks straight to any sample — the random-access property that makes
-  * global shuffles cheap at 100 TB (read two u32s, then exactly one
-  * sample's bytes; WebDataset's tar must stream to position). The
+  * TFRecord/Avro/WebDataset drivers on the shared `Sources` shard-file
+  * sink (no format library offline; the format IS the byte arithmetic).
+  * The offset table is the point of the format: sample i occupies
+  * [off(i), off(i+1)), so a training loader seeks straight to any
+  * sample — the random-access property that makes global shuffles
+  * cheap at 100 TB (read two u32s, then exactly one sample's bytes;
+  * WebDataset's tar must stream to position). The
   * reader exercises exactly that: each shard's probe sample is located
   * through the table, never by scanning predecessors.
   *
@@ -46,86 +47,51 @@ object MdsShard {
     b.array
   }
 
-  /** Write one `docs-SSS.mds` per shard (executor-owned, the
-    * writeShardedTfRecords lifecycle: clean stale shards, write from
-    * the owning task, driver visibility check) plus a driver-written
-    * `index.json` naming every shard with its sample count and byte
-    * size — the manifest a streaming loader opens first. The samples of
-    * a shard are buffered in memory before the write because the offset
-    * table PRECEDES the data; that buffer is the shard size itself,
-    * which production MDS writers cap (~64 MB per shard) for exactly
-    * this reason — shard count, not shard size, is the scale lever.
-    * Input: (shard long, doc_id long, text). */
+  /** Write one `docs-SSS.mds` per shard on `Sources.writeShardFiles`,
+    * plus a driver-written `index.json` naming every shard with its
+    * sample count and byte size — the manifest a streaming loader opens
+    * first. The samples of a shard are buffered in memory before the
+    * write because the offset table PRECEDES the data; that buffer is the
+    * shard size itself, which production MDS writers cap (~64 MB per
+    * shard) for exactly this reason — shard count, not shard size, is the
+    * scale lever. Input: (shard long, doc_id long, text). */
   def writeDocShards(docs: DataFrame, dir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => (f.getName.startsWith("docs-") && f.getName.endsWith(".mds"))
-        || f.getName == "index.json")
-      .foreach(f => java.nio.file.Files.delete(f.toPath))
-    import docs.sparkSession.implicits._
-    val written = docs
-      .select(col("shard").cast("long"), col("doc_id").cast("long"), col("text"))
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "doc_id")
-      .mapPartitions { it: Iterator[Row] =>
-        val buf = it.buffered
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        while (buf.hasNext) {
-          val shard = buf.head.getLong(0)
-          val samples = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          while (buf.hasNext && buf.head.getLong(0) == shard) {
-            val r = buf.next()
-            // fail with the doc named instead of an opaque executor NPE:
-            // the documents-table contract is text NOT NULL, so a null
-            // here is an upstream bug worth a readable message
-            require(!r.isNullAt(2),
-              s"mds writer: null text for doc_id ${r.getLong(1)} (shard $shard) — text must be non-null")
-            samples += sample(r.getLong(1), r.getString(2).getBytes("UTF-8"))
-          }
-          val n = samples.length
-          val headerLen = 4L + 4L * (n + 1)
-          val os = new java.io.BufferedOutputStream(
-            java.nio.file.Files.newOutputStream(
-              java.nio.file.Paths.get(f"$dir/docs-$shard%03d.mds")))
-          try {
-            os.write(u32(n.toLong))
-            var off = headerLen
-            os.write(u32(off))
-            samples.foreach { sm => off += sm.length; os.write(u32(off)) }
-            samples.foreach(os.write)
-            out += ((shard, n.toLong, off))
-          } finally os.close()
-        }
-        out.iterator
-      }
-      .collect() // shard-count-bounded
-    val invisible = written.filterNot { case (sh, _, _) =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(f"$dir/docs-$sh%03d.mds"))
+    val written = Sources.writeShardFiles(
+      docs.select(col("shard").cast("long"), col("doc_id").cast("long"), col("text")),
+      dir, "{docs-*.mds,index.json}", Seq("shard"), Seq("doc_id"),
+      r => f"docs-${r.getLong(0)}%03d.mds") { (out, shard) =>
+      val samples = shard.map { r =>
+        // fail with the doc named instead of an opaque executor NPE:
+        // the documents-table contract is text NOT NULL, so a null
+        // here is an upstream bug worth a readable message
+        require(!r.isNullAt(2),
+          s"mds writer: null text for doc_id ${r.getLong(1)} (shard ${r.getLong(0)}) — text must be non-null")
+        sample(r.getLong(1), r.getString(2).getBytes("UTF-8"))
+      }.toIndexedSeq
+      val n = samples.length.toLong
+      out.write(u32(n))
+      samples.scanLeft(4L + 4L * (n + 1))(_ + _.length).foreach(off => out.write(u32(off)))
+      samples.foreach(out.write)
+      n
     }
-    require(invisible.isEmpty,
-      s"executor-written mds shards not visible to the driver: " +
-        s"${invisible.map(_._1).mkString(",")} — shared filesystem required")
-    val manifest = written.sortBy(_._1).map { case (sh, n, bytes) =>
-      f"""{"shard":"docs-$sh%03d.mds","samples":$n,"bytes":$bytes}"""
-    }.mkString("[\n", ",\n", "\n]")
+    val manifest = written.sortBy(w => w._1.stripPrefix("docs-").stripSuffix(".mds").toLong)
+      .map { case (file, n) =>
+        val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(dir, file))
+        s"""{"shard":"$file","samples":$n,"bytes":$bytes}"""
+      }.mkString("[\n", ",\n", "\n]")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/index.json"),
+      java.nio.file.Paths.get(dir, "index.json"),
       manifest.getBytes("UTF-8"))
   }
 
-  /** Read shards back as (shard, doc_id, text_bytes, is_probe): one
-    * binaryFile scan; per shard the offset table is verified end to end
-    * (monotone, first = header length, last = file length) and the
-    * PROBE sample — index n/2 — is located THROUGH the table (the
-    * random-access read path), flagged so the gate can pin which
-    * doc_id the seek landed on. */
+  /** Read shards back as (shard, doc_id, text_bytes, is_probe); per
+    * shard the offset table is verified end to end (monotone, first =
+    * header length, last = file length) and the PROBE sample — index
+    * n/2 — is located THROUGH the table (the random-access read path),
+    * flagged so the gate can pin which doc_id the seek landed on. */
   def readDocShards(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "docs-*.mds").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    Sources.readShardFiles(spark, dir, "docs-*.mds")
       .flatMap { case (path, bytes) =>
         val shard = path.replaceAll(".*docs-(\\d+)\\.mds$", "$1").toLong
         val n = readU32(bytes, 0).toInt
@@ -137,8 +103,8 @@ object MdsShard {
         // an oversized shard, or a corrupt table) fails naming the REAL
         // limit rather than a puzzling length mismatch; a genuinely
         // >2 GiB file never reaches here — binaryFile caps content at
-        // the JVM array bound upstream (review finding: after the
-        // equality require, this check was unreachable)
+        // the JVM array bound upstream (after the equality require, this
+        // check would be unreachable)
         require(off.last <= Int.MaxValue.toLong,
           s"mds $path: offset table claims ${off.last} bytes — past the 2 GiB single-buffer read limit; split into more shards")
         require(off.last == bytes.length.toLong,

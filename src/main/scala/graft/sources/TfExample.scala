@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Dependency-free encoder for `tensorflow.Example` protos and TFRecord
@@ -61,17 +61,18 @@ object TfExample {
     lenDelim(1, featuresMsg)
   }
 
+  private def crcMasked(b: Array[Byte]): Int = {
+    val c = new java.util.zip.CRC32C
+    c.update(b)
+    val v = c.getValue.toInt
+    ((v >>> 15) | (v << 17)) + 0xa282ead8
+  }
+
   /** One TFRecord frame around a payload: length (8B LE) + masked CRC32C of
     * the length bytes + payload + masked CRC32C of the payload — for the
     * record-stream variant of the sink (the reference's per-shard files are
     * raw single-Example `.pb`, but TFRecord readers want this framing). */
   def tfRecordFrame(payload: Array[Byte]): Array[Byte] = {
-    def crcMasked(b: Array[Byte]): Int = {
-      val c = new java.util.zip.CRC32C
-      c.update(b)
-      val v = c.getValue.toInt
-      ((v >>> 15) | (v << 17)) + 0xa282ead8
-    }
     val lenB = java.nio.ByteBuffer.allocate(8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(payload.length.toLong).array()
     def le4(i: Int) = java.nio.ByteBuffer.allocate(4)
@@ -79,17 +80,26 @@ object TfExample {
     lenB ++ le4(crcMasked(lenB)) ++ payload ++ le4(crcMasked(payload))
   }
 
-  /** Decode a serialized Example into name -> (int64 values, float values)
-    * — the read half of the wire format, for consuming existing shard
-    * files (the reference pipeline's own output) without any protobuf
-    * dependency. Handles what canonical encoders legally emit: an empty
-    * packed field may be OMITTED entirely (an Int64List/FloatList
-    * submessage of zero length), and a repeated packed field may arrive
-    * as MULTIPLE chunks — chunks are concatenated in order. Unknown or
-    * bytes-typed features fail fast rather than being skipped: a swivel
-    * shard file contains exactly int64/float lists.
+  /** BytesList feature (`Feature.bytes_list`, field 1): each value is its
+    * own length-delimited entry (bytes are never packed). */
+  def bytesFeature(values: Seq[Array[Byte]]): Array[Byte] =
+    lenDelim(1, values.toArray.flatMap(v => lenDelim(1, v)))
+
+  /** One decoded Feature's values. A Feature carries one list kind, so at
+    * most one of the three is non-empty. */
+  final case class Feature(int64: Seq[Long], float: Seq[Float], bytes: Seq[Array[Byte]])
+
+  /** Decode a serialized Example into name -> Feature — the read half of
+    * the wire format, for this module's own files and for the reference
+    * pipeline's output, without any protobuf dependency. Handles what
+    * canonical encoders legally emit: an empty list may be OMITTED
+    * entirely (a Feature of zero length), and a repeated packed field may
+    * arrive as MULTIPLE chunks — chunks are concatenated in order. A
+    * BytesList holds one field-1 entry per value. A Feature kind other
+    * than Int64List, FloatList or BytesList fails fast rather than being
+    * skipped, as do unpacked int64 values and an omitted Features field.
     */
-  def parseExample(bytes: Array[Byte]): Map[String, (Seq[Long], Seq[Float])] = {
+  def parseExample(bytes: Array[Byte]): Map[String, Feature] = {
     var pos = 0
     def varintAt(): Long = {
       var shift = 0; var v = 0L; var more = true
@@ -102,7 +112,7 @@ object TfExample {
     def delim(): (Int, Int) = { val n = varintAt().toInt; val s = pos; pos += n; (s, s + n) }
     require(varintAt() == 0x0a, "not an Example: missing features tag")
     val (fs, fe) = delim()
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, (Seq[Long], Seq[Float])]
+    val out = scala.collection.mutable.LinkedHashMap.empty[String, Feature]
     pos = fs
     while (pos < fe) {
       require(varintAt() == 0x0a, "bad Features entry tag")
@@ -115,17 +125,19 @@ object TfExample {
       require(varintAt() == 0x12, "bad map value tag")
       val (vs, ve) = delim()
       pos = vs
-      // Feature message: iterate its fields (zero or one in practice; an
-      // omitted empty list leaves the message EMPTY — vs == ve)
+      // Feature message: zero or one list field in practice (an omitted
+      // empty list leaves the message EMPTY — vs == ve)
       val longs = scala.collection.mutable.ArrayBuffer.empty[Long]
       val floats = scala.collection.mutable.ArrayBuffer.empty[Float]
+      val bs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       while (pos < ve) {
         val kind = varintAt()
+        require(kind == 0x1a || kind == 0x12 || kind == 0x0a, s"unexpected Feature kind $kind")
         val (ls, le) = delim()
         pos = ls // descend into the list message; may itself be empty
         while (pos < le) {
-          require(varintAt() == 0x0a, "bad packed list tag")
-          val (ps, pe) = delim() // one packed chunk; repeated chunks concat
+          require(varintAt() == 0x0a, "bad list value tag")
+          val (ps, pe) = delim() // a packed chunk, or one bytes value
           kind match {
             case 0x1a => // Int64List
               pos = ps
@@ -134,83 +146,14 @@ object TfExample {
               val bb = java.nio.ByteBuffer.wrap(bytes, ps, pe - ps)
                 .order(java.nio.ByteOrder.LITTLE_ENDIAN)
               (0 until (pe - ps) / 4).foreach(_ => floats += bb.getFloat)
-            case k => throw new IllegalArgumentException(s"unexpected Feature kind $k")
+            case _ => // BytesList
+              bs += bytes.slice(ps, pe)
           }
           pos = pe
         }
         pos = le
       }
-      out(key) = (longs.toSeq, floats.toSeq)
-      pos = entryEnd
-    }
-    out.toMap
-  }
-
-  /** BytesList feature (`Feature.bytes_list`, field 1): each value is its
-    * own length-delimited entry (bytes are never packed). */
-  def bytesFeature(values: Seq[Array[Byte]]): Array[Byte] =
-    lenDelim(1, values.toArray.flatMap(v => lenDelim(1, v)))
-
-  /** Decode a DOCUMENT Example — int64 + bytes features (the export
-    * schema; float lists fail fast). Guarantees decoding of THIS
-    * module's writer output only: unlike `parseExample`'s documented
-    * tolerance, it rejects an omitted empty Features field and unpacked
-    * int64 values (tag 0x08), both of which are legal in third-party
-    * Examples. */
-  def parseDocExample(bytes: Array[Byte]): Map[String, (Seq[Long], Seq[Array[Byte]])] = {
-    var pos = 0
-    def varintAt(): Long = {
-      var shift = 0; var v = 0L; var more = true
-      while (more) {
-        val x = bytes(pos); pos += 1
-        v |= (x & 0x7fL) << shift; shift += 7; more = (x & 0x80) != 0
-      }
-      v
-    }
-    def delim(): (Int, Int) = { val n = varintAt().toInt; val s = pos; pos += n; (s, s + n) }
-    require(varintAt() == 0x0a, "not an Example: missing features tag")
-    val (fs, fe) = delim()
-    val out = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Seq[Long], Seq[Array[Byte]])]
-    pos = fs
-    while (pos < fe) {
-      require(varintAt() == 0x0a, "bad Features entry tag")
-      val (entryStart, entryEnd) = delim()
-      pos = entryStart
-      require(varintAt() == 0x0a, "bad map key tag")
-      val (ks, ke) = delim()
-      val key = new String(bytes.slice(ks, ke), "UTF-8")
-      pos = ke
-      require(varintAt() == 0x12, "bad map value tag")
-      val (vs, ve) = delim()
-      pos = vs
-      val longs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val bs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-      while (pos < ve) {
-        val kind = varintAt()
-        val (ls, le) = delim()
-        pos = ls
-        kind match {
-          case 0x1a => // Int64List: packed chunks under field-1 tags
-            while (pos < le) {
-              require(varintAt() == 0x0a, "bad packed list tag")
-              val (ps, pe) = delim()
-              pos = ps
-              while (pos < pe) longs += varintAt()
-              pos = pe
-            }
-          case 0x0a => // BytesList: one field-1 entry PER VALUE, never packed
-            while (pos < le) {
-              require(varintAt() == 0x0a, "bad bytes value tag")
-              val (ps, pe) = delim()
-              bs += bytes.slice(ps, pe)
-              pos = pe
-            }
-          case k => throw new IllegalArgumentException(s"unexpected Feature kind $k")
-        }
-        pos = le
-      }
-      out(key) = (longs.toSeq, bs.toSeq)
+      out(key) = Feature(longs.toSeq, floats.toSeq, bs.toSeq)
       pos = entryEnd
     }
     out.toMap
@@ -220,12 +163,6 @@ object TfExample {
     * masked CRC32Cs per record (a corrupt length or payload fails fast —
     * silent truncation would undercount the corpus). */
   def tfRecordFrames(stream: Array[Byte]): Seq[Array[Byte]] = {
-    def crcMasked(b: Array[Byte]): Int = {
-      val c = new java.util.zip.CRC32C
-      c.update(b)
-      val v = c.getValue.toInt
-      ((v >>> 15) | (v << 17)) + 0xa282ead8
-    }
     val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     var pos = 0
     while (pos < stream.length) {
@@ -245,55 +182,19 @@ object TfExample {
     out.toSeq
   }
 
-  /** Shared executor-owned sharded-TFRecord sink (review finding: the
-    * doc and emb writers were copy-pasted loops, so a staging fix would
-    * have had to land in both). `rows` must carry the long `shard`
-    * column at position 0 plus a per-shard sort key at position 1;
-    * each shard is owned and written by the executor task that holds
-    * it after the repartition (the writeSwivelPbShards discipline —
-    * nothing corpus-sized on the driver), records stream through a
-    * buffered sink one frame at a time (task heap holds one record,
-    * not the shard), and shard bytes are deterministic because records
-    * are (shard, key)-sorted. STALE `<prefix>-*.tfrecord` files are
-    * deleted before writing: a rerun that lands fewer shards into the
-    * same dir must not leave ghost files for the glob reader to gate
-    * (review finding). */
+  /** Sharded-TFRecord writer for the doc and emb exports, on
+    * `Sources.writeShardFiles`: one `<prefix>-SSS.tfrecord` per shard, a
+    * stream of framed Examples written one record at a time (task heap
+    * holds one record, not the shard). `rows` must carry the long `shard`
+    * column at position 0 plus a per-shard sort key at position 1, so
+    * shard bytes are deterministic. */
   private def writeShardedTfRecords(rows: DataFrame, dir: String,
-      prefix: String, mkExample: Row => Array[Byte]): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith(prefix + "-") &&
-        f.getName.endsWith(".tfrecord"))
-      .foreach(f => java.nio.file.Files.delete(f.toPath))
-    import rows.sparkSession.implicits._
-    val sortKey = rows.columns(1)
-    val written = rows
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", sortKey)
-      .mapPartitions { it: Iterator[Row] =>
-        val buf = it.buffered
-        val shards = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (buf.hasNext) {
-          val shard = buf.head.getLong(0)
-          val out = new java.io.BufferedOutputStream(
-            java.nio.file.Files.newOutputStream(
-              java.nio.file.Paths.get(f"$dir/$prefix%s-$shard%03d.tfrecord")))
-          try
-            while (buf.hasNext && buf.head.getLong(0) == shard)
-              out.write(tfRecordFrame(mkExample(buf.next())))
-          finally out.close()
-          shards += shard
-        }
-        shards.iterator
-      }
-      .collect() // shard-count-bounded
-    val invisible = written.filterNot(s =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(f"$dir/$prefix%s-$s%03d.tfrecord")))
-    require(invisible.isEmpty,
-      s"executor-written TFRecord shards not visible to the driver: " +
-        s"${invisible.mkString(",")} — shared filesystem required")
-  }
+      prefix: String, mkExample: Row => Array[Byte]): Unit =
+    Sources.writeShardFiles(rows, dir, s"$prefix-*.tfrecord", Seq("shard"),
+        Seq(rows.columns(1)), r => f"$prefix%s-${r.getLong(0)}%03d.tfrecord") {
+      (out, shard) =>
+        shard.foldLeft(0L) { (n, r) => out.write(tfRecordFrame(mkExample(r))); n + 1 }
+    }
 
   /** Document TFRecord export — the training-data handoff format (what a
     * TF/JAX input pipeline reads): one `docs-SSS.tfrecord` per shard,
@@ -326,37 +227,29 @@ object TfExample {
         "emb" -> floatFeature(r.getSeq[Float](3)))))
 
   /** Read embedding TFRecord shards back into (vec_id, label, embedding
-    * float[]) — `parseExample` handles the int64 + packed-float wire. */
-  def readEmbTfRecords(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+    * float[]). */
+  def readEmbTfRecords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "emb-*.tfrecord").load(dir)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap { stream =>
+    Sources.readShardFiles(spark, dir, "emb-*.tfrecord")
+      .flatMap { case (_, stream) =>
         tfRecordFrames(stream).map { ex =>
           val f = parseExample(ex)
-          (f("id")._1.head, f("label")._1.head, f("emb")._2)
+          (f("id").int64.head, f("label").int64.head, f("emb").float)
         }
       }
       .toDF("vec_id", "label", "embedding")
   }
 
   /** Read document TFRecord shards back into (doc_id, text, n_tokens) —
-    * one binaryFile scan, frames + Examples decoded by the reading task. */
-  def readDocTfRecords(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+    * frames + Examples decoded by the reading task. */
+  def readDocTfRecords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "docs-*.tfrecord").load(dir)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap { stream =>
+    Sources.readShardFiles(spark, dir, "docs-*.tfrecord")
+      .flatMap { case (_, stream) =>
         tfRecordFrames(stream).map { ex =>
-          val f = parseDocExample(ex)
-          (f("id")._1.head, new String(f("text")._2.head, "UTF-8"),
-            f("n_tokens")._1.head)
+          val f = parseExample(ex)
+          (f("id").int64.head, new String(f("text").bytes.head, "UTF-8"),
+            f("n_tokens").int64.head)
         }
       }
       .toDF("doc_id", "text", "n_tokens")
@@ -364,30 +257,25 @@ object TfExample {
 
   /** Read `shard-RRR-CCC.pb` files back into the shard cell relation —
     * the migration path for corpora already prepared by the reference:
-    * its output files become this engine's input. One Spark `binaryFile`
-    * scan; each file is decoded by the task that reads it (files are
-    * shard-sized by construction). `weight` comes back as FLOAT — the
-    * format stores float32, so the reader is honest about the precision
-    * the bytes carry.
+    * its output files become this engine's input. `weight` comes back as
+    * FLOAT — the format stores float32, so the reader is honest about the
+    * precision the bytes carry.
     */
-  def readSwivelPbShards(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+  def readSwivelPbShards(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val name = "shard-(\\d+)-(\\d+)\\.pb".r
-    spark.read.format("binaryFile").option("pathGlobFilter", "shard-*.pb")
-      .load(dir)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
+    Sources.readShardFiles(spark, dir, "shard-*.pb")
       .flatMap { case (path, bytes) =>
         val base = path.substring(path.lastIndexOf('/') + 1)
         val m = name.findFirstMatchIn(base).getOrElse(
           throw new IllegalArgumentException(s"not a shard file: $base"))
         val (r, c) = (m.group(1).toLong, m.group(2).toLong)
         val f = parseExample(bytes)
-        val gRows = f("global_row")._1
-        val gCols = f("global_col")._1
-        val lr = f("sparse_local_row")._1
-        val lc = f("sparse_local_col")._1
-        val w = f("sparse_value")._2
+        val gRows = f("global_row").int64
+        val gCols = f("global_col").int64
+        val lr = f("sparse_local_row").int64
+        val lc = f("sparse_local_col").int64
+        val w = f("sparse_value").float
         lr.indices.map { i =>
           (r, c, lr(i), lc(i), gRows(lr(i).toInt), gCols(lc(i).toInt), w(i))
         }
@@ -403,75 +291,39 @@ object TfExample {
     *   global_row / global_col : Int64List, ids k*numShards + shardIdx
     *   sparse_local_row/col    : Int64List, one entry per nonzero cell
     *   sparse_value            : FloatList, the cell weights
-    * Each shard is encoded by the one executor task that owns it after the
-    * repartition (the same co-location `writeShards` uses), so nothing
-    * shard-sized ever sits on the driver. Paths are written through
-    * java.nio for the local/shared-fs case; a cluster deployment routes the
-    * same bytes through the Hadoop FileSystem API instead.
+    * Each shard is encoded by the one executor task that owns it
+    * (`Sources.writeShardFiles`), so nothing shard-sized ever sits on the
+    * driver; a rerun into the same `dir` first deletes the old grid.
     */
   def writeSwivelPbShards(shards: DataFrame, numShards: Int, vocabSize: Int,
       dir: String): Unit = {
     require(numShards > 0 && vocabSize % numShards == 0,
       s"vocabSize $vocabSize must be a multiple of numShards $numShards")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    import shards.sparkSession.implicits._
-    // Executor tasks write and REPORT the (row_shard, col_shard) pairs they
-    // owned; the driver then requires every reported file to be visible
-    // before backfilling holes. On a deployment without a filesystem shared
-    // between executors and driver, the reported shards are missing from
-    // the driver's view and this THROWS — previously the backfill would
-    // silently replace every executor-written shard with an empty
-    // stripes-only file, a complete-looking but cell-less output grid.
-    val written = shards
-      .select(col("row_shard").cast("long"), col("col_shard").cast("long"),
+    val rowsPerShard = vocabSize / numShards
+    Sources.writeShardFiles(
+      shards.select(col("row_shard").cast("long"), col("col_shard").cast("long"),
         col("local_row").cast("long"), col("local_col").cast("long"),
-        col("weight").cast("double"))
-      .repartition(col("row_shard"), col("col_shard"))
-      .sortWithinPartitions("row_shard", "col_shard", "local_row", "local_col")
-      .mapPartitions { it: Iterator[Row] =>
-        val rowsPerShard = vocabSize / numShards
-        // consecutive rows share a shard after the sort — group streaming
-        val grouped = new Iterator[(Long, Long, Seq[Row])] {
-          val buf = it.buffered
-          def hasNext = buf.hasNext
-          def next() = {
-            val head = buf.head
-            val (r, c) = (head.getLong(0), head.getLong(1))
-            val cells = scala.collection.mutable.ArrayBuffer.empty[Row]
-            while (buf.hasNext && buf.head.getLong(0) == r && buf.head.getLong(1) == c)
-              cells += buf.next()
-            (r, c, cells.toSeq)
-          }
-        }
-        grouped.map { case (r, c, cells) =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(f"$dir/shard-$r%03d-$c%03d.pb"),
-            shardExample(r, c, numShards, rowsPerShard, cells))
-          (r, c)
-        }
-      }
-      .collect() // numShards²-bounded
-    val invisible = written.filterNot { case (r, c) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(f"$dir/shard-$r%03d-$c%03d.pb"))
+        col("weight").cast("double")),
+      dir, "shard-*.pb", Seq("row_shard", "col_shard"), Seq("local_row", "local_col"),
+      r => pbName(r.getLong(0), r.getLong(1))) { (out, shard) =>
+      val cells = shard.toIndexedSeq
+      out.write(shardExample(cells.head.getLong(0), cells.head.getLong(1),
+        numShards, rowsPerShard, cells))
+      cells.length.toLong
     }
-    if (invisible.nonEmpty)
-      throw new IllegalStateException(
-        s"writeSwivelPbShards: ${invisible.length} executor-written shard file(s) are not " +
-          f"visible to the driver (e.g. shard-${invisible.head._1}%03d-${invisible.head._2}%03d) — " +
-          "dir is not on a filesystem shared between executors and driver; deploy with a " +
-          "shared mount or route writes through the Hadoop FileSystem API")
     // the reference layout contains ALL numShards² files — a shard with
     // zero nonzero cells still carries its global id stripes. Such pairs
     // never appear in the shards DataFrame, so backfill them here (each
     // missing file is a few hundred bytes; the loop touches only the
     // holes, usually none on a dense co-occurrence matrix)
-    val rowsPerShard = vocabSize / numShards
     for (r <- 0L until numShards; c <- 0L until numShards) {
-      val p = java.nio.file.Paths.get(f"$dir/shard-$r%03d-$c%03d.pb")
+      val p = java.nio.file.Paths.get(dir, pbName(r, c))
       if (!java.nio.file.Files.exists(p))
         java.nio.file.Files.write(p, shardExample(r, c, numShards, rowsPerShard, Nil))
     }
   }
+
+  private def pbName(r: Long, c: Long): String = f"shard-$r%03d-$c%03d.pb"
 
   /** One shard's Example: global id stripes + the (possibly empty)
     * sparse cell lists in (local_row, local_col) order. */

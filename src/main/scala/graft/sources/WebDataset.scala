@@ -1,15 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** WebDataset tar-shard sink + source (the webdataset.github.io loader
   * convention: a POSIX ustar archive per shard, each sample a run of
   * consecutive entries sharing a basename — `000000017.json` +
-  * `000000017.txt`), hand-rolled like the TFRecord/Avro drivers
-  * (`TfExample` discipline: the container format is driven directly —
-  * no tar library on this offline classpath, and the format is 512-byte
-  * block arithmetic).
+  * `000000017.txt`), hand-rolled like the TFRecord/Avro drivers: the
+  * container format is driven directly — no tar library on this offline
+  * classpath, and the format is 512-byte block arithmetic.
   *
   * Determinism: ustar headers carry mode 0644, uid/gid 0, mtime 0 —
   * byte-identical archives for identical inputs at any parallelism
@@ -86,64 +85,33 @@ object WebDataset {
   private def metaJson(docId: Long, lang: String, nTokens: Long): String =
     s"""{"doc_id":$docId,"lang":"$lang","n_tokens":$nTokens}"""
 
-  /** Write one `docs-SSS.tar` per shard: each doc contributes
-    * `%09d.json` (metadata) then `%09d.txt` (payload), docs sorted by
-    * id — executor-owned shard files, the `writeShardedTfRecords`
-    * lifecycle (clean stale shards, write from owning task, driver
-    * visibility check). Input: (shard long, doc_id long, text, lang,
-    * n_tokens long). */
-  def writeDocShards(docs: DataFrame, dir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("docs-") && f.getName.endsWith(".tar"))
-      .foreach(f => java.nio.file.Files.delete(f.toPath))
-    import docs.sparkSession.implicits._
-    val written = docs
-      .select(col("shard").cast("long"), col("doc_id").cast("long"),
-        col("text"), col("lang"), col("n_tokens").cast("long"))
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "doc_id")
-      .mapPartitions { it: Iterator[Row] =>
-        val buf = it.buffered
-        val shards = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (buf.hasNext) {
-          val shard = buf.head.getLong(0)
-          val out = new java.io.BufferedOutputStream(
-            java.nio.file.Files.newOutputStream(
-              java.nio.file.Paths.get(f"$dir/docs-$shard%03d.tar")))
-          try {
-            while (buf.hasNext && buf.head.getLong(0) == shard) {
-              val r = buf.next()
-              val base = f"${r.getLong(1)}%09d"
-              out.write(tarEntry(s"$base.json",
-                metaJson(r.getLong(1), r.getString(3), r.getLong(4))
-                  .getBytes("UTF-8")))
-              out.write(tarEntry(s"$base.txt", r.getString(2).getBytes("UTF-8")))
-            }
-            out.write(new Array[Byte](1024)) // tar trailer
-          } finally out.close()
-          shards += shard
-        }
-        shards.iterator
+  /** Write one `docs-SSS.tar` per shard on `Sources.writeShardFiles`:
+    * each doc contributes `%09d.json` (metadata) then `%09d.txt`
+    * (payload), docs sorted by id, then the 1024-byte zero trailer.
+    * Input: (shard long, doc_id long, text, lang, n_tokens long). */
+  def writeDocShards(docs: DataFrame, dir: String): Unit =
+    Sources.writeShardFiles(
+      docs.select(col("shard").cast("long"), col("doc_id").cast("long"),
+        col("text"), col("lang"), col("n_tokens").cast("long")),
+      dir, "docs-*.tar", Seq("shard"), Seq("doc_id"),
+      r => f"docs-${r.getLong(0)}%03d.tar") { (out, shard) =>
+      val n = shard.foldLeft(0L) { (n, r) =>
+        val base = f"${r.getLong(1)}%09d"
+        out.write(tarEntry(s"$base.json",
+          metaJson(r.getLong(1), r.getString(3), r.getLong(4)).getBytes("UTF-8")))
+        out.write(tarEntry(s"$base.txt", r.getString(2).getBytes("UTF-8")))
+        n + 1
       }
-      .collect() // shard-count-bounded
-    val invisible = written.filterNot(sh =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(f"$dir/docs-$sh%03d.tar")))
-    require(invisible.isEmpty,
-      s"executor-written tar shards not visible to the driver: " +
-        s"${invisible.mkString(",")} — shared filesystem required")
-  }
+      out.write(new Array[Byte](1024)) // tar trailer
+      n
+    }
 
-  /** Read the tar shards back into (doc_id, text, meta) — one binaryFile
-    * scan; entries paired by basename inside the reading task. */
+  /** Read the tar shards back into (doc_id, text, meta); entries are
+    * paired by basename inside the reading task. */
   def readDocShards(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "docs-*.tar").load(dir)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap { stream =>
+    Sources.readShardFiles(spark, dir, "docs-*.tar")
+      .flatMap { case (_, stream) =>
         tarEntries(stream)
           .groupBy(_._1.takeWhile(_ != '.'))
           .toSeq

@@ -142,6 +142,26 @@ class SwivelSpec extends AnyFunSuite {
       .map { case (r, c, w) => (r, c, w.toFloat) }.toSet)
   }
 
+  test("SwivelMain.run: a rerun with fewer shards leaves exactly its own .pb grid") {
+    val dir = corpus("a b a c b a d", "c a b b a d d", "b c a a c b d")
+    val out = dir.resolve("out").toString
+    def run(shardSize: Int) = SwivelMain.run(spark, SwivelMain.Options(
+      input = dir.resolve("corpus.txt").toString, outDir = out,
+      shardSize = shardSize, minCount = 1, windowSize = 3, outputFormat = "pb"))
+    run(1) // vocab of 4 → a 4×4 grid
+    run(2) // the same vocab → a 2×2 grid
+    val files = new java.io.File(s"$out/shards_pb").listFiles().map(_.getName).toSet
+    assert(files == (for (r <- 0 until 2; c <- 0 until 2) yield f"shard-$r%03d-$c%03d.pb").toSet)
+    val d = graft.sources.Sources.textCorpus(spark, dir.resolve("corpus.txt").toString)
+    val vocab = SwivelPrep.buildVocab(d, 1, 2)
+    val want = SwivelPrep.shard(SwivelPrep.cooc(d, vocab, 3), vocab, 2)
+      .as[(Long, Long, Long, Long, Long, Long, Double)].collect()
+      .map(t => t.copy(_7 = t._7.toFloat)).toSet
+    val got = graft.sources.TfExample.readSwivelPbShards(spark, s"$out/shards_pb")
+      .as[(Long, Long, Long, Long, Long, Long, Float)].collect().toSet
+    assert(got == want)
+  }
+
   test("SwivelMain.run: an empty vocabulary writes no shards and does not throw") {
     val dir = corpus("a b", "c")
     for (fmt <- Seq("pb", "parquet")) {

@@ -120,9 +120,9 @@ class TfExampleSpec extends AnyFunSuite {
     val ex = TfExample.example(Seq(
       "id" -> TfExample.int64Feature(Seq(42L)),
       "text" -> TfExample.bytesFeature(Seq("hello world".getBytes("UTF-8")))))
-    val parsed = TfExample.parseDocExample(ex)
-    assert(parsed("id")._1 == Seq(42L))
-    assert(new String(parsed("text")._2.head, "UTF-8") == "hello world")
+    val parsed = TfExample.parseExample(ex)
+    assert(parsed("id").int64 == Seq(42L))
+    assert(new String(parsed("text").bytes.head, "UTF-8") == "hello world")
     // a two-record frame stream splits back into both payloads
     val ex2 = TfExample.example(Seq("id" -> TfExample.int64Feature(Seq(7L))))
     val stream = TfExample.tfRecordFrame(ex) ++ TfExample.tfRecordFrame(ex2)
@@ -149,8 +149,16 @@ class TfExampleSpec extends AnyFunSuite {
     val payload = emptyEntry ++ chunked
     val ex = b(0x0a, payload.length) ++ payload
     val parsed = graft.sources.TfExample.parseExample(ex)
-    assert(parsed("e") == ((Nil, Nil)))
-    assert(parsed("x")._1 == Seq(1L, 300L))
+    assert(parsed("e") == TfExample.Feature(Nil, Nil, Nil))
+    assert(parsed("x").int64 == Seq(1L, 300L))
+  }
+
+  test("decoder fails fast on an unknown Feature kind") {
+    // key "k" -> Feature field 4 (tag 0x22), an empty message
+    val entry = Seq(0x0a, 0x01, 'k', 0x12, 0x02, 0x22, 0x00).map(_.toByte).toArray
+    val body = Array(0x0a.toByte, entry.length.toByte) ++ entry
+    val ex = Array(0x0a.toByte, body.length.toByte) ++ body
+    intercept[IllegalArgumentException](TfExample.parseExample(ex))
   }
 
   test("writeSwivelPbShards backfills empty shards so the full grid exists") {

@@ -1,12 +1,18 @@
-// Rebuild the /tmp 10x tables (BASELINE.md scaling-study inputs) after a
-// /tmp wipe. Replicates the sf0.1 tables x10 with id offsets; documents
-// is the dup-heavy worst case (each text appears 10x under distinct
-// doc_ids); embeddings replicate with vec_id offset 10,000,000.
-// Usage: spark-shell ... -i tools/tenx_build.scala
+// Build the replicated scaling-study tables (BASELINE.md: /tmp/graft10x,
+// /tmp/graft100x). Replicates the sf0.1 tables under `spark.graft.sf_dir`
+// `spark.graft.replicas` times (default 10) with id offsets into
+// /tmp/graft<replicas>x;
+// documents is the dup-heavy worst case (each text appears once per
+// replica under distinct doc_ids), and key offsets keep join fan-outs
+// realistic (each replica joins only its own replica's dims).
+// Usage:
+//   spark-shell --master local[4] --conf spark.graft.sf_dir=<sf0.1 dir> \
+//     --conf spark.graft.replicas=100 -i tools/replicate_build.scala
 import org.apache.spark.sql.functions._
-val sf = "/root/testdata/sf0.1"
-val out = "/tmp/graft10x"
-val reps = spark.range(10).toDF("rep")
+val sf = spark.conf.get("spark.graft.sf_dir")
+val replicas = spark.conf.get("spark.graft.replicas", "10").toInt
+val out = s"/tmp/graft${replicas}x"
+val reps = spark.range(replicas).toDF("rep")
 def land(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
   df.repartition(32).write.mode("overwrite").parquet(s"$out/$name.parquet")
   println(s"$name: ${spark.read.parquet(s"$out/$name.parquet").count}")
@@ -14,8 +20,8 @@ def land(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
 val li = spark.read.parquet(s"$sf/lineitem.parquet")
 // l_partkey/l_suppkey offset with the same rep stride as p_partkey/
 // s_suppkey so each replica joins its own replica's part/supplier rows
-// (round-11 advice: unoffset, every replica collapsed onto replica-0
-// dims and reps 1..9 of part/supplier dangled)
+// (unoffset, every replica collapses onto replica-0 dims and the other
+// replicas of part/supplier dangle)
 land("lineitem", li.crossJoin(reps)
   .withColumn("l_orderkey", col("l_orderkey") + col("rep") * 10000000L)
   .withColumn("l_partkey", col("l_partkey") + col("rep") * 1000000L)
@@ -42,5 +48,5 @@ for (small <- Seq("region", "nation")) {
   spark.read.parquet(s"$sf/$small.parquet").write.mode("overwrite").parquet(s"$out/$small.parquet")
   println(s"$small copied")
 }
-println("DONE 10x build at " + out)
+println(s"DONE ${replicas}x build at $out")
 sys.exit(0)
