@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.StreamOps
 
 /** Approximate nearest-neighbor search — the scale path beside the exact
   * `sim_search` baseline (NORTH-STAR surface).
@@ -2643,82 +2644,60 @@ object Ann {
       inc.agg(count(lit(1)).as("n_inserted")))
   }
 
-  /** STREAMING ANN INDEX MAINTENANCE (round 14 — the ingestion motion
-    * behind `sim_ann_upsert` run as an actual checkpointed stream): a
-    * production serving index is fed by a STREAM of fresh embeddings —
-    * each microbatch is assigned under the frozen base model
-    * (assign-only, the FAISS `add` motion) and appended to the
-    * maintained lists; the gate probes the merged index (landed base
-    * lists ∪ streamed lists) and hash-matches THE SAME oracle as the
-    * batch upsert. That equality is the exactly-once claim for index
-    * ingestion — batch slicing, file pick order and crash replay all
-    * land the same index because per-row assignment is independent and
-    * keyed (the `stream_upsert_sink` ↔ `merge_cdc` relationship,
-    * replayed for the ANN family). The read side dedups the sink by
-    * (vec_id, bucket) so a replayed batch cannot double a row —
-    * assignment determinism makes the append idempotent under dedup.
-    * `n_inserted` counts the SINK (not the source), so a dropped or
-    * double-counted row fails the gate with a readable column.
+  /** STREAMING ANN INDEX MAINTENANCE — the ingestion motion behind
+    * `sim_ann_upsert` run as an actual checkpointed stream through
+    * `StreamOps.fileStream`: a production serving index is fed by a
+    * STREAM of fresh embeddings — each microbatch is assigned under the
+    * frozen base model (assign-only, the FAISS `add` motion) and
+    * appended to the maintained lists; the gate probes the merged index
+    * (landed base lists ∪ streamed lists) and hash-matches THE SAME
+    * oracle as the batch upsert. That equality is the exactly-once claim
+    * for index ingestion — batch slicing, file pick order and crash
+    * replay all land the same index because per-row assignment is
+    * independent and keyed (the `stream_upsert_sink` ↔ `merge_cdc`
+    * relationship, replayed for the ANN family). The read side dedups
+    * the sink by (vec_id, bucket) so a replayed batch cannot double a
+    * row — assignment determinism makes the append idempotent under
+    * dedup. `n_inserted` counts the SINK (not the source), so a dropped
+    * or double-counted row fails the gate with a readable column.
     *
-    * Scale: staging lands once per (session, dataset); each microbatch
-    * costs |batch|·(g + c/g) broadcast dot products through the frozen
-    * two-level structure + one append — increment-
-    * bounded, never touching base lists; the probe is the shared
-    * nprobe/c serving read path. */
+    * Scale: each microbatch costs |batch|·(g + c/g) broadcast dot
+    * products through the frozen two-level structure + one append —
+    * increment-bounded, never touching base lists; the probe is the
+    * shared nprobe/c serving read path. */
   val streamAnnUpsert = QueryDef("stream_ann_upsert", upsertOracleSql) {
     (s, d) =>
-    val root = QueryDef.tmpRoot("annup", d)
-    graft.ops.Staging.deleteTree(root)
     val v = prep(Tables.embeddings(s, d))
     // model + base lists: the sim_ann_upsert artifacts (one shared
     // build, both ingestion paths)
     val (cents, baseLists) = upsertBaseIndex(s, d)
     // the routing structure is a pure function of the FROZEN base model:
     // derive it once here, not per microbatch (no per-batch count jobs
-    // or re-broadcasts on the ingest hot path — round-14 review finding)
+    // or re-broadcasts on the ingest hot path)
     val (anch, centsG) = twoLevelStructure(cents)
-    // the increment arrives as 4 staged microbatches (landed once per
-    // session/dataset; checkpoint + sink stay per-run)
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "annup") {
-      dir =>
-        graft.streaming.StreamOps.stageBatches(
-          Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
-            .select(col("vec_id"), col("embedding"),
-              pmod(expr("vec_id div 10"), lit(4)).cast("int").as("b")),
-          4, dir)
-    }
-    val q = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // a file-source microbatch inherits the staged file's partition
-        // count (one file -> ONE task), which would serialize the
-        // |batch|·(g + c/g) assignment dots; re-spread by key over a
-        // BOUNDED 8 partitions before the CPU-heavy stage (measured
-        // 38 -> ~7 s warm at the 100x study point under the flat
-        // assignment; an unbounded spread would also leave
-        // shuffle-partition-count tiny sink files per batch — list
-        // compaction is `sim_ann_delete`'s motion, not the ingester's).
-        // Assignment is per-row deterministic, so the spread cannot
-        // move the hash.
-        twoLevelAssignWith(prep(batch).repartition(8, col("vec_id")),
-            anch, centsG)
-          .coalesce(8)
-          .write.mode("append").parquet(root + "/lists")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // an empty increment never writes the sink directory — fall back to
-    // the typed empty relation so the degenerate input matches the
-    // batch twin (n_inserted = 0) instead of failing schema inference
-    val streamed =
-      if (new java.io.File(root + "/lists").exists())
-        s.read.parquet(root + "/lists").distinct()
-      else s.range(0).select(col("id").as("vec_id"), col("id").as("bucket"))
+    // a file-source microbatch inherits the staged file's partition count
+    // (one file -> ONE task), which would serialize the |batch|·(g + c/g)
+    // assignment dots; re-spread by key over a BOUNDED 8 partitions
+    // before the CPU-heavy stage (measured 38 -> ~7 s warm at the 100x
+    // study point under the flat assignment; an unbounded spread would
+    // also leave shuffle-partition-count tiny sink files per batch — list
+    // compaction is `sim_ann_delete`'s motion, not the ingester's).
+    // Assignment is per-row deterministic, so the spread cannot move the
+    // hash.
+    val assign = (batch: DataFrame) =>
+      twoLevelAssignWith(prep(batch).repartition(8, col("vec_id")), anch, centsG)
+    val lists = StreamOps.FileSink(
+      dir => (batch: DataFrame, _: Long) =>
+        assign(batch).coalesce(8).write.mode("append").parquet(dir),
+      schema = sch => assign(s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)).schema)
+    // the increment arrives as 4 staged microbatches
+    val streamed = StreamOps.fileStream(s, d, "annup",
+      Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
+        .select(col("vec_id"), col("embedding"),
+          pmod(expr("vec_id div 10"), lit(4)).cast("int").as("b")),
+      lists)(_())
+      .distinct()
     upsertRecallReport(v, baseLists.unionByName(streamed), cents,
       streamed.agg(count(lit(1)).as("n_inserted")))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.StreamOps
 import Det._
 
 /** Event-stream operators: sessionization + the deterministic batch
@@ -921,28 +922,19 @@ object Events {
       .orderBy("a_user", "b_user")
   }
 
-  /** Deterministic temp root for the streaming-sink pipeline (the
-    * join_bucketed convention); wiped at the start of every run so the
-    * checkpoint's batch ids restart from 0 and reps stay independent. */
-  private def sinkDir(d: String): String = QueryDef.tmpRoot("ssink", d)
-
-  private def deleteTree(root: String): Unit = Staging.deleteTree(root)
-
-  /** End-to-end streaming INGESTION under the driver's hash — the one
-    * streaming surface the other `stream_*` keys (whose gated relations
-    * are the batch forms, with streaming equivalence proven in
-    * StreamingSpec) leave outside the gate: an actual running
-    * StructuredStreaming query, file source → transform → idempotent
-    * foreachBatch parquet sink → landed table.
+  /** End-to-end streaming INGESTION under the oracle hash: an actual
+    * running Structured Streaming query, file source → filter →
+    * idempotent foreachBatch parquet sink → landed table (the other
+    * `stream_*` batch-form keys prove their streaming equivalence only
+    * in StreamingSpec). Runs through `StreamOps.fileStream`.
     *
-    * The staged input is split into 3 files and consumed with
-    * `maxFilesPerTrigger=1`, so the query really executes 3 microbatches
-    * through the checkpoint path. The sink lands RAW filtered rows (no
-    * aggregate), which makes the landed relation independent of batch
-    * slicing — whatever order the file source picks, the read-back
-    * aggregate is the batch answer, which is exactly the exactly-once
-    * claim the key certifies (the crash-replay half is proven in
-    * StreamingSpec on the same `parquetBatchWriter`).
+    * The staged input is split into 3 batches, so the query really
+    * executes 3 microbatches through the checkpoint path. The sink lands
+    * RAW filtered rows (no aggregate), which makes the landed relation
+    * independent of batch slicing: the read-back aggregate is the batch
+    * answer, which is exactly the exactly-once claim the key certifies
+    * (the crash-replay half is proven in StreamingSpec on the same
+    * `parquetBatchWriter`).
     *
     * At scale this is the standard landing pipeline: each microbatch is a
     * distributed parquet job into its own `batch_id=` partition; the
@@ -953,97 +945,51 @@ object Events {
       |       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_type = 'purchase'
       |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    val root = sinkDir(d)
-    deleteTree(root)
-    // staged input lands ONCE per (session, dataset); checkpoint + sink
-    // stay per-run under `root` so the streaming gate itself is real.
-    // recursiveFileLookup skips partition discovery, so the stream sees
-    // exactly the staged data columns (g lives only in directory names);
     // stage only the columns the pipeline touches (scan-stage pruning
     // applies to the staging write like any other query)
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "ssink") { dir =>
-      Tables.events(s, d)
-        .select("event_id", "user_id", "event_type", "value")
-        .withColumn("g", pmod(col("event_id"), lit(3)))
-        .repartition(col("g"))
-        .write.partitionBy("g").parquet(dir)
-      s.read.option("recursiveFileLookup", "true").parquet(dir).schema
+    StreamOps.fileStream(s, d, "ssink",
+      Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
+        .withColumn("b", pmod(col("event_id"), lit(3)).cast("int")),
+      StreamOps.FileSink.batches) { source =>
+      source().filter(col("event_type") === "purchase")
+        .select("event_id", "user_id", "value")
     }
-    val q = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "value")
-      .writeStream
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch(graft.streaming.StreamOps.parquetBatchWriter(root + "/out"))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // Degenerate-input guard (round-8 advice): with zero qualifying rows
-    // no batch ever lands under /out, so read-back would fail
-    // path-not-found; return the same empty relation instead.
-    val landed =
-      if (new java.io.File(root + "/out").exists()) s.read.parquet(root + "/out")
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(schema.fields.filter(f =>
-          Seq("event_id", "user_id", "value").contains(f.name))))
-    landed
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_purchases"),
         sum(dec(col("value"))).cast("double").as("sum_value"))
       .orderBy("user_id")
-    }
   }
 
-  /** CHECKPOINT RECOVERY under the driver's hash — the streaming
-    * property the four sink keys leave ungated: they prove state
-    * persistence WITHIN a run; this key proves recovery ACROSS a
-    * restart, which is what checkpoints are for. The
-    * `StreamOps.restartResume` kernel runs a checkpointed complete-mode
-    * aggregation over half the staged files, `stop()`s, lands the other
-    * half, and starts a NEW query from the same checkpoint; the gated
-    * relation is the final landed snapshot, which equals the batch
-    * aggregate over ALL events iff both the offset log (no re-read of
-    * committed files) and the state store (no loss of pre-restart
-    * aggregates) recovered exactly — either failure doubles or halves
-    * counts and fails the hash. StreamingSpec additionally pins the
-    * no-duplicate-consumption counts per query life. */
+  /** CHECKPOINT RECOVERY under the oracle hash: the other checkpointed
+    * file-stream gates prove state persistence WITHIN a run; this key
+    * proves recovery ACROSS a restart, which is what checkpoints are
+    * for. `StreamOps.restartResumeLanded` runs a checkpointed
+    * complete-mode aggregation over half the staged batches, `stop()`s,
+    * lands the other half, and starts a NEW query from the same
+    * checkpoint; the gated relation is the final landed snapshot, which
+    * equals the batch aggregate over ALL events iff both the offset log
+    * (no re-read of committed files) and the state store (no loss of
+    * pre-restart aggregates) recovered exactly — either failure doubles
+    * or halves counts and fails the hash. StreamingSpec additionally
+    * pins the no-duplicate-consumption counts per query life. */
   val streamRestartResume = QueryDef(
     "stream_restart_resume",
     """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
       |       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    // the two input halves land once per (session, dataset); each run
-    // re-links them into a fresh watched dir around its own two query
-    // lives, so the restart protocol (half 2 invisible until life 1
-    // stops) and the checkpoint recovery stay fully per-run
-    val tagged = Tables.events(s, d)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("g", pmod(col("event_id"), lit(6)))
-    def half(tag: String, pred: org.apache.spark.sql.Column) =
-      graft.streaming.StreamOps.stagedOnce(s, d, tag) { dir =>
-        tagged.filter(pred).repartition(col("g"))
-          .write.partitionBy("g").parquet(dir)
-        s.read.option("recursiveFileLookup", "true").parquet(dir).schema
-      }._1
-    val h1 = half("srr1", col("g") < 3)
-    val h2 = half("srr2", col("g") >= 3)
-    val (snapshot, _, _) = graft.streaming.StreamOps.restartResumeLanded(
-      s, h1, h2, QueryDef.tmpRoot("srestart", d))
+    val (snapshot, _, _) = StreamOps.restartResumeLanded(s, d, "srestart",
+      Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"),
+        pmod(col("event_id"), lit(6)).cast("int").as("b")),
+      restartAt = 3)
     snapshot.orderBy("user_id")
-    }
   }
 
   /** ARBITRARY STATEFUL PROCESSING under the driver's hash — the
     * `flatMapGroupsWithState` surface the session_window keys can't
     * reach (custom per-key state, incremental emission on event-time
-    * timeout), run as an ACTUAL streaming query the stream_file_sink
-    * way: events staged to files → readStream (`maxFilesPerTrigger=1`,
-    * real microbatches through the checkpoint) →
+    * timeout), run as an ACTUAL streaming query through
+    * `StreamOps.fileStream`: events staged to files → readStream (real
+    * microbatches through the checkpoint) →
     * `StreamOps.statefulSessionsWatermarked` (per-user session-list
     * state, sessions emit exactly when the watermark passes last+gap) →
     * idempotent foreachBatch parquet sink → landed per-session relation,
@@ -1055,8 +1001,8 @@ object Events {
     * stateful operator's exact-batch-parity guarantee applies
     * unconditionally (StreamingSpec proves the tight-watermark behavior:
     * late-drop, bridging, timeout emission). The flush sentinel (a
-    * far-future event on user −1) is written AFTER the main files drain,
-    * so it is provably the newest file; its batch advances the watermark
+    * far-future event on user −1) is staged as the last batch, so it is
+    * consumed after every real file; its batch advances the watermark
     * past every real session and the engine's no-data batch fires every
     * timeout. At scale the tight-watermark form bounds state by the
     * disorder horizon; the wide delay here trades that bound for
@@ -1082,59 +1028,38 @@ object Events {
       |       CAST(count(*) AS BIGINT) AS n_events
       |FROM sid GROUP BY user_id, session_id
       |ORDER BY user_id, s_eus""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    val root = QueryDef.tmpRoot("sstate", d)
-    deleteTree(root)
-    // staged input lands once per (session, dataset), with the flush
-    // sentinel (user −1, far-future ts) STAGED as the final batch
-    // (b=3, pinned-newest mtime) rather than appended mid-run — the
-    // stageBatches order contract makes it the last file consumed,
-    // which is the only property the flush needs, and the landed input
-    // stays immutable across reps (a per-rep append cost one extra
-    // full-state checkpoint commit per rep). Checkpoint + sink per-run.
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "sstate") { dir =>
+    def tagged = {
       val ev = Tables.events(s, d)
-      val tagged = ev
-        .select(col("user_id"), col("ts"),
+      ev.select(col("user_id"), col("ts"),
           pmod(col("event_id"), lit(3)).cast("int").as("b"))
         .unionByName(s.range(1).select(lit(-1L).as("user_id"),
           lit("2025-01-01 00:00:00").cast(ev.schema("ts").dataType).as("ts"),
           lit(3).as("b")))
-      graft.streaming.StreamOps.stageBatches(tagged, 4, dir)
     }
-    val q = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .transform(df => graft.streaming.StreamOps
-        .statefulSessionsWatermarked(df, gapUs = 1800000000L,
+    StreamOps.fileStream(s, d, "sstate", tagged, StreamOps.FileSink.batches) {
+      source => StreamOps
+        .statefulSessionsWatermarked(source(), gapUs = 1800000000L,
           watermark = "2160 hours")
-        .toDF("user_id", "s_eus", "e_eus", "n_events"))
-      .writeStream
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch(graft.streaming.StreamOps.parquetBatchWriter(root + "/out"))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(root + "/out")
-      .filter(col("user_id") >= 0)
-      .select("user_id", "s_eus", "e_eus", "n_events")
-      .orderBy("user_id", "s_eus")
+        .toDF("user_id", "s_eus", "e_eus", "n_events")
     }
+      .filter(col("user_id") >= 0)
+      .orderBy("user_id", "s_eus")
   }
 
   /** STREAMING CDC-apply — `merge_cdc`'s changelog squash run as an
-    * actual streaming query: the purchase/error changelog staged to
-    * files, consumed in real microbatches (`maxFilesPerTrigger=1`
-    * through a checkpoint), each batch MERGED into a versioned keyed
-    * parquet state by `StreamOps.cdcMergeWriter` (per-key arg-max by
-    * event_id — associative, commutative, idempotent, so batch slicing,
-    * file pick order and crash replay all land the same fixpoint;
-    * tombstones kept in state so a delete can outrank an upsert arriving
-    * later with an older sequence number). The oracle replays the squash
-    * as one batch aggregate — the hash certifies the incremental
-    * cross-batch merge reaches exactly the batch answer, which is the
-    * exactly-once claim for a MERGE sink (the lakehouse streaming-ingest
-    * shape: Debezium feed → foreachBatch MERGE INTO).
+    * actual streaming query through `StreamOps.fileStream`: the
+    * purchase/error changelog staged to files, consumed in real
+    * microbatches through a checkpoint, each batch MERGED into a
+    * versioned keyed parquet state by `StreamOps.cdcMergeWriter` (per-key
+    * arg-max by event_id — associative, commutative, idempotent, so
+    * batch slicing, file pick order and crash replay all land the same
+    * fixpoint; tombstones kept in state so a delete can outrank an upsert
+    * arriving later with an older sequence number, and filtered here at
+    * read time). The oracle replays the squash as one batch aggregate —
+    * the hash certifies the incremental cross-batch merge reaches exactly
+    * the batch answer, which is the exactly-once claim for a MERGE sink
+    * (the lakehouse streaming-ingest shape: Debezium feed → foreachBatch
+    * MERGE INTO).
     *
     * At scale each version write is one keyed shuffle of
     * (previous state ⋈ squashed batch); state is key-bounded, versions
@@ -1153,40 +1078,19 @@ object Events {
       |       CAST(max(eid) AS BIGINT) AS max_eid
       |FROM cdc WHERE op = 'purchase'
       |GROUP BY residue ORDER BY residue""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    val root = QueryDef.tmpRoot("usink", d)
-    deleteTree(root)
-    // staged changelog lands once per (session, dataset); checkpoint +
-    // versioned merge state stay per-run under `root`
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "usink") { dir =>
+    StreamOps.fileStream(s, d, "usink",
       Tables.events(s, d)
         .filter(col("event_type").isin("purchase", "error"))
         .select(col("user_id").as("k"), col("event_type").as("op"),
-          col("value").as("v"), col("event_id"))
-        .withColumn("g", pmod(col("event_id"), lit(3)))
-        .repartition(col("g"))
-        .write.partitionBy("g").parquet(dir)
-      s.read.option("recursiveFileLookup", "true").parquet(dir).schema
-    }
-    val q = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch(graft.streaming.StreamOps.cdcMergeWriter(root + "/state"))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    graft.streaming.StreamOps.cdcLatestState(s, root + "/state",
-        tombstoneOp = "error")
-      .getOrElse(s.range(0).select(lit(0L).as("k"), lit("").as("op"),
-        lit(0.0).as("v"), lit(0L).as("event_id")))
+          col("value").as("v"), col("event_id"),
+          pmod(col("event_id"), lit(3)).cast("int").as("b")),
+      StreamOps.FileSink.cdcMerge)(_())
+      .filter(col("op") =!= "error")
       .groupBy((col("k") % 10).as("residue"))
       .agg(count(lit(1)).as("n_keys"),
         sum(round(col("v") * 100, 0).cast("long")).as("sum_cents"),
         max(col("event_id")).as("max_eid"))
       .orderBy("residue")
-    }
   }
 
   /** DAU / rolling-7-day WAU / stickiness per day — the engagement
@@ -1887,26 +1791,22 @@ object Events {
       .orderBy("subset")
   }
 
-  /** REAL WATERMARK LATE-DROP under the driver hash — the third member
-    * of the real checkpointed streaming family (stateful_session gates
-    * event-time timers, upsert_sink gates CDC merge; THIS gates the
-    * append-mode watermark contract: a window EMITS EXACTLY ONCE when
-    * the watermark passes it, its state is evicted, and any row arriving
-    * for it afterwards is DROPPED — never re-emitted, never re-opened).
-    * Three staged file batches consume in a forced order (explicit
-    * increasing mtimes, alphabetical tie-break, maxFilesPerTrigger=1
-    * through a real checkpoint): b0 = days 1–10 minus the odd-event_id
-    * rows of days 1–8; b1 = days 11–30 (advances the watermark past the
-    * day-1–8 windows, which emit and evict); b2 = the held-back odd
-    * rows of days 1–8, arriving AFTER their windows were finalized —
-    * the engine must drop every one. A far-future sentinel then flushes
-    * the surviving windows. The oracle computes daily counts WITHOUT
-    * the late rows; a leak would either re-emit the day-1–8 windows
-    * (duplicate window rows) or inflate their counts — both fail the
-    * hash. (Spark's semantics permit KEEPING a late row whose window is
-    * still open — observed in this key's first design — so the gated
-    * claim is the hard half of the contract: finalized windows are
-    * immutable.)
+  /** REAL WATERMARK LATE-DROP under the oracle hash — the append-mode
+    * watermark contract, run through `StreamOps.fileStream`: a window
+    * EMITS EXACTLY ONCE when the watermark passes it, its state is
+    * evicted, and any row arriving for it afterwards is DROPPED — never
+    * re-emitted, never re-opened. Three staged batches consume in the
+    * runner's forced order: b0 = days 1–10 minus the odd-event_id rows
+    * of days 1–8; b1 = days 11–30 (advances the watermark past the
+    * day-1–8 windows, which emit and evict); b2 = the held-back odd rows
+    * of days 1–8, arriving AFTER their windows were finalized — the
+    * engine must drop every one. A far-future sentinel, staged as the
+    * last batch b3, then flushes the surviving windows. The oracle
+    * computes daily counts WITHOUT the late rows; a leak would either
+    * re-emit the day-1–8 windows (duplicate window rows) or inflate
+    * their counts — both fail the hash. (Spark's semantics permit
+    * KEEPING a late row whose window is still open, so the gated claim
+    * is the hard half of the contract: finalized windows are immutable.)
     *
     * At 100 TB the same query shape runs with trigger-sized batches;
     * lateness capacity is the watermark delay, state is bounded by the
@@ -1921,19 +1821,7 @@ object Events {
       |SELECT epoch_us(CAST(d AS TIMESTAMP)) AS win_start_eus,
       |       CAST(count(*) AS BIGINT) AS n
       |FROM e GROUP BY d ORDER BY win_start_eus""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    val root = QueryDef.tmpRoot("latedrop", d)
-    deleteTree(root)
-    // staged batches land once per (session, dataset) with their pinned
-    // mtime ladder. The flush sentinel is STAGED as the final batch
-    // (b=3, pinned-newest mtime) instead of appended mid-run: the
-    // FileStreamSource order contract (mtime then path — the
-    // stageBatches discipline) already guarantees it is consumed after
-    // b=2's late rows, which is the only ordering the gate needs, and a
-    // staged sentinel keeps the landed input IMMUTABLE across reps
-    // (a per-rep append accumulated one extra microbatch per rep — each
-    // a full checkpoint commit). Checkpoint + sink are per-run.
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "latedrop") { dir =>
+    def tagged = {
       // watermarks require TIMESTAMP (not NTZ); the UTC session makes the
       // cast instant-identical to the oracle's NTZ arithmetic
       val ev = Tables.events(s, d)
@@ -1941,58 +1829,44 @@ object Events {
       val day = col("ts").cast("date")
       val lateSlice = day <= lit("2024-01-08").cast("date") &&
         col("event_id") % 2 === 1
-      val tagged = ev.select(col("ts"),
-        when(lateSlice, lit(2))
-          .when(day <= lit("2024-01-10").cast("date"), lit(0))
-          .otherwise(lit(1)).as("b"))
+      ev.select(col("ts"),
+          when(lateSlice, lit(2))
+            .when(day <= lit("2024-01-10").cast("date"), lit(0))
+            .otherwise(lit(1)).as("b"))
         .unionByName(s.range(1).select(
           lit("2025-01-01 00:00:00").cast("timestamp").as("ts"),
           lit(3).as("b")))
-      graft.streaming.StreamOps.stageBatches(tagged, 4, dir)
     }
-    val q = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "24 hours")
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("w.start").cast("timestamp")).as("win_start_eus"),
-        col("n"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch(graft.streaming.StreamOps.parquetBatchWriter(root + "/out"))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(root + "/out")
+    StreamOps.fileStream(s, d, "latedrop", tagged, StreamOps.FileSink.batches) {
+      source => source()
+        .withWatermark("ts", "24 hours")
+        .groupBy(window(col("ts"), "1 day").as("w"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_micros(col("w.start").cast("timestamp")).as("win_start_eus"),
+          col("n"))
+    }
       // drop the sentinel's own window (it never emits — the watermark
       // stops at it — but guard against a future flush convention)
       .filter(col("win_start_eus") < 1706745600000000L)
-      .select("win_start_eus", "n")
       .orderBy("win_start_eus")
-    }
   }
 
-  /** REAL CHECKPOINTED STREAM-STREAM JOIN — the fourth real streaming
-    * key (file_sink: append aggregation; stateful_session: event-time
-    * timers; upsert_sink: CDC merge; late_drop: watermark eviction;
-    * THIS: two-sided JOIN STATE). The signup and purchase sides read
-    * the same staged files as two independent FileStreamSources at
-    * maxFilesPerTrigger=1, and batches are split by event_id % 3 —
-    * INTERLEAVED, so ~8/9 of matched pairs have their two sides arrive
-    * in DIFFERENT microbatches and can only match through the join's
-    * checkpointed state buffers; a state loss or premature eviction
-    * drops pairs and fails the driver hash against the batch-join
-    * oracle. No watermark on purpose: an inner stream-stream join
-    * without one legally buffers both sides forever, which is exactly
-    * what makes every pair's emission GUARANTEED independent of arrival
-    * order (the interleaved split makes event time non-monotonic across
-    * batches, so any watermark would drop real rows); the production
-    * trade-off — watermarks to bound state at the cost of a lateness
-    * contract — is `stream_late_drop`'s gated subject. At scale the
-    * join state shuffles on user_id like any keyed state; the landed
-    * relation re-aggregates per user. */
+  /** REAL CHECKPOINTED STREAM-STREAM JOIN — two-sided join state, run
+    * through `StreamOps.fileStream`. The signup and purchase sides read
+    * the same staged files as two independent FileStreamSources, and
+    * batches are split by event_id % 3 — INTERLEAVED, so ~8/9 of matched
+    * pairs have their two sides arrive in DIFFERENT microbatches and can
+    * only match through the join's checkpointed state buffers; a state
+    * loss or premature eviction drops pairs and fails the hash
+    * against the batch-join oracle. No watermark on purpose: an inner
+    * stream-stream join without one legally buffers both sides forever,
+    * which is exactly what makes every pair's emission GUARANTEED
+    * independent of arrival order (the interleaved split makes event time
+    * non-monotonic across batches, so any watermark would drop real
+    * rows); the production trade-off — watermarks to bound state at the
+    * cost of a lateness contract — is `stream_late_drop`'s gated subject.
+    * At scale the join state shuffles on user_id like any keyed state;
+    * the landed relation re-aggregates per user. */
   val streamJoinSink = QueryDef(
     "stream_join_sink",
     """WITH p AS (
@@ -2007,46 +1881,27 @@ object Events {
       |       CAST(min(gap_us) AS BIGINT) AS min_gap_us,
       |       CAST(max(gap_us) AS BIGINT) AS max_gap_us
       |FROM p GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    graft.streaming.StreamOps.withStatePartitions(s, 8) {
-    val root = QueryDef.tmpRoot("sjoin", d)
-    deleteTree(root)
-    // staged interleaved batches land once per (session, dataset) with
-    // their pinned mtime ladder; checkpoint + sink are per-run
-    val (inDir, schema) = graft.streaming.StreamOps.stagedOnce(s, d, "sjoin") { dir =>
-      val ev = Tables.events(s, d)
+    StreamOps.fileStream(s, d, "sjoin",
+      Tables.events(s, d)
         .filter(col("event_type").isin("signup", "purchase"))
         .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
-          col("event_type"), col("event_id"))
-      graft.streaming.StreamOps.stageBatches(
-        ev.withColumn("b", pmod(col("event_id"), lit(3)).cast("int")),
-        3, dir)
-    }
-    def side(tpe: String, pre: String) =
-      s.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
+          col("event_type"), col("event_id"),
+          pmod(col("event_id"), lit(3)).cast("int").as("b")),
+      StreamOps.FileSink.batches) { source =>
+      def side(tpe: String, pre: String) = source()
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${pre}_user"), col("ts").as(s"${pre}_ts"),
           col("event_id").as(s"${pre}_id"))
-    val joined = side("signup", "l").join(side("purchase", "r"),
-      expr("l_user = r_user AND r_ts > l_ts AND r_ts <= l_ts + interval 2 hours"))
-    val q = joined
-      .select(col("l_user").as("user_id"),
-        (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "/ckpt")
-      .foreachBatch(graft.streaming.StreamOps.parquetBatchWriter(root + "/out"))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(root + "/out")
+      side("signup", "l").join(side("purchase", "r"),
+          expr("l_user = r_user AND r_ts > l_ts AND r_ts <= l_ts + interval 2 hours"))
+        .select(col("l_user").as("user_id"),
+          (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us"))
+    }
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"),
         min(col("gap_us")).as("min_gap_us"),
         max(col("gap_us")).as("max_gap_us"))
       .orderBy("user_id")
-    }
   }
 
   /** BOT-REGULARITY detection — the abuse-filter read on event cadence

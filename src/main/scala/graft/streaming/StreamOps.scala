@@ -1,15 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming operators (SURVEY.md §2.7 streaming truth;
   * NORTH-STAR). These are the real streaming forms of the batch analogs in
   * graft.ops.Events — `readStream → transform → writeStream` pipelines
   * with event-time watermarks. StreamingSpec drives them over
   * MemoryStream with controlled disorder (late-row drop, session merge);
-  * they are not oracle-checkable (SURVEY §5.2-4).
+  * they are not oracle-checkable (SURVEY §5.2-4). The checkpointed
+  * file-stream gates, which are hash-checked against DuckDB oracles,
+  * run through one runner, [[StreamOps.fileStream]], with the
+  * foreachBatch sinks defined here.
   *
   * Expects an event-time column `ts`, plus `event_type`/`user_id`/`value`
   * as in the events table. At scale these are the standard shuffle-on-key
@@ -115,36 +120,6 @@ object StreamOps {
     * all epoch-µs. */
   type SessionState = (Long, Long, Long)
 
-  /** CUSTOM-state sessionization via `flatMapGroupsWithState` — the
-    * KeyValueGroupedDataset stateful surface, demonstrating semantics
-    * the built-in aggregation can't give you: sessions EMIT exactly when
-    * a later event closes them (incremental output, not a re-aggregated
-    * window), with arbitrary state per key.
-    *
-    * Input: (user_id, epoch-µs event time). Output: CLOSED sessions
-    * `(user_id, t_start, t_end, n_events)` — a session closes when a
-    * later event arrives more than `gapUs` after it (the same
-    * strictly-greater boundary as batch `sessionize` AND as
-    * `session_window`, which also merges at exactly gap distance); the
-    * still-open tail session stays in the group state. State is one
-    * 3-long tuple per active user — bounded, shuffled once on user_id,
-    * the standard stateful-op shape at any scale.
-    *
-    * Ordering contract: events sort by event time WITHIN a micro-batch,
-    * so any time-respecting batch split yields exactly the batch
-    * `sessionize` sessions (StreamingSpec proves this on the real
-    * events table). A cross-batch LATE event — older than the open
-    * session's last event — is handled BEST-EFFORT, without watermark
-    * machinery: if it falls inside (or within gap before) the open
-    * session's span it merges there, extending the start backwards if
-    * needed; if it is older than that it is emitted immediately as a
-    * singleton. Both late paths can deviate from what a batch over the
-    * full history would produce (the event's true session, or a bridge
-    * to it, may already have been emitted) — the guarantees are only
-    * that no event is silently dropped and no emitted interval is
-    * inverted. Exact batch parity for late data needs the watermarking
-    * `sessionCounts` form above.
-    */
   /** Insert one event into a user's still-mutable sessions, preserving
     * the invariant: sorted by start, pairwise separated by STRICTLY more
     * than `gapUs` (equal-gap merges, matching batch `sessionize` and
@@ -231,6 +206,36 @@ object StreamOps {
       }
   }
 
+  /** CUSTOM-state sessionization via `flatMapGroupsWithState` — the
+    * KeyValueGroupedDataset stateful surface, demonstrating semantics
+    * the built-in aggregation can't give you: sessions EMIT exactly when
+    * a later event closes them (incremental output, not a re-aggregated
+    * window), with arbitrary state per key.
+    *
+    * Input: (user_id, epoch-µs event time). Output: CLOSED sessions
+    * `(user_id, t_start, t_end, n_events)` — a session closes when a
+    * later event arrives more than `gapUs` after it (the same
+    * strictly-greater boundary as batch `sessionize` AND as
+    * `session_window`, which also merges at exactly gap distance); the
+    * still-open tail session stays in the group state. State is one
+    * 3-long tuple per active user — bounded, shuffled once on user_id,
+    * the standard stateful-op shape at any scale.
+    *
+    * Ordering contract: events sort by event time WITHIN a micro-batch,
+    * so any time-respecting batch split yields exactly the batch
+    * `sessionize` sessions (StreamingSpec proves this on the real
+    * events table). A cross-batch LATE event — older than the open
+    * session's last event — is handled BEST-EFFORT, without watermark
+    * machinery: if it falls inside (or within gap before) the open
+    * session's span it merges there, extending the start backwards if
+    * needed; if it is older than that it is emitted immediately as a
+    * singleton. Both late paths can deviate from what a batch over the
+    * full history would produce (the event's true session, or a bridge
+    * to it, may already have been emitted) — the guarantees are only
+    * that no event is silently dropped and no emitted interval is
+    * inverted. Exact batch parity for late data needs the watermarking
+    * `sessionCounts` form above.
+    */
   def statefulSessions(events: Dataset[(Long, Long)],
       gapUs: Long = 1800000000L): Dataset[(Long, Long, Long, Long)] = {
     val spark = events.sparkSession
@@ -281,205 +286,6 @@ object StreamOps {
     * At scale the per-batch write is a normal distributed parquet job;
     * dynamic overwrite touches only the replayed batch's partition, never
     * the table. */
-  /** Stage a batch-tagged relation for a forced-order FileStreamSource
-    * read: ONE partitioned write (one scan — the stream_file_sink
-    * staging shape; the batch tag lives only in the directory name,
-    * recursiveFileLookup keeps it out of the data), then each batch
-    * directory's mtimes pinned to a fixed increasing ladder so the
-    * staging wall clock can never reorder the batches (FileStreamSource
-    * picks oldest-mtime first). Returns the stream-read schema. Shared
-    * by stream_late_drop and stream_join_sink (review finding: the
-    * block was copy-pasted and a staging-discipline fix would have had
-    * to land in every copy). */
-  /** `tagged` carries the stream's data columns plus the int batch tag
-    * `b`; the tag becomes the partition directory and never reaches the
-    * data files. */
-  /** STAGED-INPUT LANDING shared across reps: staging each checkpointed
-    * streaming gate's input files per invocation would be identical
-    * staging writes on every rep. The staged input derives
-    * deterministically from the fixture, so it lands ONCE per (session,
-    * dataset, tag) through `Memo.once` — while every invocation keeps
-    * its OWN fresh checkpoint + sink root, so the gates stay real (the
-    * streaming query, its offset log, its state store and its landed
-    * output are all per-run). The landed dir lives under a pid-scoped
-    * tmpRoot (shutdown-hook cleaned) that no per-rep deleteTree touches,
-    * and the landed input is IMMUTABLE across reps by contract: keys
-    * that need a watermark-flush sentinel STAGE it as the final
-    * pinned-mtime batch (the stageBatches order contract makes it the
-    * last file consumed) rather than appending into the watched dir
-    * mid-run — a per-rep append would both mutate the shared landing
-    * and cost one extra full-state checkpoint commit per rep. */
-  def stagedOnce(s: org.apache.spark.sql.SparkSession, d: String, tag: String)(
-      build: String => org.apache.spark.sql.types.StructType)
-      : (String, org.apache.spark.sql.types.StructType) =
-    graft.ops.Memo.once(s, d, "stream." + tag) {
-      // the path embeds the OWNING SESSION (identity hash), not just
-      // pid+dataset — the Landed.once discipline: without it a second
-      // live session in the same JVM would deleteTree and restage the
-      // directory the first session's streaming query is mid-read on
-      val inDir = graft.ops.QueryDef.tmpRoot("sland_" + tag +
-        "_s" + Integer.toHexString(System.identityHashCode(s)), d) + "/in"
-      graft.ops.Staging.deleteTree(inDir)
-      (inDir, build(inDir))
-    }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily sized
-    * for a checkpointed streaming query, restoring the session conf
-    * after. The conf sizes BOTH the exchange and the state-store
-    * INSTANCE COUNT, and every microbatch commits every instance — so a
-    * batch-sized partition count (32 here) turns into pure per-batch
-    * commit overhead on keyed state this small (measured 3× on the
-    * stream-stream join: 18.5 s → 6.0 s at 8 partitions, hash-
-    * identical). This is the standard production sizing call, applied
-    * in the honest direction for the data: at 100 TB state volume you
-    * size UP; for a 150-key session state you size DOWN. The count is
-    * baked into each checkpoint at first start; checkpoints here are
-    * per-run, so the setting is self-consistent. */
-  def withStatePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => T): T = confSwapLock.synchronized {
-    // the swap mutates the SESSION-global conf for the body's duration;
-    // the lock serializes streaming gates so two concurrent gates cannot
-    // bake each other's partition count into a checkpoint. A NON-streaming
-    // key running concurrently in the same session would still read the
-    // temporary value — the harness runs keys sequentially per session
-    // (Verify/Bench both do), which this depends on (round-13 advice).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  private val confSwapLock = new Object
-
-  /** Hard-link every data file under `src` into `dst` (same /tmp
-    * filesystem — O(1) metadata per file, no Spark job), preserving the
-    * relative directory layout; `_`/`.`-prefixed bookkeeping files are
-    * skipped (FileStreamSource ignores them, and _SUCCESS exists in
-    * both halves of a two-phase landing). Falls back to a copy if the
-    * link fails (cross-device staging root). */
-  def linkTree(src: String, dst: String): Unit = {
-    val srcF = new java.io.File(src)
-    def walk(f: java.io.File, rel: String): Unit =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten
-          .foreach(c => walk(c, if (rel.isEmpty) c.getName else rel + "/" + c.getName))
-      else if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-        val tgt = new java.io.File(dst, rel)
-        tgt.getParentFile.mkdirs()
-        try java.nio.file.Files.createLink(tgt.toPath, f.toPath)
-        catch { case _: java.io.IOException =>
-          java.nio.file.Files.copy(f.toPath, tgt.toPath,
-            java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-        }
-      }
-    walk(srcF, "")
-  }
-
-  def stageBatches(tagged: DataFrame, nBatches: Int,
-      inDir: String): org.apache.spark.sql.types.StructType = {
-    tagged.repartition(1).write.partitionBy("b").parquet(inDir)
-    for (order <- 0 until nBatches; dir = new java.io.File(s"$inDir/b=$order"))
-      Option(dir.listFiles()).toSeq.flatten
-        // a failed mtime pin must fail FAST: on a filesystem where
-        // setLastModified silently no-ops, batch order falls back to
-        // staging wall-clock and the forced consumption order the
-        // late-drop/join-sink gates depend on degrades into an opaque
-        // hash mismatch (review finding)
-        .foreach(f => require(f.setLastModified(1700000000000L + order * 60000L),
-          s"mtime pin failed: $f"))
-    tagged.sparkSession.read.option("recursiveFileLookup", "true")
-      .parquet(inDir).schema
-  }
-
-  /** CHECKPOINT RESTART/RESUME kernel — the property checkpoints exist
-    * FOR, run for real: life 1 stages the `g < splitAt` half of the
-    * input as files, runs a complete-mode streaming aggregation
-    * (groupBy user_id → count/sum) to drain, and STOPS; the second half
-    * lands as new files only after the stop; life 2 starts a NEW query
-    * from the SAME checkpoint. Exactly-once across the restart requires
-    * both recoveries to work: the offset log must mark life-1's files
-    * committed (or life 2 would re-read them and counts would double)
-    * and the state store must recover life-1's running aggregates (or
-    * the first half's contribution would vanish). Either failure moves
-    * the final snapshot away from the batch answer.
-    *
-    * Each microbatch's full aggregate state lands via the snapshot
-    * writer (complete mode → overwrite); the landed table after life 2
-    * is the batch aggregate over BOTH halves iff exactly-once held.
-    * Returns (landed snapshot, life-1 input rows, life-2 input rows) so
-    * callers can pin no-duplicate-consumption directly: life-2 rows
-    * must equal the second half's row count, not the whole input.
-    *
-    * Scale note: complete-mode state is group-cardinality-bounded
-    * (user_id here); a 100 TB deployment lands update-mode deltas into
-    * a merge sink instead (`stream_upsert_sink` gates that shape) but
-    * recovers through the identical offset-log + state-store path. */
-  def restartResume(ev: DataFrame, root: String,
-      groups: Int = 6, splitAt: Int = 3): (DataFrame, Long, Long) = {
-    val s = ev.sparkSession
-    graft.ops.Staging.deleteTree(root)
-    val tagged = ev.select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("g", pmod(col("event_id"), lit(groups)))
-    tagged.filter(col("g") < splitAt).repartition(col("g"))
-      .write.partitionBy("g").parquet(root + "/h1")
-    tagged.filter(col("g") >= splitAt).repartition(col("g"))
-      .write.partitionBy("g").parquet(root + "/h2")
-    restartResumeLanded(s, root + "/h1", root + "/h2", root)
-  }
-
-  /** The restart/resume protocol over PRE-LANDED input halves: life 1
-    * consumes hard-links of `half1`, the stop happens, `half2`'s links
-    * land, life 2 resumes from the same checkpoint. Staging cost moves
-    * to the landing (once per session/dataset via `stagedOnce`); the
-    * linking per run is O(files) metadata work, and the protocol's core
-    * invariant — the second half's files do not exist under the watched
-    * dir until life 1 has stopped — is preserved exactly. */
-  def restartResumeLanded(s: org.apache.spark.sql.SparkSession,
-      half1: String, half2: String, root: String): (DataFrame, Long, Long) = {
-    graft.ops.Staging.deleteTree(root + "/in")
-    graft.ops.Staging.deleteTree(root + "/ckpt")
-    graft.ops.Staging.deleteTree(root + "/out")
-    linkTree(half1, root + "/in")
-    val schema = s.read.option("recursiveFileLookup", "true")
-      .parquet(root + "/in").schema
-    def life(): Long = {
-      val q = s.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root + "/in")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-        .writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", root + "/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(root + "/out")
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // recentProgress is a ring buffer capped at
-      // spark.sql.streaming.numRecentProgressUpdates (default 100); with
-      // maxFilesPerTrigger=1 each staged file is one progress entry, so
-      // the exact-count contract below holds only while the staged file
-      // count stays inside the retention window — assert it rather than
-      // silently undercounting (round-11 advice)
-      val staged = Option(new java.io.File(root + "/in").listFiles()).toSeq
-        .flatten.filter(_.isDirectory)
-        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
-        .count(_.getName.endsWith(".parquet"))
-      val cap = s.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-      require(staged < cap,
-        s"restartResume row counts need staged files ($staged) < progress retention ($cap)")
-      q.recentProgress.map(_.numInputRows).sum
-    }
-    val rows1 = life()
-    // the second half exists only AFTER life 1 stopped — life 2 cannot
-    // have seen it except by resuming the committed offset log
-    linkTree(half2, root + "/in")
-    val rows2 = life()
-    (s.read.parquet(root + "/out"), rows1, rows2)
-  }
-
   def parquetBatchWriter(outDir: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) =>
       batch.withColumn("batch_id", lit(batchId))
@@ -519,11 +325,7 @@ object StreamOps {
             max(col("event_id")).as("event_id"))
           .select(col("k"), col("last.op").as("op"), col("last.v").as("v"),
             col("event_id"))
-      val root = new java.io.File(stateRoot)
-      val prev = Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("v="))
-        .map(_.getName.stripPrefix("v=").toLong)
-        .filter(_ < batchId).sorted.lastOption
+      val prev = keyedDirs(stateRoot, "v").map(_._1).filter(_ < batchId).lastOption
       val cur = squash(batch)
       val merged = prev match {
         case None => cur
@@ -539,12 +341,253 @@ object StreamOps {
     * passes its own code) — the sink itself is op-vocabulary-agnostic:
     * tombstones live in STATE at every version (they must outrank older
     * upserts) and are dropped only here, at read time. */
-  def cdcLatestState(s: org.apache.spark.sql.SparkSession,
-      stateRoot: String, tombstoneOp: String): Option[DataFrame] = {
-    val vs = Option(new java.io.File(stateRoot).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toLong)
-    vs.sorted.lastOption.map(v =>
-      s.read.parquet(s"$stateRoot/v=$v").filter(col("op") =!= tombstoneOp))
+  def cdcLatestState(s: SparkSession, stateRoot: String,
+      tombstoneOp: String): Option[DataFrame] =
+    keyedDirs(stateRoot, "v").lastOption.map { case (_, v) =>
+      s.read.parquet(v.getPath).filter(col("op") =!= tombstoneOp) }
+
+  /** The `key=<n>` subdirectories of `dir` (batch tags, state versions),
+    * by n ascending; empty when `dir` does not exist. */
+  private def keyedDirs(dir: String, key: String): Seq[(Long, java.io.File)] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(key + "="))
+      .map(f => (f.getName.stripPrefix(key + "=").toLong, f))
+      .sortBy(_._1)
+
+  /** Where a [[fileStream]] run lands its microbatches. `write(dir)` is
+    * the foreachBatch body landing into the run's sink directory, `mode`
+    * the query's output mode, `schema` the landed schema as a function of
+    * the query's output schema, and `landed(dir)` the directory holding
+    * the landed relation. The runner reads that directory back with
+    * `schema`, so a run in which no batch landed still returns a typed
+    * (empty) relation. */
+  final case class FileSink(
+      write: String => (DataFrame, Long) => Unit,
+      mode: OutputMode = OutputMode.Append(),
+      schema: StructType => StructType = identity,
+      landed: String => String = identity)
+
+  object FileSink {
+    /** Each microbatch in its own `batch_id=` partition
+      * ([[parquetBatchWriter]]); read back as the query's output columns,
+      * without the `batch_id` directory column. */
+    val batches: FileSink = FileSink(parquetBatchWriter)
+
+    /** [[cdcMergeWriter]] state; the landed relation is the latest
+      * version, tombstones included (the caller filters them). */
+    val cdcMerge: FileSink = FileSink(cdcMergeWriter,
+      landed = dir => keyedDirs(dir, "v").lastOption.fold(dir)(_._2.getPath))
   }
+
+  /** The one runner for the checkpointed file-stream gates — every
+    * streaming query whose landed output is hash-checked against a
+    * DuckDB oracle goes through it:
+    *
+    *  - `stream_file_sink`: raw filtered rows, append landing;
+    *  - `stream_stateful_session`: `flatMapGroupsWithState` event-time
+    *    timers ([[statefulSessionsWatermarked]]);
+    *  - `stream_upsert_sink`: CDC merge into versioned keyed state;
+    *  - `stream_late_drop`: append-mode watermark (finalized windows drop
+    *    late rows);
+    *  - `stream_join_sink`: stream-stream join state over two independent
+    *    sources;
+    *  - `stream_ann_upsert`: ANN index ingestion under a frozen model;
+    *  - `stream_restart_resume`: checkpoint recovery across a stop and
+    *    restart ([[restartResumeLanded]]).
+    *
+    * `tagged` carries the stream's data columns plus an Int batch tag
+    * `b`. It derives deterministically from the fixture, so it is staged
+    * once per (session, dataset, tag) and shared by every rep: one
+    * parquet file per `b=` directory with pinned increasing mtimes, so
+    * batch `b` is consumed before batch `b + 1` whatever the staging
+    * wall clock did (FileStreamSource picks oldest mtime first). The
+    * staged input is immutable across runs: a key that needs a
+    * watermark-flush sentinel stages it as its last batch, because
+    * appending one mid-run would change the shared staging and cost an
+    * extra full-state checkpoint commit per run. The stream schema is
+    * the staged relation's own schema without `b`, never inferred from
+    * the files, so an empty input stages, streams and lands nothing and
+    * the gate still returns its typed relation.
+    *
+    * Every run gets a fresh root under `tmpRoot(tag, d)`: the staged
+    * batches are hard-linked into its watched `in/`, and its checkpoint
+    * and sink start empty, so the streaming query, its offset log, its
+    * state store and its landed output are all per-run. `query` builds
+    * the streaming plan from a source factory; each call opens an
+    * independent FileStreamSource (`maxFilesPerTrigger=1`, one
+    * microbatch per staged file), so a self-join reads the input twice.
+    * The query drains with `processAllAvailable` and stops; the landed
+    * relation is read back with the sink's schema. */
+  def fileStream(s: SparkSession, d: String, tag: String,
+      tagged: => DataFrame, sink: FileSink)(
+      query: (() => DataFrame) => DataFrame): DataFrame =
+    run(s, d, tag, tagged, sink, restarts = Nil)(query)._1
+
+  /** CHECKPOINT RESTART/RESUME — the property checkpoints exist FOR, run
+    * for real through [[fileStream]]'s runner: life 1 consumes the
+    * batches tagged below `restartAt` with a complete-mode aggregation
+    * (groupBy user_id → count/sum), drains and STOPS; only then are the
+    * remaining batches linked into the watched directory, and life 2
+    * starts a NEW query from the SAME checkpoint. Exactly-once across the
+    * restart requires both recoveries to work: the offset log must mark
+    * life-1's files committed (or life 2 would re-read them and counts
+    * would double) and the state store must recover life-1's running
+    * aggregates (or the first half's contribution would vanish). Either
+    * failure moves the final snapshot away from the batch answer.
+    *
+    * Each microbatch's full aggregate state overwrites the sink
+    * (complete mode); the landed table after life 2 is the batch
+    * aggregate over all batches iff exactly-once held. Returns (landed
+    * snapshot, life-1 input rows, life-2 input rows) so callers can pin
+    * no-duplicate-consumption directly: life-2 rows must equal the later
+    * batches' row count, not the whole input.
+    *
+    * Scale note: complete-mode state is group-cardinality-bounded
+    * (user_id here); a 100 TB deployment lands update-mode deltas into
+    * a merge sink instead (`stream_upsert_sink` gates that shape) but
+    * recovers through the identical offset-log + state-store path. */
+  def restartResumeLanded(s: SparkSession, d: String, tag: String,
+      tagged: => DataFrame, restartAt: Int): (DataFrame, Long, Long) = {
+    val snapshot = FileSink(
+      dir => (batch: DataFrame, _: Long) => batch.write.mode("overwrite").parquet(dir),
+      OutputMode.Complete())
+    val (landed, lives) = run(s, d, tag, tagged, snapshot, Seq(restartAt)) { src =>
+      src().groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
+    }
+    // recentProgress is a ring buffer capped at
+    // spark.sql.streaming.numRecentProgressUpdates (default 100): the
+    // per-life row counts are exact only while no entry was evicted, so
+    // assert that rather than silently undercounting
+    val cap = s.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
+    val Seq(rows1, rows2) = lives.map { q =>
+      require(q.recentProgress.length < cap,
+        s"restartResume row counts need microbatches (${q.recentProgress.length}) " +
+          s"< progress retention ($cap)")
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    (landed, rows1, rows2)
+  }
+
+  /** The runner behind [[fileStream]] and [[restartResumeLanded]]: one
+    * query life per span of batch tags between consecutive `restarts`,
+    * all lives on one checkpoint and sink. Returns the landed relation
+    * and each life's stopped query. */
+  private def run(s: SparkSession, d: String, tag: String,
+      tagged: => DataFrame, sink: FileSink, restarts: Seq[Int])(
+      query: (() => DataFrame) => DataFrame): (DataFrame, Seq[StreamingQuery]) = {
+    val (staged, schema) = stagedOnce(s, d, tag, tagged)
+    val root = graft.ops.QueryDef.tmpRoot(tag, d)
+    val (in, out) = (root + "/in", root + "/out")
+    graft.ops.Staging.deleteTree(root)
+    Seq(in, out).foreach(p => new java.io.File(p).mkdirs())
+    val stream = query(() => s.readStream.schema(schema)
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(in))
+    val bounds = Long.MinValue +: restarts.map(_.toLong) :+ Long.MaxValue
+    val batches = keyedDirs(staged, "b")
+    val lives = withStatePartitions(s) {
+      bounds.zip(bounds.tail).map { case (lo, hi) =>
+        // a later life's batches appear under the watched dir only after
+        // the previous life stopped, so it can reach them only by
+        // resuming the committed offset log
+        for ((b, dir) <- batches if b >= lo && b < hi)
+          linkBatch(dir, s"$in/b=$b")
+        val q = stream.writeStream
+          .outputMode(sink.mode)
+          .option("checkpointLocation", root + "/ckpt")
+          .foreachBatch(sink.write(out))
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
+    }
+    (s.read.schema(sink.schema(stream.schema))
+      .option("recursiveFileLookup", "true")
+      .parquet(sink.landed(out)), lives)
+  }
+
+  /** The staged input of one (session, dataset, tag), landed once through
+    * `Memo.once`; returns its directory and the stream schema. The path
+    * embeds the owning session (identity hash), not just pid + dataset —
+    * the `Landed.once` discipline: without it a second live session in
+    * the same JVM would wipe and restage the directory the first
+    * session's streaming query is reading. */
+  private def stagedOnce(s: SparkSession, d: String, tag: String,
+      tagged: => DataFrame): (String, StructType) =
+    graft.ops.Memo.once(s, d, "stream." + tag) {
+      val dir = graft.ops.QueryDef.tmpRoot("sland_" + tag +
+        "_s" + Integer.toHexString(System.identityHashCode(s)), d) + "/in"
+      graft.ops.Staging.deleteTree(dir)
+      val t = tagged
+      stageBatches(t, dir)
+      (dir, t.drop("b").schema)
+    }
+
+  /** ONE write (one scan) of the batch-tagged relation: the tag becomes
+    * the `b=` directory and never reaches the data files (the stream
+    * reads with `recursiveFileLookup`, which skips partition discovery).
+    * Each batch directory's mtimes are then pinned to a fixed increasing
+    * ladder. */
+  private def stageBatches(tagged: DataFrame, dir: String): Unit = {
+    tagged.repartition(1).write.partitionBy("b").parquet(dir)
+    for ((b, bdir) <- keyedDirs(dir, "b"); f <- bdir.listFiles())
+      // a failed mtime pin must fail FAST: on a filesystem where
+      // setLastModified silently no-ops, batch order falls back to the
+      // staging wall clock, and the forced consumption order the
+      // late-drop and join-sink gates depend on degrades into an opaque
+      // hash mismatch
+      require(f.setLastModified(1700000000000L + b * 60000L),
+        s"mtime pin failed: $f")
+  }
+
+  /** Hard-link the data files of one staged batch directory into `dst`
+    * (same /tmp filesystem — O(1) metadata per file, no Spark job); a
+    * link shares the pinned mtime. `_`/`.`-prefixed bookkeeping files
+    * are skipped (FileStreamSource ignores them). Falls back to a copy
+    * that keeps the mtime if the link fails (cross-device staging
+    * root). */
+  private def linkBatch(src: java.io.File, dst: String): Unit = {
+    new java.io.File(dst).mkdirs()
+    for (f <- src.listFiles()
+         if !f.getName.startsWith("_") && !f.getName.startsWith(".")) {
+      val tgt = new java.io.File(dst, f.getName).toPath
+      try java.nio.file.Files.createLink(tgt, f.toPath)
+      catch { case _: java.io.IOException =>
+        java.nio.file.Files.copy(f.toPath, tgt,
+          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      }
+    }
+  }
+
+  /** `spark.sql.shuffle.partitions` while a [[fileStream]] query runs.
+    * The conf sizes BOTH the exchange and the state-store INSTANCE
+    * COUNT, and every microbatch commits every instance — so a
+    * batch-sized partition count turns into pure per-batch commit
+    * overhead on keyed state this small (measured 3× on the
+    * stream-stream join: 18.5 s → 6.0 s at 8 partitions,
+    * hash-identical). At 100 TB state volume you size up; for a
+    * 150-key session state you size down. The count is baked into each
+    * checkpoint at first start; checkpoints here are per-run, so the
+    * setting is self-consistent. */
+  private val StatePartitions = 8
+
+  /** Run `body` with `spark.sql.shuffle.partitions` at
+    * [[StatePartitions]], restoring the session conf after. The swap
+    * mutates the SESSION-global conf for the body's duration; the lock
+    * serializes streaming runs so two concurrent runs cannot bake each
+    * other's partition count into a checkpoint. A non-streaming key running concurrently in the same
+    * session would still read the temporary value — the harness runs
+    * keys sequentially per session (Verify and Bench both do), which
+    * this depends on. */
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T =
+    confSwapLock.synchronized {
+      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+      try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+
+  private val confSwapLock = new Object
 }

@@ -532,10 +532,11 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Seq.tabulate(60)(i =>
         (i.toLong, (i % 5).toLong, (i % 7) + 0.25)) // 12 rows per user
       .toDF("event_id", "user_id", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft_rr").toString
-    val (snap, rows1, rows2) = StreamOps.restartResume(ev, root)
+    val d = java.nio.file.Files.createTempDirectory("graft_rr").toString
+    val (snap, rows1, rows2) = StreamOps.restartResumeLanded(spark, d, "rrspec",
+      ev.withColumn("b", pmod(col("event_id"), lit(6)).cast("int")), restartAt = 3)
     // no-duplicate-consumption pin: each query life saw exactly its
-    // half (event_id % 6 < 3 ↔ >= 3 → 30/30); a re-read of committed
+    // half (batches event_id % 6 < 3 ↔ >= 3 → 30/30); a re-read of committed
     // files would push rows2 past 30, a lost offset log past 60
     assert(rows1 == 30L, s"life 1 consumed $rows1 rows, expected 30")
     assert(rows2 == 30L,
@@ -563,5 +564,25 @@ class StreamingSpec extends AnyFunSuite {
       streamed.exceptAll(batch).isEmpty,
       s"streamed index diverged from batch upsert:\n" +
         s"batch=${batch.collect().toSeq}\nstream=${streamed.collect().toSeq}")
+  }
+
+  test("checkpointed file-stream gates return their typed empty relation on empty events") {
+    // every events-fed gate stages, streams and lands nothing on a
+    // zero-row events table; each must still return the schema it
+    // returns on real data, as its DuckDB oracle does
+    val sf = "/root/testdata/sf0.001"
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty_ev").toString
+    graft.Tables.events(spark, sf).limit(0).write.parquet(s"$empty/events.parquet")
+    val gates = Seq(graft.ops.Events.streamFileSink, graft.ops.Events.streamStatefulSession,
+      graft.ops.Events.streamUpsertSink, graft.ops.Events.streamLateDrop,
+      graft.ops.Events.streamJoinSink, graft.ops.Events.streamRestartResume)
+    for (g <- gates) {
+      val real = g.fn(spark, sf)
+      val got = g.fn(spark, empty)
+      assert(got.count() == 0L, s"${g.name}: rows on empty events")
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        real.schema.map(f => (f.name, f.dataType)),
+        s"${g.name}: ${got.schema.simpleString} vs ${real.schema.simpleString}")
+    }
   }
 }
