@@ -1,7 +1,6 @@
 package graft.swivel
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Swivel embedding-prep pipeline, re-expressed relationally
@@ -21,13 +20,15 @@ import org.apache.spark.sql.functions._
   * identical under ANY partitioning/aggregation order (no double-sum
   * nondeterminism), in Spark and in the DuckDB oracle alike.
   *
-  * Scale posture (100 TB corpus): tokenize/pair-generation is embarrassingly
-  * parallel per document; the vocab is the only global structure and is
-  * bounded by truncation (broadcast-joined, never collected); cooc cells
-  * shuffle once on (row_id, col_id); sharding is a pure projection. Hot
-  * (Zipfian) tokens skew the cooc shuffle — AQE skew-join handles it, and
-  * the groupBy key (row_id, col_id) already spreads a hot row across its
-  * column partners.
+  * Scale posture (100 TB corpus): tokenize is embarrassingly parallel per
+  * document; the vocab is the only global structure and is bounded by
+  * truncation (broadcast-joined, never collected); pair generation is one
+  * doc_id shuffle of in-vocab token ids, then linear work per document (a
+  * sorted sliding window — one huge document is one sorted linear-time
+  * task, never a quadratic one); cooc cells shuffle once on
+  * (row_id, col_id); sharding is a pure projection. Hot (Zipfian) tokens
+  * skew the cooc shuffle — AQE skew-join handles it, and the groupBy key
+  * (row_id, col_id) already spreads a hot row across its column partners.
   */
 object SwivelPrep {
 
@@ -36,18 +37,6 @@ object SwivelPrep {
     docs.select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("token"))
 
-  /** Frequency-ranked vocabulary: keep count ≥ minCount, rank by
-    * (count DESC, token ASC), truncate to the largest multiple of
-    * shardSize; ids dense in [0, vocabSize).
-    *
-    * Ranking is a distributed range-partitioned sort + zipWithIndex — a
-    * deliberate RDD drop-down: a global `row_number()` window would pull
-    * every surviving token into ONE partition, which dies at 100 TB corpus
-    * scale (10⁷–10⁸ distinct tokens pre-truncation), while zipWithIndex
-    * assigns the identical dense ranks from per-partition offsets. Output
-    * ids are byte-identical to the window formulation ((count DESC,
-    * token ASC) is a total order).
-    */
   /** Unsigned lexicographic byte order — the order Spark SQL's UTF8String
     * and DuckDB's VARCHAR comparisons both use. JVM String.compareTo
     * (UTF-16 code units) diverges from it for supplementary-plane text
@@ -64,6 +53,18 @@ object SwivelPrep {
     if (res != 0) res else a.length - b.length
   }
 
+  /** Frequency-ranked vocabulary: keep count ≥ minCount, rank by
+    * (count DESC, token ASC), truncate to the largest multiple of
+    * shardSize; ids dense in [0, vocabSize).
+    *
+    * Ranking is a distributed range-partitioned sort + zipWithIndex — a
+    * deliberate RDD drop-down: a global `row_number()` window would pull
+    * every surviving token into ONE partition, which dies at 100 TB corpus
+    * scale (10⁷–10⁸ distinct tokens pre-truncation), while zipWithIndex
+    * assigns the identical dense ranks from per-partition offsets. Output
+    * ids are byte-identical to the window formulation ((count DESC,
+    * token ASC) is a total order).
+    */
   def buildVocab(docs: DataFrame, minCount: Int, shardSize: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -96,22 +97,82 @@ object SwivelPrep {
     * orientations (the matrix is symmetric; a self-pair (t,t,d) therefore
     * contributes twice to cell (t,t)).
     * Output: (row_id, col_id, dd).
+    *
+    * fastprep's sliding window, in linear time per document: one shuffle
+    * of (doc_id, pos, id) on doc_id, a sort by (doc_id, pos) within each
+    * partition, then `windowPairs` walks each document once. A document is
+    * its doc_id (integral, as every corpus reader here makes it): rows
+    * sharing one merge by position, and a null doc_id pairs with nothing.
+    * Tokens at equal positions never pair.
     */
   def coocPairs(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame = {
+    import docs.sparkSession.implicits._
     // Out-of-vocab tokens drop at this broadcast join, BEFORE pair
     // generation — order matters for semantics (distances are measured on
     // original positions, but pairs only form between in-vocab tokens).
-    val t = tokenize(docs)
+    tokenize(docs)
       .join(broadcast(vocab.select("token", "id")), "token")
+      .where(col("doc_id").isNotNull)
       .select(col("doc_id"), col("pos"), col("id"))
-    val pairs = t.as("a").join(t.as("b"),
-        col("a.doc_id") === col("b.doc_id") &&
-        col("b.pos") > col("a.pos") &&
-        col("b.pos") <= col("a.pos") + windowSize)
-      .select(col("a.id").as("x"), col("b.id").as("y"),
-        (col("b.pos") - col("a.pos")).cast("int").as("dd"))
-    pairs.select(col("x").as("row_id"), col("y").as("col_id"), col("dd"))
-      .union(pairs.select(col("y").as("row_id"), col("x").as("col_id"), col("dd")))
+      .repartition(col("doc_id"))
+      .sortWithinPartitions("doc_id", "pos")
+      .as[(Long, Long, Long)]
+      .mapPartitions(rows => windowPairs(windowSize, rows))
+      .toDF("row_id", "col_id", "dd")
+  }
+
+  /** Both orientations of every in-window pair over `rows` sorted by
+    * (doc_id, pos): each token pairs with the current document's earlier
+    * tokens at most `w` positions back, held in a deque that drops entries
+    * as the window slides past them. */
+  private def windowPairs(w: Int, rows: Iterator[(Long, Long, Long)])
+      : Iterator[(Long, Long, Int)] = new Iterator[(Long, Long, Int)] {
+    // the deque: (pos, id) of the current document's tokens in [lo, hi),
+    // in primitive arrays (a boxed ArrayDeque of tuples measured ~20%
+    // slower on the pair pass); `slide` compacts them to the front when
+    // full and doubles them when more than half is live
+    private var poss = new Array[Long](64)
+    private var ids = new Array[Long](64)
+    private var lo, hi = 0
+    private var doc = 0L
+    // the newest token, and the deque entries [at, end) it still pairs
+    // with; `mirror` marks the (id, y) orientation of entry `at` as due
+    private var pos, id = 0L
+    private var at, end = 0
+    private var mirror = false
+
+    def hasNext: Boolean = {
+      while (at >= end && rows.hasNext) slide()
+      at < end
+    }
+
+    def next(): (Long, Long, Int) = {
+      if (!hasNext) throw new NoSuchElementException
+      val y = ids(at)
+      val dd = (pos - poss(at)).toInt
+      if (mirror) { mirror = false; at += 1; (id, y, dd) }
+      else { mirror = true; (y, id, dd) }
+    }
+
+    private def slide(): Unit = {
+      val (d, p, t) = rows.next()
+      if (lo == hi || d != doc) { lo = 0; hi = 0; doc = d }
+      while (lo < hi && poss(lo) < p - w) lo += 1
+      if (hi == poss.length) {
+        val live = hi - lo
+        if (live * 2 > poss.length) {
+          poss = java.util.Arrays.copyOf(poss, poss.length * 2)
+          ids = java.util.Arrays.copyOf(ids, ids.length * 2)
+        }
+        System.arraycopy(poss, lo, poss, 0, live)
+        System.arraycopy(ids, lo, ids, 0, live)
+        lo = 0; hi = live
+      }
+      poss(hi) = p; ids(hi) = t; hi += 1
+      pos = p; id = t
+      at = lo; end = hi - 1
+      while (end > lo && poss(end - 1) == p) end -= 1
+    }
   }
 
   /** Exact integer per-distance counts n1..nW grouped by `keys`: counted

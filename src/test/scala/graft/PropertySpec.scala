@@ -58,6 +58,43 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("coocPairs equals a nested-loop reference over (doc_id, pos, id)") {
+    // frequent and rare tokens, so minCount > 1 leaves OOV gaps; documents
+    // from 1 token (shorter than any window) up to 25; the last generated
+    // row reuses the first row's doc_id and one more row has a null doc_id
+    val rowsGen: Gen[Seq[(Option[Long], String)]] = for {
+      nDocs <- Gen.choose(2, 5)
+      texts <- Gen.listOfN(nDocs, for {
+        n <- Gen.choose(1, 25)
+        toks <- Gen.listOfN(n, Gen.frequency(
+          8 -> Gen.oneOf("a", "b", "c", "d"), 1 -> Gen.oneOf("p", "q", "r", "s", "t")))
+      } yield toks.mkString(" "))
+      nullText <- Gen.listOfN(6, Gen.oneOf("a", "b", "c"))
+    } yield texts.zipWithIndex.map { case (t, i) =>
+      (Some(if (i == nDocs - 1) 0L else i.toLong), t)
+    } :+ (None, nullText.mkString(" "))
+    for ((rows, i) <- samples(rowsGen, 4).zipWithIndex) {
+      val d = rows.toDF("doc_id", "text")
+      val vocab = SwivelPrep.buildVocab(d, minCount = 1 + i % 3, shardSize = 1)
+      val ids = vocab.select("token", "id").as[(String, Long)].collect().toMap
+      val byDoc = rows.collect { case (Some(doc), text) =>
+        doc -> text.split(" ").zipWithIndex.collect {
+          case (tok, p) if ids.contains(tok) => (p + 1L, ids(tok))
+        }.toSeq
+      }.groupMapReduce(_._1)(_._2)(_ ++ _)
+      for (w <- Seq(1, 3, 10)) {
+        val want = for {
+          toks <- byDoc.values.toSeq
+          (pa, x) <- toks
+          (pb, y) <- toks if pb > pa && pb - pa <= w
+          pair <- Seq((x, y, (pb - pa).toInt), (y, x, (pb - pa).toInt))
+        } yield pair
+        val got = SwivelPrep.coocPairs(d, vocab, w).as[(Long, Long, Int)].collect().toSeq
+        assert(got.sorted == want.sorted, s"sample $i, window $w")
+      }
+    }
+  }
+
   test("vocab: size is a multiple of shard_size and ids are dense") {
     for {
       texts <- samples(corpusGen, 3)

@@ -1,10 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -105,31 +109,45 @@ class SwivelSpec extends AnyFunSuite {
     dir
   }
 
-  /** Counts the executed plans holding a join keyed on doc_id on both
-    * sides — the windowed pair self-join. */
-  private def pairJoinPlans(f: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
-      private def onDocId(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-        keys.exists(_.references.exists(_.name == "doc_id"))
+  /** The executed plans of every query `f` runs. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (collectWithSubqueries(qe.executedPlan) {
-              case j: BaseJoinExec if onDocId(j.leftKeys) && onDocId(j.rightKeys) => j
-            }.nonEmpty) n.incrementAndGet()
+        plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     ListenerBus.drain(spark)
     spark.listenerManager.register(listener)
     try { f; ListenerBus.drain(spark) } finally spark.listenerManager.unregister(listener)
-    n.get
+    plans.asScala.toSeq
   }
 
-  test("SwivelMain.run: one pair join feeds shards, side files and marginals") {
+  private object PlanNodes extends AdaptiveSparkPlanHelper {
+    private def onDocId(keys: Seq[Expression]) = keys.exists(_.references.exists(_.name == "doc_id"))
+
+    /** A join keyed on doc_id on both sides: the windowed pair self-join. */
+    def docIdJoin(plan: SparkPlan): Boolean = collectWithSubqueries(plan) {
+      case j: BaseJoinExec if onDocId(j.leftKeys) && onDocId(j.rightKeys) => j
+    }.nonEmpty
+
+    /** A shuffle hash-partitioned on doc_id: the sliding-window pair pass. */
+    def docIdShuffle(plan: SparkPlan): Boolean = collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => onDocId(h.expressions)
+        case _ => false
+      }) => e
+    }.nonEmpty
+  }
+
+  test("SwivelMain.run: one pair pass feeds shards, side files and marginals") {
     val dir = corpus("a b a c b a", "c a b b a", "b c a a c b")
     val out = dir.resolve("out").toString
     val opts = SwivelMain.Options(input = dir.resolve("corpus.txt").toString, outDir = out,
       shardSize = 1, minCount = 1, windowSize = 3, outputFormat = "pb")
-    assert(pairJoinPlans(SwivelMain.run(spark, opts)) == 1)
+    val plans = executedPlans(SwivelMain.run(spark, opts))
+    assert(plans.count(PlanNodes.docIdJoin) == 0)
+    assert(plans.count(PlanNodes.docIdShuffle) == 1)
     val d = graft.sources.Sources.textCorpus(spark, opts.input)
     val vocab = SwivelPrep.buildVocab(d, 1, 1)
     val marg = SwivelPrep.marginals(d, vocab, 3).orderBy("id").as[(Long, Double)].collect()
