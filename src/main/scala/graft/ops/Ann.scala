@@ -24,16 +24,49 @@ object Ann {
     emb.select(col("vec_id"), Similarity.vecD(col("embedding")).as("ve"))
       .select(col("vec_id"), col("ve"), Similarity.l2norm(col("ve")).as("nrm"))
 
+  /** The oracle's `WITH v0`: vec_id and the embedding as DOUBLE[]. */
+  private def v0Cte: String =
+    """WITH v0 AS (
+      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
+      |  FROM embeddings
+      |)""".stripMargin
+
+  /** `v0` plus `v` (vec_id, ve, nrm) — the oracle mirror of `prep`. */
+  private def vCtes: String =
+    s"""$v0Cte, v AS (
+       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
+       |)""".stripMargin
+
+  /** The query set of every multi-query Ann gate. */
+  private val Qids: Seq[Long] = Seq(0L, 101L, 202L)
+
+  private def qidList: String = Qids.mkString("(", ", ", ")")
+
+  /** `qs` (qid, qve, qnrm): the query vectors of `Qids`. */
+  private def qsCte: String =
+    s"""qs AS (
+       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
+       |  WHERE vec_id IN $qidList
+       |)""".stripMargin
+
+  /** `probed` (qid, cid): each query's 4 nearest trained centroids of
+    * `c3` — the serving probe of every two-level index gate. */
+  private def probedCte: String =
+    """probed AS (SELECT qid, cid FROM (
+      |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
+      |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
+      |  FROM qs q, c3 c) WHERE rn <= 4)""".stripMargin
+
   /** Nearest-centroid assignment by cosine against an explicit centroid
     * relation (cid, cve, cnrm) — centroids broadcast, ties → lowest cid.
     * Output: (vec_id, ve, nrm, bucket).
     *
     * The rank-1 argmax is a COMBINABLE max-struct aggregate over the
     * skinny (vec_id, cid, ccos) relation, with the vectors joined back
-    * at NODE level (round 14): the previous window formulation shuffled
-    * all n·c crossJoin rows — carrying ve/nrm whenever a consumer used
-    * them downstream, which at the c-scaled 100× study point is a
-    * corpus×c vector-width exchange. Partial aggregation collapses each
+    * at NODE level: a rank window would shuffle all n·c crossJoin rows —
+    * carrying ve/nrm whenever a consumer used them downstream, which at
+    * the c-scaled 100× study point is a corpus×c vector-width exchange.
+    * Partial aggregation collapses each
     * scan partition to one row per vec_id BEFORE the exchange, so the
     * assignment shuffle is n skinny rows however large c grows.
     * Tie-break identical to the window form (ccos DESC, cid ASC): the
@@ -102,7 +135,7 @@ object Ann {
     * point stage, so two COLINEAR-but-not-bitwise-identical anchors
     * (possible after milli-quantized Lloyd means) could otherwise
     * round an ulp apart in the two stages and leave a routed-to anchor
-    * with an empty group (round-14 review finding). With the pin, any
+    * with an empty group. With the pin, any
     * gid a point can route to holds at least that anchor's centroid. */
   def centroidGroups(cents: DataFrame, anch: DataFrame): DataFrame = {
     val self = anch.select(col("aid").as("cid"), col("aid").as("gid"))
@@ -121,7 +154,7 @@ object Ann {
     * centroids) pair — the per-microbatch form: the model structure is
     * frozen, so a streaming ingester derives (anch, centsG) once and
     * routes every batch through this without re-counting or
-    * re-broadcasting (round-14 review finding). Output is the SKINNY
+    * re-broadcasting. Output is the SKINNY
     * (vec_id, bucket) index relation — unlike `assignTo` there is no
     * vector-carrying rejoin, because every index-build consumer drops
     * ve/nrm immediately and the rejoin would cost one full-corpus
@@ -235,43 +268,11 @@ object Ann {
       .select("qid", "vec_id")
   }
 
-  /** k-means refinement of the first-C-by-id seed: `iters` Lloyd rounds,
-    * each one broadcast-assign pass + one combinable per-bucket mean
-    * (CentroidAgg partial aggregation). Centroid STATE lives on the
-    * driver between rounds (C·d doubles — the MLlib KMeans pattern; the
-    * data itself is never collected), which keeps the lineage flat
-    * instead of re-executing all prior rounds each iteration. Determinism
-    * is up to double-sum association inside the mean — suited to the
-    * recall-tested ANN path, not to hash-gated oracles (which is why the
-    * gated `sim_ann_ivf` keeps the data-vector centroid seed).
-    */
-  def kmeansCentroids(v: DataFrame, c: Int, iters: Int): DataFrame = {
-    val s = v.sparkSession
-    import s.implicits._
-    val centroid = udaf(graft.functions.CentroidAgg)
-    def toDf(cents: Seq[(Long, Array[Double])]): DataFrame =
-      broadcast(cents.toDF("cid", "cve")
-        .select(col("cid"), col("cve"), Similarity.l2norm(col("cve")).as("cnrm")))
-    // seed = the first c vectors in vec_id order (NOT `vec_id < c`, which
-    // silently yields fewer — or zero — seeds when low ids are absent)
-    var cents = v.orderBy(col("vec_id")).limit(c)
-      .select(col("vec_id").as("cid"), col("ve").as("cve"))
-      .as[(Long, Array[Double])].collect().toSeq
-    require(cents.nonEmpty, s"kmeansCentroids: input has no vectors to seed $c centroids")
-    var i = 0
-    while (i < iters) {
-      // empty clusters drop out (no members → no row)
-      cents = assignTo(v, toDf(cents))
-        .groupBy(col("bucket").as("cid"))
-        .agg(centroid(col("ve")).as("cve"))
-        .as[(Long, Array[Double])].collect().toSeq.sortBy(_._1)
-      i += 1
-    }
-    toDf(cents)
-  }
-
-  /** Hash-stable Lloyd refinement (round 8, the agg_regression integer-
-    * moments pattern applied to k-means): the centroid UPDATE accumulates
+  /** Hash-stable Lloyd refinement (the agg_regression integer-moments
+    * pattern applied to k-means): each round is one broadcast-assign pass
+    * with centroid STATE held on the driver between rounds (c·dim
+    * doubles — the MLlib KMeans pattern; the data is never collected),
+    * which keeps the lineage flat. The centroid UPDATE accumulates
     * per-dimension INTEGER sums of milli-quantized components
     * (q = round(x·1000) as BIGINT) instead of double sums, so the
     * aggregation is exact at any partitioning and the rebuilt centroid
@@ -285,8 +286,11 @@ object Ann {
     * what converts `sim_ann_kmeans` from a recall-gated no-oracle key to
     * a fully hash-gated one: every Lloyd round is reproducible SQL.
     * Driver state per round: c·dim mean components + the flat
-    * (cid, sub, mean) collect is c·dim rows — same bounded-state shape
-    * as `kmeansCentroids`. */
+    * (cid, sub, mean) collect is c·dim rows. Seed = the first c vectors
+    * in vec_id order (NOT `vec_id < c`, which yields fewer seeds when
+    * low ids are absent). Zero input vectors give zero centroids: the
+    * typed empty (cid, cve, cnrm) relation, which every consumer then
+    * carries through as an empty index. */
   def kmeansCentroidsQuantized(v: DataFrame, c: Int, iters: Int): DataFrame = {
     val s = v.sparkSession
     import s.implicits._
@@ -301,10 +305,8 @@ object Ann {
     var cents = v.orderBy(col("vec_id")).limit(c)
       .select(col("vec_id").as("cid"), col("ve").as("cve"))
       .as[(Long, Array[Double])].collect().toSeq
-    require(cents.nonEmpty,
-      s"kmeansCentroidsQuantized: input has no vectors to seed $c centroids")
     var i = 0
-    while (i < iters) {
+    while (i < iters && cents.nonEmpty) {
       val assigned = assignTo(v, toDf(cents))
         .select(col("vec_id"), col("bucket").as("cid"))
       // exact integer sums per (cluster, dimension); the mean components
@@ -358,11 +360,10 @@ object Ann {
   def lshBands(v: DataFrame, dim: Int, bands: Int, rowsPerBand: Int,
       seed: Long = 42L): DataFrame = {
     // ONE flat plane matrix referenced by a single compact codegen
-    // expression (LshBandKeys). The previous formulation — bands×rows
-    // unrolled DotProduct columns — blew the whole-stage-codegen size
-    // limit and ran the projection interpreted (round-4's #2 bench cost);
-    // the triple-loop expression keeps the stage codegen'd at any
-    // bands/rows/dim, with identical key values (same left-to-right
+    // expression (LshBandKeys). Unrolled bands×rows DotProduct columns
+    // blow the whole-stage-codegen size limit and run the projection
+    // interpreted; the triple-loop expression keeps the stage codegen'd
+    // at any bands/rows/dim, with identical key values (same left-to-right
     // accumulation, same >= 0 threshold, same splitmix64 planes).
     val flat: Array[Double] =
       Array.range(0, bands * rowsPerBand).flatMap(p => hyperplane(seed, p, dim))
@@ -451,10 +452,7 @@ object Ann {
     // no RNG) — a planted pair at cos 0.9968 misses all 16 bands with
     // p ≈ 2e-12 per fresh corpus, and equality vs exact is verified at
     // sf0.001/0.01/0.1.
-    """WITH v0 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-      |  FROM embeddings
-      |), u AS (
+    s"""$v0Cte, u AS (
       |  SELECT vec_id, ve FROM v0
       |  UNION ALL
       |  SELECT vec_id + 100000 AS vec_id, list_transform(ve, x -> x + 0.01) AS ve
@@ -488,10 +486,7 @@ object Ann {
     * candidate generation + refilter; the overlap join is pair-bounded. */
   val dedupEmbedLshRecall = QueryDef(
     "dedup_embed_lsh_recall",
-    """WITH v0 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-      |  FROM embeddings
-      |), u AS (
+    s"""$v0Cte, u AS (
       |  SELECT vec_id, ve FROM v0
       |  UNION ALL
       |  SELECT vec_id + 100000 AS vec_id, list_transform(ve, x -> x + 0.01) AS ve
@@ -526,16 +521,22 @@ object Ann {
     Similarity.pairRecallReport(exact, lsh)
   }
 
+  /** `name` = each vector's nearest centroid by cosine (ties → lowest
+    * cid) over the `from` pairing of `v` vectors and `c` centroids —
+    * the one assignment expression of every Lloyd round and final `af`. */
+  private def nearestCte(name: String, from: String): String =
+    s"""$name AS (SELECT vec_id, cid FROM (
+       |  SELECT v.vec_id, c.cid, row_number() OVER (PARTITION BY v.vec_id
+       |    ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
+       |  FROM $from) WHERE rn = 1)""".stripMargin
+
   /** One Lloyd round of the oracle: assignment rank under the previous
     * centroids, exact integer per-dim sums, rebuilt mean components.
     * `src` is the TRAINING relation (the full corpus `v`, or the
-    * bounded sample `vs` of the scaled prefix); `qv` must hold the
-    * quantized components of the same relation. */
-  private def kmeansRoundCte(r: Int, src: String = "v"): String =
-    s"""a$r AS (SELECT vec_id, cid FROM (
-       |  SELECT v.vec_id, c.cid, row_number() OVER (PARTITION BY v.vec_id
-       |    ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM $src v, c${r - 1} c) WHERE rn = 1),
+    * bounded sample `vs`); `qv` must hold the quantized components of
+    * the same relation. */
+  private def kmeansRoundCte(r: Int, src: String): String =
+    s"""${nearestCte(s"a$r", s"$src v, c${r - 1} c")},
        |s$r AS (SELECT a.cid, q.sub, CAST(sum(q.q) AS BIGINT) AS s,
        |               CAST(count(*) AS BIGINT) AS n
        |  FROM a$r a JOIN qv q USING (vec_id) GROUP BY a.cid, q.sub),
@@ -543,54 +544,19 @@ object Ann {
        |  SELECT cid, list(CAST(s AS DOUBLE) / 1000.0 / n ORDER BY sub) AS cve
        |  FROM s$r GROUP BY cid))""".stripMargin
 
-  /** Shared oracle prefix `WITH v0 … af`: vector prep, milli-quantized
-    * component relation, first-8-by-id seed, 3 unrolled Lloyd rounds,
-    * final assignment — the full quantized-kmeans replay (see
-    * kmeansCentroidsQuantized for why every round is bit-identical
-    * across engines). Used by `sim_ann_kmeans` and `dedup_semantic` so
-    * the cluster model has exactly one oracle formulation. */
-  private def kmeansOraclePrefix: String =
-    kmeansOraclePrefixWith(kmeansSeedFixed)
-
-  /** The gated keys' fixed seed: the first 8 vectors by id. */
-  private val kmeansSeedFixed: String =
-    """c0 AS (
-      |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM v
-      |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)
-      |)""".stripMargin
-
-  private def kmeansOraclePrefixWith(c0Cte: String): String =
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), qv AS (
-       |  SELECT vec_id, CAST(generate_subscripts(ve, 1) AS INT) AS sub,
-       |         CAST(round(unnest(ve) * 1000) AS BIGINT) AS q
-       |  FROM v
-       |), $c0Cte,
-       |${kmeansRoundCte(1)},
-       |${kmeansRoundCte(2)},
-       |${kmeansRoundCte(3)},
-       |af AS (SELECT vec_id, cid FROM (
-       |  SELECT v.vec_id, c.cid, row_number() OVER (PARTITION BY v.vec_id
-       |    ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM v, c3 c) WHERE rn = 1)""".stripMargin
-
-  /** Bounded-sample Lloyd training (round 14, clears the r13 verdict's
-    * weak mark #4): the c-scaled model trains on the lowest-`TrainSample`
-    * vec_ids and ASSIGNS the full corpus — SemDeDup's own recipe. With
-    * c(n) = max(8, n div 200) the per-round train cost is TrainSample·c
-    * ∝ n (linear), instead of the unsampled n·c ∝ n²/200. The sample
+  /** Bounded-sample Lloyd training: a sampled model trains on the
+    * lowest-`TrainSample` vec_ids and ASSIGNS the full corpus —
+    * SemDeDup's own recipe. With c(n) = max(8, n div 200) the per-round
+    * train cost is TrainSample·c ∝ n (linear), instead of the unsampled
+    * n·c ∝ n²/200 (measured at 175 s cold at 100×). The sample
     * predicate is the seed convention itself (lowest ids), replayed
     * identically by the oracle; at sf0.1 the sample (1024 of 2000
     * vectors) is LIVE inside the hash gate. When c(n) exceeds the
     * sample, the seed caps at the sample size in both engines (the
     * LIMIT c of a K-row relation). */
-  private val TrainSample = 1024
+  private final val TrainSample = 1024
 
-  /** Cluster-count CAP for the production serving build (round 15):
+  /** Cluster-count CAP for the production serving build:
     * c_eff = min(max(8, n div 200), CapC). Uncapped c ∝ n is the
     * family's last asymptotic scale-killer — the grouped-centroid
     * relation `twoLevelAssignWith` broadcasts grows O(n) bytes (~2.5 GB
@@ -604,58 +570,123 @@ object Ann {
     * non-binding, so the capped and scaled models coincide there by
     * construction. Production sizing scales CapC to the cluster budget
     * (FAISS guidance ~√n to 16√n, capped by centroid-table memory). */
-  private[graft] val CapC = 512
+  private[graft] final val CapC = 512
 
-  /** The SAMPLE-TRAINED prefix, parameterized by the cluster-count
-    * expression (`cExpr` over `nv`, the full-corpus count): seed + all
-    * Lloyd rounds over the bounded `vs` sample (lowest TrainSample
-    * ids), the final assignment over the full corpus — the exact
-    * deploy recipe (SemDeDup trains on a sample, assigns everything).
-    * Two instantiations: the c-SCALED form (c = max(8, n div 200)) and
-    * the CAPPED form (c = min(that, CapC) — round 15). */
-  private def kmeansOraclePrefixSampledNoAf(cExpr: String): String =
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), vs AS (
-       |  SELECT vec_id, ve, nrm FROM (
-       |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS srn
-       |    FROM v)
-       |  WHERE srn <= $TrainSample
-       |), qv AS (
-       |  SELECT vec_id, CAST(generate_subscripts(ve, 1) AS INT) AS sub,
-       |         CAST(round(unnest(ve) * 1000) AS BIGINT) AS q
-       |  FROM vs
-       |), c0 AS (
-       |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM (
-       |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS rn,
-       |           (SELECT count(*) FROM v) AS nv
-       |    FROM vs)
-       |  WHERE rn <= $cExpr
-       |),
-       |${kmeansRoundCte(1, "vs")},
-       |${kmeansRoundCte(2, "vs")},
-       |${kmeansRoundCte(3, "vs")}""".stripMargin
+  /** c of the fixed-c model, and the data-vector seed count of the
+    * `sim_ann_ivf` family (centroid = the first C vectors by id). */
+  private final val NCentroids = 8
+  private val centroidIds: Seq[Long] = (1L to NCentroids.toLong)
 
-  private def kmeansOraclePrefixScaledNoAf: String =
-    kmeansOraclePrefixSampledNoAf("greatest(8, nv // 200)")
+  /** One trained quantized-Lloyd IVF model, and the single definition
+    * both engines build it from. A model is its corpus (`base`, an SQL
+    * predicate over vec_id that Spark and DuckDB both evaluate; None =
+    * every vector), its c rule (fixed 8, or `scaled` c = max(8, n div
+    * 200) optionally capped) and whether Lloyd runs on the
+    * lowest-`TrainSample` sample. From it:
+    *  - `cents`: the model, trained once per (session, dataset);
+    *  - `lists`: its two-level index over the corpus, landed once;
+    *  - `oraclePrefix`: the DuckDB replay of both.
+    * A trained index is shared by every key that serves from it (a
+    * production system trains once and amortizes over the query
+    * stream); training is deterministic, so sharing cannot move a hash.
+    * Each model has its own memo and landing: the capped and scaled
+    * models coincide at the gate SFs but are still trained apart, so
+    * two builds never share state the gate does not prove they share. */
+  private final case class IvfModel(tag: String, base: Option[String],
+      scaled: Boolean, cap: Option[Int], sampled: Boolean) {
 
-  /** The CAPPED instantiation: c_eff = least(greatest(8, nv // 200),
-    * CapC) — the production build (round 15, clears the r14 verdict's
-    * weak #2): uncapped c ∝ n makes the grouped-centroid broadcast
-    * O(n) bytes and the two-level build O(n^1.5); the cap makes the
-    * broadcast constant-size and the build linear. */
-  private def kmeansOraclePrefixCappedNoAf: String =
-    kmeansOraclePrefixSampledNoAf(s"least(greatest(8, nv // 200), $CapC)")
+    private def corpus(s: SparkSession, d: String): DataFrame = {
+      val v = prep(Tables.embeddings(s, d))
+      base.fold(v)(p => v.filter(expr(p)))
+    }
 
-  private def kmeansOraclePrefixScaled: String =
-    s"""$kmeansOraclePrefixScaledNoAf,
-       |af AS (SELECT vec_id, cid FROM (
-       |  SELECT v.vec_id, c.cid, row_number() OVER (PARTITION BY v.vec_id
-       |    ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM v, c3 c) WHERE rn = 1)""".stripMargin
+    /** The centroid relation (cid, cve, cnrm), 3 Lloyd rounds: a
+      * broadcast local DF of driver-held state, safe to share. A
+      * constant-c model runs no count and no checkpoint. */
+    def cents(s: SparkSession, d: String): DataFrame =
+      Memo.once(s, d, s"ann.kmc.$tag") {
+        val v = if (scaled) corpus(s, d).localCheckpoint() else corpus(s, d)
+        val c = if (!scaled) NCentroids else {
+          val sc = math.max(8L, v.count() / 200L)
+          cap.fold(sc)(k => math.min(sc, k.toLong)).toInt
+        }
+        val train =
+          if (sampled) v.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
+          else v
+        kmeansCentroidsQuantized(train, c, iters = 3)
+      }
+
+    /** The model's serving index (vec_id, bucket): its corpus routed by
+      * `twoLevelAssign`, landed once per (session, dataset), so the
+      * artifact never depends on which consumer runs first. */
+    def lists(s: SparkSession, d: String): DataFrame = {
+      val c = cents(s, d)
+      Landed.once(s, d, s"ann.ivf.$tag") { twoLevelAssign(corpus(s, d), c) }
+    }
+
+    /** `WITH v0 …`: vector prep, the corpus (`vb`) and sample (`vs`)
+      * relations, the quantized components `qv` of the training
+      * relation, the seed `c0`, 3 unrolled Lloyd rounds to `c3` (every
+      * round is bit-identical across engines, see
+      * kmeansCentroidsQuantized) and, `withAf`, the final assignment
+      * `af` of the FULL corpus `v`: flat for the constant-c model (n·8
+      * dots), the two-level mirror of `lists` for the scaled ones. The
+      * fixed model seeds with `IN (… LIMIT 8)`, the scaled ones with a
+      * row_number cut at the data-derived c. */
+    def oraclePrefix(withAf: Boolean = true): String = {
+      val corp = if (base.isDefined) "vb" else "v"
+      val train = if (sampled) "vs" else corp
+      val vb = base.map(p =>
+        s"""vb AS (
+           |  SELECT vec_id, ve, nrm FROM v WHERE $p
+           |)""".stripMargin)
+      val vs = Option.when(sampled)(
+        s"""vs AS (
+           |  SELECT vec_id, ve, nrm FROM (
+           |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS srn
+           |    FROM $corp)
+           |  WHERE srn <= $TrainSample
+           |)""".stripMargin)
+      val qv =
+        s"""qv AS (
+           |  SELECT vec_id, CAST(generate_subscripts(ve, 1) AS INT) AS sub,
+           |         CAST(round(unnest(ve) * 1000) AS BIGINT) AS q
+           |  FROM $train
+           |)""".stripMargin
+      val c0 = if (!scaled)
+        s"""c0 AS (
+           |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM $train
+           |  WHERE vec_id IN (SELECT vec_id FROM $train ORDER BY vec_id LIMIT $NCentroids)
+           |)""".stripMargin
+      else {
+        val sc = "greatest(8, nv // 200)"
+        s"""c0 AS (
+           |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM (
+           |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS rn,
+           |           (SELECT count(*) FROM $corp) AS nv
+           |    FROM $train)
+           |  WHERE rn <= ${cap.fold(sc)(k => s"least($sc, $k)")}
+           |)""".stripMargin
+      }
+      val af = if (scaled) twoLevelAfCtes else nearestCte("af", "v, c3 c")
+      val ctes = Seq(vCtes) ++ vb ++ vs ++ Seq(qv, c0)
+      (Seq(ctes.mkString(", ")) ++ (1 to 3).map(kmeansRoundCte(_, train)) ++
+        Option.when(withAf)(af)).mkString(",\n")
+    }
+  }
+
+  private object IvfModel {
+    val Fixed = IvfModel("fixed", None, scaled = false, cap = None, sampled = false)
+    val Scaled = IvfModel("scaled", None, scaled = true, cap = None, sampled = true)
+    /** The production build; see CapC. */
+    val Capped = IvfModel("capped", None, scaled = true, cap = Some(CapC), sampled = true)
+    /** `sim_ann_upsert`'s serving model: trained on the BASE corpus only
+      * (vec_id % 10 ≠ 7) — a maintained index's model predates the rows
+      * later upserted into it, so the increment must not influence
+      * training. */
+    val UpsertBase = IvfModel("upsb", Some("vec_id % 10 <> 7"), scaled = true,
+      cap = None, sampled = true)
+  }
 
   /** The oracle mirror of `twoLevelAssign`, appended after a prefix's
     * `c3`: `anch` = the ⌈√c⌉ lowest-cid centroids, `cg` = centroid →
@@ -663,8 +694,8 @@ object Ann {
     * `af` = best centroid within the point's group — same tie-breaks
     * (cos DESC, id ASC) at every stage, so the CTE name `af` means
     * "the index lists" to every downstream consumer regardless of
-    * which build produced it. `srcV` is the assigned relation. */
-  private def twoLevelAfCtes(srcV: String = "v"): String =
+    * which build produced it. */
+  private def twoLevelAfCtes: String =
     s"""anch AS (SELECT cid AS aid, cve AS ave, cnrm AS anrm FROM (
        |  SELECT cid, cve, cnrm, row_number() OVER (ORDER BY cid) AS arn,
        |         (SELECT count(*) FROM c3) AS nc FROM c3)
@@ -680,34 +711,18 @@ object Ann {
        |pa AS (SELECT vec_id, aid AS gid FROM (
        |  SELECT v.vec_id, a.aid, row_number() OVER (PARTITION BY v.vec_id
        |    ORDER BY list_dot_product(v.ve, a.ave) / (v.nrm * a.anrm) DESC, a.aid) AS rn
-       |  FROM $srcV v, anch a) WHERE rn = 1),
-       |af AS (SELECT vec_id, cid FROM (
-       |  SELECT v.vec_id, c.cid, row_number() OVER (PARTITION BY v.vec_id
-       |    ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM $srcV v JOIN pa USING (vec_id) JOIN cg ON cg.gid = pa.gid
-       |  JOIN c3 c ON c.cid = cg.cid) WHERE rn = 1)""".stripMargin
-
-  /** The scaled prefix with the TWO-LEVEL `af` — the serving-index
-    * family's build contract (see `twoLevelAssign`). */
-  private def kmeansOraclePrefixScaled2: String =
-    s"""$kmeansOraclePrefixScaledNoAf,
-       |${twoLevelAfCtes()}""".stripMargin
-
-  /** The CAPPED prefix with the two-level `af` — the production build
-    * contract (`sim_ann_ivf2_capped`). */
-  private def kmeansOraclePrefixCapped2: String =
-    s"""$kmeansOraclePrefixCappedNoAf,
-       |${twoLevelAfCtes()}""".stripMargin
+       |  FROM v v, anch a) WHERE rn = 1),
+       |${nearestCte("af", "v v JOIN pa USING (vec_id) JOIN cg ON cg.gid = pa.gid" +
+          "\n  JOIN c3 c ON c.cid = cg.cid")}""".stripMargin
 
   val simAnnKmeans = QueryDef(
     "sim_ann_kmeans",
-    // Oracle-backed since round 8 (was no-oracle through r7): the Lloyd
-    // UPDATE is exact integer sums of milli-quantized components, so
-    // DuckDB replays all 3 rounds bit-identically — see
-    // kmeansCentroidsQuantized. The 3 unrolled rounds (kmeansOraclePrefix)
+    // The Lloyd UPDATE is exact integer sums of milli-quantized
+    // components, so DuckDB replays all 3 rounds bit-identically — see
+    // kmeansCentroidsQuantized. The 3 unrolled rounds (IvfModel.Fixed)
     // are the whole algorithm: assignment rank (the sim_ann_ivf
     // expression), integer moment sums, correctly-rounded mean rebuild.
-    s"""$kmeansOraclePrefix,
+    s"""${IvfModel.Fixed.oraclePrefix()},
        |q0 AS (SELECT ve AS qve, nrm AS qnrm FROM v WHERE vec_id = 0),
        |probed AS (
        |  SELECT cid AS pbucket FROM c3, q0
@@ -718,7 +733,7 @@ object Ann {
        |WHERE af.vec_id <> 0
        |ORDER BY cos DESC, af.vec_id LIMIT 10""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    ivfTopKWith(emb, queryId = 0L, cachedKmeansCents(s, d), nprobe = 4, k = 10)
+    ivfTopKWith(emb, queryId = 0L, IvfModel.Fixed.cents(s, d), nprobe = 4, k = 10)
   }
 
   /** SEMANTIC DEDUP (the SemDeDup recipe, Abbas et al. 2023 —
@@ -739,7 +754,7 @@ object Ann {
     * Gated relation: per-cluster corpus accounting (n_vecs, qualifying
     * pair count, dropped, kept) — the dedup-rate report a corpus run
     * ships. The oracle replays the identical quantized-Lloyd model
-    * (kmeansOraclePrefix — bit-identical rounds), so cluster
+    * (IvfModel.Fixed — bit-identical rounds), so cluster
     * membership, pairs and keepers all hash-match. τ = 0.5 because the
     * fixture embeddings are near-orthogonal (see Similarity's
     * scaladoc): 0.5 is this table's "semantic duplicate" regime, the
@@ -751,30 +766,12 @@ object Ann {
     */
   val dedupSemantic = QueryDef(
     "dedup_semantic",
-    s"""$kmeansOraclePrefix,
-       |m AS (
-       |  SELECT af.cid, v.vec_id, v.ve, v.nrm FROM af JOIN v USING (vec_id)
-       |), pairs AS (
-       |  SELECT x.cid, x.vec_id AS i, y.vec_id AS j
-       |  FROM m x JOIN m y ON x.cid = y.cid AND x.vec_id < y.vec_id
-       |  WHERE list_dot_product(x.ve, y.ve) / (x.nrm * y.nrm) >= 0.5
-       |), drp AS (
-       |  SELECT cid, CAST(count(*) AS BIGINT) AS n_pairs,
-       |         CAST(count(DISTINCT j) AS BIGINT) AS n_dropped
-       |  FROM pairs GROUP BY cid
-       |), sz AS (
-       |  SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs FROM m GROUP BY cid
-       |)
-       |SELECT sz.cid, sz.n_vecs,
-       |       CAST(coalesce(drp.n_pairs, 0) AS BIGINT) AS n_pairs,
-       |       CAST(coalesce(drp.n_dropped, 0) AS BIGINT) AS n_dropped,
-       |       CAST(sz.n_vecs - coalesce(drp.n_dropped, 0) AS BIGINT) AS n_kept
-       |FROM sz LEFT JOIN drp USING (cid)
-       |ORDER BY sz.cid""".stripMargin) { (s, d) =>
+    s"""${IvfModel.Fixed.oraclePrefix()},
+       |$semanticDedupOracleBody""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
     // the trained model is the cached per-(session, dataset) index the
     // kmeans ANN keys already share — SemDeDup amortizes the same way
-    semanticDedupReport(v, cachedKmeansCents(s, d))
+    semanticDedupReport(v, IvfModel.Fixed.cents(s, d))
   }
 
   /** The SemDeDup per-cluster accounting over an explicit trained
@@ -782,7 +779,7 @@ object Ann {
     * c = 8 makes the n·c assignment trivially linear and the exact
     * nearest-centroid membership is the LOCAL semantics audit. The
     * c-scaled deploy gate routes through `semanticDedupReportOf` over
-    * the two-level lists instead (round 15 — see dedupSemanticScaled). */
+    * the two-level lists instead (see dedupSemanticScaled). */
   def semanticDedupReport(v: DataFrame, cents: DataFrame): DataFrame =
     semanticDedupReportOf(assignTo(v, cents)
       .select(col("bucket").as("cid"), col("vec_id"), col("ve"), col("nrm")))
@@ -810,32 +807,6 @@ object Ann {
       .orderBy("cid")
   }
 
-  /** SEMANTIC DEDUP AT DEPLOY SHAPE — `dedup_semantic` with the cluster
-    * count SCALED with the corpus: c(n) = max(8, n div 200), replayed
-    * identically in the oracle (the seed CTE derives c from the data).
-    * This converts the round-12 kernel study's measured claim — c ∝ n
-    * keeps the within-cluster tiles ~200 vectors wide, so candidate
-    * work is LINEAR in the corpus (Σ_b n_b² ≈ n·200 instead of n²/8) —
-    * from tools/ evidence into a gated key: at sf0.1 c = 10 (the
-    * dynamic-c machinery is live inside the hash gate), at 100× data
-    * c = 1000. The fixed-c twin stays gated as the LOCAL semantics
-    * audit. Training is BOUNDED-SAMPLE Lloyd (round 14 — SemDeDup's own
-    * recipe, gated): the model trains on the lowest-TrainSample ids
-    * (live at sf0.1: 1024 of 2000 vectors) and assigns the full corpus,
-    * so the cold train is TrainSample·c ∝ n instead of the unsampled
-    * n·c ∝ n²/200 the r13 study measured at 175 s cold at 100×.
-    *
-    * ASSIGNMENT is the landed TWO-LEVEL serving lists (round 15 —
-    * clears the r14 verdict's weak #1, the last flat n·c consumer of
-    * the scaled model): membership comes from the shared `ivfdell`
-    * artifact (`servingLists`, the same (vec_id, bucket) relation
-    * `sim_ann_ivf2`/delete/filtered/rebalance read), built by
-    * `twoLevelAssign` at 2n√c dots instead of assignTo's n·c = n²/200.
-    * This is SemDeDup at deploy shape end to end: the cluster index a
-    * production corpus already maintains for serving IS the dedup
-    * partition — one build, every consumer. The oracle routes
-    * identically (`twoLevelAfCtes`); the fixed-c twin keeps the flat
-    * exact assignment as the local semantics audit. */
   /** The per-cluster accounting CTEs appended after a model prefix's
     * `af` — shared text for every SemDeDup gate, so the three keys
     * (fixed-c / scaled / capped) differ ONLY in the prefix. */
@@ -860,24 +831,44 @@ object Ann {
       |FROM sz LEFT JOIN drp USING (cid)
       |ORDER BY sz.cid""".stripMargin
 
-  /** SemDeDup membership from a landed (vec_id, bucket) lists relation:
+  /** SemDeDup membership from a model's landed (vec_id, bucket) lists:
     * the skinny index joined back to the vectors on vec_id (lists carry
     * no ve/nrm by design). */
-  private def semanticDedupFromLists(lists: DataFrame, v: DataFrame): DataFrame =
-    semanticDedupReportOf(lists.join(v, Seq("vec_id"))
+  private def semanticDedupFromLists(s: SparkSession, d: String,
+      model: IvfModel): DataFrame =
+    semanticDedupReportOf(model.lists(s, d)
+      .join(prep(Tables.embeddings(s, d)), Seq("vec_id"))
       .select(col("bucket").as("cid"), col("vec_id"), col("ve"), col("nrm")))
 
+  /** SEMANTIC DEDUP AT DEPLOY SHAPE — `dedup_semantic` with the cluster
+    * count SCALED with the corpus: c(n) = max(8, n div 200), replayed
+    * identically in the oracle (the seed CTE derives c from the data).
+    * This converts a kernel study's measured claim — c ∝ n
+    * keeps the within-cluster tiles ~200 vectors wide, so candidate
+    * work is LINEAR in the corpus (Σ_b n_b² ≈ n·200 instead of n²/8) —
+    * from tools/ evidence into a gated key: at sf0.1 c = 10 (the
+    * dynamic-c machinery is live inside the hash gate), at 100× data
+    * c = 1000. The fixed-c twin stays gated as the LOCAL semantics
+    * audit. Training is BOUNDED-SAMPLE Lloyd (SemDeDup's own recipe,
+    * gated; see TrainSample).
+    *
+    * ASSIGNMENT is the landed TWO-LEVEL serving lists: membership comes
+    * from the scaled model's shared `lists` (the same (vec_id, bucket)
+    * relation `sim_ann_ivf2`/delete/filtered/rebalance read), built by
+    * `twoLevelAssign` at 2n√c dots instead of assignTo's n·c = n²/200.
+    * This is SemDeDup at deploy shape end to end: the cluster index a
+    * production corpus already maintains for serving IS the dedup
+    * partition — one build, every consumer. The oracle routes
+    * identically (`twoLevelAfCtes`); the fixed-c twin keeps the flat
+    * exact assignment as the local semantics audit. */
   val dedupSemanticScaled = QueryDef(
     "dedup_semantic_scaled",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |$semanticDedupOracleBody""".stripMargin) { (s, d) =>
-    val v = prep(Tables.embeddings(s, d))
-    // membership = the shared landed serving lists
-    val cents = cachedKmeansCentsScaled(s, d)
-    semanticDedupFromLists(servingLists(s, d, v, cents), v)
+    semanticDedupFromLists(s, d, IvfModel.Scaled)
   }
 
-  /** SEMANTIC DEDUP UNDER THE CAPPED PRODUCTION MODEL (round 15) — the
+  /** SEMANTIC DEDUP UNDER THE CAPPED PRODUCTION MODEL — the
     * second consumer class of the capped build (`sim_ann_ivf2_capped`
     * is the serving one): at true corpus scale SemDeDup itself runs
     * under the capped cluster budget (its published deploy uses ~10⁵
@@ -891,11 +882,9 @@ object Ann {
     * for a bounded model, the documented production tradeoff. */
   val dedupSemanticCapped = QueryDef(
     "dedup_semantic_capped",
-    s"""$kmeansOraclePrefixCapped2,
+    s"""${IvfModel.Capped.oraclePrefix()},
        |$semanticDedupOracleBody""".stripMargin) { (s, d) =>
-    val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsCapped(s, d)
-    semanticDedupFromLists(cappedServingLists(s, d, v, cents), v)
+    semanticDedupFromLists(s, d, IvfModel.Capped)
   }
 
   /** Int8 scalar quantization of the embedding table — the memory-scale
@@ -948,78 +937,6 @@ object Ann {
     quantizeError(Tables.embeddings(s, d)).orderBy("vec_id")
   }
 
-  private val NCentroids = 8
-  private val centroidIds: Seq[Long] = (1L to NCentroids.toLong)
-
-  /** Trained-index memos: the k-means centroid relation and the PQ
-    * index are each trained IDENTICALLY by a gate key and its recall
-    * key (`sim_ann_kmeans`/`sim_ann_kmeans_recall`,
-    * `sim_ann_pq`/`sim_ann_pq_recall`) — one training per
-    * (session, sfDir), shared by both consumers (a production system
-    * trains an index once and amortizes it over the query stream, never
-    * per query). Training is deterministic (quantized Lloyd,
-    * deterministic seeds), so sharing cannot move any hash.
-    *
-    * This one holds the quantized-Lloyd centroids of the gated kmeans
-    * keys (c=8, iters=3). The returned relation is a broadcast local DF
-    * of driver-held state — safe to share. */
-  private def cachedKmeansCents(s: SparkSession, d: String): DataFrame =
-    Memo.once(s, d, "ann.kmc") {
-      kmeansCentroidsQuantized(prep(Tables.embeddings(s, d)), c = 8, iters = 3)
-    }
-
-  /** The c-SCALED quantized-Lloyd model: c(n) = max(8, n div 200), so
-    * cluster count grows with the corpus and the per-bucket tile stays
-    * ~200 vectors at every scale (the SemDeDup ~10⁵-cluster deploy
-    * regime). Trained once per (session, sfDir) like the fixed-c model;
-    * the count() that sizes c is one bounded job, and driver state is
-    * still c·dim mean components.
-    *
-    * Training runs on the BOUNDED lowest-TrainSample-ids sample
-    * (SemDeDup's train-on-a-sample/assign-everything recipe): per Lloyd
-    * round the cost is TrainSample·c ∝ n instead of the unsampled
-    * n·c ∝ n²/200 (measured at 175 s cold at 100×).
-    * The seed is unchanged (first min(c, TrainSample) vectors by id —
-    * the lowest ids are in the sample by construction), and the oracle
-    * replays the same sample predicate (`kmeansOraclePrefixScaled`). */
-  private def cachedKmeansCentsScaled(s: SparkSession, d: String): DataFrame =
-    Memo.once(s, d, "ann.kmcs") {
-      val v = prep(Tables.embeddings(s, d)).localCheckpoint()
-      val c = math.max(8L, v.count() / 200L).toInt
-      val vs = v.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
-      kmeansCentroidsQuantized(vs, c, iters = 3)
-    }
-
-  /** The CAPPED production model: c_eff = min(max(8,
-    * n div 200), CapC) — see CapC's scaladoc for why the cap is the
-    * 100 TB boundary fix. Same bounded-sample recipe; at the gate SFs
-    * the cap is non-binding so this model coincides with the scaled
-    * one, but it is trained/memoized independently (separate tag) — the
-    * two builds must never share state the gate doesn't prove they
-    * share. */
-  private def cachedKmeansCentsCapped(s: SparkSession, d: String): DataFrame =
-    Memo.once(s, d, "ann.kmcc") {
-      val v = prep(Tables.embeddings(s, d)).localCheckpoint()
-      val c = math.min(math.max(8L, v.count() / 200L), CapC.toLong).toInt
-      val vs = v.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
-      kmeansCentroidsQuantized(vs, c, iters = 3)
-    }
-
-  /** The c-scaled sample-trained model over the BASE corpus only
-    * (vec_id % 10 ≠ 7) — `sim_ann_upsert`'s serving model: a maintained
-    * index's model predates the rows later upserted into it, so the
-    * increment must NOT influence training (assign-only maintenance is
-    * the whole point of the key). Same bounded-sample recipe as
-    * `cachedKmeansCentsScaled`, c from the BASE count. */
-  private def cachedKmeansCentsUpsertBase(s: SparkSession, d: String): DataFrame =
-    Memo.once(s, d, "ann.kmcu") {
-      val b = prep(Tables.embeddings(s, d))
-        .filter(col("vec_id") % 10 =!= 7).localCheckpoint()
-      val c = math.max(8L, b.count() / 200L).toInt
-      val vs = b.orderBy(col("vec_id")).limit(TrainSample).localCheckpoint()
-      kmeansCentroidsQuantized(vs, c, iters = 3)
-    }
-
   /** The trained PQ index of the gated PQ keys (dim=64, m=8,
     * codebook=16), trained once per (session, sfDir); codes are
     * localCheckpointed so consumers re-read the encoded relation
@@ -1031,23 +948,8 @@ object Ann {
     }
 
   val simAnnIvf = QueryDef(
-    "sim_ann_ivf", {
-      val cidList = centroidIds.mkString("(", ", ", ")")
-      s"""WITH v0 AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-         |  FROM embeddings
-         |), v AS (
-         |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-         |), cents AS (
-         |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM v WHERE vec_id IN $cidList
-         |), assigned AS (
-         |  SELECT vec_id, ve, nrm, cid AS bucket FROM (
-         |    SELECT v.vec_id, v.ve, v.nrm, c.cid,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-         |    FROM v, cents c
-         |  ) WHERE rn = 1
-         |), q AS (
+    "sim_ann_ivf",
+    s"""$ivfSeedCtes, q AS (
          |  SELECT ve AS qve, nrm AS qnrm FROM v WHERE vec_id = 0
          |), probed AS (
          |  SELECT cid AS pbucket FROM cents, q
@@ -1057,8 +959,7 @@ object Ann {
          |SELECT vec_id, round(list_dot_product(qve, ve) / (qnrm * nrm), 4) AS cos
          |FROM assigned JOIN probed ON bucket = pbucket, q
          |WHERE vec_id <> 0
-         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
-    }) { (s, d) =>
+         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
     ivfTopK(Tables.embeddings(s, d), queryId = 0L, centroidIds, nprobe = 2, k = 10)
   }
 
@@ -1122,137 +1023,98 @@ object Ann {
     recallOverlap(v, ivf, qids, k)
   }
 
-  /** Shared DuckDB preamble for the IVF recall gates (sim_ann_recall and
-    * sim_ann_nprobe_curve): vectors, fixed centroids, bucket assignment,
-    * the query set and the nprobe-independent exact top-10 — one source
-    * of truth so an assignment or tie-break change cannot silently
-    * diverge the two oracles (review finding; the Similarity.vecCte
-    * convention). */
-  private def ivfGateCtePrefix: String = {
-    val cidList = centroidIds.mkString("(", ", ", ")")
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), cents AS (
-       |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM v WHERE vec_id IN $cidList
-       |), assigned AS (
+  /** `assigned` (vec_id, ve, nrm, bucket): every vector's flat bucket
+    * under the centroid relation `c` (cosine DESC, cid ASC). */
+  private def assignedCte(c: String): String =
+    s"""assigned AS (
        |  SELECT vec_id, ve, nrm, cid AS bucket FROM (
        |    SELECT v.vec_id, v.ve, v.nrm, c.cid,
        |      row_number() OVER (PARTITION BY v.vec_id
        |        ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |    FROM v, cents c
+       |    FROM v, $c c
        |  ) WHERE rn = 1
-       |), qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), exact AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
-       |               v.vec_id) AS rn
-       |    FROM v, qs q WHERE v.vec_id <> q.qid
-       |  ) WHERE rn <= 10
        |)""".stripMargin
+
+  /** The data-vector-seeded IVF: vectors, the fixed centroids `cents`
+    * (the first C vectors by id) and the flat assignment. */
+  private def ivfSeedCtes: String = {
+    val cidList = centroidIds.mkString("(", ", ", ")")
+    s"""$vCtes, cents AS (
+       |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM v WHERE vec_id IN $cidList
+       |), ${assignedCte("cents")}""".stripMargin
   }
 
-  val simAnnRecall = QueryDef(
-    "sim_ann_recall",
-    s"""$ivfGateCtePrefix, probed AS (
+  /** `exact` (qid, vec_id): the brute-force top-10 of each `qs` query. */
+  private def exactCte: String =
+    """exact AS (
+      |  SELECT qid, vec_id FROM (
+      |    SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
+      |      ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
+      |               v.vec_id) AS rn
+      |    FROM v, qs q WHERE v.vec_id <> q.qid
+      |  ) WHERE rn <= 10
+      |)""".stripMargin
+
+  /** `probed$sfx` (each query's `nprobe` nearest centroids of `c`) and
+    * `ivf$sfx` (the rounded-cosine top-10 over `assigned` in those
+    * buckets): the per-query IVF side of the flat recall gates. */
+  private def ivfProbeCtes(c: String, nprobe: Int, sfx: String = ""): String =
+    s"""probed$sfx AS (
        |  SELECT qid, cid AS pbucket FROM (
        |    SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
        |      ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |    FROM qs q, cents c
-       |  ) WHERE rn <= 2
-       |), ivf AS (
+       |    FROM qs q, $c c
+       |  ) WHERE rn <= $nprobe
+       |), ivf$sfx AS (
        |  SELECT qid, vec_id FROM (
        |    SELECT p.qid, a.vec_id, row_number() OVER (PARTITION BY p.qid
        |      ORDER BY round(list_dot_product(q.qve, a.ve) / (q.qnrm * a.nrm), 4) DESC,
        |               a.vec_id) AS rn
        |    FROM assigned a
-       |    JOIN probed p ON a.bucket = p.pbucket
+       |    JOIN probed$sfx p ON a.bucket = p.pbucket
        |    JOIN qs q ON q.qid = p.qid
        |    WHERE a.vec_id <> p.qid
        |  ) WHERE rn <= 10
-       |)
+       |)""".stripMargin
+
+  /** Shared DuckDB preamble for the IVF recall gates (sim_ann_recall and
+    * sim_ann_nprobe_curve): vectors, fixed centroids, bucket assignment,
+    * the query set and the nprobe-independent exact top-10 — one source
+    * of truth so an assignment or tie-break change cannot silently
+    * diverge the two oracles (the Similarity.vecCte convention). */
+  private def ivfGateCtePrefix: String = s"$ivfSeedCtes, $qsCte, $exactCte"
+
+  val simAnnRecall = QueryDef(
+    "sim_ann_recall",
+    s"""$ivfGateCtePrefix, ${ivfProbeCtes("cents", 2)}
        |SELECT e.qid, CAST(count(*) AS BIGINT) AS n_overlap,
        |       CAST(count(*) * 10 AS BIGINT) AS recall_pct
        |FROM exact e JOIN ivf i ON e.qid = i.qid AND e.vec_id = i.vec_id
        |GROUP BY e.qid ORDER BY e.qid""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     ivfRecallGate(emb, centroidsFromIds(prep(emb), centroidIds),
-      qids = Seq(0L, 101L, 202L), nprobe = 2)
+      qids = Qids, nprobe = 2)
   }
 
-  /** Measured recall for the k-means-refined ANN path — closes the last
-    * "approximate ⇒ un-gated" gap but one: `sim_ann_kmeans` gates its
-    * own top-10, but until round 10 nothing gated its RETRIEVAL QUALITY
-    * (a Lloyd-round or probe regression that silently dropped recall
-    * passed every hash). Same relation shape as `sim_ann_recall`, with
+  /** Measured recall for the k-means-refined ANN path: `sim_ann_kmeans`
+    * gates its own top-10 but not its RETRIEVAL QUALITY (a Lloyd-round
+    * or probe regression that silently dropped recall would pass that
+    * hash). Same relation shape as `sim_ann_recall`, with
     * the trained quantized centroids (3 reproducible Lloyd rounds)
     * instead of the raw data-vector seed, and the kmeans key's nprobe=4.
-    * The oracle replays the 3 Lloyd rounds (kmeansRoundCte) and then the
+    * The oracle replays the 3 Lloyd rounds (IvfModel.Fixed) and then the
     * per-query IVF/exact rank + overlap. */
   val simAnnKmeansRecall = QueryDef(
     "sim_ann_kmeans_recall",
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), qv AS (
-       |  SELECT vec_id, CAST(generate_subscripts(ve, 1) AS INT) AS sub,
-       |         CAST(round(unnest(ve) * 1000) AS BIGINT) AS q
-       |  FROM v
-       |), c0 AS (
-       |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM v
-       |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)
-       |),
-       |${kmeansRoundCte(1)},
-       |${kmeansRoundCte(2)},
-       |${kmeansRoundCte(3)},
-       |assigned AS (
-       |  SELECT vec_id, ve, nrm, cid AS bucket FROM (
-       |    SELECT v.vec_id, v.ve, v.nrm, c.cid,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY list_dot_product(v.ve, c.cve) / (v.nrm * c.cnrm) DESC, c.cid) AS rn
-       |    FROM v, c3 c
-       |  ) WHERE rn = 1
-       |), qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), probed AS (
-       |  SELECT qid, cid AS pbucket FROM (
-       |    SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |    FROM qs q, c3 c
-       |  ) WHERE rn <= 4
-       |), ivf AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT p.qid, a.vec_id, row_number() OVER (PARTITION BY p.qid
-       |      ORDER BY round(list_dot_product(q.qve, a.ve) / (q.qnrm * a.nrm), 4) DESC,
-       |               a.vec_id) AS rn
-       |    FROM assigned a
-       |    JOIN probed p ON a.bucket = p.pbucket
-       |    JOIN qs q ON q.qid = p.qid
-       |    WHERE a.vec_id <> p.qid
-       |  ) WHERE rn <= 10
-       |), exact AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
-       |               v.vec_id) AS rn
-       |    FROM v, qs q WHERE v.vec_id <> q.qid
-       |  ) WHERE rn <= 10
-       |)
+    s"""${IvfModel.Fixed.oraclePrefix(withAf = false)},
+       |${assignedCte("c3")}, $qsCte, ${ivfProbeCtes("c3", 4)}, $exactCte
        |SELECT e.qid, CAST(count(*) AS BIGINT) AS n_overlap,
        |       CAST(count(*) * 10 AS BIGINT) AS recall_pct
        |FROM exact e JOIN ivf i ON e.qid = i.qid AND e.vec_id = i.vec_id
        |GROUP BY e.qid ORDER BY e.qid""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    ivfRecallGate(emb, cachedKmeansCents(s, d),
-      qids = Seq(0L, 101L, 202L), nprobe = 4)
+    ivfRecallGate(emb, IvfModel.Fixed.cents(s, d),
+      qids = Qids, nprobe = 4)
   }
 
   /** Product quantization ANN — the billion-scale compression path that
@@ -1320,8 +1182,8 @@ object Ann {
         .select(col("sub"), col("vec_id"), col("sve"))
         .as[(Int, Long, Array[Double])].collect().toSeq
     // flat quantized per-component relation (vec_id, sub, j, q) — the
-    // hash-stable Lloyd update (kmeansCentroidsQuantized pattern, round
-    // 8): codebook means rebuild from exact INTEGER sums of
+    // hash-stable Lloyd update (the kmeansCentroidsQuantized pattern):
+    // codebook means rebuild from exact INTEGER sums of
     // milli-quantized components, so every round is reproducible SQL
     // instead of an association-order-dependent double sum.
     val qsubv = subv.select(col("vec_id"), col("sub"), posexplode(col("sve")))
@@ -1380,7 +1242,7 @@ object Ann {
     // conditional sum per subspace — each picks exactly one row — then
     // d0+d1+…+d(m−1)), not a groupBy sum whose association order depends
     // on row arrival: with the quantized codebooks this makes the whole
-    // ADC score reproducible cross-engine (round 8).
+    // ADC score reproducible cross-engine.
     val dcols = (0 until m).map(i =>
       sum(when(col("sub") === i, col("dpart"))).as(s"d$i"))
     val adot = (0 until m).map(i => col(s"d$i")).reduceLeft(_ + _)
@@ -1426,21 +1288,16 @@ object Ann {
 
   val simAnnPq = QueryDef(
     "sim_ann_pq",
-    // Oracle-backed since round 8 (was no-oracle through r7), by the same
-    // two moves as sim_ann_kmeans plus one: (1) Lloyd codebook means
-    // rebuild from exact integer sums of milli-quantized components, so
+    // Oracle-backed by the same two moves as sim_ann_kmeans plus one:
+    // (1) Lloyd codebook means rebuild from exact integer sums of
+    // milli-quantized components, so
     // both 2 training rounds replay bit-identically; (2) the ADC score
     // adds its m=8 per-subspace parts in a FIXED left-to-right chain
     // (d0+d1+…+d7 below — conditional one-row sums, not an
     // association-order-dependent aggregate). Everything else was already
     // deterministic: L2 assignment rank, the driver-computed distance
     // table (a left fold = list_dot_product), the exact-cosine re-rank.
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), sv AS (
+    s"""$vCtes, sv AS (
        |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
        |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
@@ -1494,12 +1351,7 @@ object Ann {
     * row_number (= the Spark side's per-query orderBy + limit). */
   val simAnnPqRecall = QueryDef(
     "sim_ann_pq_recall",
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), sv AS (
+    s"""$vCtes, sv AS (
        |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
        |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
@@ -1518,11 +1370,11 @@ object Ann {
        |    ORDER BY list_dot_product(s.sve, c.cve) - c.chalf DESC, c.cid) AS rn
        |  FROM sv s JOIN pc2 c ON s.sub = c.sub) WHERE rn = 1),
        |qsub AS (SELECT vec_id AS qid, sub, sve AS qsve FROM sv
-       |  WHERE vec_id IN (0, 101, 202)),
+       |  WHERE vec_id IN $qidList),
        |dtab AS (SELECT q.qid, c.sub, c.cid, list_dot_product(q.qsve, c.cve) AS dpart
        |  FROM pc2 c JOIN qsub q ON c.sub = q.sub),
        |qn AS (SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)),
+       |  WHERE vec_id IN $qidList),
        |adc AS (SELECT d.qid, codes.vec_id,
        |    sum(CASE WHEN codes.sub = 0 THEN dpart END) AS d0,
        |    sum(CASE WHEN codes.sub = 1 THEN dpart END) AS d1,
@@ -1555,12 +1407,11 @@ object Ann {
        |       CAST(count(*) * 10 AS BIGINT) AS recall_pct
        |FROM exact e JOIN pqtop i ON e.qid = i.qid AND e.vec_id = i.vec_id
        |GROUP BY e.qid ORDER BY e.qid""".stripMargin) { (s, d) =>
-    val qids = Seq(0L, 101L, 202L)
     val ix = cachedPqIndex(s, d)
-    val pq = qids.map(qid =>
+    val pq = Qids.map(qid =>
         pqQueryTopK(ix, qid).select(lit(qid).as("qid"), col("vec_id")))
       .reduce(_ unionByName _)
-    recallOverlap(ix.v, pq, qids, k = 10)
+    recallOverlap(ix.v, pq, Qids, k = 10)
   }
 
   /** Exact-integer POWER ITERATION for the top principal direction of
@@ -1669,12 +1520,7 @@ object Ann {
   val simAnnIvfPq = QueryDef(
     "sim_ann_ivf_pq", {
       val cidList = centroidIds.mkString("(", ", ", ")")
-      s"""WITH v0 AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-         |  FROM embeddings
-         |), v AS (
-         |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-         |), sv AS (
+      s"""$vCtes, sv AS (
          |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
          |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
          |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
@@ -1776,23 +1622,7 @@ object Ann {
   val simAnnNprobeCurve = QueryDef(
     "sim_ann_nprobe_curve", {
       val perNp = Seq(1, 2, 4).map { np =>
-        s"""probed$np AS (
-           |  SELECT qid, cid AS pbucket FROM (
-           |    SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-           |      ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-           |    FROM qs q, cents c
-           |  ) WHERE rn <= $np
-           |), ivf$np AS (
-           |  SELECT qid, vec_id FROM (
-           |    SELECT p.qid, a.vec_id, row_number() OVER (PARTITION BY p.qid
-           |      ORDER BY round(list_dot_product(q.qve, a.ve) / (q.qnrm * a.nrm), 4) DESC,
-           |               a.vec_id) AS rn
-           |    FROM assigned a
-           |    JOIN probed$np p ON a.bucket = p.pbucket
-           |    JOIN qs q ON q.qid = p.qid
-           |    WHERE a.vec_id <> p.qid
-           |  ) WHERE rn <= 10
-           |), r$np AS (
+        s"""${ivfProbeCtes("cents", np, np.toString)}, r$np AS (
            |  SELECT CAST($np AS BIGINT) AS nprobe, e.qid,
            |         CAST(count(*) AS BIGINT) AS n_overlap,
            |         CAST(count(*) * 10 AS BIGINT) AS recall_pct
@@ -1805,12 +1635,11 @@ object Ann {
          |  SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r4
          |) ORDER BY nprobe, qid""".stripMargin
     }) { (s, d) =>
-    // FUSED curve (round 16, r15 verdict #3) — the beam_curve fusion
-    // applied here: the three nprobe settings ran as three unioned
-    // ivfRecallGate branches (3 qids × 3 settings of the same
-    // assignment/probe/exact subtrees; ReusedExchange dedupes identical
+    // FUSED curve — the beam_curve fusion applied here: three unioned
+    // ivfRecallGate branches would run 3 qids × 3 settings of the same
+    // assignment/probe/exact subtrees (ReusedExchange dedupes identical
     // subtrees at runtime but the per-np candidate joins and ranks still
-    // tripled). Probed buckets are NESTED in nprobe (the key's own gated
+    // triple). Probed buckets are NESTED in nprobe (the key's own gated
     // property), so ONE dataflow carries a per-(qid, centroid) probe
     // rank pr, scores each in-bucket candidate ONCE, tags rows with the
     // settings where pr ≤ nprobe, and ranks per (nprobe, qid).
@@ -1822,8 +1651,7 @@ object Ann {
     // expressions. Hash-gated identical at 3 SFs.
     val v = prep(Tables.embeddings(s, d))
     val cents = centroidsFromIds(v, centroidIds)
-    val qids = Seq(0L, 101L, 202L)
-    val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
+    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm")))
     val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
@@ -1850,7 +1678,7 @@ object Ann {
       .withColumn("rn", row_number().over(rnT))
       .filter(col("rn") <= 10)
       .select("nprobe", "qid", "vec_id")
-    ivf.join(exactTopK(v, qids, 10), Seq("qid", "vec_id"))
+    ivf.join(exactTopK(v, Qids, 10), Seq("qid", "vec_id"))
       .groupBy("nprobe", "qid")
       .agg(count(lit(1)).as("n_overlap"),
         expr("count(1) * 100 div 10").as("recall_pct"))
@@ -1866,7 +1694,7 @@ object Ann {
     * all-pairs, but the landed artifact — an (i, j) adjacency relation
     * partitioned by source — and everything downstream are identical,
     * which is why construction is behind `Landed.once` (the amortized
-    * index discipline of `cachedKmeansCents`). */
+    * index discipline of `IvfModel`). */
   def knnGraph(s: SparkSession, d: String, m: Int): DataFrame =
     Landed.once(s, d, s"ann.knng$m") {
       val v = prep(Tables.embeddings(s, d))
@@ -1899,9 +1727,9 @@ object Ann {
     val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm")))
-    // Per-round prune as ONE bounded aggregation (round 15): the
-    // previous form was distinct() THEN a (qid)-window rank — two
-    // exchanges of the candidate relation per round. Candidates per
+    // Per-round prune as ONE bounded aggregation: distinct() THEN a
+    // (qid)-window rank would be two exchanges of the candidate
+    // relation per round. Candidates per
     // query are ≤ beamW·(M+1) at ANY corpus size (the beam-search
     // invariant), so a per-qid collect_set of (−c, vec_id) structs,
     // sorted and sliced, computes the identical top-beamW in one
@@ -1910,9 +1738,9 @@ object Ann {
     // sort (−c asc, vec_id asc) replays the window's (c desc, vec_id)
     // total order exactly, −0.0/0.0 included (both orders are
     // java.lang.Double.compare on the same values).
-    // PRECONDITION (round-15 advice, documented rather than guarded): no
-    // zero-norm vector may reach `v` — a 0/0 cosine is NaN, which the
-    // replaced window's `c DESC` ordered FIRST (NaN greatest) while
+    // PRECONDITION (documented rather than guarded): no
+    // zero-norm vector may reach `v` — a 0/0 cosine is NaN, which a
+    // window's `c DESC` orders FIRST (NaN greatest) while
     // `(−c) ASC` orders LAST (−NaN is NaN, still greatest), so a NaN
     // candidate would change beam contents versus the oracle's window
     // formulation. The embeddings fixtures contain no zero vector at any
@@ -1950,14 +1778,14 @@ object Ann {
     * centroids, so near-boundary true neighbors share at least one
     * bucket — the SemDeDup join shape of `dedup_semantic`), scored
     * inside the bucket tile, and ranked top-M per source in both
-    * directions. The model is the c-SCALED sample-trained one (round 14
-    * — the r13 verdict's headline item): with c(n) = max(8, n div 200)
-    * the buckets stay ~200·nprobe wide at every corpus size, so pair
+    * directions. The model is the c-SCALED sample-trained one: with
+    * c(n) = max(8, n div 200) the buckets stay ~200·nprobe wide at every
+    * corpus size, so pair
     * work Σ_b n_b² ≈ 200·nprobe²·n is LINEAR in n — the fixed-c=8 model
     * made it (nprobe·n)²/8, measured 272–484 s cold at 10× and the
     * documented DNF twin at 100×.
     *
-    * Shuffle audit (round 14): the multi-assignment rank runs on the
+    * Shuffle audit: the multi-assignment rank runs on the
     * SKINNY (vec_id, cid, ccos) relation and the vectors join back at
     * NODE level (n·nprobe rows), then ONE cid exchange feeds both
     * self-join sides and pairs leave the tile already scored and skinny
@@ -1970,19 +1798,19 @@ object Ann {
     * hash-gates both its edge recall against the all-pairs graph and
     * the beam-search recall it supports. */
   def knnGraphIvf(s: SparkSession, d: String, m: Int, nprobe: Int): DataFrame = {
-    val cents = cachedKmeansCentsScaled(s, d)
+    val cents = IvfModel.Scaled.cents(s, d)
     Landed.once(s, d, s"ann.knngivfs${m}p$nprobe") {
       val v = prep(Tables.embeddings(s, d))
       // both per-group ranks run as the COMBINABLE bounded top-k
-      // aggregate (TopKAgg, round 14): a rank window has no partial
-      // step, so the multi-assign window shuffled n·c rows and the
-      // final top-M window shuffled every directional candidate row
+      // aggregate (TopKAgg): a rank window has no partial step, so a
+      // multi-assign window would shuffle n·c rows and a final top-M
+      // window every directional candidate row
       // (353M at the 100× study point) — the aggregate caps the
       // exchanges at n and n·M rows. Identical rank semantics
       // (score DESC, id ASC, NaN greatest) — the (i, j) set is
       // hash-identical.
       val topk = graft.functions.TopKAgg.topk _
-      // TWO-LEVEL multi-assign (round 14): rank only the centroids of
+      // TWO-LEVEL multi-assign: rank only the centroids of
       // each point's top-2 anchor groups instead of ALL c. The flat
       // n·c scoring is n²/200 with the scaled model — linear tile pair
       // work (constant ~nprobe·200 bucket width) rides on top of a
@@ -2084,15 +1912,7 @@ object Ann {
     * vectors regardless of corpus size, vs nprobe/C of the corpus). */
   val simAnnHnsw = QueryDef(
     "sim_ann_hnsw",
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), pr AS (
+    s"""$vCtes, $qsCte, pr AS (
        |  SELECT a.vec_id AS i, b.vec_id AS j,
        |         list_dot_product(a.ve, b.ve) / (a.nrm * b.nrm) AS c
        |  FROM v a JOIN v b ON a.vec_id < b.vec_id
@@ -2111,8 +1931,8 @@ object Ann {
        |GROUP BY e.qid ORDER BY e.qid""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
     val approx = beamSearchTopK(v, knnGraph(s, d, m = 16),
-      qids = Seq(0L, 101L, 202L), entryN = 8, beamW = 16, rounds = 4, k = 10)
-    recallOverlap(v, approx, qids = Seq(0L, 101L, 202L), k = 10)
+      qids = Qids, entryN = 8, beamW = 16, rounds = 4, k = 10)
+    recallOverlap(v, approx, qids = Qids, k = 10)
   }
 
   /** SUB-QUADRATIC GRAPH BUILD, gated — completes the graph-ANN family
@@ -2125,7 +1945,7 @@ object Ann {
     * the exact brute-force top-10, AND the global edge recall of the
     * IVF graph against the all-pairs-built graph (both landed, both
     * amortized). The oracle replays the full path: quantized-Lloyd
-    * model (kmeansOraclePrefix — bit-identical rounds), rn ≤ 3
+    * model (IvfModel.Scaled — bit-identical rounds), rn ≤ 3
     * multi-assignment (nprobe = 3 on both sides), distinct co-bucketed
     * pairs scored once, top-16
     * per direction, then the shared beam tail (beamOracleTail) and the
@@ -2133,8 +1953,8 @@ object Ann {
     * regression now fails the hash with readable recall columns instead
     * of hiding behind the quadratic build. */
   /** The IVF-built kNN-graph oracle chain (`ma … knn`, over the trained
-    * `c3` model and `v` — since round 14 the c-SCALED sample-trained
-    * model of `kmeansOraclePrefixScaled`) — the replay of
+    * `c3` model and `v` — the c-SCALED sample-trained model of
+    * `IvfModel.Scaled.oraclePrefix`) — the replay of
     * `knnGraphIvf(m=16, nprobe=3)`, shared by `sim_ann_graph_build`,
     * `align_bitext_knn` and `sim_ann_beam_curve` so the graph the keys
     * gate has exactly one oracle formulation. */
@@ -2142,7 +1962,7 @@ object Ann {
     * predecessor TWICE each (direct ∪ graph-expanded), so an INLINED
     * `knn` re-executes ~2^rounds times per chain — tolerable while `ma`
     * was one cheap window, a multi-minute blowup once the two-level
-    * routing made each re-execution a 4-way join (round-14 session 4).
+    * routing made each re-execution a 4-way join.
     * MATERIALIZED pins one execution per query; values are unchanged. */
   private val ivfGraphOracleCtes: String =
     """pag AS MATERIALIZED (SELECT vec_id, aid AS gid FROM (
@@ -2168,7 +1988,7 @@ object Ann {
 
   val simAnnGraphBuild = QueryDef(
     "sim_ann_graph_build",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |$ivfGraphOracleCtes,
        |apr AS (
        |  SELECT a.vec_id AS i, b.vec_id AS j,
@@ -2181,10 +2001,7 @@ object Ann {
        |eo AS (SELECT CAST(count(*) AS BIGINT) AS n_edge_overlap
        |       FROM knn JOIN aknn USING (i, j)),
        |et AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM aknn),
-       |qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |),
+       |$qsCte,
        |$beamOracleTail
        |SELECT e.qid, CAST(count(*) AS BIGINT) AS n_overlap,
        |       CAST(count(*) * 10 AS BIGINT) AS recall_pct,
@@ -2194,7 +2011,6 @@ object Ann {
        |GROUP BY e.qid, eo.n_edge_overlap, et.n_edges
        |ORDER BY e.qid""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    val qids = Seq(0L, 101L, 202L)
     val gIvf = knnGraphIvf(s, d, m = 16, nprobe = 3)
     val gAll = knnGraph(s, d, m = 16)
     val edges = broadcast(gIvf.join(gAll, Seq("i", "j"))
@@ -2202,9 +2018,9 @@ object Ann {
       .crossJoin(gAll.agg(count(lit(1)).as("n_edges")))
       .select(col("n_edge_overlap"),
         expr("n_edge_overlap * 100 div n_edges").as("edge_recall_pct")))
-    val approx = beamSearchTopK(v, gIvf, qids, entryN = 8, beamW = 16,
+    val approx = beamSearchTopK(v, gIvf, Qids, entryN = 8, beamW = 16,
       rounds = 4, k = 10)
-    recallOverlap(v, approx, qids, k = 10).crossJoin(edges).orderBy("qid")
+    recallOverlap(v, approx, Qids, k = 10).crossJoin(edges).orderBy("qid")
   }
 
   /** MARGIN-BASED BITEXT MINING core (Artetxe & Schwenk 2019,
@@ -2289,12 +2105,12 @@ object Ann {
 
   /** Gated bitext mining over the trained kmeans clusters: sides are the
     * vec_id parity (the fixture's deterministic two-corpus split), the
-    * cluster model is the shared cached index (`cachedKmeansCents`), and
+    * cluster model is the shared cached index (`IvfModel.Fixed`), and
     * the oracle replays the identical Lloyd rounds + candidate join +
     * margin arithmetic. Output: top-20 mined pairs by margin. */
   val alignBitextMine = QueryDef(
     "align_bitext_mine",
-    s"""$kmeansOraclePrefix,
+    s"""${IvfModel.Fixed.oraclePrefix()},
        |m AS (
        |  SELECT af.cid, v.vec_id, v.ve, v.nrm, v.vec_id % 2 AS side
        |  FROM af JOIN v USING (vec_id)
@@ -2330,7 +2146,7 @@ object Ann {
        |SELECT a_id, b_id, cid, cmic AS cos_micro, margin_micro
        |FROM bw ORDER BY margin_micro DESC, a_id LIMIT 20""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    val m = assignTo(v, cachedKmeansCents(s, d))
+    val m = assignTo(v, IvfModel.Fixed.cents(s, d))
       .select(col("bucket").as("cid"), col("vec_id"), col("ve"), col("nrm"),
         (col("vec_id") % 2).as("side"))
       .repartition(col("cid"))
@@ -2338,8 +2154,8 @@ object Ann {
   }
 
   /** BITEXT MINING AT DEPLOY SHAPE — `align_bitext_mine` with the
-    * candidate set capped per node at the ANN k (the round-12 verdict's
-    * fix): candidates are the CROSS-SIDE edges of the landed IVF-built
+    * candidate set capped per node at the ANN k: candidates are the
+    * CROSS-SIDE edges of the landed IVF-built
     * kNN graph (`knnGraphIvf`, top-16 per direction) instead of full
     * within-cluster tiles, so each node contributes ≤ 2·16 candidates and
     * the mining pass is LINEAR in the corpus however wide the clusters
@@ -2353,7 +2169,7 @@ object Ann {
     * normalization and all margin arithmetic. */
   val alignBitextKnn = QueryDef(
     "align_bitext_knn",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |$ivfGraphOracleCtes,
        |bc AS (
        |  SELECT DISTINCT CASE WHEN i % 2 = 0 THEN i ELSE j END AS a_id,
@@ -2451,12 +2267,9 @@ object Ann {
            |  GROUP BY e.qid
            |)""".stripMargin
       }.mkString(",\n")
-      s"""$kmeansOraclePrefixScaled2,
+      s"""${IvfModel.Scaled.oraclePrefix()},
          |$ivfGraphOracleCtes,
-         |qs AS (
-         |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-         |  WHERE vec_id IN (0, 101, 202)
-         |),
+         |$qsCte,
          |ex AS (SELECT qid, vec_id FROM (
          |  SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
          |    ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
@@ -2468,7 +2281,7 @@ object Ann {
          |  SELECT * FROM r4 UNION ALL SELECT * FROM r8 UNION ALL SELECT * FROM r16
          |) ORDER BY beam_w, qid""".stripMargin
     }) { (s, d) =>
-    // The three width chains run FUSED in one plan (round 14): beam rows
+    // The three width chains run FUSED in one plan: beam rows
     // carry a beam_w tag, each round expands/scores/prunes all widths
     // together (window partitioned by (beam_w, qid), per-row limit
     // rn <= beam_w), and the exact side computes once — 4 expansion
@@ -2479,12 +2292,11 @@ object Ann {
     // unchanged.
     val v = prep(Tables.embeddings(s, d))
     val g = knnGraphIvf(s, d, m = 16, nprobe = 3)
-    val qids = Seq(0L, 101L, 202L)
-    val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
+    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm")))
     val entry = v.orderBy("vec_id").limit(8).select("vec_id")
-    // one-exchange per-round prune (beamSearchTopK's round-15 form,
+    // one-exchange per-round prune (beamSearchTopK's form,
     // with the limit a per-row COLUMN — each width tag keeps its own
     // beam_w candidates out of one shared aggregation)
     def score(cand: DataFrame, limit: org.apache.spark.sql.Column,
@@ -2511,15 +2323,14 @@ object Ann {
             .select(col("beam_w"), col("qid"), col("j").as("vec_id"))),
         limit = col("beam_w").cast("int"), exclSelf = false)
     val top = score(beam, limit = lit(10), exclSelf = true)
-    top.join(exactTopK(v, qids, k = 10), Seq("qid", "vec_id"))
+    top.join(exactTopK(v, Qids, k = 10), Seq("qid", "vec_id"))
       .groupBy("beam_w", "qid")
       .agg(count(lit(1)).as("n_overlap"),
         expr("count(1) * 100 div 10").as("recall_pct"))
       .orderBy("beam_w", "qid")
   }
 
-  /** INCREMENTAL ANN INDEX MAINTENANCE (round 14 — the r13 verdict's
-    * new-surface ask): a 100 TB serving index is maintained
+  /** INCREMENTAL ANN INDEX MAINTENANCE: a 100 TB serving index is maintained
     * incrementally, never rebuilt — new rows are ASSIGNED into the
     * existing IVF lists under the existing trained model, with no
     * retrain (the FAISS `add` motion; the dedup analog is
@@ -2552,52 +2363,8 @@ object Ann {
     * exactly-once claim, the `stream_upsert_sink` ↔ `merge_cdc`
     * relationship replayed for the ANN index. */
   private val upsertOracleSql: String =
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), vb AS (
-       |  SELECT vec_id, ve, nrm FROM v WHERE vec_id % 10 <> 7
-       |), vs AS (
-       |  SELECT vec_id, ve, nrm FROM (
-       |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS srn
-       |    FROM vb)
-       |  WHERE srn <= $TrainSample
-       |), qv AS (
-       |  SELECT vec_id, CAST(generate_subscripts(ve, 1) AS INT) AS sub,
-       |         CAST(round(unnest(ve) * 1000) AS BIGINT) AS q
-       |  FROM vs
-       |), c0 AS (
-       |  SELECT vec_id AS cid, ve AS cve, nrm AS cnrm FROM (
-       |    SELECT vec_id, ve, nrm, row_number() OVER (ORDER BY vec_id) AS rn,
-       |           (SELECT count(*) FROM vb) AS nv
-       |    FROM vs)
-       |  WHERE rn <= greatest(8, nv // 200)
-       |),
-       |${kmeansRoundCte(1, "vs")},
-       |${kmeansRoundCte(2, "vs")},
-       |${kmeansRoundCte(3, "vs")},
-       |${twoLevelAfCtes()},
-       |qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), probed AS (SELECT qid, cid FROM (
-       |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM qs q, c3 c) WHERE rn <= 4),
-       |appx AS (SELECT qid, vec_id FROM (
-       |  SELECT p.qid, af.vec_id, row_number() OVER (PARTITION BY p.qid
-       |    ORDER BY round(list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm), 4) DESC,
-       |             af.vec_id) AS rn
-       |  FROM probed p JOIN af ON af.cid = p.cid JOIN v ON v.vec_id = af.vec_id
-       |  JOIN qs q ON q.qid = p.qid
-       |  WHERE af.vec_id <> p.qid) WHERE rn <= 10),
-       |exact AS (SELECT qid, vec_id FROM (
-       |  SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
-       |             v.vec_id) AS rn
-       |  FROM v, qs q WHERE v.vec_id <> q.qid) WHERE rn <= 10),
+    s"""${IvfModel.UpsertBase.oraclePrefix()},
+       |$servingRecallCtes,
        |ni AS (SELECT CAST(count(*) AS BIGINT) AS n_inserted FROM v
        |       WHERE vec_id % 10 = 7)
        |SELECT e.qid, CAST(count(*) AS BIGINT) AS n_overlap,
@@ -2611,30 +2378,16 @@ object Ann {
     * exactly one implementation. */
   private def upsertRecallReport(v: DataFrame, merged: DataFrame,
       cents: DataFrame, nIns: DataFrame): DataFrame = {
-    val qids = Seq(0L, 101L, 202L)
-    val approx = ivfTopKMulti(v, merged, cents, qids, nprobe = 4, k = 10)
-    recallOverlap(v, approx, qids, k = 10)
+    val approx = ivfTopKMulti(v, merged, cents, Qids, nprobe = 4, k = 10)
+    recallOverlap(v, approx, Qids, k = 10)
       .crossJoin(broadcast(nIns)).orderBy("qid")
-  }
-
-  /** The maintained index's frozen base: (model, landed base lists) —
-    * ONE definition for both ingestion paths (review finding: the two
-    * inline copies had to stay byte-identical or the Landed artifact
-    * would silently depend on which key ran first). */
-  private def upsertBaseIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val cents = cachedKmeansCentsUpsertBase(s, d)
-    val baseLists = Landed.once(s, d, "ann.ivfupsb") {
-      twoLevelAssign(prep(Tables.embeddings(s, d))
-          .filter(col("vec_id") % 10 =!= 7), cents)
-    }
-    (cents, baseLists)
   }
 
   val simAnnUpsert = QueryDef("sim_ann_upsert", upsertOracleSql) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
     val inc = v.filter(col("vec_id") % 10 === 7)
-    val (cents, baseLists) = upsertBaseIndex(s, d)
+    val cents = IvfModel.UpsertBase.cents(s, d)
+    val baseLists = IvfModel.UpsertBase.lists(s, d)
     // the upsert job: assign-only, touches ONLY the increment — routed
     // through the same two-level quantizer as the base lists (the
     // oracle's single `af` over the full corpus requires base and
@@ -2670,7 +2423,8 @@ object Ann {
     val v = prep(Tables.embeddings(s, d))
     // model + base lists: the sim_ann_upsert artifacts (one shared
     // build, both ingestion paths)
-    val (cents, baseLists) = upsertBaseIndex(s, d)
+    val cents = IvfModel.UpsertBase.cents(s, d)
+    val baseLists = IvfModel.UpsertBase.lists(s, d)
     // the routing structure is a pure function of the FROZEN base model:
     // derive it once here, not per microbatch (no per-batch count jobs
     // or re-broadcasts on the ingest hot path)
@@ -2702,32 +2456,14 @@ object Ann {
       streamed.agg(count(lit(1)).as("n_inserted")))
   }
 
-  /** The landed serving lists (the `ivfdell` artifact): ONE builder for
-    * all four consumers (`sim_ann_ivf2`/`simAnnDelete`/`simAnnFiltered`/
-    * `simAnnRebalance`), so the artifact can never depend on key
-    * execution order — the shared-builder discipline `upsertBaseIndex`
-    * got from the same class of review finding. */
-  private def servingLists(s: SparkSession, d: String, v: DataFrame,
-      cents: DataFrame): DataFrame =
-    Landed.once(s, d, "ann.ivfdell") { twoLevelAssign(v, cents) }
-
-  /** The capped model's landed lists — ONE builder for both capped
-    * consumers (`sim_ann_ivf2_capped`, `dedup_semantic_capped`), the
-    * servingLists discipline under the production model. Separate tag:
-    * a different model must never alias the scaled artifact. */
-  private def cappedServingLists(s: SparkSession, d: String, v: DataFrame,
-      cents: DataFrame): DataFrame =
-    Landed.once(s, d, "ann.ivfdellcap") { twoLevelAssign(v, cents) }
-
-  /** TWO-LEVEL IVF BUILD (round 14 — clears the last named superlinear
-    * build in the family): the serving-index lists (`ivfdell`, the
-    * artifact `sim_ann_delete`/`sim_ann_filtered`/`sim_ann_rebalance`
+  /** TWO-LEVEL IVF BUILD: the serving-index lists (`IvfModel.lists`,
+    * the artifact `sim_ann_delete`/`sim_ann_filtered`/`sim_ann_rebalance`
     * maintain and probe) are built by `twoLevelAssign` — the
     * ⌈√c⌉-anchor hierarchical coarse quantizer (faiss's
     * quantizer-over-the-quantizer; Babenko & Lempitsky's inverted
     * multi-index) — instead of the flat n·c assignment, which at
-    * c(n) = n/200 is n²/200 and was the session-3 study's documented
-    * boundary (the 33–44 s ivfdell landing at the 100× point). This
+    * c(n) = n/200 is n²/200 (a measured 33–44 s landing at the 100×
+    * point). This
     * key IS the build contract: it lands the lists and gates
     * (a) search recall of nprobe=4 top-10 over them vs exact brute
     * force — on this near-orthogonal fixture the two-level lists sit
@@ -2742,17 +2478,11 @@ object Ann {
     * (c) the structure counts (n_centroids, n_groups) a build report
     * ships. The oracle replays anchors/groups/routing bit-identically
     * (`twoLevelAfCtes`). */
-  /** The build-contract oracle body shared by `sim_ann_ivf2` and its
-    * capped twin — everything after the model prefix (which is the only
-    * thing the two keys differ in). */
-  private def ivf2OracleBody: String =
-    s"""qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), probed AS (SELECT qid, cid FROM (
-       |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM qs q, c3 c) WHERE rn <= 4),
+  /** The probe-and-rank CTEs of a serving gate over a model prefix's
+    * `af`: `qs`, `probed`, the nprobe-4 top-10 `appx` over the index and
+    * the exact top-10 `exact` — shared by the upsert and build gates. */
+  private def servingRecallCtes: String =
+    s"""$qsCte, $probedCte,
        |appx AS (SELECT qid, vec_id FROM (
        |  SELECT p.qid, af.vec_id, row_number() OVER (PARTITION BY p.qid
        |    ORDER BY round(list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm), 4) DESC,
@@ -2764,7 +2494,13 @@ object Ann {
        |  SELECT q.qid, v.vec_id, row_number() OVER (PARTITION BY q.qid
        |    ORDER BY list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm) DESC,
        |             v.vec_id) AS rn
-       |  FROM v, qs q WHERE v.vec_id <> q.qid) WHERE rn <= 10),
+       |  FROM v, qs q WHERE v.vec_id <> q.qid) WHERE rn <= 10)""".stripMargin
+
+  /** The build-contract oracle body shared by `sim_ann_ivf2` and its
+    * capped twin — everything after the model prefix (which is the only
+    * thing the two keys differ in). */
+  private def ivf2OracleBody: String =
+    s"""$servingRecallCtes,
        |acc AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_indexed,
        |               (SELECT CAST(count(*) AS BIGINT) FROM c3) AS n_centroids,
        |               (SELECT CAST(count(DISTINCT gid) AS BIGINT) FROM cg) AS n_groups)
@@ -2775,13 +2511,14 @@ object Ann {
        |GROUP BY e.qid, acc.n_indexed, acc.n_centroids, acc.n_groups
        |ORDER BY e.qid""".stripMargin
 
-  /** The Spark side of the build contract over an explicit (model,
-    * landed lists) pair — recall vs exact, totality, structure counts;
-    * shared by `sim_ann_ivf2` and `sim_ann_ivf2_capped`. */
-  private def ivf2Report(v: DataFrame, cents: DataFrame,
-      lists: DataFrame): DataFrame = {
-    val qids = Seq(0L, 101L, 202L)
-    val approx = ivfTopKMulti(v, lists, cents, qids, nprobe = 4, k = 10)
+  /** The Spark side of the build contract over a model and its landed
+    * lists — recall vs exact, totality, structure counts; shared by
+    * `sim_ann_ivf2` and `sim_ann_ivf2_capped`. */
+  private def ivf2Report(s: SparkSession, d: String, model: IvfModel): DataFrame = {
+    val v = prep(Tables.embeddings(s, d))
+    val cents = model.cents(s, d)
+    val lists = model.lists(s, d)
+    val approx = ivfTopKMulti(v, lists, cents, Qids, nprobe = 4, k = 10)
     val nc = cents.count()
     val gUsed = centroidGroups(cents, anchorsOf(cents, anchorCount(nc)))
       .select("gid").distinct().count()
@@ -2790,20 +2527,18 @@ object Ann {
     val acc = broadcast(lists.agg(count(lit(1)).as("n_indexed"))
       .withColumn("n_centroids", lit(nc))
       .withColumn("n_groups", lit(gUsed)))
-    recallOverlap(v, approx, qids, k = 10).crossJoin(acc).orderBy("qid")
+    recallOverlap(v, approx, Qids, k = 10).crossJoin(acc).orderBy("qid")
   }
 
   val simAnnIvf2 = QueryDef(
     "sim_ann_ivf2",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |$ivf2OracleBody""".stripMargin) { (s, d) =>
-    val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsScaled(s, d)
-    ivf2Report(v, cents, servingLists(s, d, v, cents))
+    ivf2Report(s, d, IvfModel.Scaled)
   }
 
-  /** THE CAPPED PRODUCTION BUILD (round 15 — clears the r14 verdict's
-    * weak #2, the family-level uncapped-c boundary): `sim_ann_ivf2`
+  /** THE CAPPED PRODUCTION BUILD, the family-level fix of the
+    * uncapped-c boundary: `sim_ann_ivf2`
     * under c_eff = min(max(8, n div 200), CapC). What the cap buys at
     * 100 TB (CapC's scaladoc has the arithmetic): the grouped-centroid
     * broadcast is CONSTANT-size instead of O(n) bytes, and the
@@ -2819,16 +2554,14 @@ object Ann {
     * a different artifact and must never alias the scaled one. */
   val simAnnIvf2Capped = QueryDef(
     "sim_ann_ivf2_capped",
-    s"""$kmeansOraclePrefixCapped2,
+    s"""${IvfModel.Capped.oraclePrefix()},
        |$ivf2OracleBody""".stripMargin) { (s, d) =>
-    val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsCapped(s, d)
-    ivf2Report(v, cents, cappedServingLists(s, d, v, cents))
+    ivf2Report(s, d, IvfModel.Capped)
   }
 
-  /** ANN INDEX DELETION + COMPACTION (round 14 — completes the index
-    * maintenance story `sim_ann_upsert` opened: add + delete are the
-    * two motions a 100 TB serving index lives by). Deletes (vec_id %
+  /** ANN INDEX DELETION + COMPACTION — completes the index maintenance
+    * story `sim_ann_upsert` opened: add + delete are the two motions a
+    * 100 TB serving index lives by. Deletes (vec_id %
     * 10 = 3) are first TOMBSTONED — an anti-join applied at read time,
     * the delete-vector motion `scan_mor_deletes` gates on the scan side
     * (FAISS `remove_ids` semantics; no index rewrite on the delete
@@ -2847,28 +2580,27 @@ object Ann {
     * probes touch nprobe/c of the corpus. */
   /** Tombstone application over the serving lists — deletes drop as an
     * ANTI JOIN on the index relation (never a rescan or rebuild). Split
-    * out so PlanSpec can pin the LeftAnti shape directly: since round
-    * 16 the key's certified approx relations are localCheckpoint-ed
-    * (computed once, shared by the exceptAll certification and the
-    * recall report), which hides this subtree from the key's final
-    * executed plan. */
+    * out so PlanSpec can pin the LeftAnti shape directly: the key's
+    * certified approx relations are localCheckpoint-ed (computed once,
+    * shared by the exceptAll certification and the recall report),
+    * which hides this subtree from the key's final executed plan. */
   def tombstoneApplied(lists: DataFrame, del: DataFrame): DataFrame =
     lists.join(del, Seq("vec_id"), "left_anti")
 
+  /** `sim_ann_delete`'s inputs: the scaled model's landed serving lists
+    * and the delete vector (vec_id % 10 = 3). */
+  private[graft] def deleteInputs(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    (IvfModel.Scaled.lists(s, d),
+      prep(Tables.embeddings(s, d)).filter(col("vec_id") % 10 === 3).select("vec_id"))
+
   val simAnnDelete = QueryDef(
     "sim_ann_delete",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |sv AS (
        |  SELECT vec_id, ve, nrm FROM v WHERE vec_id % 10 <> 3
        |), ai AS (
        |  SELECT af.vec_id, af.cid FROM af JOIN sv USING (vec_id)
-       |), qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), probed AS (SELECT qid, cid FROM (
-       |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM qs q, c3 c) WHERE rn <= 4),
+       |), $qsCte, $probedCte,
        |appx AS (SELECT qid, vec_id FROM (
        |  SELECT p.qid, ai.vec_id, row_number() OVER (PARTITION BY p.qid
        |    ORDER BY round(list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm), 4) DESC,
@@ -2890,40 +2622,35 @@ object Ann {
        |GROUP BY e.qid, nd.n_deleted
        |ORDER BY e.qid""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsScaled(s, d)
+    val cents = IvfModel.Scaled.cents(s, d)
     // the serving index: the shared two-level build (sim_ann_ivf2's
-    // contract), forced before the compaction closure
-    val lists = servingLists(s, d, v, cents)
-    val del = v.filter(col("vec_id") % 10 === 3).select("vec_id")
+    // contract), landed before the compaction closure
+    val (lists, del) = deleteInputs(s, d)
     val tomb = tombstoneApplied(lists, del)
-    val compacted = Landed.once(s, d, "ann.ivfdelc") {
-      lists.join(v.filter(col("vec_id") % 10 === 3).select("vec_id"),
-        Seq("vec_id"), "left_anti")
-    }
-    val qids = Seq(0L, 101L, 202L)
-    // bounded relations (<= qids·k rows each), MATERIALIZED once
-    // (round 16): un-checkpointed, the two exceptAll actions plus the
-    // final report re-ran the full probe pipeline per action — approxT
-    // three times, approxC twice, 35 AQE jobs per invocation for a key
-    // whose certified relations are 30 rows. localCheckpoint is the
+    val compacted = Landed.once(s, d, "ann.ivfdelc") { tombstoneApplied(lists, del) }
+    // bounded relations (<= Qids·k rows each), MATERIALIZED once:
+    // un-checkpointed, the two exceptAll actions plus the final report
+    // would re-run the full probe pipeline per action — approxT three
+    // times, approxC twice, 35 AQE jobs per invocation for a key whose
+    // certified relations are 30 rows. localCheckpoint is the
     // sql_tpch_parity certification shape taken to completion: each
     // side computes exactly once; the equality check and the recall
     // report run on the materialized blocks.
-    val approxT = ivfTopKMulti(v, tomb, cents, qids, nprobe = 4, k = 10)
+    val approxT = ivfTopKMulti(v, tomb, cents, Qids, nprobe = 4, k = 10)
       .localCheckpoint()
-    val approxC = ivfTopKMulti(v, compacted, cents, qids, nprobe = 4, k = 10)
+    val approxC = ivfTopKMulti(v, compacted, cents, Qids, nprobe = 4, k = 10)
       .localCheckpoint()
     val matches = approxT.exceptAll(approxC).isEmpty &&
       approxC.exceptAll(approxT).isEmpty
     val vSurv = v.filter(col("vec_id") % 10 =!= 3)
-    recallOverlap(vSurv, approxT, qids, k = 10)
+    recallOverlap(vSurv, approxT, Qids, k = 10)
       .crossJoin(broadcast(del.agg(count(lit(1)).as("n_deleted"))))
       .withColumn("compact_match", lit(matches))
       .orderBy("qid")
   }
 
-  /** FILTERED ANN SEARCH (round 14 — completes the serving trio with
-    * `sim_ann_upsert`/`sim_ann_delete`): top-k constrained by a
+  /** FILTERED ANN SEARCH — completes the serving trio with
+    * `sim_ann_upsert`/`sim_ann_delete`: top-k constrained by a
     * metadata predicate — here "same label as the query" (the
     * tenant/category-scoped search every production vector store
     * serves; the classic hard case because the constraint thins the
@@ -2940,16 +2667,13 @@ object Ann {
     * landed full-corpus lists — one build, three consumers). */
   val simAnnFiltered = QueryDef(
     "sim_ann_filtered",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |lb AS (
        |  SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings
        |), qs AS (
        |  SELECT v.vec_id AS qid, v.ve AS qve, v.nrm AS qnrm, lb.label AS qlabel
-       |  FROM v JOIN lb USING (vec_id) WHERE v.vec_id IN (0, 101, 202)
-       |), probed AS (SELECT qid, cid FROM (
-       |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM qs q, c3 c) WHERE rn <= 4),
+       |  FROM v JOIN lb USING (vec_id) WHERE v.vec_id IN $qidList
+       |), $probedCte,
        |appx AS (SELECT qid, vec_id FROM (
        |  SELECT p.qid, af.vec_id, row_number() OVER (PARTITION BY p.qid
        |    ORDER BY round(list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm), 4) DESC,
@@ -2978,14 +2702,13 @@ object Ann {
        |ORDER BY e.qid""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val v = prep(emb)
-    val cents = cachedKmeansCentsScaled(s, d)
+    val cents = IvfModel.Scaled.cents(s, d)
     // the SAME landed serving lists sim_ann_delete reads (one two-level
-    // build, all maintenance/serving consumers); forced before any closure
-    val lists = servingLists(s, d, v, cents)
+    // build, all maintenance/serving consumers)
+    val lists = IvfModel.Scaled.lists(s, d)
     val lb = emb.select(col("vec_id"), col("label").cast("long").as("label"))
-    val qids = Seq(0L, 101L, 202L)
     val q = broadcast(v.join(lb, Seq("vec_id"))
-      .filter(col("vec_id").isin(qids: _*))
+      .filter(col("vec_id").isin(Qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm"), col("label").as("qlabel")))
     val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
@@ -3033,8 +2756,8 @@ object Ann {
   private def rebalanceCap(nv: Long, nc: Long): Long =
     nv / nc + nv / (16L * nc)
 
-  /** IVF LIST REBALANCING (round 14 — the remaining maintenance motion
-    * after `sim_ann_upsert` add and `sim_ann_delete` remove): sustained
+  /** IVF LIST REBALANCING — the remaining maintenance motion after
+    * `sim_ann_upsert` add and `sim_ann_delete` remove: sustained
     * upserts skew the inverted lists, and an oversized list degrades
     * every query probing it (the bucket scan is the per-probe cost), so
     * a production store periodically REBALANCES — the balanced-k-means
@@ -3064,7 +2787,7 @@ object Ann {
     * bounded groups). Everything downstream is ≤ c rows. */
   val simAnnRebalance = QueryDef(
     "sim_ann_rebalance",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |sz AS (
        |  SELECT cid, CAST(count(*) AS BIGINT) AS n_before FROM af GROUP BY cid
        |), cp AS (
@@ -3122,9 +2845,7 @@ object Ann {
        |FROM sb FULL JOIN ic ON ic.cid = sb.cid
        |ORDER BY bucket""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsScaled(s, d)
-    val lists = servingLists(s, d, v, cents)
-    rebalanceReport(v, cents, lists)
+    rebalanceReport(v, IvfModel.Scaled.cents(s, d), IvfModel.Scaled.lists(s, d))
   }
 
   /** (vec_id, bucket, margin, to_cid) from the skinny members×centroids
@@ -3157,7 +2878,7 @@ object Ann {
     val over = sizes.filter(col("n_before") > cap).select("bucket")
     val mem = lists.join(broadcast(over), Seq("bucket"))
       .join(v, Seq("vec_id"))
-    // ROUTER-CONSISTENT candidates (round 14): score each member only
+    // ROUTER-CONSISTENT candidates: score each member only
     // against the centroids of its top-2 anchor groups — the same
     // quantizer the index routes by (faiss reassigns through its own
     // coarse quantizer) — instead of ALL c centroids. "Skew-bounded"
@@ -3208,7 +2929,7 @@ object Ann {
     // centroid whose list was empty (a centroid that is nobody's
     // rank-1 can still be a runner-up); that bucket must appear in the
     // accounting with n_before = 0, else Σ n_after < Σ n_before and
-    // conservation — the relation's contract — breaks (review finding)
+    // conservation — the relation's contract — breaks
     sizes.join(oc, Seq("bucket"), "left").join(ic, Seq("bucket"), "outer")
       .select(col("bucket"),
         coalesce(col("n_before"), lit(0L)).as("n_before"),
@@ -3304,12 +3025,7 @@ object Ann {
 
   val sampleKcenter = QueryDef(
     "sample_kcenter",
-    s"""WITH v0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-       |  FROM embeddings
-       |), v AS (
-       |  SELECT vec_id, ve, sqrt(list_dot_product(ve, ve)) AS nrm FROM v0
-       |), sd AS (
+    s"""$vCtes, sd AS (
        |  SELECT ve AS sve, nrm AS snrm FROM v WHERE vec_id = 0
        |), m0 AS (
        |  SELECT v.vec_id, v.ve, v.nrm,
@@ -3329,7 +3045,7 @@ object Ann {
     kcenterSelect(prep(Tables.embeddings(s, d)))
   }
 
-  /** RAG INGESTION FUNNEL (round 14) — the end-to-end pipeline that
+  /** RAG INGESTION FUNNEL — the end-to-end pipeline that
     * turns a raw document corpus into a maintained serving index,
     * stitching the session's retrieval family into the landed index
     * path (the `pipeline_pretrain` funnel shape, applied to retrieval):
@@ -3353,7 +3069,7 @@ object Ann {
     * output) and reads the stats from the landing. */
   val pipelineRag = QueryDef(
     "pipeline_rag",
-    s"""$kmeansOraclePrefixScaled2,
+    s"""${IvfModel.Scaled.oraclePrefix()},
        |${Retrieval.chunkRelCtes("documents")},
        |rck AS (
        |  SELECT chunk_md5, min(doc_id) AS doc_id FROM rch GROUP BY chunk_md5
@@ -3375,8 +3091,7 @@ object Ann {
        |) ORDER BY stage""".stripMargin) { (s, d) =>
     val ch = Retrieval.chunkRel(Tables.documents(s, d))
       .select("doc_id", "chunk_md5")
-    val v = prep(Tables.embeddings(s, d))
-    val lists = servingLists(s, d, v, cachedKmeansCentsScaled(s, d))
+    val lists = IvfModel.Scaled.lists(s, d)
     val st = ch.agg(count(lit(1)).as("a"),
       countDistinct(col("chunk_md5")).as("b"))
     val kd = ch.groupBy("chunk_md5").agg(min(col("doc_id")).as("doc_id"))
@@ -3415,14 +3130,8 @@ object Ann {
     * SFs) so every query keeps live matches at every SF. */
   val simAnnRange = QueryDef(
     "sim_ann_range",
-    s"""$kmeansOraclePrefixScaled2,
-       |qs AS (
-       |  SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
-       |  WHERE vec_id IN (0, 101, 202)
-       |), probed AS (SELECT qid, cid FROM (
-       |  SELECT q.qid, c.cid, row_number() OVER (PARTITION BY q.qid
-       |    ORDER BY list_dot_product(q.qve, c.cve) / (q.qnrm * c.cnrm) DESC, c.cid) AS rn
-       |  FROM qs q, c3 c) WHERE rn <= 4),
+    s"""${IvfModel.Scaled.oraclePrefix()},
+       |$qsCte, $probedCte,
        |cand AS (
        |  SELECT p.qid, af.vec_id,
        |         round(list_dot_product(q.qve, v.ve) / (q.qnrm * v.nrm), 4) AS cos
@@ -3439,10 +3148,9 @@ object Ann {
        |FROM cand c JOIN cnt USING (qid) WHERE c.cos >= 0.3
        |ORDER BY c.qid, c.cos DESC, c.vec_id""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
-    val cents = cachedKmeansCentsScaled(s, d)
-    val lists = servingLists(s, d, v, cents)
-    val qids = Seq(0L, 101L, 202L)
-    val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
+    val cents = IvfModel.Scaled.cents(s, d)
+    val lists = IvfModel.Scaled.lists(s, d)
+    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm")))
     val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))

@@ -106,7 +106,7 @@ object ColdWork {
 /** The one session memo: each derived artifact (landed relation,
   * trained index, collected vocabulary, certification report) is built
   * once per (session, dataset, tag) and fed to every later consumer.
-  * Tags carry an owner prefix (`"ann.kmc"`, `"swivel.vocab"`) so two
+  * Tags carry an owner prefix (`"ann.pqi"`, `"swivel.vocab"`) so two
   * modules cannot alias. Entries owned by stopped sessions drop first:
   * they would pin checkpoint blocks and the dead session for the
   * process lifetime otherwise.

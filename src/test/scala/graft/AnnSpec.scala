@@ -213,7 +213,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("k-means IVF reaches recall ≥ 0.9 vs exact top-10 on planted clusters") {
     val emb = planted(clusters = 4, perCluster = 40, noise = 0, dim = 16)
-    val cents = Ann.kmeansCentroids(Ann.prep(emb), c = 4, iters = 3)
+    val cents = Ann.kmeansCentroidsQuantized(Ann.prep(emb), c = 4, iters = 3)
     val approx = Ann.ivfTopKWith(emb, queryId = 0L, cents, nprobe = 1, k = 10)
       .select("vec_id").as[Long].collect().toSet
     val exact = Similarity.allPairsCos(Ann.prep(emb))
@@ -223,6 +223,22 @@ class AnnSpec extends AnyFunSuite {
       .orderBy(col("cos_raw").desc, col("other"))
       .limit(10).select("other").as[Long].collect().toSet
     assert((approx & exact).size >= 9)
+  }
+
+  test("upsert gates return their typed empty relation on empty embeddings") {
+    // a zero-row embeddings table trains zero centroids and indexes
+    // nothing; both ingestion paths must still return the schema they
+    // return on real data, as their DuckDB oracle does
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty_emb").toString
+    Tables.embeddings(spark, d).limit(0).write.parquet(s"$empty/embeddings.parquet")
+    for (g <- Seq(Ann.simAnnUpsert, Ann.streamAnnUpsert)) {
+      val real = g.fn(spark, d)
+      val got = g.fn(spark, empty)
+      assert(got.count() == 0L, s"${g.name}: rows on empty embeddings")
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        real.schema.map(f => (f.name, f.dataType)),
+        s"${g.name}: ${got.schema.simpleString} vs ${real.schema.simpleString}")
+    }
   }
 
   test("integral division truncates toward zero for signed longs AND decimals (the pca rescale contract)") {

@@ -807,6 +807,13 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(tp.contains("LeftAnti"),
       s"the delete vector did not apply as an anti join:\n$tp")
+    // and on the key's own inputs: its landed serving lists and delete
+    // vector, the relations its tombstone probe and compaction read
+    val (keyLists, keyDel) = graft.ops.Ann.deleteInputs(spark, d)
+    val kp = graft.ops.Ann.tombstoneApplied(keyLists, keyDel)
+      .queryExecution.executedPlan.toString
+    assert(kp.contains("LeftAnti") && !kp.contains("CartesianProduct"),
+      s"the key's delete vector did not apply as an anti join:\n$kp")
   }
 
   test("sim_ann_filtered: label constraint and probe ride keyed/broadcast joins; no cartesian") {
