@@ -202,21 +202,7 @@ object Alignment {
            |  FROM u$r
            |)""".stripMargin
       }.mkString(",\n")
-      s"""WITH pos AS (
-         |  SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents
-         |), bg AS (
-         |  SELECT doc_id, source,
-         |    toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
-         |  FROM pos, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-         |  WHERE len(toks) >= 2
-         |), bc AS (
-         |  SELECT w1, w2, count(*) AS bcnt FROM bg GROUP BY 1, 2
-         |), uc AS (
-         |  SELECT w1, count(*) AS ucnt FROM bg GROUP BY 1
-         |), dict AS (
-         |  SELECT bc.w1, bc.w2, bcnt * 1000000 // ucnt AS micro
-         |  FROM bc JOIN uc ON bc.w1 = uc.w1
-         |), dom AS (
+      s"""${TextAnalysis.bigramLmCte("source")}, dom AS (
          |  SELECT bg.source,
          |    count(DISTINCT bg.doc_id) AS n_docs,
          |    sum(micro) // count(*) AS avg_micro
@@ -239,18 +225,7 @@ object Alignment {
          |  CAST(w // 10 AS BIGINT) AS n_per_100k
          |FROM w$MwRounds ORDER BY source""".stripMargin
     }) { (s, d) =>
-    val bg = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("source"), explode(expr(
-        "transform(sequence(0, size(toks) - 2)," +
-          " i -> struct(toks[i] AS w1, toks[i + 1] AS w2))")).as("b"))
-      .select(col("doc_id"), col("source"),
-        col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("bcnt"))
-    val uc = bg.groupBy("w1").agg(count(lit(1)).as("ucnt"))
-    val dict = bc.join(uc, "w1")
-      .select(col("w1"), col("w2"), expr("bcnt * 1000000L div ucnt").as("micro"))
+    val (bg, dict) = TextAnalysis.bigramLm(Tables.documents(s, d), "source")
     val scored = bg.join(dict, Seq("w1", "w2")).localCheckpoint()
     val dom = scored.groupBy("source")
       .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -450,18 +425,18 @@ object Alignment {
          |    len(list_distinct(toks[13:])) * 1000000
          |      // (len(toks) - 12) AS score
          |  FROM base WHERE len(toks) - 12 >= 20
-         |), cmp AS (
-         |  SELECT CASE WHEN x.score > y.score THEN x.source ELSE y.source END AS win_src,
-         |         CASE WHEN x.score > y.score THEN y.source ELSE x.source END AS lose_src
-         |  FROM cand x JOIN cand y
-         |    ON x.lang = y.lang AND x.prompt = y.prompt AND x.doc_id < y.doc_id
-         |  WHERE x.source <> y.source AND abs(x.score - y.score) >= $MarginMicro
-         |), $btOracleTail""".stripMargin
+         |), ${duelsCte("prompt")}, $btOracleTail""".stripMargin
     }) { (s, d) =>
     val cand = dpoCandidates(Tables.documents(s, d))
       .select("doc_id", "lang", "source", "prompt", "score")
-    val cmp = cand.as("x").join(cand.as("y"),
-        col("x.lang") === col("y.lang") && col("x.prompt") === col("y.prompt") &&
+    btRank(duels(cand, "prompt"))
+  }
+
+  /** The margin-cleared cross-source duels (win_src, lose_src) among
+    * candidates sharing lang and `group`. */
+  private def duels(cand: DataFrame, group: String): DataFrame =
+    cand.as("x").join(cand.as("y"),
+        col("x.lang") === col("y.lang") && col(s"x.$group") === col(s"y.$group") &&
           col("x.doc_id") < col("y.doc_id"))
       .filter(col("x.source") =!= col("y.source") &&
         abs(col("x.score") - col("y.score")) >= MarginMicro)
@@ -470,8 +445,16 @@ object Alignment {
           .otherwise(col("y.source")).as("win_src"),
         when(col("x.score") > col("y.score"), col("y.source"))
           .otherwise(col("x.source")).as("lose_src"))
-    btRank(cmp)
-  }
+
+  /** DuckDB twin of `duels` over a `cand` CTE. Starts mid-WITH. */
+  private def duelsCte(group: String): String =
+    s"""cmp AS (
+       |  SELECT CASE WHEN x.score > y.score THEN x.source ELSE y.source END AS win_src,
+       |         CASE WHEN x.score > y.score THEN y.source ELSE x.source END AS lose_src
+       |  FROM cand x JOIN cand y
+       |    ON x.lang = y.lang AND x.$group = y.$group AND x.doc_id < y.doc_id
+       |  WHERE x.source <> y.source AND abs(x.score - y.score) >= $MarginMicro
+       |)""".stripMargin
 
   private val DuelPools = 16
   private val DuelCap = 8
@@ -515,13 +498,7 @@ object Alignment {
        |      row_number() OVER (PARTITION BY lang, pool ORDER BY doc_id) AS rn
        |    FROM pooled)
        |  WHERE rn <= $DuelCap
-       |), cmp AS (
-       |  SELECT CASE WHEN x.score > y.score THEN x.source ELSE y.source END AS win_src,
-       |         CASE WHEN x.score > y.score THEN y.source ELSE x.source END AS lose_src
-       |  FROM cand x JOIN cand y
-       |    ON x.lang = y.lang AND x.pool = y.pool AND x.doc_id < y.doc_id
-       |  WHERE x.source <> y.source AND abs(x.score - y.score) >= $MarginMicro
-       |), $btOracleTail""".stripMargin) { (s, d) =>
+       |), ${duelsCte("pool")}, $btOracleTail""".stripMargin) { (s, d) =>
     val pooled = dpoCandidates(Tables.documents(s, d))
       .select(col("doc_id"), col("lang"), col("source"), col("score"),
         (conv(substring(md5(col("prompt").cast("binary")), 1, 3), 16, 10)
@@ -532,17 +509,7 @@ object Alignment {
           .partitionBy("lang", "pool").orderBy("doc_id")))
       .filter(col("rn") <= DuelCap)
       .drop("rn")
-    val cmp = capped.as("x").join(capped.as("y"),
-        col("x.lang") === col("y.lang") && col("x.pool") === col("y.pool") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(col("x.source") =!= col("y.source") &&
-        abs(col("x.score") - col("y.score")) >= MarginMicro)
-      .select(
-        when(col("x.score") > col("y.score"), col("x.source"))
-          .otherwise(col("y.source")).as("win_src"),
-        when(col("x.score") > col("y.score"), col("y.source"))
-          .otherwise(col("x.source")).as("lose_src"))
-    btRank(cmp)
+    btRank(duels(capped, "pool"))
   }
 
   val all: Seq[QueryDef] = Seq(pipelineDpo, sampleDoremi, alignBtRank,

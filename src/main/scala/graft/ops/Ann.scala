@@ -236,6 +236,24 @@ object Ann {
       nprobe: Int, k: Int): DataFrame =
     ivfTopKWith(emb, queryId, centroidsFromIds(prep(emb), centroidIds), nprobe, k)
 
+  /** The broadcast query vectors (qid, qve, qnrm) of `qids`. */
+  private def queryVecs(v: DataFrame, qids: Seq[Long]): DataFrame =
+    broadcast(v.filter(col("vec_id").isin(qids: _*))
+      .select(col("vec_id").as("qid"), col("ve").as("qve"),
+        col("nrm").as("qnrm")))
+
+  /** Each query's `nprobe` nearest centroids by cosine, (pcos DESC, cid)
+    * order: (qid, cid, pcos, pr) with pr the probe rank. */
+  private def probedCentroids(q: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .select(col("qid"), col("cid"),
+        (Similarity.dot(col("qve"), col("cve")) / (col("qnrm") * col("cnrm")))
+          .as("pcos"))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))))
+      .filter(col("pr") <= nprobe)
+
   /** Multi-query IVF top-k over an EXPLICIT index relation
     * (vec_id, bucket) — the serving read path of `sim_ann_upsert`,
     * where the index is a maintained artifact (landed base lists +
@@ -246,15 +264,8 @@ object Ann {
     * the top-k is a per-qid window over nprobe/c of the corpus. */
   def ivfTopKMulti(v: DataFrame, index: DataFrame, cents: DataFrame,
       qids: Seq[Long], nprobe: Int, k: Int): DataFrame = {
-    val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("ve").as("qve"),
-        col("nrm").as("qnrm")))
-    val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    val probed = broadcast(q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        (Similarity.dot(col("qve"), col("cve")) / (col("qnrm") * col("cnrm")))
-          .as("pcos"))
-      .withColumn("rn", row_number().over(rnP)).filter(col("rn") <= nprobe)
+    val q = queryVecs(v, qids)
+    val probed = broadcast(probedCentroids(q, cents, nprobe)
       .select(col("qid"), col("cid").as("bucket")))
     val rnK = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     index.join(probed, Seq("bucket"))
@@ -1173,10 +1184,11 @@ object Ann {
         .withColumn("rn", row_number().over(rn))
         .filter(col("rn") === 1)
     }
-    // deterministic seed: the first `codebook` vectors by id, every sub
+    // deterministic seed: the first `codebook` vectors by id, every sub;
+    // an empty corpus seeds no codebooks, and every round below then
+    // collects nothing, so the codes come out empty
     val seedIds = v.orderBy(col("vec_id")).limit(codebook)
       .select("vec_id").as[Long].collect().toSeq
-    require(seedIds.nonEmpty, "pqIndex: no vectors to seed the codebooks")
     var cents: Seq[(Int, Long, Array[Double])] =
       subv.filter(col("vec_id").isin(seedIds: _*))
         .select(col("sub"), col("vec_id"), col("sve"))
@@ -1229,11 +1241,12 @@ object Ann {
       subv.filter(col("vec_id") === queryId)
         .select(col("sub"), col("sve"))
         .as[(Int, Array[Double])].collect().toMap
-    require(qsub.size == m,
-      s"pqQueryTopK: query $queryId not found (got ${qsub.size} of $m subvectors)")
-    val dtab = broadcast(cents.map { case (sub, cid, cve) =>
-      (sub, cid,
-        qsub(sub).zip(cve).map { case (a, b) => a * b }.sum)
+    // an empty corpus trains no codebooks: the distance table, and so the
+    // result, is empty; otherwise the query must be one of its vectors
+    require(cents.isEmpty || qsub.size == m,
+      s"pqQueryTopK: query $queryId has ${qsub.size} of $m subvectors")
+    val dtab = broadcast(cents.flatMap { case (sub, cid, cve) =>
+      qsub.get(sub).map(q => (sub, cid, q.zip(cve).map { case (a, b) => a * b }.sum))
     }.toDF("sub", "cid", "dpart"))
     val qnrm = v.filter(col("vec_id") === queryId)
       .select(col("nrm").as("qnrm"), col("ve").as("qfull"))
@@ -1286,18 +1299,11 @@ object Ann {
        |  SELECT sub, cid, list(CAST(s AS DOUBLE) / 1000.0 / n ORDER BY j) AS cve
        |  FROM ps$r GROUP BY sub, cid))""".stripMargin
 
-  val simAnnPq = QueryDef(
-    "sim_ann_pq",
-    // Oracle-backed by the same two moves as sim_ann_kmeans plus one:
-    // (1) Lloyd codebook means rebuild from exact integer sums of
-    // milli-quantized components, so
-    // both 2 training rounds replay bit-identically; (2) the ADC score
-    // adds its m=8 per-subspace parts in a FIXED left-to-right chain
-    // (d0+d1+…+d7 below — conditional one-row sums, not an
-    // association-order-dependent aggregate). Everything else was already
-    // deterministic: L2 assignment rank, the driver-computed distance
-    // table (a left fold = list_dot_product), the exact-cosine re-rank.
-    s"""$vCtes, sv AS (
+  /** The oracle's PQ training and encoding, the twin of `pqIndex`:
+    * subvectors `sv`, their milli-quantized components `qsv`, the seed
+    * codebooks `pc0`, two Lloyd rounds and the `codes`. */
+  private val pqCodesCte =
+    s"""sv AS (
        |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
        |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
@@ -1314,20 +1320,32 @@ object Ann {
        |codes AS (SELECT vec_id, sub, cid FROM (
        |  SELECT s.vec_id, s.sub, c.cid, row_number() OVER (PARTITION BY s.sub, s.vec_id
        |    ORDER BY list_dot_product(s.sve, c.cve) - c.chalf DESC, c.cid) AS rn
-       |  FROM sv s JOIN pc2 c ON s.sub = c.sub) WHERE rn = 1),
+       |  FROM sv s JOIN pc2 c ON s.sub = c.sub) WHERE rn = 1)""".stripMargin
+
+  /** The ADC score's m = 8 per-subspace parts d0 … d7 over the subspace
+    * column `sub`, one conditional sum each (`pqQueryTopK`'s `dcols`). */
+  private def adcSums(sub: String): String =
+    (0 until 8).map(k => s"    sum(CASE WHEN $sub = $k THEN dpart END) AS d$k")
+      .mkString(",\n")
+
+  val simAnnPq = QueryDef(
+    "sim_ann_pq",
+    // Oracle-backed by the same two moves as sim_ann_kmeans plus one:
+    // (1) Lloyd codebook means rebuild from exact integer sums of
+    // milli-quantized components, so
+    // both 2 training rounds replay bit-identically; (2) the ADC score
+    // adds its m=8 per-subspace parts in a FIXED left-to-right chain
+    // (d0+d1+…+d7 below — conditional one-row sums, not an
+    // association-order-dependent aggregate). Everything else was already
+    // deterministic: L2 assignment rank, the driver-computed distance
+    // table (a left fold = list_dot_product), the exact-cosine re-rank.
+    s"""$vCtes, $pqCodesCte,
        |qs AS (SELECT sub, sve AS qsve FROM sv WHERE vec_id = 0),
        |dtab AS (SELECT c.sub, c.cid, list_dot_product(q.qsve, c.cve) AS dpart
        |  FROM pc2 c JOIN qs q ON c.sub = q.sub),
        |q0 AS (SELECT ve AS qve, nrm AS qnrm FROM v WHERE vec_id = 0),
        |adc AS (SELECT vec_id,
-       |    sum(CASE WHEN sub = 0 THEN dpart END) AS d0,
-       |    sum(CASE WHEN sub = 1 THEN dpart END) AS d1,
-       |    sum(CASE WHEN sub = 2 THEN dpart END) AS d2,
-       |    sum(CASE WHEN sub = 3 THEN dpart END) AS d3,
-       |    sum(CASE WHEN sub = 4 THEN dpart END) AS d4,
-       |    sum(CASE WHEN sub = 5 THEN dpart END) AS d5,
-       |    sum(CASE WHEN sub = 6 THEN dpart END) AS d6,
-       |    sum(CASE WHEN sub = 7 THEN dpart END) AS d7
+       |${adcSums("sub")}
        |  FROM codes JOIN dtab USING (sub, cid) GROUP BY vec_id),
        |short AS (SELECT a.vec_id,
        |    (d0 + d1 + d2 + d3 + d4 + d5 + d6 + d7) / (v.nrm * q0.qnrm) AS acos
@@ -1351,24 +1369,7 @@ object Ann {
     * row_number (= the Spark side's per-query orderBy + limit). */
   val simAnnPqRecall = QueryDef(
     "sim_ann_pq_recall",
-    s"""$vCtes, sv AS (
-       |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
-       |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
-       |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
-       |), qsv AS (
-       |  SELECT vec_id, sub, CAST(generate_subscripts(sve, 1) AS INT) AS j,
-       |         CAST(round(unnest(sve) * 1000) AS BIGINT) AS q
-       |  FROM sv
-       |), pc0 AS (
-       |  SELECT sub, vec_id AS cid, sve AS cve, list_dot_product(sve, sve) / 2 AS chalf
-       |  FROM sv WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 16)
-       |),
-       |${pqRoundCte(1)},
-       |${pqRoundCte(2)},
-       |codes AS (SELECT vec_id, sub, cid FROM (
-       |  SELECT s.vec_id, s.sub, c.cid, row_number() OVER (PARTITION BY s.sub, s.vec_id
-       |    ORDER BY list_dot_product(s.sve, c.cve) - c.chalf DESC, c.cid) AS rn
-       |  FROM sv s JOIN pc2 c ON s.sub = c.sub) WHERE rn = 1),
+    s"""$vCtes, $pqCodesCte,
        |qsub AS (SELECT vec_id AS qid, sub, sve AS qsve FROM sv
        |  WHERE vec_id IN $qidList),
        |dtab AS (SELECT q.qid, c.sub, c.cid, list_dot_product(q.qsve, c.cve) AS dpart
@@ -1376,14 +1377,7 @@ object Ann {
        |qn AS (SELECT vec_id AS qid, ve AS qve, nrm AS qnrm FROM v
        |  WHERE vec_id IN $qidList),
        |adc AS (SELECT d.qid, codes.vec_id,
-       |    sum(CASE WHEN codes.sub = 0 THEN dpart END) AS d0,
-       |    sum(CASE WHEN codes.sub = 1 THEN dpart END) AS d1,
-       |    sum(CASE WHEN codes.sub = 2 THEN dpart END) AS d2,
-       |    sum(CASE WHEN codes.sub = 3 THEN dpart END) AS d3,
-       |    sum(CASE WHEN codes.sub = 4 THEN dpart END) AS d4,
-       |    sum(CASE WHEN codes.sub = 5 THEN dpart END) AS d5,
-       |    sum(CASE WHEN codes.sub = 6 THEN dpart END) AS d6,
-       |    sum(CASE WHEN codes.sub = 7 THEN dpart END) AS d7
+       |${adcSums("codes.sub")}
        |  FROM codes JOIN dtab d ON codes.sub = d.sub AND codes.cid = d.cid
        |  GROUP BY d.qid, codes.vec_id),
        |short AS (SELECT qid, vec_id FROM (
@@ -1520,24 +1514,7 @@ object Ann {
   val simAnnIvfPq = QueryDef(
     "sim_ann_ivf_pq", {
       val cidList = centroidIds.mkString("(", ", ", ")")
-      s"""$vCtes, sv AS (
-         |  SELECT vec_id, CAST(t.sub AS INT) AS sub,
-         |         list_slice(ve, t.sub * 8 + 1, t.sub * 8 + 8) AS sve
-         |  FROM v, (SELECT unnest(generate_series(0, 7)) AS sub) t
-         |), qsv AS (
-         |  SELECT vec_id, sub, CAST(generate_subscripts(sve, 1) AS INT) AS j,
-         |         CAST(round(unnest(sve) * 1000) AS BIGINT) AS q
-         |  FROM sv
-         |), pc0 AS (
-         |  SELECT sub, vec_id AS cid, sve AS cve, list_dot_product(sve, sve) / 2 AS chalf
-         |  FROM sv WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 16)
-         |),
-         |${pqRoundCte(1)},
-         |${pqRoundCte(2)},
-         |codes AS (SELECT vec_id, sub, cid FROM (
-         |  SELECT s.vec_id, s.sub, c.cid, row_number() OVER (PARTITION BY s.sub, s.vec_id
-         |    ORDER BY list_dot_product(s.sve, c.cve) - c.chalf DESC, c.cid) AS rn
-         |  FROM sv s JOIN pc2 c ON s.sub = c.sub) WHERE rn = 1),
+      s"""$vCtes, $pqCodesCte,
          |cents AS (
          |  SELECT vec_id AS ccid, ve AS ccve, nrm AS ccnrm FROM v WHERE vec_id IN $cidList
          |), assigned AS (
@@ -1560,14 +1537,7 @@ object Ann {
          |dtab AS (SELECT c.sub, c.cid, list_dot_product(q.qsve, c.cve) AS dpart
          |  FROM pc2 c JOIN qs q ON c.sub = q.sub),
          |adc AS (SELECT vec_id,
-         |    sum(CASE WHEN sub = 0 THEN dpart END) AS d0,
-         |    sum(CASE WHEN sub = 1 THEN dpart END) AS d1,
-         |    sum(CASE WHEN sub = 2 THEN dpart END) AS d2,
-         |    sum(CASE WHEN sub = 3 THEN dpart END) AS d3,
-         |    sum(CASE WHEN sub = 4 THEN dpart END) AS d4,
-         |    sum(CASE WHEN sub = 5 THEN dpart END) AS d5,
-         |    sum(CASE WHEN sub = 6 THEN dpart END) AS d6,
-         |    sum(CASE WHEN sub = 7 THEN dpart END) AS d7
+         |${adcSums("sub")}
          |  FROM codes JOIN dtab USING (sub, cid)
          |  WHERE vec_id IN (SELECT vec_id FROM members)
          |  GROUP BY vec_id),
@@ -1651,16 +1621,8 @@ object Ann {
     // expressions. Hash-gated identical at 3 SFs.
     val v = prep(Tables.embeddings(s, d))
     val cents = centroidsFromIds(v, centroidIds)
-    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
-      .select(col("vec_id").as("qid"), col("ve").as("qve"),
-        col("nrm").as("qnrm")))
-    val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    val probed = broadcast(q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        (Similarity.dot(col("qve"), col("cve")) / (col("qnrm") * col("cnrm")))
-          .as("pcos"))
-      .withColumn("pr", row_number().over(rnP))
-      .filter(col("pr") <= 4)
+    val q = queryVecs(v, Qids)
+    val probed = broadcast(probedCentroids(q, cents, 4)
       .select("qid", "cid", "pr"))
     val cand = assignTo(v, cents)
       .join(probed, col("bucket") === col("cid"))
@@ -1724,9 +1686,7 @@ object Ann {
     * never shuffles the graph. */
   def beamSearchTopK(v: DataFrame, knn: DataFrame, qids: Seq[Long],
       entryN: Int, beamW: Int, rounds: Int, k: Int): DataFrame = {
-    val q = broadcast(v.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("ve").as("qve"),
-        col("nrm").as("qnrm")))
+    val q = queryVecs(v, qids)
     // Per-round prune as ONE bounded aggregation: distinct() THEN a
     // (qid)-window rank would be two exchanges of the candidate
     // relation per round. Candidates per
@@ -2069,6 +2029,38 @@ object Ann {
     marginMineTail(pc, k, topN, carryCid = true)
   }
 
+  /** DuckDB twin of `marginMineTail` at k = 4, top 20, over a candidate
+    * relation `pc`: neighborhood means `na`/`nb`, margins `sc`, and the
+    * forward/backward picks `fw`/`bw`. Starts mid-WITH. */
+  private def marginMineOracle(carryCid: Boolean): String = {
+    val c = if (carryCid) "cid, " else ""
+    s"""ra AS (
+       |  SELECT ${c}a_id, b_id, cmic,
+       |    row_number() OVER (PARTITION BY a_id ORDER BY cmic DESC, b_id) AS rna,
+       |    row_number() OVER (PARTITION BY b_id ORDER BY cmic DESC, a_id) AS rnb
+       |  FROM pc
+       |), na AS (
+       |  SELECT a_id, sum(cmic) // count(*) AS avga FROM ra WHERE rna <= 4 GROUP BY a_id
+       |), nb AS (
+       |  SELECT b_id, sum(cmic) // count(*) AS avgb FROM ra WHERE rnb <= 4 GROUP BY b_id
+       |), sc AS (
+       |  SELECT ${if (carryCid) "pc.cid, " else ""}pc.a_id, pc.b_id, pc.cmic,
+       |    CAST((2 * pc.cmic * 1000000) // (na.avga + nb.avgb) AS BIGINT) AS margin_micro
+       |  FROM pc JOIN na USING (a_id) JOIN nb USING (b_id)
+       |  WHERE na.avga + nb.avgb > 0
+       |), fw AS (
+       |  SELECT * FROM (
+       |    SELECT sc.*, row_number() OVER (PARTITION BY a_id
+       |      ORDER BY margin_micro DESC, b_id) AS rf FROM sc) WHERE rf = 1
+       |), bw AS (
+       |  SELECT * FROM (
+       |    SELECT fw.*, row_number() OVER (PARTITION BY b_id
+       |      ORDER BY margin_micro DESC, a_id) AS rb FROM fw) WHERE rb = 1
+       |)
+       |SELECT a_id, b_id, ${c}cmic AS cos_micro, margin_micro
+       |FROM bw ORDER BY margin_micro DESC, a_id LIMIT 20""".stripMargin
+  }
+
   /** The margin arithmetic + forward/backward selection over an
     * already-built positive-cosine candidate relation (a_id, b_id,
     * cmic [, cid]) — shared by the cluster-tile miner
@@ -2120,31 +2112,7 @@ object Ann {
        |  FROM m x JOIN m y ON x.cid = y.cid AND x.side = 0 AND y.side = 1
        |), pc AS (
        |  SELECT * FROM cand WHERE cmic > 0
-       |), ra AS (
-       |  SELECT cid, a_id, b_id, cmic,
-       |    row_number() OVER (PARTITION BY a_id ORDER BY cmic DESC, b_id) AS rna,
-       |    row_number() OVER (PARTITION BY b_id ORDER BY cmic DESC, a_id) AS rnb
-       |  FROM pc
-       |), na AS (
-       |  SELECT a_id, sum(cmic) // count(*) AS avga FROM ra WHERE rna <= 4 GROUP BY a_id
-       |), nb AS (
-       |  SELECT b_id, sum(cmic) // count(*) AS avgb FROM ra WHERE rnb <= 4 GROUP BY b_id
-       |), sc AS (
-       |  SELECT pc.cid, pc.a_id, pc.b_id, pc.cmic,
-       |    CAST((2 * pc.cmic * 1000000) // (na.avga + nb.avgb) AS BIGINT) AS margin_micro
-       |  FROM pc JOIN na USING (a_id) JOIN nb USING (b_id)
-       |  WHERE na.avga + nb.avgb > 0
-       |), fw AS (
-       |  SELECT * FROM (
-       |    SELECT sc.*, row_number() OVER (PARTITION BY a_id
-       |      ORDER BY margin_micro DESC, b_id) AS rf FROM sc) WHERE rf = 1
-       |), bw AS (
-       |  SELECT * FROM (
-       |    SELECT fw.*, row_number() OVER (PARTITION BY b_id
-       |      ORDER BY margin_micro DESC, a_id) AS rb FROM fw) WHERE rb = 1
-       |)
-       |SELECT a_id, b_id, cid, cmic AS cos_micro, margin_micro
-       |FROM bw ORDER BY margin_micro DESC, a_id LIMIT 20""".stripMargin) { (s, d) =>
+       |), ${marginMineOracle(carryCid = true)}""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
     val m = assignTo(v, IvfModel.Fixed.cents(s, d))
       .select(col("bucket").as("cid"), col("vec_id"), col("ve"), col("nrm"),
@@ -2181,31 +2149,7 @@ object Ann {
        |  FROM bc JOIN v a ON bc.a_id = a.vec_id JOIN v b ON bc.b_id = b.vec_id
        |), pc AS (
        |  SELECT * FROM pc0 WHERE cmic > 0
-       |), ra AS (
-       |  SELECT a_id, b_id, cmic,
-       |    row_number() OVER (PARTITION BY a_id ORDER BY cmic DESC, b_id) AS rna,
-       |    row_number() OVER (PARTITION BY b_id ORDER BY cmic DESC, a_id) AS rnb
-       |  FROM pc
-       |), na AS (
-       |  SELECT a_id, sum(cmic) // count(*) AS avga FROM ra WHERE rna <= 4 GROUP BY a_id
-       |), nb AS (
-       |  SELECT b_id, sum(cmic) // count(*) AS avgb FROM ra WHERE rnb <= 4 GROUP BY b_id
-       |), sc AS (
-       |  SELECT pc.a_id, pc.b_id, pc.cmic,
-       |    CAST((2 * pc.cmic * 1000000) // (na.avga + nb.avgb) AS BIGINT) AS margin_micro
-       |  FROM pc JOIN na USING (a_id) JOIN nb USING (b_id)
-       |  WHERE na.avga + nb.avgb > 0
-       |), fw AS (
-       |  SELECT * FROM (
-       |    SELECT sc.*, row_number() OVER (PARTITION BY a_id
-       |      ORDER BY margin_micro DESC, b_id) AS rf FROM sc) WHERE rf = 1
-       |), bw AS (
-       |  SELECT * FROM (
-       |    SELECT fw.*, row_number() OVER (PARTITION BY b_id
-       |      ORDER BY margin_micro DESC, a_id) AS rb FROM fw) WHERE rb = 1
-       |)
-       |SELECT a_id, b_id, cmic AS cos_micro, margin_micro
-       |FROM bw ORDER BY margin_micro DESC, a_id LIMIT 20""".stripMargin) { (s, d) =>
+       |), ${marginMineOracle(carryCid = false)}""".stripMargin) { (s, d) =>
     val v = prep(Tables.embeddings(s, d))
     val g = knnGraphIvf(s, d, m = 16, nprobe = 3)
     val bc = g.filter(col("i") % 2 =!= col("j") % 2)
@@ -2292,9 +2236,7 @@ object Ann {
     // unchanged.
     val v = prep(Tables.embeddings(s, d))
     val g = knnGraphIvf(s, d, m = 16, nprobe = 3)
-    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
-      .select(col("vec_id").as("qid"), col("ve").as("qve"),
-        col("nrm").as("qnrm")))
+    val q = queryVecs(v, Qids)
     val entry = v.orderBy("vec_id").limit(8).select("vec_id")
     // one-exchange per-round prune (beamSearchTopK's form,
     // with the limit a per-row COLUMN — each width tag keeps its own
@@ -2711,12 +2653,7 @@ object Ann {
       .filter(col("vec_id").isin(Qids: _*))
       .select(col("vec_id").as("qid"), col("ve").as("qve"),
         col("nrm").as("qnrm"), col("label").as("qlabel")))
-    val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    val probed = broadcast(q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        (Similarity.dot(col("qve"), col("cve")) / (col("qnrm") * col("cnrm")))
-          .as("pcos"))
-      .withColumn("rn", row_number().over(rnP)).filter(col("rn") <= 4)
+    val probed = broadcast(probedCentroids(q, cents, 4)
       .select(col("qid"), col("cid").as("bucket")))
     val rnK = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     val appx = lists.join(probed, Seq("bucket"))
@@ -2872,9 +2809,10 @@ object Ann {
     val sizes = lists.groupBy("bucket").agg(count(lit(1)).as("n_before"))
     // bounded driver state: (corpus rows, non-empty lists) in ONE
     // c-row aggregate over sizes — the mean a rebalancer actually
-    // thresholds against; mirrored by the oracle's `cp` over `sz`
+    // thresholds against; mirrored by the oracle's `cp` over `sz`. An
+    // empty index has no lists, so nothing is oversized.
     val st = sizes.agg(sum(col("n_before")), count(lit(1))).head()
-    val cap = rebalanceCap(st.getLong(0), st.getLong(1))
+    val cap = if (st.getLong(1) == 0L) 0L else rebalanceCap(st.getLong(0), st.getLong(1))
     val over = sizes.filter(col("n_before") > cap).select("bucket")
     val mem = lists.join(broadcast(over), Seq("bucket"))
       .join(v, Seq("vec_id"))
@@ -3150,15 +3088,8 @@ object Ann {
     val v = prep(Tables.embeddings(s, d))
     val cents = IvfModel.Scaled.cents(s, d)
     val lists = IvfModel.Scaled.lists(s, d)
-    val q = broadcast(v.filter(col("vec_id").isin(Qids: _*))
-      .select(col("vec_id").as("qid"), col("ve").as("qve"),
-        col("nrm").as("qnrm")))
-    val rnP = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    val probed = broadcast(q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        (Similarity.dot(col("qve"), col("cve")) / (col("qnrm") * col("cnrm")))
-          .as("pcos"))
-      .withColumn("rn", row_number().over(rnP)).filter(col("rn") <= 4)
+    val q = queryVecs(v, Qids)
+    val probed = broadcast(probedCentroids(q, cents, 4)
       .select(col("qid"), col("cid").as("bucket")))
     val cand = lists.join(probed, Seq("bucket"))
       .join(q, Seq("qid"))

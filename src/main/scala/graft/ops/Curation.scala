@@ -224,21 +224,7 @@ object Curation {
     * relation keeps the per-lang partition at ~16 bytes/doc. */
   val textPerplexityBucket = QueryDef(
     "text_perplexity_bucket",
-    """WITH pos AS (
-      |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
-      |), bg AS (
-      |  SELECT doc_id, lang,
-      |    toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
-      |  FROM pos, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-      |  WHERE len(toks) >= 2
-      |), bc AS (
-      |  SELECT w1, w2, count(*) AS bcnt FROM bg GROUP BY 1, 2
-      |), uc AS (
-      |  SELECT w1, count(*) AS ucnt FROM bg GROUP BY 1
-      |), dict AS (
-      |  SELECT bc.w1, bc.w2, bcnt * 1000000 // ucnt AS micro
-      |  FROM bc JOIN uc ON bc.w1 = uc.w1
-      |), sc AS (
+    s"""${TextAnalysis.bigramLmCte("lang")}, sc AS (
       |  SELECT bg.doc_id, bg.lang, count(*) AS n_bigrams,
       |         sum(micro) // count(*) AS avg_micro
       |  FROM bg JOIN dict ON bg.w1 = dict.w1 AND bg.w2 = dict.w2
@@ -262,19 +248,7 @@ object Curation {
       |  CAST(max(avg_micro) AS BIGINT) AS max_score
       |FROM bk GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin) {
     (s, d) =>
-      val bg = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), col("lang"), explode(expr(
-          "transform(sequence(0, size(toks) - 2), " +
-            "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))")).as("p"))
-        .select(col("doc_id"), col("lang"),
-          col("p.w1").as("w1"), col("p.w2").as("w2"))
-      val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("bcnt"))
-      val uc = bg.groupBy("w1").agg(count(lit(1)).as("ucnt"))
-      val dict = bc.join(uc, "w1")
-        .select(col("w1"), col("w2"),
-          expr("bcnt * 1000000L div ucnt").as("micro"))
+      val (bg, dict) = TextAnalysis.bigramLm(Tables.documents(s, d), "lang")
       val scored = bg.join(dict, Seq("w1", "w2"))
         .groupBy("doc_id", "lang")
         .agg(count(lit(1)).as("n_bigrams"),

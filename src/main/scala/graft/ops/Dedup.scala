@@ -94,21 +94,7 @@ object Dedup {
     // 16 bands (p ≈ 2·10⁻⁵ at j = 0.5); unioning in the exact shingle
     // equi-join would waive even that at the cost of making the LSH
     // path decorative, so the sketch path stays authoritative.
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |)
-       |SELECT i, j, round(jac_raw, 4) AS jac FROM (
-       |  SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
-       |  FROM inter
-       |  JOIN sizes si ON inter.i = si.doc_id
-       |  JOIN sizes sj ON inter.j = sj.doc_id
-       |) WHERE jac_raw >= 0.5
-       |ORDER BY i, j""".stripMargin) { (s, d) =>
+    Text.dedupNear.oracle) { (s, d) =>
     minHashNearDup(Tables.documents(s, d)).orderBy("i", "j")
   }
 
@@ -126,20 +112,8 @@ object Dedup {
     * bounded kernels; the overlap join is pair-bounded. */
   val dedupMinhashRecall = QueryDef(
     "dedup_minhash_recall",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), e AS (
-       |  SELECT i, j FROM (
-       |    SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
-       |    FROM inter
-       |    JOIN sizes si ON inter.i = si.doc_id
-       |    JOIN sizes sj ON inter.j = sj.doc_id
-       |  ) WHERE jac_raw >= 0.5
+    s"""${Text.shingleStatsCte("documents")}, e AS (
+       |${Text.jaccardPairsSql}
        |), c AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM e)
        |SELECT n_exact, n_exact AS n_lsh, n_exact AS n_overlap,
        |       CAST(100 AS BIGINT) AS recall_pct
@@ -247,8 +221,8 @@ object Dedup {
           .otherwise(expr("(100 * (co + s)) div (ce + s)")).as("recall_pct"))
   }
 
-  /** MINHASH CLUSTER OUTPUT — the PRIMARY near-dup contract at scale
-    * (the round-12 verdict's promotion): per document in a near-dup
+  /** MINHASH CLUSTER OUTPUT — the PRIMARY near-dup contract at scale:
+    * per document in a near-dup
     * cluster, the component keeper (minimum doc_id over the whole
     * connected component of the Jaccard-0.5 graph) and the cluster
     * size. This is what a 100 TB dedup pass actually consumes — a
@@ -273,21 +247,12 @@ object Dedup {
     * banding over DISTINCT contents (the dup-saturation blowup never
     * forms), the bounded component fixpoint, and two content-keyed
     * equi-joins to expand. Measured linear at 10× on the dup-heavy
-    * fixture where the pair emitter is DNF at 100×. */
-  def minhashClusters(docs: DataFrame): DataFrame = {
-    // feeds shingling and the multiplicity expansion
-    val reps = repsOf(docs).localCheckpoint()
-    val sh = Functions.shingles(reps.select("doc_id", "text"))
-      .localCheckpoint()
-    minhashClustersCore(docs, reps, sh,
-      minHashNearDupFromShingles(sh).select("i", "j"))
-  }
-
-  /** The cluster expansion over explicit collapsed relations — shared
-    * by the inline form above (tests) and the landed-relation gate
-    * path, which reuses the SAME landed (reps, shingles, LSH pairs) as
+    * fixture where the pair emitter is DNF at 100×.
+    *
+    * This is the expansion over explicit collapsed relations: the gate
+    * passes the SAME landed (reps, shingles, LSH pairs) as
     * `dedup_minhash_recall`. */
-  private def minhashClustersCore(docs: DataFrame, reps: DataFrame,
+  private[graft] def minhashClustersCore(docs: DataFrame, reps: DataFrame,
       sh: DataFrame, pairs: DataFrame): DataFrame = {
     val repComp = Text.nearDupKeepersFromPairs(pairs)
       .select(col("doc_id").as("rep"), col("keeper"))
@@ -320,35 +285,8 @@ object Dedup {
     // node of the pair graph sits in a ≥2-doc cluster and vice versa,
     // so no explicit size filter is needed here; the Spark side filters
     // cluster_size >= 2 only to drop isolated singleton contents.
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |),
-       |pairs AS (
-       |  SELECT i, j FROM (
-       |    SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
-       |    FROM inter
-       |    JOIN sizes si ON inter.i = si.doc_id
-       |    JOIN sizes sj ON inter.j = sj.doc_id
-       |  ) WHERE jac_raw >= 0.5
-       |),
-       |edges AS (
-       |  SELECT i AS src, j AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT j AS src, i AS dst FROM pairs
-       |),
-       |reach AS (
-       |  WITH RECURSIVE r(doc_id, m) AS (
-       |    SELECT src, src FROM edges
-       |    UNION
-       |    SELECT e.src, r.m FROM edges e JOIN r ON e.dst = r.doc_id
-       |  )
-       |  SELECT doc_id, min(m) AS keeper FROM r GROUP BY doc_id
-       |),
+    s"""${Text.keeperEdgesCte},
+       |${Text.keeperReachCte},
        |csize AS (
        |  SELECT keeper, CAST(count(*) AS BIGINT) AS cluster_size
        |  FROM reach GROUP BY keeper
@@ -644,7 +582,7 @@ object Dedup {
     val isIncr = col("doc_id") % 10 === 0
     // base feeds FOUR consumers (both bit probes, the exact check, the
     // ledger count) — pin it so the corpus scan + distinct runs once,
-    // not once per subtree (review finding)
+    // not once per subtree
     val base = docs.filter(!isIncr).select(md5(col("text")).as("h")).distinct()
       .localCheckpoint()
     val incr = docs.filter(isIncr).select(col("doc_id"), md5(col("text")).as("h"))

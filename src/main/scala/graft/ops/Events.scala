@@ -194,8 +194,8 @@ object Events {
       .agg(count(lit(1)).as("n_events"), min(col("ts")).as("t_start"), max(col("ts")).as("t_end"))
   }
 
-  val sessionizeQ = QueryDef(
-    "sessionize",
+  /** DuckDB twin of `sessionize` up to its `new_sess` flags (`x`, `f`). */
+  private val sessionStartsCte =
     """WITH x AS (
       |  SELECT user_id, event_id, ts, epoch_us(ts) AS eus,
       |         lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_eus
@@ -203,7 +203,31 @@ object Events {
       |), f AS (
       |  SELECT *, CASE WHEN prev_eus IS NULL OR eus - prev_eus > 1800000000 THEN 1 ELSE 0 END AS new_sess
       |  FROM x
+      |)""".stripMargin
+
+  /** The same 30-minute sessionization over epoch microseconds, through
+    * the per-user running `session_id` (`sid`), as `join_overlap` and
+    * `stream_stateful_session` replay it. */
+  private val sessionIdsCte =
+    """WITH x AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS eus,
+      |         lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
+      |                                    ORDER BY ts, event_id) AS prev_eus
+      |  FROM events
+      |), f AS (
+      |  SELECT *, CASE WHEN prev_eus IS NULL OR eus - prev_eus > 1800000000
+      |                 THEN 1 ELSE 0 END AS new_sess
+      |  FROM x
       |), sid AS (
+      |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id
+      |            ORDER BY eus, event_id
+      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+      |  FROM f
+      |)""".stripMargin
+
+  val sessionizeQ = QueryDef(
+    "sessionize",
+    s"""$sessionStartsCte, sid AS (
       |  SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
       |  FROM f
@@ -287,14 +311,7 @@ object Events {
     // operator and its (session_start, session_end = last + gap,
     // n_events) output shape; session_end via exact epoch-µs arithmetic
     // on both engines.
-    """WITH x AS (
-      |  SELECT user_id, event_id, ts, epoch_us(ts) AS eus,
-      |         lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_eus
-      |  FROM events
-      |), f AS (
-      |  SELECT *, CASE WHEN prev_eus IS NULL OR eus - prev_eus > 1800000000 THEN 1 ELSE 0 END AS new_sess
-      |  FROM x
-      |), sid AS (
+    s"""$sessionStartsCte, sid AS (
       |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
       |  FROM f
@@ -656,8 +673,9 @@ object Events {
       .orderBy("click_id")
   }
 
-  val eventAttribution = QueryDef(
-    "event_attribution",
+  /** The clicks `c` and purchases `p` (integer cents) both attribution
+    * oracles pair up. */
+  private val clickPurchaseCte =
     """WITH c AS (
       |  SELECT event_id AS click_id, user_id, epoch_us(ts) AS c_eus
       |  FROM events WHERE event_type = 'click'
@@ -665,7 +683,11 @@ object Events {
       |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_eus,
       |         CAST(round(value * 100, 0) AS BIGINT) AS value_cents
       |  FROM events WHERE event_type = 'purchase'
-      |), pairs AS (
+      |)""".stripMargin
+
+  val eventAttribution = QueryDef(
+    "event_attribution",
+    s"""$clickPurchaseCte, pairs AS (
       |  SELECT c.click_id, c.user_id, p.purchase_id, p.value_cents
       |  FROM c JOIN p ON c.user_id = p.user_id
       |   AND p.p_eus > c.c_eus AND p.p_eus <= c.c_eus + 604800000000
@@ -694,14 +716,7 @@ object Events {
     * same purchase-keyed pairs, no new shuffle key. */
   val eventAttributionPosition = QueryDef(
     "event_attribution_position",
-    """WITH c AS (
-      |  SELECT event_id AS click_id, user_id, epoch_us(ts) AS c_eus
-      |  FROM events WHERE event_type = 'click'
-      |), p AS (
-      |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_eus,
-      |         CAST(round(value * 100, 0) AS BIGINT) AS value_cents
-      |  FROM events WHERE event_type = 'purchase'
-      |), pairs AS (
+    s"""$clickPurchaseCte, pairs AS (
       |  SELECT c.click_id, c.user_id, p.purchase_id, p.value_cents, c.c_eus
       |  FROM c JOIN p ON c.user_id = p.user_id
       |   AND p.p_eus > c.c_eus AND p.p_eus <= c.c_eus + 604800000000
@@ -882,21 +897,7 @@ object Events {
 
   val joinOverlap = QueryDef(
     "join_overlap",
-    """WITH x AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS eus,
-      |         lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-      |                                    ORDER BY ts, event_id) AS prev_eus
-      |  FROM events
-      |), f AS (
-      |  SELECT *, CASE WHEN prev_eus IS NULL OR eus - prev_eus > 1800000000
-      |                 THEN 1 ELSE 0 END AS new_sess
-      |  FROM x
-      |), sid AS (
-      |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id
-      |            ORDER BY eus, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |  FROM f
-      |), sess AS (
+    s"""$sessionIdsCte, sess AS (
       |  SELECT user_id, session_id, min(eus) AS s_eus, max(eus) AS e_eus
       |  FROM sid GROUP BY user_id, session_id
       |)
@@ -1009,22 +1010,8 @@ object Events {
     * hash-exact parity (state = all open sessions, user-bounded). */
   val streamStatefulSession = QueryDef(
     "stream_stateful_session",
-    """WITH x AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS eus,
-      |         lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-      |                                    ORDER BY ts, event_id) AS prev_eus
-      |  FROM events
-      |), f AS (
-      |  SELECT *, CASE WHEN prev_eus IS NULL OR eus - prev_eus > 1800000000
-      |                 THEN 1 ELSE 0 END AS new_sess
-      |  FROM x
-      |), sid AS (
-      |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id
-      |            ORDER BY eus, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |  FROM f
-      |)
-      |SELECT user_id, min(eus) AS s_eus, max(eus) AS e_eus,
+    s"""$sessionIdsCte
+       |SELECT user_id, min(eus) AS s_eus, max(eus) AS e_eus,
       |       CAST(count(*) AS BIGINT) AS n_events
       |FROM sid GROUP BY user_id, session_id
       |ORDER BY user_id, s_eus""".stripMargin) { (s, d) =>
@@ -1278,7 +1265,7 @@ object Events {
           .as("rec_days"),
         count(lit(1)).as("freq"),
         // integer cents PER ROW via explicit floor on the exact decimal,
-        // identical on both engines (round-8 advice: a bare decimal→long
+        // identical on both engines (a bare decimal→long
         // cast truncates toward zero in Spark but rounds in DuckDB — they
         // agreed only because 2-dp values make sum×100 integral)
         sum(floor(dec(col("value")) * 100).cast("long")).as("cents"))
@@ -1472,57 +1459,6 @@ object Events {
       .orderBy("t")
   }
 
-  /** Forward-fill (LOCF) onto a per-user daily spine — the panel-data
-    * completion every feature store / sensor pipeline runs (pandas
-    * ffill at engine scale): `events_resample` fills COUNT gaps with
-    * zeros; THIS carries the last observed VALUE across gap days. Per
-    * user and day, the day's closing value (latest by (ts, event_id) —
-    * a keyed row_number pick, both engines' tie rule identical), a
-    * spine of every day in the user's own [first, last] activity span
-    * (sequence+explode — bounded by users × span days, never corpus
-    * size), and last-observation-carried-forward via the ignoreNulls
-    * last() frame. The first spine day is observed by construction
-    * (the span starts at an event), so the filled value is never null.
-    * The double value is CARRIED, never computed on (determinism class
-    * (a) — a raw stored double both engines pass through bit-exact).
-    *
-    * Scale shape: one (user, day)-keyed pick, one user-keyed min/max
-    * aggregate, one user-keyed LOCF window — all linear keyed shuffles;
-    * the spine join parallelizes on the same user key. */
-  val eventsFfill = QueryDef(
-    "events_ffill",
-    """WITH e AS (
-      |  SELECT user_id, event_id, value, epoch_us(ts) AS eus,
-      |         epoch_us(ts) // 86400000000 AS day
-      |  FROM events
-      |), obs AS (
-      |  SELECT user_id, day, value AS v FROM (
-      |    SELECT user_id, day, value,
-      |           row_number() OVER (PARTITION BY user_id, day
-      |                              ORDER BY eus DESC, event_id DESC) AS rn
-      |    FROM e) WHERE rn = 1
-      |), b AS (
-      |  SELECT user_id, min(day) AS lo, max(day) AS hi FROM e GROUP BY user_id
-      |), spine AS (
-      |  SELECT user_id, unnest(generate_series(lo, hi)) AS day FROM b
-      |), j AS (
-      |  SELECT s.user_id, s.day, obs.v
-      |  FROM spine s LEFT JOIN obs ON s.user_id = obs.user_id AND s.day = obs.day
-      |)
-      |SELECT user_id, CAST(day AS BIGINT) AS day,
-      |       last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
-      |       (v IS NOT NULL) AS observed
-      |FROM j ORDER BY user_id, day LIMIT 500""".stripMargin) { (s, d) =>
-    val locf = Window.partitionBy("user_id").orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    dailyObsSpine(Tables.events(s, d))
-      .select(col("user_id"), col("day"),
-        last(col("v"), ignoreNulls = true).over(locf).as("value_ffill"),
-        col("v").isNotNull.as("observed"))
-      .orderBy("user_id", "day").limit(500)
-  }
-
   /** The gap-filling observation spine shared by `events_ffill` and
     * `events_interp` — one definition of the per-(user, day) closing
     * value and the per-user [first, last] day spine, so the pick
@@ -1544,6 +1480,61 @@ object Events {
       .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       .select(col("user_id"), explode(sequence(col("lo"), col("hi"))).as("day"))
     spine.join(obs, Seq("user_id", "day"), "left")
+  }
+
+  /** DuckDB twin of `dailyObsSpine`: the spine `j` (user_id, day, v). */
+  private val dailyObsSpineCte =
+    """WITH e AS (
+      |  SELECT user_id, event_id, value, epoch_us(ts) AS eus,
+      |         epoch_us(ts) // 86400000000 AS day
+      |  FROM events
+      |), obs AS (
+      |  SELECT user_id, day, value AS v FROM (
+      |    SELECT user_id, day, value,
+      |           row_number() OVER (PARTITION BY user_id, day
+      |                              ORDER BY eus DESC, event_id DESC) AS rn
+      |    FROM e) WHERE rn = 1
+      |), b AS (
+      |  SELECT user_id, min(day) AS lo, max(day) AS hi FROM e GROUP BY user_id
+      |), spine AS (
+      |  SELECT user_id, unnest(generate_series(lo, hi)) AS day FROM b
+      |), j AS (
+      |  SELECT s.user_id, s.day, obs.v
+      |  FROM spine s LEFT JOIN obs ON s.user_id = obs.user_id AND s.day = obs.day
+      |)""".stripMargin
+
+  /** Forward-fill (LOCF) onto a per-user daily spine — the panel-data
+    * completion every feature store / sensor pipeline runs (pandas
+    * ffill at engine scale): `events_resample` fills COUNT gaps with
+    * zeros; THIS carries the last observed VALUE across gap days. Per
+    * user and day, the day's closing value (latest by (ts, event_id) —
+    * a keyed row_number pick, both engines' tie rule identical), a
+    * spine of every day in the user's own [first, last] activity span
+    * (sequence+explode — bounded by users × span days, never corpus
+    * size), and last-observation-carried-forward via the ignoreNulls
+    * last() frame. The first spine day is observed by construction
+    * (the span starts at an event), so the filled value is never null.
+    * The double value is CARRIED, never computed on (determinism class
+    * (a) — a raw stored double both engines pass through bit-exact).
+    *
+    * Scale shape: one (user, day)-keyed pick, one user-keyed min/max
+    * aggregate, one user-keyed LOCF window — all linear keyed shuffles;
+    * the spine join parallelizes on the same user key. */
+  val eventsFfill = QueryDef(
+    "events_ffill",
+    s"""$dailyObsSpineCte
+       |SELECT user_id, CAST(day AS BIGINT) AS day,
+       |       last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
+      |       (v IS NOT NULL) AS observed
+      |FROM j ORDER BY user_id, day LIMIT 500""".stripMargin) { (s, d) =>
+    val locf = Window.partitionBy("user_id").orderBy("day")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dailyObsSpine(Tables.events(s, d))
+      .select(col("user_id"), col("day"),
+        last(col("v"), ignoreNulls = true).over(locf).as("value_ffill"),
+        col("v").isNotNull.as("observed"))
+      .orderBy("user_id", "day").limit(500)
   }
 
   /** LINEAR TIME-SERIES INTERPOLATION onto the per-user daily spine —
@@ -1573,24 +1564,7 @@ object Events {
     * than users × span days. */
   val eventsInterp = QueryDef(
     "events_interp",
-    """WITH e AS (
-      |  SELECT user_id, event_id, value, epoch_us(ts) AS eus,
-      |         epoch_us(ts) // 86400000000 AS day
-      |  FROM events
-      |), obs AS (
-      |  SELECT user_id, day, value AS v FROM (
-      |    SELECT user_id, day, value,
-      |           row_number() OVER (PARTITION BY user_id, day
-      |                              ORDER BY eus DESC, event_id DESC) AS rn
-      |    FROM e) WHERE rn = 1
-      |), b AS (
-      |  SELECT user_id, min(day) AS lo, max(day) AS hi FROM e GROUP BY user_id
-      |), spine AS (
-      |  SELECT user_id, unnest(generate_series(lo, hi)) AS day FROM b
-      |), j AS (
-      |  SELECT s.user_id, s.day, obs.v
-      |  FROM spine s LEFT JOIN obs ON s.user_id = obs.user_id AND s.day = obs.day
-      |), f AS (
+    s"""$dailyObsSpineCte, f AS (
       |  SELECT user_id, day, v,
       |    last_value(v IGNORE NULLS) OVER wf AS v_prev,
       |    last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)

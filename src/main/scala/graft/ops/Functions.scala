@@ -175,16 +175,16 @@ object Functions {
     shingles(Tables.documents(s, d)).orderBy("doc_id", "shingle")
   }
 
-  /** DuckDB CTE producing the same distinct-shingle relation — shared with
-    * the dedup oracle. */
-  def shingleOracleCte: String = shingleCte
-
-  /** Same shingle CTE over an arbitrary (doc_id, text) relation name —
-    * for oracles that block on a derived corpus (e.g. the exact-dedup
-    * keeper set) instead of the raw documents table. Starts mid-WITH:
-    * callers open the WITH and define `rel` first. */
-  def shingleOracleCteOver(rel: String): String =
-    shingleCte.replace("WITH pos AS", "pos AS").replace("FROM documents", s"FROM $rel")
+  /** DuckDB twin of `shingles` over a (doc_id, text) relation `rel`: the
+    * shingle CTEs plus `shd`, the distinct (doc_id, shingle) relation.
+    * Over `documents` it opens the WITH; over any other relation (a
+    * derived corpus such as the exact-dedup keeper set) it starts
+    * mid-WITH, so callers open the WITH and define `rel` first. */
+  def distinctShingleCte(rel: String): String = {
+    val sh = if (rel == "documents") shingleCte
+      else shingleCte.replace("WITH pos AS", "pos AS").replace("FROM documents", s"FROM $rel")
+    sh + ",\nshd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL)"
+  }
 
   /** Cryptographic hash surface — md5 and sha256 over customer names.
     * Both engines emit lowercase hex over the identical UTF-8 bytes, so

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Iterative graph analytics (SURVEY.md §2.7b, round 8): PageRank over a
+/** Iterative graph analytics (SURVEY.md §2.7b): PageRank over a
   * co-occurrence graph — the iterated join+aggregate family the rest of
   * the inventory lacks (`dedup_keeper`'s min-label propagation is the
   * reachability member; this is the weighted-score member).
@@ -37,6 +37,23 @@ object Graph {
       val deg = edges.groupBy("u").agg(count(lit(1)).as("d"))
       edges.join(deg, "u")
     }
+
+  /** DuckDB twin of `supplier96Edges`: the edges `e0` and degrees `deg`. */
+  private val supplier96Cte =
+    """WITH ord96 AS (
+      |  SELECT o_orderkey FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+      |    AND o_orderdate <  TIMESTAMP '1997-01-01'
+      |), li AS (
+      |  SELECT l_orderkey, l_suppkey FROM lineitem
+      |  JOIN ord96 ON l_orderkey = o_orderkey
+      |), e0 AS (
+      |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
+      |  FROM li a JOIN li b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
+      |), deg AS (
+      |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM e0 GROUP BY u
+      |)""".stripMargin
 
   /** Degree-oriented (x, y, yd) form of the 1996 supplier graph, landed
     * separately: the wedge self-join scans it three times. */
@@ -71,6 +88,21 @@ object Graph {
         .groupBy("u", "v").agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2)
     }
+
+  /** DuckDB twin of `partCoEdges`' pair build: `pr`, the distinct
+    * (order, u, v) part pairs with u `op` v. */
+  private def partCoPairsCte(op: String): String =
+    s"""pr AS (
+       |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
+       |  FROM lineitem a JOIN lineitem b
+       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey $op b.l_partkey
+       |)""".stripMargin
+
+  /** `pr`, then `rel`: the bare (u, v) pairs of `partCoEdges`. */
+  private def partCoCte(rel: String, op: String = "<>"): String =
+    s"""${partCoPairsCte(op)}, $rel AS (
+       |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
+       |)""".stripMargin
 
   /** `graph_linkpred`'s hub-capped adjacency (each center's 32
     * smallest-id neighbors), landed: the wedge self-join reads the
@@ -117,13 +149,6 @@ object Graph {
     r
   }
 
-  /** Degree-computing wrapper over a bare (u, v) edge relation — the
-    * form EdgeSpec pins with hand-computed exact ranks. */
-  def pagerankIterate(edges: DataFrame, iters: Int): DataFrame = {
-    val deg = edges.groupBy("u").agg(count(lit(1)).as("d"))
-    iterateWithDeg(edges.join(deg, "u"), deg.select(col("u").as("node")), iters)
-  }
-
   /** PageRank over the 1996 co-engagement graph: scope the fact table to
     * one order-year (a real analysis window — and what keeps the edge
     * build proportionate to the question asked), iterating over the
@@ -154,20 +179,7 @@ object Graph {
 
   val graphPagerank = QueryDef(
     "graph_pagerank",
-    s"""WITH ord96 AS (
-       |  SELECT o_orderkey FROM orders
-       |  WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-       |    AND o_orderdate <  TIMESTAMP '1997-01-01'
-       |), li AS (
-       |  SELECT l_orderkey, l_suppkey FROM lineitem
-       |  JOIN ord96 ON l_orderkey = o_orderkey
-       |), e0 AS (
-       |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-       |  FROM li a JOIN li b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-       |), deg AS (
-       |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM e0 GROUP BY u
-       |), edges AS (
+    s"""$supplier96Cte, edges AS (
        |  SELECT e0.u, e0.v, deg.d FROM e0 JOIN deg ON e0.u = deg.u
        |), r0 AS (
        |  SELECT u AS node, CAST(1000000 AS BIGINT) AS r FROM deg
@@ -232,8 +244,8 @@ object Graph {
     // parallelism of the wedge stage comes from the INPUT's split/
     // partition count (both joins broadcast, so the probe side's layout
     // is the stage's layout): the landed oriented relation is written
-    // multi-split (supplier96Oriented — round 16), which replaced the
-    // round-15 per-read repartition here. Test callers
+    // multi-split (supplier96Oriented), so no per-read repartition is
+    // needed here. Test callers
     // (triangleCounts) arrive with shuffle-born partitioning.
     val a = ed.select(col("x"), col("y").as("y1"), col("yd").as("yd1"))
     val b = ed.select(col("x"), col("y").as("y2"), col("yd").as("yd2"))
@@ -262,20 +274,7 @@ object Graph {
 
   val graphTriangles = QueryDef(
     "graph_triangles",
-    """WITH ord96 AS (
-      |  SELECT o_orderkey FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      |    AND o_orderdate <  TIMESTAMP '1997-01-01'
-      |), li AS (
-      |  SELECT l_orderkey, l_suppkey FROM lineitem
-      |  JOIN ord96 ON l_orderkey = o_orderkey
-      |), e0 AS (
-      |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-      |  FROM li a JOIN li b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-      |), deg AS (
-      |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM e0 GROUP BY u
-      |), ed AS (
+    s"""$supplier96Cte, ed AS (
       |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
       |              THEN e.u ELSE e.v END AS x,
       |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
@@ -333,7 +332,7 @@ object Graph {
         .union(e.select(col("hi").as("u"), col("lo").as("v")))
       val mins = sym.groupBy("u").agg(min("v").as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // m <= u < v. NO intermediate distinct (round 16): the dedupe here
+      // m <= u < v. NO intermediate distinct: the dedupe here
       // was one full exchange per round and is semantically redundant —
       // mins2's `min` is duplicate-insensitive and `next` ends in its own
       // distinct, so duplicate (m, v) edges (two centers u1, u2 of v
@@ -357,26 +356,19 @@ object Graph {
     var e = pairs0.select(col("lo"), col("hi")).distinct().localCheckpoint()
     var rounds = 0
     var star = false
-    // ROUND BATCHING measured and REVERTED (round 16, r15 verdict #4):
-    // two rewrite rounds per action/convergence test were tried two ways.
-    // (a) Two lazy rounds, one checkpoint: each round references its
-    // input twice (the sym unions), so the un-truncated 2-round lineage
-    // recomputed round 1 ~4× — warm 3.5 → 9.0 s. (b) Lazy mid-round
-    // checkpoint inside the stride's single action: correct, but NEUTRAL
-    // in the bench stat (min-of-3 2.37 vs 2.34 baseline) because the
-    // convergence test was ALREADY piggybacked on the checkpoint job —
-    // a stride only skips the mid round's tiny roles aggregate, while at
-    // 100 TB overshooting convergence mid-stride costs a whole extra
-    // (identity) pass over the edge set. One round per action is the
-    // scale-correct shape; the round-16 win here is the removed ls
-    // distinct (one exchange per round) instead. AQE-off variants
-    // re-measured this round: 5.6 s at 4 shuffle partitions, 11.7 s at
-    // 32 — runtime coalescing carries the loop; AQE stays on.
+    // One rewrite round per action. Batching two rounds per action does
+    // not pay: with two lazy rounds and one checkpoint, each round reads
+    // its input twice (the sym unions), so the un-truncated lineage
+    // recomputes round 1 ~4× (warm 3.5 → 9.0 s); with a lazy mid-round
+    // checkpoint the convergence test already rides the checkpoint job,
+    // so a stride saves only a tiny aggregate, while at 100 TB
+    // overshooting convergence mid-stride costs a whole extra pass over
+    // the edge set. AQE stays on: runtime coalescing carries the loop
+    // (AQE off: 5.6 s at 4 shuffle partitions, 11.7 s at 32).
     while (rounds < maxRounds && !star) {
       val next = rewriteRound(e).localCheckpoint(eager = false)
-      // star-forest test in ONE job (round-9: was an aggregate plus a
-      // left-semi isEmpty — two actions per round on the suite's heaviest
-      // key): tag each endpoint with its role, then per-id role sums
+      // star-forest test in ONE job (not an aggregate plus a left-semi
+      // isEmpty — two actions per round on the suite's heaviest key): tag each endpoint with its role, then per-id role sums
       // decide both conditions at once — star ⟺ no member has two roots
       // (every hi appears once) AND no root is itself a member (no id
       // carries both roles). The same action materializes the lazy
@@ -414,13 +406,7 @@ object Graph {
     */
   val graphComponents = QueryDef(
     "graph_components",
-    """WITH RECURSIVE pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |), p2 AS (
-      |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-      |), e0 AS (
+    s"""WITH RECURSIVE ${partCoCte("p2", "<")}, e0 AS (
       |  SELECT u, v FROM p2 UNION ALL SELECT v, u FROM p2
       |), nodes AS (
       |  SELECT DISTINCT u AS n FROM e0
@@ -477,13 +463,7 @@ object Graph {
     * lineage. */
   val graphLinkpred = QueryDef(
     "graph_linkpred",
-    """WITH pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |), e0 AS (
-      |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-      |), deg AS (
+    s"""WITH ${partCoCte("e0")}, deg AS (
       |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM e0 GROUP BY u
       |), ec AS (
       |  SELECT u, v FROM (
@@ -548,13 +528,7 @@ object Graph {
     * multiplicities). All-BIGINT. */
   val graphKhop = QueryDef(
     "graph_khop",
-    """WITH pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |), e0 AS (
-      |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-      |), seeds AS (
+    s"""WITH ${partCoCte("e0")}, seeds AS (
       |  SELECT u AS seed FROM e0 GROUP BY u ORDER BY u LIMIT 10
       |), r1 AS (
       |  SELECT DISTINCT s.seed, e.v FROM seeds s JOIN e0 e ON e.u = s.seed
@@ -594,11 +568,7 @@ object Graph {
     * per-round plan (the graph_components localCheckpoint discipline). */
   val graphSssp = QueryDef(
     "graph_sssp",
-    """WITH pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |), ew AS (
+    s"""WITH ${partCoPairsCte("<>")}, ew AS (
       |  SELECT u, v, 1000 // count(*) AS w
       |  FROM pr GROUP BY u, v HAVING count(*) >= 2
       |), seeds AS (
@@ -725,6 +695,20 @@ object Graph {
       |      FROM p2 e JOIN PREV ON e.v = PREV.node GROUP BY 1, 2)
       |GROUP BY node""".stripMargin
 
+  /** DuckDB twin of `labelPropagate(p2, 4)`: the labels `l0` … `l4`. */
+  private val labelpropCtes =
+    s"""l0 AS (
+       |  SELECT DISTINCT u AS node, u AS lbl FROM p2
+       |), l1 AS (
+       |${LpRound.replace("PREV", "l0")}
+       |), l2 AS (
+       |${LpRound.replace("PREV", "l1")}
+       |), l3 AS (
+       |${LpRound.replace("PREV", "l2")}
+       |), l4 AS (
+       |${LpRound.replace("PREV", "l3")}
+       |)""".stripMargin
+
   /** Gated key: label-propagation communities of the part co-purchase
     * graph — 4 fixed synchronous rounds over the SAME landed symmetric
     * relation every other part-graph kernel shares (`partCoEdges` —
@@ -736,23 +720,7 @@ object Graph {
     * the 4 rounds as CTEs with the identical score arithmetic. */
   val graphLabelprop = QueryDef(
     "graph_labelprop",
-    s"""WITH pr AS (
-       |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-       |), p2 AS (
-       |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-       |), l0 AS (
-       |  SELECT DISTINCT u AS node, u AS lbl FROM p2
-       |), l1 AS (
-       |${LpRound.replace("PREV", "l0")}
-       |), l2 AS (
-       |${LpRound.replace("PREV", "l1")}
-       |), l3 AS (
-       |${LpRound.replace("PREV", "l2")}
-       |), l4 AS (
-       |${LpRound.replace("PREV", "l3")}
-       |)
+    s"""WITH ${partCoCte("p2")}, $labelpropCtes
        |SELECT lbl AS community, CAST(count(*) AS BIGINT) AS size
        |FROM l4 GROUP BY lbl
        |ORDER BY size DESC, community LIMIT 15""".stripMargin) { (s, d) =>
@@ -828,13 +796,7 @@ object Graph {
     * node set because ids are distinct values. */
   val graphKcore = QueryDef(
     "graph_kcore",
-    s"""WITH pr AS (
-       |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-       |), p2 AS (
-       |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-       |), e1 AS (
+    s"""WITH ${partCoCte("p2")}, e1 AS (
        |${KcRound("p2", 3)}
        |), e2 AS (
        |${KcRound("e1", 3)}
@@ -867,11 +829,7 @@ object Graph {
     * bipartite-projection discipline. */
   val graphProjectBipartite = QueryDef(
     "graph_project_bipartite",
-    """WITH pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |)
+    s"""WITH ${partCoPairsCte("<")}
       |SELECT u, v, c FROM (
       |  SELECT u, v, CAST(count(*) AS BIGINT) AS c
       |  FROM pr GROUP BY u, v HAVING count(*) >= 2
@@ -897,13 +855,7 @@ object Graph {
     * landed edges + one scalar aggregate — no iteration, no window. */
   val graphAssortativity = QueryDef(
     "graph_assortativity",
-    """WITH pr AS (
-      |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |), e AS (
-      |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-      |), deg AS (
+    s"""WITH ${partCoCte("e")}, deg AS (
       |  SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY u
       |), m AS (
       |  SELECT CAST(count(*) AS BIGINT) AS s,
@@ -960,23 +912,7 @@ object Graph {
     * shared landed graph. */
   val graphModularity = QueryDef(
     "graph_modularity",
-    s"""WITH pr AS (
-       |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-       |), p2 AS (
-       |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-       |), l0 AS (
-       |  SELECT DISTINCT u AS node, u AS lbl FROM p2
-       |), l1 AS (
-       |${LpRound.replace("PREV", "l0")}
-       |), l2 AS (
-       |${LpRound.replace("PREV", "l1")}
-       |), l3 AS (
-       |${LpRound.replace("PREV", "l2")}
-       |), l4 AS (
-       |${LpRound.replace("PREV", "l3")}
-       |), e2 AS (
+    s"""WITH ${partCoCte("p2")}, $labelpropCtes, e2 AS (
        |  SELECT count(*) AS ec FROM p2
        |), lbl AS (
        |  SELECT e.u, e.v, lu.lbl AS cu, lv.lbl AS cv
@@ -1091,13 +1027,7 @@ object Graph {
     * then decode) over the identical md5-prefix successor rule. */
   val graphDeepwalk = QueryDef(
     "graph_deepwalk",
-    s"""WITH pr AS (
-       |  SELECT DISTINCT a.l_orderkey AS ok, a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-       |), p2 AS (
-       |  SELECT u, v FROM pr GROUP BY u, v HAVING count(*) >= 2
-       |), w0 AS (
+    s"""WITH ${partCoCte("p2")}, w0 AS (
        |  SELECT DISTINCT u AS node FROM p2
        |), f0 AS (
        |  SELECT node * 2 AS walk, node AS cur FROM w0

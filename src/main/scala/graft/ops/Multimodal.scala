@@ -330,14 +330,9 @@ object Multimodal {
       }.toDF()
   }
 
-  val multimodalAudioEnergy = QueryDef(
-    "multimodal_audio_energy",
-    // Oracle: sample s is the 16-bit big-endian TWO'S-COMPLEMENT parse
-    // of hex chars 4s+1..4s+4 of md5(text) (raw >= 32768 wraps to
-    // raw - 65536); window w covers samples 2w, 2w+1. Energy is an
-    // exact BIGINT in both engines; the silence branch is live at every
-    // SF (uniform md5 samples put ~4-5% of windows under the
-    // threshold).
+  /** DuckDB twin of `audioEnergyStub`'s sample parse over every 5th
+    * document: windows `f`, raw halves `r`, signed samples `v`. */
+  private val audioSamplesCte =
     """WITH f AS (
       |  SELECT doc_id, unnest([0, 1, 2, 3]) AS win_idx, md5(text) AS h
       |  FROM documents WHERE doc_id % 5 = 0
@@ -351,8 +346,18 @@ object Multimodal {
       |    CASE WHEN r0 >= 32768 THEN r0 - 65536 ELSE r0 END AS v0,
       |    CASE WHEN r1 >= 32768 THEN r1 - 65536 ELSE r1 END AS v1
       |  FROM r
-      |)
-      |SELECT doc_id, CAST(win_idx AS INTEGER) AS win_idx,
+      |)""".stripMargin
+
+  val multimodalAudioEnergy = QueryDef(
+    "multimodal_audio_energy",
+    // Oracle: sample s is the 16-bit big-endian TWO'S-COMPLEMENT parse
+    // of hex chars 4s+1..4s+4 of md5(text) (raw >= 32768 wraps to
+    // raw - 65536); window w covers samples 2w, 2w+1. Energy is an
+    // exact BIGINT in both engines; the silence branch is live at every
+    // SF (uniform md5 samples put ~4-5% of windows under the
+    // threshold).
+    s"""$audioSamplesCte
+       |SELECT doc_id, CAST(win_idx AS INTEGER) AS win_idx,
       |       CAST(v0 * v0 + v1 * v1 AS BIGINT) AS energy,
       |       (v0 * v0 + v1 * v1 < 100000000) AS silent
       |FROM v ORDER BY doc_id, win_idx LIMIT 600""".stripMargin) { (s, d) =>
@@ -439,20 +444,7 @@ object Multimodal {
     // Oracle: the audio-energy sample parse (two's-complement 16-bit
     // big-endian halves of md5(text)), aggregated per clip with the
     // 600000000 trim threshold.
-    """WITH f AS (
-      |  SELECT doc_id, unnest([0, 1, 2, 3]) AS win_idx, md5(text) AS h
-      |  FROM documents WHERE doc_id % 5 = 0
-      |), r AS (
-      |  SELECT doc_id, win_idx,
-      |    CAST(CAST('0x' || substr(h, 8 * win_idx + 1, 4) AS INT) AS BIGINT) AS r0,
-      |    CAST(CAST('0x' || substr(h, 8 * win_idx + 5, 4) AS INT) AS BIGINT) AS r1
-      |  FROM f
-      |), v AS (
-      |  SELECT doc_id, win_idx,
-      |    CASE WHEN r0 >= 32768 THEN r0 - 65536 ELSE r0 END AS v0,
-      |    CASE WHEN r1 >= 32768 THEN r1 - 65536 ELSE r1 END AS v1
-      |  FROM r
-      |), w AS (
+    s"""$audioSamplesCte, w AS (
       |  SELECT doc_id, win_idx,
       |         (v0 * v0 + v1 * v1 < 600000000) AS silent
       |  FROM v

@@ -105,12 +105,44 @@ object Text {
       shingleStatsFromShingles(Functions.shingles(keeperDocs(Tables.documents(s, d))))
     }
 
+  /** DuckDB twin of `shingleStatsFromShingles` over `rel`'s shingles:
+    * `shd`, the per-document `sizes` and the co-shingle counts `inter`
+    * (i < j). Opens the WITH over `documents` and continues one otherwise
+    * (`Functions.distinctShingleCte`). */
+  def shingleStatsCte(rel: String): String =
+    s"""${Functions.distinctShingleCte(rel)},
+       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
+       |inter AS (
+       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
+       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
+       |  GROUP BY i, j
+       |)""".stripMargin
+
+  /** DuckDB twin of `keeperDocs` (`kd`) followed by the stats over it —
+    * the relation `landedShingleStatsKd` lands. */
+  private val shingleStatsKdCte =
+    s"""WITH k AS (
+       |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+       |), kd AS (
+       |  SELECT d.doc_id, d.text FROM documents d JOIN k ON d.doc_id = k.doc_id
+       |), ${shingleStatsCte("kd")}""".stripMargin
+
   /** Jaccard selector over the stats relation. */
   def nearDupPairsFromStats(st: DataFrame, threshold: Double = 0.5): DataFrame =
     st.select(col("i"), col("j"),
         (col("inter") / (col("ni") + col("nj") - col("inter"))).as("jac_raw"))
       .filter(col("jac_raw") >= threshold)
       .select(col("i"), col("j"), round(col("jac_raw"), 4).as("jac"))
+
+  /** DuckDB twin of the Jaccard selector at 0.5 as a CTE body: the
+    * (i, j) pairs of `inter` over `sizes`. */
+  val jaccardPairsSql: String =
+    """  SELECT i, j FROM (
+      |    SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
+      |    FROM inter
+      |    JOIN sizes si ON inter.i = si.doc_id
+      |    JOIN sizes sj ON inter.j = sj.doc_id
+      |  ) WHERE jac_raw >= 0.5""".stripMargin
 
   /** The exact-Jaccard pair kernel over an ALREADY-COMPUTED (doc_id,
     * shingle) relation — split out so a caller that runs BOTH dedup
@@ -121,14 +153,7 @@ object Text {
 
   val dedupNear = QueryDef(
     "dedup_near",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |)
+    s"""${shingleStatsCte("documents")}
        |SELECT i, j, round(jac_raw, 4) AS jac FROM (
        |  SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
        |  FROM inter
@@ -147,12 +172,8 @@ object Text {
     * threshold, tagged with the contained (more-covered) doc — the row a
     * cleanse pipeline drops. Same shingle equi-join candidate generation
     * as `nearDupPairs` (never cartesian; quadratic only in the output on
-    * dup-heavy corpora, by contract). */
-  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame =
-    containmentPairsFromStats(
-      shingleStatsFromShingles(Functions.shingles(docs)), threshold)
-
-  /** Containment selector over the stats relation. */
+    * dup-heavy corpora, by contract). This is the selector over the
+    * stats relation. */
   def containmentPairsFromStats(st: DataFrame, threshold: Double): DataFrame =
     st.select(col("i"), col("j"),
         (col("inter") / col("ni")).as("cont_i"),
@@ -163,16 +184,10 @@ object Text {
         when(col("cont_i") >= col("cont_j"), col("i")).otherwise(col("j"))
           .as("contained"))
 
-  val dedupContainment = QueryDef(
-    "dedup_containment",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), c AS (
+  /** DuckDB twin of `containmentPairsFromStats` at 0.8 over a stats CTE
+    * prefix. */
+  private def containmentOracle(stats: String): String =
+    s"""$stats, c AS (
        |  SELECT i, j, inter.inter / si.n AS cont_i, inter.inter / sj.n AS cont_j
        |  FROM inter
        |  JOIN sizes si ON inter.i = si.doc_id
@@ -181,7 +196,11 @@ object Text {
        |SELECT i, j, round(greatest(cont_i, cont_j), 4) AS cont,
        |       CASE WHEN cont_i >= cont_j THEN i ELSE j END AS contained
        |FROM c WHERE greatest(cont_i, cont_j) >= 0.8
-       |ORDER BY i, j""".stripMargin) { (s, d) =>
+       |ORDER BY i, j""".stripMargin
+
+  val dedupContainment = QueryDef(
+    "dedup_containment",
+    containmentOracle(shingleStatsCte("documents"))) { (s, d) =>
     containmentPairsFromStats(landedShingleStats(s, d), threshold = 0.8)
       .orderBy("i", "j")
   }
@@ -200,27 +219,7 @@ object Text {
     * pass, so nothing is lost. */
   val dedupContainmentDedup = QueryDef(
     "dedup_containment_dedup",
-    s"""WITH k AS (
-       |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-       |), kd AS (
-       |  SELECT d.doc_id, d.text FROM documents d JOIN k ON d.doc_id = k.doc_id
-       |), ${Functions.shingleOracleCteOver("kd")},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), c AS (
-       |  SELECT i, j, inter.inter / si.n AS cont_i, inter.inter / sj.n AS cont_j
-       |  FROM inter
-       |  JOIN sizes si ON inter.i = si.doc_id
-       |  JOIN sizes sj ON inter.j = sj.doc_id
-       |)
-       |SELECT i, j, round(greatest(cont_i, cont_j), 4) AS cont,
-       |       CASE WHEN cont_i >= cont_j THEN i ELSE j END AS contained
-       |FROM c WHERE greatest(cont_i, cont_j) >= 0.8
-       |ORDER BY i, j""".stripMargin) { (s, d) =>
+    containmentOracle(shingleStatsKdCte)) { (s, d) =>
     containmentPairsFromStats(landedShingleStatsKd(s, d), threshold = 0.8)
       .orderBy("i", "j")
   }
@@ -243,8 +242,7 @@ object Text {
     * (side is a residue predicate pushed to the scan). */
   val dedupIncremental = QueryDef(
     "dedup_incremental",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
+    s"""${Functions.distinctShingleCte("documents")},
        |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
        |inter AS (
        |  SELECT x.doc_id AS i, y.doc_id AS b, count(*) AS inter
@@ -298,21 +296,6 @@ object Text {
           .when(col("near_dup_of").isNotNull, lit("near"))
           .otherwise(lit("keep")).as("verdict"))
       .orderBy("doc_id")
-  }
-
-  /** ONE round of min-propagation: for every document in a near-dup pair,
-    * the minimum doc_id among itself and its direct neighbors. Linear
-    * output; correct cluster representative whenever components are
-    * cliques (the common near-dup case). Library form — the gated
-    * `dedup_keeper` iterates this to the connected-component fixpoint.
-    */
-  def nearDupKeepersOneRound(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val pairs = nearDupPairs(docs, threshold)
-    val neighbors = pairs.select(col("i").as("doc_id"), col("j").as("nb"))
-      .union(pairs.select(col("j").as("doc_id"), col("i").as("nb")))
-    neighbors.groupBy("doc_id")
-      .agg(least(min(col("nb")), col("doc_id")).as("keeper"),
-        count(lit(1)).as("n_neighbors"))
   }
 
   /** Connected-component keeper: iterate min-label propagation over the
@@ -376,41 +359,38 @@ object Text {
     labels.select(col("doc_id"), col("comp").as("keeper"), col("n_neighbors"))
   }
 
-  val dedupKeeper = QueryDef(
-    "dedup_keeper",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |),
+  /** DuckDB twin of `nearDupKeepersFromPairs` over the Jaccard-0.5 pairs
+    * of the corpus: `pairs`, the symmetric `edges`, and (from
+    * `keeperReachCte`) the recursive component minimum `reach`. */
+  val keeperEdgesCte: String =
+    s"""${shingleStatsCte("documents")},
        |pairs AS (
-       |  SELECT i, j FROM (
-       |    SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
-       |    FROM inter
-       |    JOIN sizes si ON inter.i = si.doc_id
-       |    JOIN sizes sj ON inter.j = sj.doc_id
-       |  ) WHERE jac_raw >= 0.5
+       |$jaccardPairsSql
        |),
        |edges AS (
        |  SELECT i AS src, j AS dst FROM pairs
        |  UNION ALL
        |  SELECT j AS src, i AS dst FROM pairs
-       |),
+       |)""".stripMargin
+
+  val keeperReachCte: String =
+    """reach AS (
+      |  WITH RECURSIVE r(doc_id, m) AS (
+      |    SELECT src, src FROM edges
+      |    UNION
+      |    SELECT e.src, r.m FROM edges e JOIN r ON e.dst = r.doc_id
+      |  )
+      |  SELECT doc_id, min(m) AS keeper FROM r GROUP BY doc_id
+      |)""".stripMargin
+
+  val dedupKeeper = QueryDef(
+    "dedup_keeper",
+    s"""$keeperEdgesCte,
        |deg AS (
        |  SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS n_neighbors
        |  FROM edges GROUP BY src
        |),
-       |reach AS (
-       |  WITH RECURSIVE r(doc_id, m) AS (
-       |    SELECT src, src FROM edges
-       |    UNION
-       |    SELECT e.src, r.m FROM edges e JOIN r ON e.dst = r.doc_id
-       |  )
-       |  SELECT doc_id, min(m) AS keeper FROM r GROUP BY doc_id
-       |)
+       |$keeperReachCte
        |SELECT deg.doc_id, keeper, n_neighbors
        |FROM deg JOIN reach ON deg.doc_id = reach.doc_id
        |ORDER BY deg.doc_id""".stripMargin) { (s, d) =>
@@ -420,6 +400,23 @@ object Text {
       nearDupPairsFromStats(landedShingleStats(s, d)).select("i", "j"))
       .orderBy("doc_id")
   }
+
+  /** Both edit-distance oracles: the Jaccard-0.5 candidates of a stats
+    * CTE prefix, verified by Levenshtein over the texts of `rel`. */
+  private def editdistOracle(stats: String, rel: String): String =
+    s"""$stats, cand AS (
+       |  SELECT i, j
+       |  FROM inter
+       |  JOIN sizes si ON inter.i = si.doc_id
+       |  JOIN sizes sj ON inter.j = sj.doc_id
+       |  WHERE inter.inter / (si.n + sj.n - inter.inter) >= 0.5
+       |)
+       |SELECT c.i, c.j,
+       |       CAST(levenshtein(a.text, b.text) AS BIGINT) AS editdist
+       |FROM cand c
+       |JOIN $rel a ON c.i = a.doc_id
+       |JOIN $rel b ON c.j = b.doc_id
+       |ORDER BY c.i, c.j""".stripMargin
 
   /** Edit-distance refilter of the near-dup candidates — the
     * character-level verification pass a fuzzy-dedup pipeline runs after
@@ -432,26 +429,7 @@ object Text {
     * ASCII so code-unit vs codepoint semantics cannot diverge. */
   val textEditdist = QueryDef(
     "text_editdist",
-    s"""${graft.ops.Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), cand AS (
-       |  SELECT i, j
-       |  FROM inter
-       |  JOIN sizes si ON inter.i = si.doc_id
-       |  JOIN sizes sj ON inter.j = sj.doc_id
-       |  WHERE inter.inter / (si.n + sj.n - inter.inter) >= 0.5
-       |)
-       |SELECT c.i, c.j,
-       |       CAST(levenshtein(a.text, b.text) AS BIGINT) AS editdist
-       |FROM cand c
-       |JOIN documents a ON c.i = a.doc_id
-       |JOIN documents b ON c.j = b.doc_id
-       |ORDER BY c.i, c.j""".stripMargin) { (s, d) =>
+    editdistOracle(shingleStatsCte("documents"), "documents")) { (s, d) =>
     val docs = Tables.documents(s, d)
     val texts = docs.select(col("doc_id"), col("text"))
     // Exact-duplicate short-circuit: identical text ⟺ distance 0, so the
@@ -461,7 +439,7 @@ object Text {
     // pair paid the full quadratic compare for a guaranteed 0). The guard
     // compares the texts themselves (O(len), short-circuits on the first
     // differing byte) rather than md5 — same win, no collision assumption
-    // equating hash with identity (round-8 advice).
+    // equating hash with identity.
     nearDupPairsFromStats(landedShingleStats(s, d)).select("i", "j")
       .join(texts.as("a"), col("i") === col("a.doc_id"))
       .join(texts.as("b"), col("j") === col("b.doc_id"))
@@ -482,30 +460,7 @@ object Text {
     * differing texts by construction — the kernel always does real work. */
   val textEditdistDedup = QueryDef(
     "text_editdist_dedup",
-    s"""WITH k AS (
-       |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-       |), kd AS (
-       |  SELECT d.doc_id, d.text FROM documents d JOIN k ON d.doc_id = k.doc_id
-       |), ${graft.ops.Functions.shingleOracleCteOver("kd")},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), cand AS (
-       |  SELECT i, j
-       |  FROM inter
-       |  JOIN sizes si ON inter.i = si.doc_id
-       |  JOIN sizes sj ON inter.j = sj.doc_id
-       |  WHERE inter.inter / (si.n + sj.n - inter.inter) >= 0.5
-       |)
-       |SELECT c.i, c.j,
-       |       CAST(levenshtein(a.text, b.text) AS BIGINT) AS editdist
-       |FROM cand c
-       |JOIN kd a ON c.i = a.doc_id
-       |JOIN kd b ON c.j = b.doc_id
-       |ORDER BY c.i, c.j""".stripMargin) { (s, d) =>
+    editdistOracle(shingleStatsKdCte, "kd")) { (s, d) =>
     val kd = keeperDocs(Tables.documents(s, d))
     nearDupPairsFromStats(landedShingleStatsKd(s, d)).select("i", "j")
       .join(kd.as("a"), col("i") === col("a.doc_id"))
@@ -528,8 +483,7 @@ object Text {
     * shingles, never pairwise, and at 100 TB shingles travel hashed. */
   val textNgramNovelty = QueryDef(
     "text_ngram_novelty",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
+    s"""${Functions.distinctShingleCte("documents")},
        |firsts AS (
        |  SELECT shingle, min(doc_id) AS first_doc FROM shd GROUP BY shingle
        |)

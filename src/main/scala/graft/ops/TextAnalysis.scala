@@ -30,8 +30,8 @@ object TextAnalysis {
   def languageId(docs: DataFrame): DataFrame = {
     // the widened col("*") projection appends s_<lang> score columns and
     // predicted_lang; a caller whose input already carries one of those
-    // names would get an ambiguous/shadowed select — fail loudly instead
-    // (round-11 advice: keep the shared helper's output namespace safe)
+    // names would get an ambiguous/shadowed select — fail loudly instead,
+    // so the shared helper's output namespace stays safe
     val reserved = langMarkers.map { case (l, _) => s"s_$l" }.toSet + "predicted_lang"
     val clash = docs.columns.filter(reserved.contains)
     require(clash.isEmpty,
@@ -117,7 +117,7 @@ object TextAnalysis {
 
   /** LANGID CONFUSION MATRIX — the measured-quality gate for the marker
     * heuristic (the sim_nearest_centroid discipline applied to text:
-    * the classifier exists since round 4; THIS hashes how well it
+    * `text_langid` runs the classifier; THIS hashes how well it
     * recovers a planted label under contested evidence): per
     * (label, predicted) pair the doc count, plus integer recall percent
     * on the diagonal — a marker-list regression (dropped stop word,
@@ -236,8 +236,7 @@ object TextAnalysis {
 
   val textFingerprint = QueryDef(
     "text_fingerprint",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
+    s"""${Functions.distinctShingleCte("documents")},
        |fps AS (
        |  SELECT doc_id, md5(string_agg(md5(shingle), '' ORDER BY md5(shingle))) AS fp
        |  FROM shd GROUP BY doc_id
@@ -387,8 +386,7 @@ object TextAnalysis {
 
   val textDecontaminate = QueryDef(
     "text_decontaminate",
-    s"""${Functions.shingleOracleCte},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
+    s"""${Functions.distinctShingleCte("documents")},
        |fps AS (
        |  SELECT doc_id, md5(string_agg(md5(shingle), '' ORDER BY md5(shingle))) AS fp
        |  FROM shd GROUP BY doc_id
@@ -1151,6 +1149,46 @@ object TextAnalysis {
       .orderBy("lang")
   }
 
+  /** The corpus bigram LM: the bigram stream (doc_id, carried columns,
+    * w1, w2) and its dictionary (w1, w2, micro), micro = count(w1 w2) ·
+    * 10⁶ div count(w1 ·) in exact integers. */
+  def bigramLm(docs: DataFrame, carry: String*): (DataFrame, DataFrame) = {
+    val keep = ("doc_id" +: carry).map(col)
+    val bg = docs.select(keep :+ split(col("text"), " ").as("toks"): _*)
+      .filter(size(col("toks")) >= 2)
+      .select(keep :+ explode(expr(
+        "transform(sequence(0, size(toks) - 2)," +
+          " i -> struct(toks[i] AS w1, toks[i + 1] AS w2))")).as("b"): _*)
+      .select(keep ++ Seq(col("b.w1").as("w1"), col("b.w2").as("w2")): _*)
+    val uc = bg.groupBy("w1").agg(count(lit(1)).as("ucnt"))
+    val dict = bg.groupBy("w1", "w2").agg(count(lit(1)).as("bcnt"))
+      .join(uc, "w1")
+      .select(col("w1"), col("w2"), expr("bcnt * 1000000L div ucnt").as("micro"))
+    (bg, dict)
+  }
+
+  /** DuckDB twin of `bigramLm`, carrying `carry` (if any) beside doc_id:
+    * `pos`, the bigram stream `bg`, its counts `bc`/`uc` and `dict`. */
+  def bigramLmCte(carry: String = ""): String = {
+    val w = "toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2"
+    val (c, bgSelect) =
+      if (carry.isEmpty) ("", s"doc_id, $w") else (s"$carry, ", s"doc_id, $carry,\n    $w")
+    s"""WITH pos AS (
+       |  SELECT doc_id, ${c}string_split(text, ' ') AS toks FROM documents
+       |), bg AS (
+       |  SELECT $bgSelect
+       |  FROM pos, unnest(generate_series(1, len(toks) - 1)) AS t(i)
+       |  WHERE len(toks) >= 2
+       |), bc AS (
+       |  SELECT w1, w2, count(*) AS bcnt FROM bg GROUP BY 1, 2
+       |), uc AS (
+       |  SELECT w1, count(*) AS ucnt FROM bg GROUP BY 1
+       |), dict AS (
+       |  SELECT bc.w1, bc.w2, bcnt * 1000000 // ucnt AS micro
+       |  FROM bc JOIN uc ON bc.w1 = uc.w1
+       |)""".stripMargin
+  }
+
   /** Bigram language-model scoring — the perplexity-filter analog that
     * keeps every arithmetic step exact: train bigram/left-unigram counts
     * on the corpus itself, score each document by its mean and minimum
@@ -1173,38 +1211,14 @@ object TextAnalysis {
     */
   val textLmScore = QueryDef(
     "text_lm_score",
-    """WITH pos AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |), bg AS (
-      |  SELECT doc_id, toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
-      |  FROM pos, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-      |  WHERE len(toks) >= 2
-      |), bc AS (
-      |  SELECT w1, w2, count(*) AS bcnt FROM bg GROUP BY 1, 2
-      |), uc AS (
-      |  SELECT w1, count(*) AS ucnt FROM bg GROUP BY 1
-      |), dict AS (
-      |  SELECT bc.w1, bc.w2, bcnt * 1000000 // ucnt AS micro
-      |  FROM bc JOIN uc ON bc.w1 = uc.w1
-      |)
-      |SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+    s"""${bigramLmCte()}
+       |SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
       |       CAST(sum(micro) // count(*) AS BIGINT) AS avg_micro,
       |       CAST(min(micro) AS BIGINT) AS min_micro
       |FROM bg JOIN dict ON bg.w1 = dict.w1 AND bg.w2 = dict.w2
       |GROUP BY bg.doc_id ORDER BY avg_micro ASC, doc_id LIMIT 25""".stripMargin) {
     (s, d) =>
-      val bg = Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(toks) - 2)," +
-            " i -> struct(toks[i] AS w1, toks[i + 1] AS w2))")).as("b"))
-        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("bcnt"))
-      val uc = bg.groupBy("w1").agg(count(lit(1)).as("ucnt"))
-      val dict = bc.join(uc, "w1")
-        .select(col("w1"), col("w2"),
-          expr("bcnt * 1000000L div ucnt").as("micro"))
+      val (bg, dict) = bigramLm(Tables.documents(s, d))
       bg.join(dict, Seq("w1", "w2"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
@@ -1516,7 +1530,7 @@ object TextAnalysis {
       |  FROM pt GROUP BY doc_id
       |)""".stripMargin
   /** Same stats CTE over an arbitrary (doc_id, text) relation name —
-    * the shingleOracleCteOver convention. Starts mid-WITH. */
+    * the Functions.distinctShingleCte convention. Starts mid-WITH. */
   private[ops] def gopherStatsCteOver(rel: String): String =
     gopherStatsCteSql.replace("FROM documents", s"FROM $rel")
 
@@ -1763,20 +1777,8 @@ object TextAnalysis {
        |), ex AS (
        |  SELECT gs.* FROM gs JOIN ek USING (h, doc_id)
        |),
-       |${graft.ops.Functions.shingleOracleCteOver("ex")},
-       |shd AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j, count(*) AS inter
-       |  FROM shd x JOIN shd y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-       |  GROUP BY i, j
-       |), prs AS (
-       |  SELECT i, j FROM (
-       |    SELECT i, j, inter.inter / (si.n + sj.n - inter.inter) AS jac_raw
-       |    FROM inter
-       |    JOIN sizes si ON inter.i = si.doc_id
-       |    JOIN sizes sj ON inter.j = sj.doc_id
-       |  ) WHERE jac_raw >= 0.5
+       |${Text.shingleStatsCte("ex")}, prs AS (
+       |${Text.jaccardPairsSql}
        |), ndp AS (
        |  SELECT ex.* FROM ex WHERE doc_id NOT IN (SELECT j FROM prs)
        |), bench AS (
@@ -1852,10 +1854,10 @@ object TextAnalysis {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"),
           concat(col("text"), lit(" pad pad pad")).as("text")))
     // raw (pre-inject, pre-strip) token count rides INTO the pq
-    // checkpoint (round 16, r15 verdict #5): the a_raw funnel row used to
-    // re-run the plant union + split over docs0 inside the final action;
-    // carrying the 8-byte count per row lets a_raw aggregate the same
-    // checkpoint b_strip reads. Identical value by construction — the
+    // checkpoint: otherwise the a_raw funnel row re-runs the plant union
+    // + split over docs0 inside the final action; carrying the 8-byte
+    // count per row lets a_raw aggregate the same checkpoint b_strip
+    // reads. Identical value by construction — the
     // column is computed from planted.text exactly where a_raw computed
     // it, before injection and markup.
     val injected = langidInject(planted
@@ -1874,7 +1876,7 @@ object TextAnalysis {
       .localCheckpoint()
     val pqCols = pq.columns.map(col).toSeq
     // ---- language filter: prediction must confirm the label.
-    // Checkpointed (round 16): `en` feeds BOTH the quality-keep
+    // Checkpointed: `en` feeds BOTH the quality-keep
     // derivation and the c_langid funnel row — without the checkpoint
     // the marker-scoring pass over the whole planted corpus ran twice
     // (once in the gs build, once re-derived inside the final funnel

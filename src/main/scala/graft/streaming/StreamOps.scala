@@ -75,20 +75,8 @@ object StreamOps {
     */
   def streamIntervalJoin(left: DataFrame, right: DataFrame,
       maxGap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    val l = left.select(col("event_id").as("l_event_id"),
-        col("user_id").as("l_user_id"), col("ts").as("l_ts"))
-      .withWatermark("l_ts", watermark)
-    val r = right.select(col("event_id").as("r_event_id"),
-        col("user_id").as("r_user_id"), col("ts").as("r_ts"))
-      .withWatermark("r_ts", watermark)
-    l.join(r,
-        col("l_user_id") === col("r_user_id") &&
-        col("r_ts") > col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"interval $maxGap"))
-      .select(col("l_user_id").as("user_id"),
-        col("l_event_id"), col("r_event_id"), col("l_ts"), col("r_ts"))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    intervalJoin(left, right, maxGap, watermark, "inner")
 
   /** LEFT OUTER stream-stream interval join — the unmatched-detection
     * form of `streamIntervalJoin` ("views that never got a click"): a
@@ -100,18 +88,22 @@ object StreamOps {
     * cost of proving absence on an unbounded stream. */
   def streamIntervalJoinOuter(left: DataFrame, right: DataFrame,
       maxGap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    val l = left.select(col("event_id").as("l_event_id"),
-        col("user_id").as("l_user_id"), col("ts").as("l_ts"))
-      .withWatermark("l_ts", watermark)
-    val r = right.select(col("event_id").as("r_event_id"),
-        col("user_id").as("r_user_id"), col("ts").as("r_ts"))
-      .withWatermark("r_ts", watermark)
-    l.join(r,
+      watermark: String = "10 minutes"): DataFrame =
+    intervalJoin(left, right, maxGap, watermark, "left_outer")
+
+  /** Both interval joins: the watermarked `l_`/`r_` projections, the
+    * time-bounded condition and the output columns, under `joinType`. */
+  private def intervalJoin(left: DataFrame, right: DataFrame, maxGap: String,
+      watermark: String, joinType: String): DataFrame = {
+    def side(df: DataFrame, p: String): DataFrame =
+      df.select(col("event_id").as(s"${p}_event_id"),
+          col("user_id").as(s"${p}_user_id"), col("ts").as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", watermark)
+    side(left, "l").join(side(right, "r"),
         col("l_user_id") === col("r_user_id") &&
         col("r_ts") > col("l_ts") &&
         col("r_ts") <= col("l_ts") + expr(s"interval $maxGap"),
-        "left_outer")
+        joinType)
       .select(col("l_user_id").as("user_id"),
         col("l_event_id"), col("r_event_id"), col("l_ts"), col("r_ts"))
   }

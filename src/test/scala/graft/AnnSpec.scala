@@ -226,12 +226,14 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("upsert gates return their typed empty relation on empty embeddings") {
-    // a zero-row embeddings table trains zero centroids and indexes
-    // nothing; both ingestion paths must still return the schema they
-    // return on real data, as their DuckDB oracle does
+    // a zero-row embeddings table trains zero centroids and codebooks
+    // and indexes nothing; the ingestion, rebalance and PQ paths must
+    // still return the schema they return on real data, as their DuckDB
+    // oracle does
     val empty = java.nio.file.Files.createTempDirectory("graft_empty_emb").toString
     Tables.embeddings(spark, d).limit(0).write.parquet(s"$empty/embeddings.parquet")
-    for (g <- Seq(Ann.simAnnUpsert, Ann.streamAnnUpsert)) {
+    for (g <- Seq(Ann.simAnnUpsert, Ann.streamAnnUpsert, Ann.simAnnRebalance,
+        Ann.simAnnPq, Ann.simAnnPqRecall, Ann.simAnnIvfPq)) {
       val real = g.fn(spark, d)
       val got = g.fn(spark, empty)
       assert(got.count() == 0L, s"${g.name}: rows on empty embeddings")

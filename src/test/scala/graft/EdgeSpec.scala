@@ -203,8 +203,13 @@ class EdgeSpec extends AnyFunSuite {
       (3L, "X Y c d e f g h i K"),
       (4L, "totally unrelated tokens compose this other document body here now"))
       .toDF("doc_id", "text")
-    val oneRound = Text.nearDupKeepersOneRound(docs)
-      .select("doc_id", "keeper").as[(Long, Long)].collect().toMap
+    // one round of min-propagation: each doc's min over itself and its
+    // direct neighbors — consistent only when components are cliques
+    val pairs = Text.nearDupPairs(docs)
+    val oneRound = pairs.select(col("i").as("doc_id"), col("j").as("nb"))
+      .union(pairs.select(col("j").as("doc_id"), col("i").as("nb")))
+      .groupBy("doc_id").agg(least(min(col("nb")), col("doc_id")).as("keeper"))
+      .as[(Long, Long)].collect().toMap
     assert(oneRound == Map(1L -> 1L, 2L -> 1L, 3L -> 2L)) // chain end inconsistent
     val fixpoint = Text.nearDupKeepers(docs)
       .select("doc_id", "keeper").as[(Long, Long)].collect().toMap
@@ -520,7 +525,8 @@ class EdgeSpec extends AnyFunSuite {
       (1L, quote),
       (2L, s"$filler $quote"),
       (3L, "unrelated words only here")).toDF("doc_id", "text")
-    val got = Text.containmentPairs(docs, threshold = 0.8)
+    val got = Text.containmentPairsFromStats(
+        Text.shingleStatsFromShingles(graft.ops.Functions.shingles(docs)), threshold = 0.8)
       .select("i", "j", "cont", "contained")
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(got == Seq((1L, 2L, 1.0, 1L)), s"containment missed the planted subset: $got")
@@ -635,7 +641,9 @@ class EdgeSpec extends AnyFunSuite {
     //   r2: ends 936250; mid 1127500
     //   r3: ends 150000+(85*(1127500 div 2)) div 100 = 629187; mid 1741625
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("u", "v")
-    val got = graft.ops.Graph.pagerankIterate(edges, 3)
+    // the gated path's form: degrees ride in the edge relation
+    val ed = edges.join(edges.groupBy("u").agg(count(lit(1)).as("d")), "u")
+    val got = graft.ops.Graph.iterateWithDeg(ed, ed.select(col("u").as("node")).distinct(), 3)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 629187L, 2L -> 1741625L, 3L -> 629187L), s"got $got")
     // conservation sanity: total mass stays within floor-loss of 3e6
@@ -976,7 +984,11 @@ class EdgeSpec extends AnyFunSuite {
       (20L, b),
       (30L, "too short"), (31L, "too short"))
       .toDF("doc_id", "text")
-    val got = Dedup.minhashClusters(docs)
+    // the gate's collapsed relations (landed there), built inline
+    val reps = Dedup.repsOf(docs)
+    val sh = graft.ops.Functions.shingles(reps.select("doc_id", "text"))
+    val got = Dedup.minhashClustersCore(docs, reps, sh,
+        Dedup.minHashNearDupFromShingles(sh).select("i", "j"))
       .as[(Long, Long, Long)].collect().toSet
     val want = Set(1L, 2L, 3L, 10L, 11L).map(id => (id, 1L, 5L))
     assert(got == want, s"got $got")
