@@ -47,18 +47,6 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor, env-overridable; DEFAULT = Spark's 1m.
-      // Round 15 measured a 128k floor both ways: dedicated probe
-      // sessions showed the 1 MB default coalescing CPU-dense pair
-      // kernels (LSH refilters, shingle joins) onto 1-2 cores, with
-      // per-key min-of-3 wins up to 2× — but in the INTERLEAVED
-      // full-suite bench the same floor was a wash (median per-key
-      // delta 0.00 over the 319 untouched keys, 11 wins / 8 losses
-      // beyond ±0.15 s), so the local-only tuning does not ship as a
-      // default. The knob stays for floor experiments; at production
-      // scale post-shuffle partitions exceed any floor and it is inert.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -222,7 +210,7 @@ object Bench {
     // "cpus":<n> in every record (round 16, r15 verdict #2): the 8-core
     // scaling run's artifact was byte-indistinguishable from the 32-core
     // artifact of record and silently clobbered BENCH.json
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"repeat-and-min-v5b-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"repeat-and-min-v5c-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
     // The "metric" stdout line prints FIRST, the moment it exists:
     // the driver's artifact window lost the line's head in r5 (tail-only
     // capture) and its tail in r7 — printing the line before any other
@@ -285,7 +273,7 @@ object Bench {
     // it whole; the full per-query map lives in BENCH.json and the long
     // line. Flushed so the final line cannot be lost to stream
     // buffering when the driver kills the process at exit.
-    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"repeat-and-min-v5b-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"repeat-and-min-v5c-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
     System.out.flush()
     if (r.failed.nonEmpty) sys.exit(1)
   }

@@ -453,21 +453,12 @@ object Dedup {
   /** Rolling-hash window for content-defined boundaries: polynomial hash
     * of the 8 chars ending at position i (base 31, exact in a BIGINT —
     * max Σ 127·31⁷ < 2⁴⁰), boundary where H % 16 == 0. The oracle reads
-    * chars with `ord(substr(...))` directly; the Spark side reads the
-    * per-doc CODE ARRAY (`codes`, one ascii pass per char) because the
-    * interpreted-HOF cost of 8 substr+ascii calls per position dominated
-    * the whole key (measured 14.5 s → the array form + split parallelism
-    * → sub-second). `ord` of an out-of-range substr is 0 in DuckDB;
-    * element_at past the array end is null — the i < length guard keeps
-    * both engines inside the window. */
+    * chars with `ord(substr(...))` directly; the Spark side is the native
+    * `graft.functions.CdcBoundaries` expression. `ord` of an out-of-range
+    * substr is 0 in DuckDB — the i < length guard keeps the window inside
+    * the text. */
   private def cdcPolyOracle: String =
     (0 to 7).map(j => s"CAST(ord(substr(text, i - ${7 - j}, 1)) AS BIGINT) * ${math.pow(31, 7 - j).toLong}")
-      .mkString(" + ")
-  /** The pre-Expression HOF formulation of the same polynomial, kept as
-    * the independent reference CdcBoundariesSpec checks the native
-    * rolling hash against. */
-  private[graft] def cdcPolySpark: String =
-    (0 to 7).map(j => s"CAST(element_at(codes, i - ${7 - j}) AS BIGINT) * ${math.pow(31, 7 - j).toLong}")
       .mkString(" + ")
 
   /** CONTENT-DEFINED CHUNKING over (doc_id, text): boundaries where the

@@ -1922,7 +1922,6 @@ object Events {
       |FROM m ORDER BY user_id""".stripMargin) { (s, d) =>
     val wRank = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val wUser = Window.partitionBy("user_id")
-    val wLag = Window.partitionBy("user_id").orderBy(col("eus"), col("event_id"))
     val m = Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("ts"), eus.as("raw_eus"))
       .withColumn("rn", row_number().over(wRank))

@@ -8,8 +8,7 @@ import graft.Tables
   * `pipeline_tpch_q*` keys are DataFrame pipelines, so only
   * `sql_frontend` exercised the parser/analyzer path. This key runs
   * every one of the 22 through `spark.sql` TEXT — the same near-ANSI
-  * text the DuckDB oracle executes (per-query overrides only where the
-  * two dialects genuinely part) — and gates, per query, the row count
+  * text the DuckDB oracle executes — and gates, per query, the row count
   * AND a Spark-computed exact relation equality (both exceptAll
   * directions empty) between the SQL-text result and the DataFrame
   * pipeline. The oracle replays each query itself and asserts
@@ -26,17 +25,10 @@ object TpchSqlParity {
   private def tpch: Seq[QueryDef] =
     Pipelines.all.filter(_.name.startsWith("pipeline_tpch_q")).sortBy(_.name)
 
-  /** Spark-SQL text per key — defaults to the key's oracle text (the
-    * house oracles are written in the common dialect); overrides hold
-    * the few spots where DuckDB and Spark SQL genuinely differ. */
-  private val overrides: Map[String, String] = Map()
-
-  def sqlText(q: QueryDef): String = overrides.getOrElse(q.name, q.oracle)
-
   private val TpchTables =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  def registerViews(s: SparkSession, d: String): Unit =
+  private def registerViews(s: SparkSession, d: String): Unit =
     TpchTables.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
 
   /** The views are certification-scoped: registered for the 22 runs and
@@ -52,7 +44,7 @@ object TpchSqlParity {
     * a recompile of ANYTHING in the library (either compared side, or a
     * shared helper) changes the fingerprint and forces a fresh
     * certification, so a stale green from an older build can never
-    * satisfy this round's gate. Conservative in the right direction —
+    * satisfy the current build's gate. Conservative in the right direction —
     * an unrelated rebuild merely re-pays the ~50 s cold cost once. */
   private def hashFiles(md: java.security.MessageDigest,
       root: java.nio.file.Path): Unit = {
@@ -66,8 +58,7 @@ object TpchSqlParity {
 
   /** None when the code source cannot be located (custom classloader) —
     * the cross-process cache is then disabled entirely: neither read
-    * nor written (an unreadable key must not litter /tmp — review
-    * finding). */
+    * nor written (an unreadable key must not litter /tmp). */
   private lazy val buildFingerprint: Option[String] =
     try {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -86,8 +77,7 @@ object TpchSqlParity {
   /** (name, size, mtime) of every parquet file of the certified tables —
     * a dataset REGENERATED at the same path (same row counts, different
     * values) must void the cache, since the oracle side of this key only
-    * gates (name, count, true) and would not catch the staleness itself
-    * (review finding). */
+    * gates (name, count, true) and would not catch the staleness itself. */
   private def datasetFingerprint(d: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val root = java.nio.file.Paths.get(d)
@@ -116,7 +106,7 @@ object TpchSqlParity {
 
   /** True when a persisted certification for this (dataset, build, data)
     * triple exists — Bench marks its cold_s as a cache read with this,
-    * so the artifact self-describes (review finding). */
+    * so the artifact self-describes. */
   def hasPersistedReport(d: String): Boolean =
     try readPersisted(d).isDefined
     catch { case scala.util.control.NonFatal(_) => false }
@@ -174,7 +164,7 @@ object TpchSqlParity {
               // + count run on the materialized blocks, not re-running the scans
               try {
                 val df = q.fn(s, d).localCheckpoint()
-                val viaSql = s.sql(sqlText(q)).localCheckpoint()
+                val viaSql = s.sql(q.oracle).localCheckpoint()
                 val matches = df.exceptAll(viaSql).isEmpty && viaSql.exceptAll(df).isEmpty
                 (q.name, df.count(), matches)
               } catch {
@@ -204,32 +194,4 @@ object TpchSqlParity {
   }
 
   val all: Seq[QueryDef] = Seq(sqlTpchParity)
-
-  /** Diagnostic: per-query parser/analyzer + equality status. */
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    registerViews(s, d)
-    tpch.foreach { q =>
-      try {
-        val df = q.fn(s, d)
-        val viaSql = s.sql(sqlText(q))
-        val extra = df.exceptAll(viaSql).count()
-        val missing = viaSql.exceptAll(df).count()
-        println(s"PARITY ${q.name} extra=$extra missing=$missing " +
-          (if (extra == 0 && missing == 0) "OK" else "MISMATCH"))
-      } catch {
-        case e: Throwable =>
-          println(s"PARITY ${q.name} ERROR ${e.getClass.getSimpleName}: " +
-            e.getMessage.linesIterator.take(2).mkString(" | "))
-      }
-    }
-    s.stop()
-  }
 }

@@ -44,7 +44,7 @@ object Wordpiece {
   /** The shared (w, wc, len) vocab relation — derived ONCE per gated
     * run and fed to both the inventory seed and the greedy chain (they
     * previously each re-scanned the corpus for it). */
-  private def vocabOf(docs: DataFrame): DataFrame =
+  private[graft] def vocabOf(docs: DataFrame): DataFrame =
     docs.select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w").rlike(s"^[a-z]{2,$MaxLen}$$"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
@@ -64,10 +64,7 @@ object Wordpiece {
     * the gated key derives the corpus one). Emits one row per lang:
     * words / chars / pieces / multi-char pieces used / tokens-per-100-
     * chars micro. */
-  def encodeGreedy(docs: DataFrame, inventory: Seq[String]): DataFrame =
-    encodeGreedyWith(docs, vocabOf(docs), inventory)
-
-  private def encodeGreedyWith(docs: DataFrame, v: DataFrame,
+  private[graft] def encodeGreedyWith(docs: DataFrame, v: DataFrame,
       inventory: Seq[String]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._

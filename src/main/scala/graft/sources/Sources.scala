@@ -53,16 +53,6 @@ object Sources {
   def csv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
 
-  /** ORC passthroughs — the other columnar format Spark bundles natively
-    * (same pushdown/pruning surface as parquet). The `spark-avro`
-    * DataSource is absent from this distribution's jars; Avro files go
-    * through `AvroFile` on the bundled avro core runtime instead. */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").orc(dir)
-
   /** Write the sharded co-occurrence matrix as parquet partitioned by
     * (row_shard, col_shard) — the columnar alternative to the reference's
     * per-shard `.pb` files (`TfExample.writeSwivelPbShards` writes those):

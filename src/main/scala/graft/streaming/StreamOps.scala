@@ -22,22 +22,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamOps {
 
-  /** 1-hour tumbling counts + value sums per event_type, late rows beyond
-    * the watermark dropped. */
-  def tumblingCounts(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** 1-hour windows sliding every 30 minutes. */
-  def slidingCounts(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("n"))
-
   /** 30-minute-gap sessions per user — the streaming form of
     * graft.ops.Events.sessionize (state merges as rows arrive; watermark
     * finalizes sessions). */
@@ -325,18 +309,6 @@ object StreamOps {
       }
       merged.write.mode("overwrite").parquet(s"$stateRoot/v=$batchId")
     }
-
-  /** Latest state version under a `cdcMergeWriter` root, tombstones
-    * filtered (None when no batch ever landed). `tombstoneOp` is the op
-    * code that marks a delete in the caller's changelog vocabulary
-    * (conventional CDC feeds use 'd'/'delete'; the events-fixture caller
-    * passes its own code) — the sink itself is op-vocabulary-agnostic:
-    * tombstones live in STATE at every version (they must outrank older
-    * upserts) and are dropped only here, at read time. */
-  def cdcLatestState(s: SparkSession, stateRoot: String,
-      tombstoneOp: String): Option[DataFrame] =
-    keyedDirs(stateRoot, "v").lastOption.map { case (_, v) =>
-      s.read.parquet(v.getPath).filter(col("op") =!= tombstoneOp) }
 
   /** The `key=<n>` subdirectories of `dir` (batch tags, state versions),
     * by n ascending; empty when `dir` does not exist. */

@@ -7,11 +7,10 @@ import graft.sources.Sources
   * reference driver's flag surface (SURVEY.md §3.1 E1: --input,
   * --output_dir, --shard_size, --min_count, --window_size).
   *
-  * Reads a corpus (plain-text lines or a parquet documents table), builds
-  * the vocab, then derives the windowed pairs ONCE: their per-cell integer
-  * distance counts (`SwivelPrep.cellCounts`) are landed a single time, and
-  * the cells, the marginals, the shards and the final cell count all read
-  * that one landed relation. Writes:
+  * Reads a corpus (plain-text lines or a parquet documents table) and
+  * lands it once with `SwivelPrep.prepare` (the vocab and the per-cell
+  * distance counts of the one pair pass); the cells, the marginals, the
+  * shards and the final cell count all read that landing. Writes:
   *   <output_dir>/shards/   parquet partitioned by (row_shard, col_shard)
   *                          (or shards_pb/ + the .txt side files for pb)
   *   <output_dir>/vocab/    (id, token, cnt)
@@ -62,14 +61,8 @@ object SwivelMain {
       case "parquet" => spark.read.parquet(input).select("doc_id", "text")
       case _         => Sources.textCorpus(spark, input)
     }
-    // an eager local checkpoint: every consumer reads the landed vocab
-    val vocab = SwivelPrep.buildVocab(docs, minCount, shardSize)
-    val vocabSize = vocab.count().toInt
-    // the one pair pass: exact per-cell distance counts, landed eagerly
-    val counts = SwivelPrep.cellCounts(docs, vocab, windowSize).localCheckpoint()
-    val cells = SwivelPrep.cellsFromCounts(counts, windowSize)
-    val sharded = SwivelPrep.shard(cells, vocab, shardSize)
-    val marg = SwivelPrep.marginalsFromCounts(counts, windowSize)
+    val prepared = SwivelPrep.prepare(docs, minCount, shardSize, windowSize)
+    import prepared.{counts, marginals, numShards, shards, vocab, vocabSize}
     if (vocabSize == 0) {
       // corpus smaller than one shard: vocab truncates to zero — mirror
       // the parquet path's graceful empty output instead of crashing in
@@ -84,13 +77,13 @@ object SwivelMain {
       // sums are driver-bounded (truncated vocabulary), so a driver-side
       // text write is the honest scale story; the matrix is symmetric,
       // so row and col files are identical.
-      graft.sources.TfExample.writeSwivelPbShards(sharded,
-        vocabSize / shardSize, vocabSize, s"$outDir/shards_pb")
+      graft.sources.TfExample.writeSwivelPbShards(shards,
+        numShards, vocabSize, s"$outDir/shards_pb")
       import spark.implicits._
       val tokens = vocab.orderBy("id").select("token").as[String].collect()
       // every vocab id gets a sum line; ids with no in-window pairs are 0
       val sums = Array.fill(vocabSize)(0.0)
-      marg.as[(Long, Double)].collect().foreach { case (id, m) => sums(id.toInt) = m }
+      marginals.as[(Long, Double)].collect().foreach { case (id, m) => sums(id.toInt) = m }
       def writeLines(name: String, lines: Iterable[String]): Unit =
         java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
           (lines.mkString("\n") + "\n").getBytes("UTF-8"))
@@ -102,9 +95,9 @@ object SwivelMain {
       // marginals are 4dp-rounded upstream, so fixed %.4f is exact.
       writeLines("row_sums.txt", sums.map(v => f"$v%.4f"))
       writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
-    } else Sources.writeShards(sharded, s"$outDir/shards")
+    } else Sources.writeShards(shards, s"$outDir/shards")
     Sources.writeSideOutput(vocab, s"$outDir/vocab")
-    Sources.writeSideOutput(marg, s"$outDir/row_sums")
+    Sources.writeSideOutput(marginals, s"$outDir/row_sums")
     println(s"swivel-prep done: vocab=$vocabSize cells=${counts.count()} -> $outDir")
     // free the landed blocks: `run` may share a long-lived session
     Seq(counts, vocab).foreach(org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint)

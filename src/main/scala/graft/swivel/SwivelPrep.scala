@@ -198,8 +198,8 @@ object SwivelPrep {
 
   /** Per-cell pair counts: (row_id, col_id, n1..nW), n_k the number of
     * in-window co-occurrences at distance k. Every other Swivel relation
-    * (cells, marginals, shards) derives from these exact integers, so a
-    * pipeline can land them once and read them per consumer. */
+    * (cells, marginals, shards) derives from these exact integers, so
+    * `prepare` lands them once and every consumer reads that landing. */
   def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
     distanceCounts(coocPairs(docs, vocab, windowSize), windowSize, "row_id", "col_id")
 
@@ -248,14 +248,13 @@ object SwivelPrep {
     * log() never runs — monotone in the ratio, so ranking by ratio IS
     * ranking by PMI and the emitted integer is engine-identical.
     *
-    * Scale: one pair-level groupBy (the cooc shuffle), a vocab-bounded
-    * marginal groupBy, a 1-row total broadcast, two vocab-bounded
-    * marginal joins onto the cell relation, top-k per-partition heaps. */
-  def pmiCells(docs: DataFrame, vocab: DataFrame, windowSize: Int,
-      minScaled: Long, topK: Int): DataFrame = {
+    * Scale: over the `cellCounts` cells, a vocab-bounded marginal
+    * groupBy, a 1-row total broadcast, two vocab-bounded marginal joins
+    * onto the cell relation, top-k per-partition heaps. */
+  def pmiCells(counts: DataFrame, windowSize: Int, minScaled: Long, topK: Int): DataFrame = {
     val lcm = (1 to windowSize).foldLeft(1L)((a, k) =>
       a * k / BigInt(a).gcd(BigInt(k)).toLong)
-    val cells = cellCounts(docs, vocab, windowSize).select(col("row_id"), col("col_id"),
+    val cells = counts.select(col("row_id"), col("col_id"),
       fromCounts(windowSize)((n, k) => n * lit(lcm / k)).as("sw"))
     val marg = cells.groupBy("row_id").agg(sum(col("sw")).as("smi"))
     val tot = cells.agg(sum(col("sw")).as("st"))
@@ -293,5 +292,26 @@ object SwivelPrep {
         col("row_id").as("global_row"),
         col("col_id").as("global_col"),
         col("weight"))
+  }
+
+  /** Swivel prep landed once: the vocab, its size and the per-cell
+    * distance counts of the one pair pass. The cells, the marginals and
+    * the shards all derive from `counts`. */
+  final case class Prepared(vocab: DataFrame, vocabSize: Int, counts: DataFrame,
+      windowSize: Int, shardSize: Int) {
+    def numShards: Int = vocabSize / shardSize
+    lazy val cells: DataFrame = cellsFromCounts(counts, windowSize)
+    lazy val marginals: DataFrame = marginalsFromCounts(counts, windowSize)
+    lazy val shards: DataFrame = shard(cells, vocab, shardSize)
+  }
+
+  /** The vocab (landed by `buildVocab`), its size, then the cell counts
+    * landed with an eager local checkpoint. Both landings hold storage
+    * blocks until the caller releases them or its session stops. */
+  def prepare(docs: DataFrame, minCount: Int, shardSize: Int, windowSize: Int): Prepared = {
+    val vocab = buildVocab(docs, minCount, shardSize)
+    val vocabSize = vocab.count().toInt
+    Prepared(vocab, vocabSize, cellCounts(docs, vocab, windowSize).localCheckpoint(),
+      windowSize, shardSize)
   }
 }

@@ -11,12 +11,18 @@ class CdcBoundariesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The rolling hash of `Dedup.cdcChunks` as a polynomial over the
+    * per-doc code array: the 8 chars ending at position i, base 31. */
+  private val cdcPolySpark: String =
+    (0 to 7).map(j => s"CAST(element_at(codes, i - ${7 - j}) AS BIGINT) * ${math.pow(31, 7 - j).toLong}")
+      .mkString(" + ")
+
   private def hofBoundaries(df: org.apache.spark.sql.DataFrame) =
     df.withColumn("codes",
         expr("transform(sequence(1, greatest(length(text), 1)), i -> ascii(substring(text, i, 1)))"))
       .withColumn("bpos",
         expr("filter(sequence(8, greatest(length(text) - 1, 8)), " +
-          "i -> i < length(text) AND (" + graft.ops.Dedup.cdcPolySpark + ") % 16 = 0)"))
+          "i -> i < length(text) AND (" + cdcPolySpark + ") % 16 = 0)"))
       .select(col("id"), col("bpos"))
 
   test("matches the HOF polynomial filter on corpus text, short strings, and empty") {

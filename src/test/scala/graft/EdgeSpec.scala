@@ -1352,7 +1352,8 @@ class EdgeSpec extends AnyFunSuite {
     // semantic difference from text_unigram_encode's Viterbi, pinned.
     val docs = Seq(("en", "abcde abcde xy")).toDF("lang", "text")
     val inv = Seq("a", "b", "c", "d", "e", "x", "y", "ab", "abc", "cde")
-    val r = graft.ops.Wordpiece.encodeGreedy(docs, inv).collect()
+    val r = graft.ops.Wordpiece.encodeGreedyWith(docs, graft.ops.Wordpiece.vocabOf(docs), inv)
+      .collect()
     assert(r.length == 1)
     val row = r(0)
     assert(row.getAs[Long]("n_words") == 3L)

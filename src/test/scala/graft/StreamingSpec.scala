@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps
@@ -16,10 +17,28 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
+  /** 1-hour tumbling counts + value sums per event_type, late rows beyond
+    * the watermark dropped: the streaming form of `stream_tumbling`, whose
+    * watermark `stream_watermark` projects onto a batch. */
+  private def tumblingCounts(events: DataFrame, watermark: String) =
+    events.withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .select(col("window.start").as("window_start"), col("event_type"),
+        col("n"), col("sum_value"))
+
+  /** 1-hour windows sliding every 30 minutes: the streaming form of
+    * `stream_sliding`. */
+  private def slidingCounts(events: DataFrame) =
+    events.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").as("window_start"), col("n"))
+
   test("tumbling watermark: on-time rows aggregate, row behind watermark is dropped") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val agg = StreamOps.tumblingCounts(
+    val agg = tumblingCounts(
       input.toDF().toDF("ts", "event_type", "value"), watermark = "1 hour")
     val q = agg.writeStream.format("memory").queryName("wm_out")
       .outputMode("append").start()
@@ -353,7 +372,7 @@ class StreamingSpec extends AnyFunSuite {
   test("sliding windows: an event lands in exactly two 1h/30min windows") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val agg = StreamOps.slidingCounts(input.toDF().toDF("ts", "event_type", "value"))
+    val agg = slidingCounts(input.toDF().toDF("ts", "event_type", "value"))
     val q = agg.writeStream.format("memory").queryName("slide_out")
       .outputMode("append").start()
     try {
@@ -492,13 +511,14 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cdcMergeWriter: replay-idempotent, batch-order-insensitive, tombstone outranks older upsert") {
-    import org.apache.spark.sql.DataFrame
     def chg(rows: (Long, String, Double, Long)*): DataFrame =
       rows.toDF("k", "op", "v", "event_id")
+    // the landed state as stream_upsert_sink reads it: the latest
+    // version, tombstones filtered
     def state(root: String): Set[(Long, String, Double, Long)] =
-      StreamOps.cdcLatestState(spark, root, tombstoneOp = "error")
-        .map(_.as[(Long, String, Double, Long)].collect().toSet)
-        .getOrElse(Set.empty)
+      spark.read.parquet(StreamOps.FileSink.cdcMerge.landed(root))
+        .filter(col("op") =!= "error")
+        .as[(Long, String, Double, Long)].collect().toSet
     def rawLatest(root: String): Set[(Long, String, Double, Long)] = {
       val vs = new java.io.File(root).listFiles
         .filter(_.getName.startsWith("v=")).map(_.getName.stripPrefix("v=").toLong)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -12,6 +13,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
+import graft.ops.{ColdWork, Swivel}
 import graft.swivel.{SwivelMain, SwivelPrep}
 
 /** Hand-computed goldens for the Swivel prep pipeline (SURVEY §5.2-3). */
@@ -109,17 +111,17 @@ class SwivelSpec extends AnyFunSuite {
     dir
   }
 
-  /** The executed plans of every query `f` runs. */
-  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+  /** The executed plans of every query `f` runs on `session`. */
+  private def executedPlans(session: SparkSession)(f: => Unit): Seq[SparkPlan] = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBus.drain(spark)
-    spark.listenerManager.register(listener)
-    try { f; ListenerBus.drain(spark) } finally spark.listenerManager.unregister(listener)
+    ListenerBus.drain(session)
+    session.listenerManager.register(listener)
+    try { f; ListenerBus.drain(session) } finally session.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }
 
@@ -145,7 +147,7 @@ class SwivelSpec extends AnyFunSuite {
     val out = dir.resolve("out").toString
     val opts = SwivelMain.Options(input = dir.resolve("corpus.txt").toString, outDir = out,
       shardSize = 1, minCount = 1, windowSize = 3, outputFormat = "pb")
-    val plans = executedPlans(SwivelMain.run(spark, opts))
+    val plans = executedPlans(spark)(SwivelMain.run(spark, opts))
     assert(plans.count(PlanNodes.docIdJoin) == 0)
     assert(plans.count(PlanNodes.docIdShuffle) == 1)
     val d = graft.sources.Sources.textCorpus(spark, opts.input)
@@ -158,6 +160,19 @@ class SwivelSpec extends AnyFunSuite {
       .select("global_row", "global_col", "weight").as[(Long, Long, Float)].collect().toSet
     assert(cells == SwivelPrep.cooc(d, vocab, 3).as[(Long, Long, Double)].collect()
       .map { case (r, c, w) => (r, c, w.toFloat) }.toSet)
+  }
+
+  test("the nine swivel_* keys in one session: two pair passes, one cold landing") {
+    val s = spark.newSession()
+    val c0 = ColdWork.count
+    val plans = executedPlans(s) {
+      Swivel.all.foreach(q =>
+        q.fn(s, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save())
+    }
+    // the shared `swivel.counts` landing, and swivel_cooc_salted's own
+    // salted aggregation over the pairs
+    assert(plans.count(PlanNodes.docIdShuffle) == 2)
+    assert(ColdWork.count - c0 == 1)
   }
 
   test("SwivelMain.run: a rerun with fewer shards leaves exactly its own .pb grid") {

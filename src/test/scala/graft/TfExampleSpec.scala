@@ -212,17 +212,6 @@ class TfExampleSpec extends AnyFunSuite {
     assert(back.nonEmpty)
   }
 
-  test("orc passthroughs round-trip a table") {
-    import graft.sources.Sources
-    val df = Tables.customer(spark, "/root/testdata/sf0.001")
-      .select("c_custkey", "c_name", "c_acctbal")
-    val dir = Files.createTempDirectory("graft_orc").toString + "/t"
-    Sources.writeOrc(df, dir)
-    val back = Sources.orc(spark, dir)
-    assert(back.orderBy("c_custkey").collect().toSeq ==
-      df.orderBy("c_custkey").collect().toSeq)
-  }
-
   test("Swivel .pb shard sink: files decode back to exactly the shard relation") {
     val docs = Seq((0L, "a a b b c c d d"), (1L, "a b c d a b c d"))
       .toDF("doc_id", "text")
