@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Bench mirror roots under `tmp` built for a layout other than
     * `layout`, the current layout's root prefix. */
@@ -42,102 +41,90 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, cpus) = LocalSession()
+    // "harness" tags the methodology: totals are only comparable when the
+    // tag matches (BASELINE.md)
+    val harness = "repeat-and-min-v5d-mirror"
     // One-time session warmup (scheduler + codegen compiler init) so the
     // first measured query isn't charged Spark's startup cost; fixed query
-    // order keeps per-query numbers comparable across rounds.
+    // order keeps per-query numbers comparable across runs.
     try spark.range(1000).selectExpr("sum(id)").collect()
     catch { case _: Throwable => () }
-    // Multi-split bench mirror (v4, round 9): the sf0.1 fixtures are
-    // SINGLE-row-group parquet files, and a row group is parquet's unit of
-    // split — so every full-table scan in the bench ran on 1 core and the
-    // per-key floors measured the 1-core-scan artifact, not the plan
-    // (BASELINE.md documents the sub-1 10× ratios this produced:
-    // join_bloom, agg_approx_percentile, swivel_shard_pb...). The fixture
-    // dir is read-only, so Bench lands a one-time 32-split mirror of the
-    // big tables under /tmp (small dims stay 1 file — 32 tiny files would
-    // ADD task overhead) and times every key against it. Row-identical
-    // data, layout the writer of a real 100 TB corpus would produce.
-    // Opt out with SPARK_GRAFT_BENCH_MIRROR=0 (times the raw dir).
-    // Timed keys never pay the mirror build: it happens before rep 1.
-    val benchDir =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_MIRROR", "1") == "0") sfDir
-      else {
-        import java.nio.file.{Files, Paths}
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        // layout version in the root: _MIRROR_READY persists across
-        // processes, so a split-rule change must land in a FRESH root —
-        // otherwise a host that ever built the old layout silently
-        // benches against it forever
-        val layout = "graft_bench_mirror_v5_"
-        val root = s"/tmp/$layout$hex"
-        val ready = Paths.get(root, "_MIRROR_READY")
-        if (!Files.exists(ready)) {
-          // building a fresh layout: delete the mirror roots of prior
-          // layout versions so orphaned full-dataset copies don't
-          // accumulate in /tmp across layout bumps. Roots of the current
-          // layout stay: another process may be building or scanning one
-          // (a mirror of another fixture dir). Best-effort — a failure
-          // here can only leave the nuisance it was cleaning.
-          staleMirrors(new java.io.File("/tmp"), layout)
-            .foreach(f => try graft.ops.Staging.deleteTree(f.getPath)
-              catch { case _: Throwable => () })
-          for (t <- Tables.all) {
-            val src = Paths.get(s"$sfDir/$t.parquet")
-            if (Files.exists(src)) {
-              // events arrives as a nanos BIGINT under the session's
-              // nanosAsLong conf and is written back as plain BIGINT —
-              // Tables.events normalizes either layout identically.
-              val df = spark.read.parquet(src.toString)
-              // v5 (round 15): per-table split counts, A/B-measured
-              // (min-of-3, interleaved, one session per comparison).
-              // The v4 byte threshold (≥4 MB → 32) split only lineitem;
-              // documents' per-row compute (shingle explodes, per-token
-              // md5) dwarfs its 600 KB, so every text key's heavy stage
-              // ran on ONE core (measured: agg_sketch_cms 0.92 → 0.41 s,
-              // text_span_dedup 0.84 → 0.43, sample_dsir 1.13 → 0.59 at
-              // 8 splits). A uniform 32 regressed broadly (+34 s suite):
-              // 60-row parquet files pay open/footer cost on every scan
-              // of the many-scan keys. events/orders carry moderate
-              // per-row work (wide 32 was -0.4 s/key, 4 is neutral-to-
-              // positive); embeddings (2,000 rows) never benefits from
-              // splitting — its kernels are dot-product-bound, not
-              // scan-bound. Dims stay 1 file.
-              val splits = Map("lineitem" -> 32, "documents" -> 8,
-                "events" -> 4, "orders" -> 4).getOrElse(t, 1)
-              df.repartition(splits).write.mode("overwrite")
-                .parquet(s"$root/$t.parquet")
-            }
+    // Multi-split bench mirror: the fixtures are SINGLE-row-group parquet
+    // files, and a row group is parquet's unit of split — so every
+    // full-table scan would run on 1 core and the per-key floors would
+    // measure that artifact, not the plan (BASELINE.md documents the
+    // sub-1 10× ratios it produced: join_bloom, agg_approx_percentile,
+    // swivel_shard_pb...). The fixture dir is read-only, so Bench lands a
+    // one-time multi-split mirror of the big tables under /tmp and times
+    // every key against it: row-identical data, in the layout the writer
+    // of a real 100 TB corpus would produce. Timed keys never pay the
+    // mirror build: it happens before rep 1.
+    val benchDir = {
+      import java.nio.file.{Files, Paths}
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      // layout version in the root: _MIRROR_READY persists across
+      // processes, so a split-rule change must land in a FRESH root —
+      // otherwise a host that ever built the old layout silently
+      // benches against it forever
+      val layout = "graft_bench_mirror_v5_"
+      val root = s"/tmp/$layout$hex"
+      val ready = Paths.get(root, "_MIRROR_READY")
+      if (!Files.exists(ready)) {
+        // building a fresh layout: delete the mirror roots of prior
+        // layout versions so orphaned full-dataset copies don't
+        // accumulate in /tmp across layout bumps. Roots of the current
+        // layout stay: another process may be building or scanning one
+        // (a mirror of another fixture dir). Best-effort — a failure
+        // here can only leave the nuisance it was cleaning.
+        staleMirrors(new java.io.File("/tmp"), layout)
+          .foreach(f => try graft.ops.Staging.deleteTree(f.getPath)
+            catch { case _: Throwable => () })
+        for (t <- Tables.all) {
+          val src = Paths.get(s"$sfDir/$t.parquet")
+          if (Files.exists(src)) {
+            // events arrives as a nanos BIGINT under the session's
+            // nanosAsLong conf and is written back as plain BIGINT —
+            // Tables.events normalizes either layout identically.
+            val df = spark.read.parquet(src.toString)
+            // Per-table split counts, A/B-measured (min-of-3,
+            // interleaved, one session per comparison). Splitting only
+            // tables of ≥4 MB split lineitem alone; documents' per-row
+            // compute (shingle explodes, per-token md5) dwarfs its
+            // 600 KB, so every text key's heavy stage ran on ONE core
+            // (measured: agg_sketch_cms 0.92 → 0.41 s, text_span_dedup
+            // 0.84 → 0.43, sample_dsir 1.13 → 0.59 at 8 splits). A
+            // uniform 32 regressed broadly (+34 s suite): 60-row parquet
+            // files pay open/footer cost on every scan of the many-scan
+            // keys. events/orders carry moderate per-row work (wide 32
+            // was -0.4 s/key, 4 is neutral-to-positive); embeddings
+            // (2,000 rows) never benefits from splitting — its kernels
+            // are dot-product-bound, not scan-bound. Dims stay 1 file:
+            // 32 tiny files would ADD task overhead.
+            val splits = Map("lineitem" -> 32, "documents" -> 8,
+              "events" -> 4, "orders" -> 4).getOrElse(t, 1)
+            df.repartition(splits).write.mode("overwrite")
+              .parquet(s"$root/$t.parquet")
           }
-          Files.write(ready, Array.emptyByteArray)
         }
-        System.err.println(s"bench mirror: $root")
-        root
+        Files.write(ready, Array.emptyByteArray)
       }
-    // Repeat-and-min, INTERLEAVED (v3): rep-1 of every key, then rep-2 of
-    // every key, then rep-3 — instead of `reps` consecutive runs per key.
-    // The per-key minimum is still the reproducible cost-of-the-plan
-    // signal (a sequential session accumulates JIT/GC/block-manager noise
-    // that can swing a 0.5 s query to 5 s — observed round 3). The v2
-    // consecutive layout had a failure mode round 8 exposed: a multi-minute
+      System.err.println(s"bench mirror: $root")
+      root
+    }
+    // Repeat-and-min, INTERLEAVED: rep 1 of every key, then rep 2 of
+    // every key, then rep 3 — instead of `reps` consecutive runs per key.
+    // The per-key minimum is the reproducible cost-of-the-plan signal (a
+    // sequential session accumulates JIT/GC/block-manager noise that can
+    // swing a 0.5 s query to 5 s). With consecutive reps, a multi-minute
     // HOST stall covers all 3 back-to-back reps of whichever few keys are
-    // running, so min-of-3 keeps the inflated number (join_salted 32 s in
-    // the r8 driver artifact vs 0.34 s on a quiet host). Interleaving makes
-    // a stall window touch ONE rep of many keys — min-of-3 then discards
-    // it for every key. Cross-tag totals don't compare (BASELINE.md).
-    // Optional comma-separated key filter for local A/B runs (the
-    // graph-family share study); the driver never sets it, so round
-    // artifacts always carry the full map.
+    // running, so min-of-3 keeps the inflated number (join_salted 32 s vs
+    // 0.34 s on a quiet host). Interleaving makes a stall window touch ONE
+    // rep of many keys — min-of-3 then discards it for every key.
+    // Optional comma-separated key filter for local A/B runs; the driver
+    // never sets it, so its artifacts always carry the full map.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -145,20 +132,20 @@ object Bench {
     // sql_tpch_parity caches its 22-query certification per (session,
     // dataset), so min-of-3 measures the cached rep — honest for a
     // deterministic CI certification, but the artifact must also carry
-    // the COLD certification cost (round-13 verdict #5). Rep 1 is the
-    // first run of the key in this session = the cold cost; recorded
-    // separately as "cold_s" so the line self-describes. Since round 15
-    // the certification also persists per (dataset, build fingerprint)
-    // across PROCESSES (TpchSqlParity.persist): if an earlier JVM of
-    // the SAME build already certified this dataset, rep 1 here is a
-    // cache read and cold_s records that — the true cold cost is paid
-    // exactly once per (build, dataset), by whichever process ran
-    // first. Any rebuild voids the cache, so cold_s after a code change
-    // is always a real certification.
-    // sampled BEFORE rep 1: whether the parity certification will be a
+    // the COLD certification cost. Rep 1 is the first run of the key in
+    // this session = the cold cost; recorded separately as "cold_s" so
+    // the line self-describes. The certification also persists per
+    // (dataset, build fingerprint) across PROCESSES
+    // (TpchSqlParity.persist): if an earlier JVM of the SAME build
+    // already certified this dataset, rep 1 here is a cache read and
+    // cold_s records that — the true cold cost is paid exactly once per
+    // (build, dataset), by whichever process ran first. Any rebuild
+    // voids the cache, so cold_s after a code change is always a real
+    // certification.
+    // Sampled BEFORE rep 1: whether the parity certification will be a
     // cross-process cache read rather than a real cold run — emitted as
-    // "cold_cached" so a tiny cold_s can never masquerade as a 500×
-    // plan win (review finding)
+    // "cold_cached" so a tiny cold_s can never masquerade as a 500× plan
+    // win.
     val parityWasCached =
       try graft.ops.TpchSqlParity.hasPersistedReport(benchDir)
       catch { case _: Throwable => false }
@@ -173,19 +160,14 @@ object Bench {
     // a key with any failed rep is listed under "failed" and left out of
     // the per-key map and the total
     val results = keys.map(_._1).filterNot(r.failed.contains).map(n => n -> r.best(n))
-    // Centisecond precision: the round-7 artifact of record truncated
-    // mid-line at 133 keys even at ms precision (47 keys lost from the
-    // driver's tail window). 10 ms resolution halves the fractional
-    // digits — sub-10ms deltas are pure noise at these scales — and the
-    // line now prints FIRST (below) so head-capture keeps it even if the
-    // tail window is still too small.
+    // Centisecond precision keeps the full line short: at ms precision it
+    // truncated mid-line in the driver's tail window. Sub-10ms deltas are
+    // pure noise at these scales, and the line prints FIRST (below) so
+    // head-capture keeps it even if the tail window is still too small.
     def cs(v: Double): Double = math.rint(v * 100) / 100
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + cs(v) }
       .mkString("{", ",", "}")
     val total = cs(results.map(_._2).sum)
-    // "harness" tags the methodology: round-over-round totals are only
-    // comparable when the tag matches (repeat-and-min vs the single-shot
-    // harness of rounds 1-3).
     // a filtered A/B run marks itself in the JSON so a partial-suite
     // total can never masquerade as a full-suite artifact
     val filteredTag = if (only.isDefined) s""","filtered":${keys.size}""" else ""
@@ -207,17 +189,14 @@ object Bench {
         .map(v => s""","cold_s":{"sql_tpch_parity":${cs(v)}}""").getOrElse("")
       s""","n_cold":${coldS.size}$parity,"cold_cached":$parityWasCached"""
     }
-    // "cpus":<n> in every record (round 16, r15 verdict #2): the 8-core
-    // scaling run's artifact was byte-indistinguishable from the 32-core
-    // artifact of record and silently clobbered BENCH.json
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"repeat-and-min-v5c-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
-    // The "metric" stdout line prints FIRST, the moment it exists:
-    // the driver's artifact window lost the line's head in r5 (tail-only
-    // capture) and its tail in r7 — printing the line before any other
-    // post-run output maximizes what any truncation window keeps. (It
-    // prints AGAIN as the final stdout line below; both copies are
-    // byte-identical, so any first- or last-match "metric" grep reads
-    // the same record.)
+    // "cpus":<n> in every record: without it, a scaling run's artifact at
+    // another core count is byte-indistinguishable from the artifact of
+    // record and would silently clobber BENCH.json
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"harness":"$harness","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTag,"queries":$qs,"sf":"$sfDir"}"""
+    // The "metric" stdout line prints FIRST, the moment it exists, so a
+    // head-only capture window keeps it; it prints AGAIN as the last full
+    // line below for tail-only capture. Both copies are byte-identical,
+    // so any first- or last-match "metric" grep reads the same record.
     println(line)
     // Belt-and-braces: persist the same JSON to a file the driver
     // snapshots (covers any stdout capture loss). The write target is
@@ -234,16 +213,15 @@ object Bench {
       println("BENCH.json NOT written (SPARK_GRAFT_BENCH_ONLY filter active)")
     } else try {
       // a SCALING run (different core count than an existing artifact of
-      // record) must not clobber BENCH.json — the r15 8-core run left a
-      // byte-plausible wrong-core map committed. The existing artifact's
-      // own "cpus" field decides; a run at a new core count lands in a
+      // record) must not clobber BENCH.json. The existing artifact's own
+      // "cpus" field decides; a run at a new core count lands in a
       // suffixed file instead.
       val canonical = java.nio.file.Paths.get("BENCH.json").toAbsolutePath
       val existingCpus =
         if (!java.nio.file.Files.exists(canonical)) None
         else """"cpus":(\d+)""".r.findFirstMatchIn(
           new String(java.nio.file.Files.readAllBytes(canonical), "UTF-8"))
-          .map(_.group(1))
+          .map(_.group(1).toInt)
       val p =
         if (existingCpus.exists(_ != cpus))
           java.nio.file.Paths.get(s"BENCH_c$cpus.json").toAbsolutePath
@@ -254,26 +232,22 @@ object Bench {
       System.err.println(s"BENCH.json write FAILED (stdout line is the only record): $e")
     }
     spark.stop()
-    // The identical full line AGAIN near the end of stdout: the r9
-    // driver artifact kept only a stdout TAIL window (the head print
-    // above was truncated away and BENCH_r09.json landed with
-    // "parsed": null) — printing first AND last covers head-capture and
-    // tail-capture drivers alike. spark.stop() runs first so no late
-    // executor chatter can land after it. NOTE (round-11 advice): a
-    // "metric"-line grep now yields TWO DISTINCT records — this ~7 KB
-    // full per-query line (twice, byte-identical) and the <200 B
-    // compact record below, distinguishable by its "compact":true tag;
-    // consumers wanting the per-query map must take a line WITHOUT the
-    // tag, tail-window parsers get at least the compact total.
+    // The identical full line AGAIN near the end of stdout, for drivers
+    // that keep only a stdout tail window. spark.stop() runs first so no
+    // late executor chatter can land after it. A "metric"-line grep thus
+    // yields TWO DISTINCT records — this full per-query line (twice,
+    // byte-identical) and the <200 B compact record below, tagged
+    // "compact":true; consumers wanting the per-query map must take a
+    // line WITHOUT the tag, tail-window parsers get at least the compact
+    // total.
     println(line)
-    // COMPACT summary as the true final line (round-10 finding: the
-    // full per-query line is wider than the driver's 2,000-char tail
-    // window, so BOTH copies above truncate and the artifact lands
-    // "parsed": null). This line is <200 bytes — any tail window keeps
-    // it whole; the full per-query map lives in BENCH.json and the long
-    // line. Flushed so the final line cannot be lost to stream
+    // COMPACT summary as the true final line: the full per-query line is
+    // wider than the driver's 2,000-char tail window, so BOTH copies
+    // above truncate there. This line is <200 bytes — any tail window
+    // keeps it whole; the full per-query map lives in BENCH.json and the
+    // long line. Flushed so the final line cannot be lost to stream
     // buffering when the driver kills the process at exit.
-    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"repeat-and-min-v5c-mirror","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","cpus":$cpus,"n":${keys.size},"harness":"$harness","reps":$reps,"stat":"min"$failedTag$filteredTag$coldTagCompact,"sf":"$sfDir"}""")
     System.out.flush()
     if (r.failed.nonEmpty) sys.exit(1)
   }

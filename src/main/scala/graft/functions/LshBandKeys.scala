@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * Why an expression instead of `bands × rowsPerBand` DotProduct columns:
   * the unrolled 128-dot projection tree exceeded the whole-stage-codegen
   * size limits and forced the entire projection stage to run interpreted
-  * (the round-4 bench's #2 cost). Here the generated code is a fixed
+  * (measured as the bench's #2 cost). Here the generated code is a fixed
   * triple loop over a single referenced plane matrix — a few hundred
   * bytes of bytecode regardless of bands/rows/dim — so the stage stays
   * inside WholeStageCodegen and the plane constants live in ONE flat

@@ -44,7 +44,7 @@ final class TopKBuf(val k: Int) {
   * AGGREGATES: each scan partition reduces to one ≤ k-entry buffer per
   * group BEFORE the exchange, so the shuffle carries groups·k rows
   * instead of every candidate row. The window form has no partial step
-  * — at the round-14 100× study point the kNN-graph top-M window
+  * — at a 100× study point the kNN-graph top-M window
   * shuffled 353M candidate rows; this buffer caps it at n·16. Output:
   * the ids in rank order (the consumers only use the set). Top-k under
   * a total order is merge-order-insensitive, so the result is

@@ -1278,11 +1278,6 @@ object Ann {
       .limit(k)
   }
 
-  /** Train-once + query wrapper (the gated `sim_ann_pq` form). */
-  def pqTopK(emb: DataFrame, queryId: Long, dim: Int, m: Int = 8,
-      codebook: Int = 16, shortlist: Int = 100, k: Int = 10): DataFrame =
-    pqQueryTopK(pqIndex(emb, dim, m, codebook), queryId, shortlist, k)
-
   /** One PQ Lloyd round of the oracle: L2-nearest assignment rank per
     * (subspace, vector), exact integer per-component sums, rebuilt mean
     * codebooks with their half-norms. */

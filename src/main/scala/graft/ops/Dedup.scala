@@ -10,34 +10,6 @@ import graft.Tables
   */
 object Dedup {
 
-  /** Per-document MinHash signature over the distinct-shingle set, via the
-    * one-pass TypedImperativeAggregate sketch (graft.functions.MinHashAgg):
-    * each shingle hashes once (xxhash64) and the k lane-minima accumulate
-    * in a single k-long buffer with map-side partial merge — at 100 TB the
-    * doc_id shuffle carries k·8 bytes per document, not the shingle set.
-    * Output: (doc_id, sig array<long>).
-    */
-  def minHashSignatures(sh: DataFrame, k: Int): DataFrame =
-    sh.groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg.sketch(xxhash64(col("shingle")), k).as("sig"))
-
-  /** LSH candidate pairs with k single-hash bands (r=1): documents sharing
-    * ANY of the k minhashes become candidates. Recall for a pair with
-    * Jaccard j is 1-(1-j)^k — at j=0.5, k=16: 0.99998; at j=1 it is exact.
-    * The shuffle is keyed by (band, hash): bounded bucket joins, never a
-    * cartesian — this is the 100 TB replacement for the all-pairs shingle
-    * join in `dedup_near`.
-    */
-  def minHashCandidates(sh: DataFrame, k: Int = 16): DataFrame = {
-    val sig = minHashSignatures(sh, k)
-    val bands = sig.select(col("doc_id"),
-      posexplode(col("sig")).as(Seq("band", "h")))
-    bands.as("x").join(bands.as("y"), Seq("band", "h"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-      .distinct()
-  }
-
   /** MinHash-LSH near-dup: LSH candidates, then the exact-Jaccard filter —
     * same output contract as `dedup_near`, different (scalable) candidate
     * generator. The oracle is the exact all-pairs computation; the LSH
@@ -48,7 +20,11 @@ object Dedup {
     minHashNearDupFromShingles(Functions.shingles(docs), k, threshold)
 
   /** The LSH near-dup kernel over an already-computed (doc_id, shingle)
-    * relation — the `nearDupPairsFromShingles` split, same motivation. */
+    * relation — the `nearDupPairsFromShingles` split, same motivation.
+    * Candidates come from k single-hash bands (r=1): documents sharing ANY
+    * of the k minhashes meet, so recall for a pair with Jaccard j is
+    * 1-(1-j)^k — at j=0.5, k=16: 0.99998; at j=1 it is exact. The shuffle
+    * is keyed by (band, hash): bounded bucket joins, never a cartesian. */
   def minHashNearDupFromShingles(sh: DataFrame, k: Int = 16,
       threshold: Double = 0.5): DataFrame = {
     // signatures and set sizes come out of ONE doc_id aggregation — the
@@ -124,9 +100,9 @@ object Dedup {
 
   /** The content-collapse rule of the keeper-first family, in ONE
     * place: distinct contents by md5, representative = min doc_id,
-    * multiplicity m. Both the landed gate path and the inline test
-    * forms derive through this, so a change to the collapse (hash or
-    * tie-break) cannot silently fork the relation between paths. */
+    * multiplicity m. The landed gate relations and the specs' inline
+    * ones derive through this, so a change to the collapse (hash or
+    * tie-break) cannot silently fork the relation between them. */
   def repsOf(docs: DataFrame): DataFrame = {
     val hashed = docs.select(col("doc_id"), col("text"),
       md5(col("text")).as("h"))
@@ -171,37 +147,24 @@ object Dedup {
       Text.nearDupPairsFromShingles(sh).select("i", "j"))
   }
 
-  /** The recall report computed KEEPER-FIRST — exactly `dedup_near` vs
-    * `dedup_minhash` pair counts over original doc_ids, without ever
-    * forming a pair between two copies of the same content (the r9
-    * containment remedy applied to the recall study, which would
-    * otherwise pay the exact kernel's quadratic-in-copy-count blowup on
-    * dup-heavy corpora — measured 17× at 10× data before this collapse).
-    * Sound because BOTH kernels are CONTENT-DETERMINED: Jaccard depends
-    * only on the shingle sets, and the MinHash banding only on xxhash64
-    * of the shingles — so for distinct contents c₁ ≠ c₂ either every
-    * (copy-of-c₁, copy-of-c₂) id-pair is found or none (m₁·m₂ pairs,
-    * weighted arithmetic), and same-content pairs (J = 1, identical
-    * signatures ⇒ every band collides) are found by both kernels
-    * whenever the content has ≥ 1 shingle — the C(m,2) term, added to
-    * all three counters. Contents under 3 tokens have no shingles in
-    * either kernel and contribute nothing, exactly as in the full
-    * computation. */
-  def minhashRecallCollapsed(docs: DataFrame): DataFrame = {
-    // feeds both kernels, the multiplicities and the C(m,2) term; ONE
-    // shingle derivation feeds both kernels (each would otherwise
-    // explode + distinct the identical relation)
-    val reps = repsOf(docs).localCheckpoint()
-    val sh = Functions.shingles(reps).localCheckpoint()
-    recallCollapsedCore(reps,
-      Text.nearDupPairsFromShingles(sh).select("i", "j").localCheckpoint(),
-      minHashNearDupFromShingles(sh).select("i", "j").localCheckpoint())
-  }
-
-  /** The recall arithmetic over explicit collapsed relations — shared
-    * by the inline form above (tests) and the landed-relation gate
-    * path (which passes BOTH pair relations pre-landed). */
-  private def recallCollapsedCore(reps: DataFrame, er: DataFrame,
+  /** The recall report computed KEEPER-FIRST over explicit collapsed
+    * relations (`reps` from [[repsOf]], and the exact `er` and LSH `lr`
+    * pair relations between representatives; the gate passes them
+    * landed): exactly `dedup_near` vs `dedup_minhash` pair counts over
+    * original doc_ids, without ever forming a pair between two copies of
+    * the same content, which would otherwise pay the exact kernel's
+    * quadratic-in-copy-count blowup on dup-heavy corpora (measured 17× at
+    * 10× data before this collapse). Sound because BOTH kernels are
+    * CONTENT-DETERMINED: Jaccard depends only on the shingle sets, and
+    * the MinHash banding only on xxhash64 of the shingles — so for
+    * distinct contents c₁ ≠ c₂ either every (copy-of-c₁, copy-of-c₂)
+    * id-pair is found or none (m₁·m₂ pairs, weighted arithmetic), and
+    * same-content pairs (J = 1, identical signatures ⇒ every band
+    * collides) are found by both kernels whenever the content has ≥ 1
+    * shingle — the C(m,2) term, added to all three counters. Contents
+    * under 3 tokens have no shingles in either kernel and contribute
+    * nothing, exactly as in the full computation. */
+  private[graft] def recallCollapsedCore(reps: DataFrame, er: DataFrame,
       lr: DataFrame): DataFrame = {
     val mult = reps.select("doc_id", "m")
     def weighted(p: DataFrame, name: String): DataFrame =
@@ -230,7 +193,7 @@ object Dedup {
     * list (`dedup_minhash`) is quadratic in dup-group width (m copies
     * → C(m,2) pairs) and serves as the bounded AUDIT view only.
     *
-    * Computed KEEPER-FIRST (the minhashRecallCollapsed collapse, sound
+    * Computed KEEPER-FIRST (the `recallCollapsedCore` collapse, sound
     * for the same content-determinism reason): exact-duplicate contents
     * collapse to one representative (min doc_id, multiplicity m) BEFORE
     * shingling, the MinHash-LSH banding + exact-Jaccard filter runs on

@@ -372,8 +372,8 @@ object Events {
   }
 
   /** Deterministic batch projection of the streaming exact-dedup surface
-    * (`StreamOps.dedupEvents` / `dropDuplicatesWithinWatermark`): first
-    * arrival wins per business key. The stream dedups on event_id (unique
+    * (`dropDuplicatesWithinWatermark`): first arrival wins per business
+    * key. The stream dedups on event_id (unique
     * in this corpus), so the batch key dedups on (user_id, event_type) —
     * a key with real duplicates — keeping the full first row by event
     * time (ties break on event_id, the arrival order) plus the count of
@@ -474,10 +474,10 @@ object Events {
   /** Batch gate for the stream-stream interval join surface: view→click
     * pairs per user within 30 minutes (strictly-after, inclusive at the
     * exact gap), aggregated per user. The STREAMING form of the same
-    * relation (`StreamOps.streamIntervalJoin`: two watermarked streams,
-    * time-bound join condition, bounded state) is proven equal to this
-    * batch relation in StreamingSpec; the banded batch plan is what the
-    * same pipeline costs when replayed over history.
+    * relation (two watermarked streams, time-bound join condition,
+    * bounded state) is proven equal to [[intervalJoin]] in StreamingSpec;
+    * the banded batch plan is what the same pipeline costs when replayed
+    * over history.
     */
   val streamJoin = QueryDef(
     "stream_join",
@@ -1178,10 +1178,10 @@ object Events {
   /** LEFT OUTER interval join — the unmatched-detection form of
     * `stream_join` ("views that never got a click inside 30 minutes"):
     * per user the view count, qualifying pair count, and the number of
-    * views with NO click in their window. The batch relation behind
-    * `StreamOps.streamIntervalJoinOuter`, whose streaming form
-    * (null rows emitted only once the watermark proves absence) is
-    * driven in StreamingSpec on the same condition shape.
+    * views with NO click in their window. Its streaming form, a
+    * left-outer stream-stream join (null rows emitted only once the
+    * watermark proves absence), is driven in StreamingSpec on the same
+    * condition shape.
     *
     * Plan: the inner pair side reuses the banded `intervalJoin`
     * (gap-bucket equi candidates, never per-user cartesian); outer-ness

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import Det._
 
-/** Gated text-format source keys (SURVEY.md §2.1, round 7): each key
+/** Gated text-format source keys (SURVEY.md §2.1): each key
   * writes a table subset out through a Spark text-format sink, reads it
   * back through the matching source with an EXPLICIT schema, and emits a
   * deterministic aggregate of the round-tripped rows. The oracle computes
@@ -454,7 +454,7 @@ object Formats {
     // a fixture with ZERO surviving days (count 0, null min/max/sum) —
     // matching the Spark side's global agg, so a degenerate input is a
     // legitimate 1-row relation, not a 0-vs-1-row shape mismatch (the
-    // stream_file_sink round-8 guard class)
+    // stream_file_sink guard class)
     val root = fmtDir(d, "retention")
     val cutoff = java.time.LocalDate.parse("2024-01-15")
     graft.Tables.events(s, d)
@@ -484,7 +484,7 @@ object Formats {
     // predicate excludes them — filter them out of the LIVE accounting
     // too so the retained-null-partition policy and the gate cannot
     // diverge if the events fixture ever gains null timestamps
-    // (review finding; no-op on the current all-non-null fixture)
+    // (a no-op on the current all-non-null fixture)
     val live = s.read.parquet(root + "/t").filter(col("day").isNotNull)
     live
       .agg(count(lit(1)).as("n_rows_live"),
@@ -511,9 +511,8 @@ object Formats {
     * end-to-end. */
   /** The exact-cents customer projection the three snapshot keys
     * (`scan_time_travel`, `maintenance_vacuum`, `scan_cdf`) all stage
-    * from — one Spark helper + one oracle CTE (review finding: the
-    * projection appeared verbatim in six places; a cents-convention
-    * change now lands once). */
+    * from — one Spark helper + one oracle CTE, so a cents-convention
+    * change lands once. */
   private def centsBase(s: SparkSession, d: String): DataFrame =
     graft.Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"),
@@ -688,7 +687,7 @@ object Formats {
       .orderBy("shard")
   }
 
-  /** CHANGE-DATA-FEED READ (round 14) — the diff between two table
+  /** CHANGE-DATA-FEED READ — the diff between two table
     * snapshots as typed change rows (Delta CDF / Iceberg changelog
     * semantics: insert / delete / update_preimage / update_postimage),
     * closing the snapshot loop `scan_time_travel` opened (address a
@@ -739,7 +738,7 @@ object Formats {
     centsBase(s, d).write.mode("overwrite").parquet(root + "/v=0")
     // v1 derives from the MATERIALIZED v=0 snapshot (one scan of the
     // small landed projection, not two more passes over the source
-    // table — review finding), with a collision-safe re-insert offset
+    // table), with a collision-safe re-insert offset
     // past the key domain at any SF (a fixed 10^7 collides once the
     // table exceeds 10M keys)
     val staged0 = s.read.parquet(root + "/v=0")
@@ -779,7 +778,7 @@ object Formats {
       .orderBy("change_type", "c_mktsegment")
   }
 
-  /** WEBDATASET TAR-SHARD EXPORT (round 14) — the multimodal
+  /** WEBDATASET TAR-SHARD EXPORT — the multimodal
     * training-loader handoff format (webdataset.github.io: a POSIX tar
     * per shard, each sample a basename-grouped run of entries —
     * `%09d.json` metadata + `%09d.txt` payload), completing the export

@@ -224,29 +224,22 @@ object Graph {
           .otherwise(col("du")).as("yd"))
   }
 
-  /** Per-node triangle counts over a symmetric (u, v) edge relation:
-    * wedges meet on the oriented center x (equi key; the (yd, y) order
-    * predicate rides as a join filter so each unordered wedge appears
-    * once), then close against a third oriented edge — oriented (y1, y2)
-    * is exactly x = y1 when (yd1, y1) < (yd2, y2), so the closing join is
-    * equi on BOTH endpoints. Each triangle is found exactly once and
-    * explodes to its three member nodes for the rollup.
-    */
-  def triangleCounts(e0: DataFrame): DataFrame =
-    wedgeTriangles(orientByDegree(e0))
-
-  /** The wedge-join core over an ALREADY-ORIENTED (x, y, yd) edge
-    * relation — the single source of truth for the wedge order predicate
-    * and closing-join shape, called by both `triangleCounts` (in-memory
-    * orientation) and `trianglesPlan` (parquet-landed orientation) so the
-    * two paths cannot drift if the tie-break rule changes. */
+  /** Per-node triangle counts over an ALREADY-ORIENTED (x, y, yd) edge
+    * relation ([[orientByDegree]] of a symmetric (u, v) one): wedges meet
+    * on the oriented center x (equi key; the (yd, y) order predicate
+    * rides as a join filter so each unordered wedge appears once), then
+    * close against a third oriented edge — oriented (y1, y2) is exactly
+    * x = y1 when (yd1, y1) < (yd2, y2), so the closing join is equi on
+    * BOTH endpoints. Each triangle is found exactly once and explodes to
+    * its three member nodes for the rollup. The single source of truth
+    * for the wedge order predicate and closing-join shape behind
+    * `trianglesPlan` (parquet-landed orientation). */
   def wedgeTriangles(ed: DataFrame): DataFrame = {
     // parallelism of the wedge stage comes from the INPUT's split/
     // partition count (both joins broadcast, so the probe side's layout
     // is the stage's layout): the landed oriented relation is written
     // multi-split (supplier96Oriented), so no per-read repartition is
-    // needed here. Test callers
-    // (triangleCounts) arrive with shuffle-born partitioning.
+    // needed here.
     val a = ed.select(col("x"), col("y").as("y1"), col("yd").as("yd1"))
     val b = ed.select(col("x"), col("y").as("y2"), col("yd").as("yd2"))
     val c = ed.select(col("x").as("cx"), col("y").as("cy"))

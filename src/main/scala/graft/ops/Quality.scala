@@ -327,7 +327,7 @@ object Quality {
       //
       // The string min/max aggregates ride in their OWN no-grouping pass,
       // cross-joined back onto the single stats row (both sides are
-      // exactly 1 row). Round-15 measurement: a min/max over a STRING
+      // exactly 1 row). Measured: a min/max over a STRING
       // column carries an immutable (variable-length) aggregation buffer,
       // which forces the WHOLE multi-distinct aggregate — including the
       // Expand×(n_cols+1) first level that computes the exact NDVs — into
@@ -485,7 +485,7 @@ object Quality {
       .orderBy("day")
   }
 
-  /** K-ANONYMITY AUDIT (round 14; Sweeney 2002, "k-Anonymity: a model
+  /** K-ANONYMITY AUDIT (Sweeney 2002, "k-Anonymity: a model
     * for protecting privacy") — the privacy gate a data-release /
     * training-corpus pipeline runs beside the PII scrub
     * (`text_pii_scrub` removes direct identifiers; THIS measures
@@ -529,7 +529,7 @@ object Quality {
       .orderBy("c_nationkey")
   }
 
-  /** L-DIVERSITY AUDIT (round 14; Machanavajjhala et al. 2007,
+  /** L-DIVERSITY AUDIT (Machanavajjhala et al. 2007,
     * "l-Diversity: privacy beyond k-anonymity") — the follow-on check
     * to `quality_k_anon`: a class can be large (k-anonymous) yet leak
     * its members' sensitive attribute when every member SHARES it, so

@@ -18,7 +18,7 @@ object QueryDef {
 
   /** Shared temp root for operators that stage files (bucketed tables,
     * landed edge relations, streaming checkpoints/sinks). Two collision
-    * classes are closed here (round-9 advice): the root embeds the JVM's
+    * classes are closed here: the root embeds the JVM's
     * pid so two CONCURRENT drivers over the same dataset cannot wipe each
     * other's checkpoints mid-run, and it embeds the sanitized dataset
     * path itself (not a 32-bit hash of it) so two distinct datasets can
@@ -37,7 +37,7 @@ object QueryDef {
     * streaming checkpoints/sinks). Pid-scoping already prevents
     * cross-process collisions and a reboot clears /tmp, but a
     * long-lived host running many driver/test processes accumulates
-    * dead roots between reboots (review finding) — exit-time cleanup
+    * dead roots between reboots — exit-time cleanup
     * bounds /tmp at one process's footprint. Registered lazily on the
     * first tmpRoot call so pure-batch runs add no hook; failures are
     * swallowed (nothing may throw on the exit path — the pid scoping

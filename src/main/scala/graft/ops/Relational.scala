@@ -221,7 +221,7 @@ object Relational {
       .orderBy("event_id")
   }
 
-  /** The forward direction + tolerance (round 8) — completes the asof
+  /** The forward direction + tolerance — completes the asof
     * surface: for each error, the FIRST click at/after it within 10
     * minutes (the "next recovery action" shape real event pipelines ask
     * for). Same union-tag machinery as `join_asof`, reflected — errors
@@ -242,7 +242,7 @@ object Relational {
       .orderBy("event_id")
   }
 
-  /** The bidirectional member (round 10) — nearest click in EITHER
+  /** The bidirectional member — nearest click in EITHER
     * direction by |Δt|, ties to the at/before side (the finance
     * "nearest quote" rule); each side keeps its own family tie
     * convention. One shuffle + one sort serves both directions
@@ -371,10 +371,9 @@ object Relational {
          |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin)
   }
 
-  /** HLL++ sketch, promoted round 9 from no-oracle to a BOUNDED-ERROR
-    * driver gate (VERDICT r8 item 7): the estimate itself never crosses
-    * the engine boundary (HLL register contents are engine-specific —
-    * DuckDB's HLL is a different sketch), so the hash gates the exact
+  /** HLL++ sketch as a BOUNDED-ERROR driver gate: the estimate itself
+    * never crosses the engine boundary (HLL register contents are
+    * engine-specific — DuckDB's HLL is a different sketch), so the hash gates the exact
     * per-group cardinality PLUS the Spark-computed claim that the sketch
     * landed within its 2% target (TRUE on the oracle side). Measured max
     * error ≤ 0.85% at all three SFs, and the estimator is deterministic

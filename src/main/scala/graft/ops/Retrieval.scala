@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Retrieval-serving operators (round 14): the query-side motions a
+/** Retrieval-serving operators: the query-side motions a
   * trained model's corpus serves — lexical ranking (BM25), hybrid
   * lexical+vector fusion (RRF), scatter-gather sharded top-k, and
   * sliding-window chunking (the RAG ingestion cut).
@@ -31,7 +31,7 @@ object Retrieval {
     * vocabulary, so these are present at every SF); the index is the
     * fusion slot the per-term partial scores pivot on. SINGLE SOURCE:
     * the Spark pivot columns, the fixed sum chain and both oracle
-    * literal lists all derive from this Seq (review finding — a term
+    * literal lists all derive from this Seq (a term
     * added here propagates everywhere or nowhere). */
   private val qTerms: Seq[(String, Int)] =
     Seq("vector", "merge", "customer").zipWithIndex
@@ -137,8 +137,8 @@ object Retrieval {
 
   /** (vec_id, cos) of every non-query vector vs the broadcast query
     * (vec_id 0) — the `sim_search` motion, shared by the hybrid
-    * fusion's dense list and the scatter-gather key (review finding:
-    * one copy of the broadcast-query scoring pattern). Prep rides
+    * fusion's dense list and the scatter-gather key (one copy of the
+    * broadcast-query scoring pattern). Prep rides
     * `Ann.prep` (the family's shared (vec_id, ve, nrm) shape). */
   private[graft] def queryScored(s: SparkSession, d: String): DataFrame = {
     val n = Ann.prep(Tables.embeddings(s, d))

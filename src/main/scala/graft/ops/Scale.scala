@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import Det._
 
-/** Scale-machinery keys (SURVEY.md §2.1/§2.3/§2.4, round 7): the physical
+/** Scale-machinery keys (SURVEY.md §2.1/§2.3/§2.4): the physical
   * layouts and skew defenses a 100 TB deployment leans on, each gated as a
   * declared relation so the driver's hash certifies the machinery does not
   * change the answer.
@@ -238,11 +238,11 @@ object Scale {
     * `agg_percentile` sort-based pass is too expensive at scale. No
     * cross-engine oracle exists for the sketch VALUES (DuckDB's
     * approx_quantile is t-digest — different algorithm, different
-    * answers), so — promoted round 9 from no-oracle (VERDICT r8 item 7,
-    * the agg_approx_distinct shape) — the driver gates the guarantee GK
-    * actually makes: RANK error. The returned p50/p90/p99 values are
-    * joined back against the group and their realized ranks counted; the
-    * hash gates the exact group size plus the Spark-computed claim that
+    * answers), so — the agg_approx_distinct shape — the driver gates
+    * the guarantee GK actually makes: RANK error. The returned
+    * p50/p90/p99 values are joined back against the group and their
+    * realized ranks counted; the hash gates the exact group size plus
+    * the Spark-computed claim that
     * every rank landed within 1% of its target (TRUE on the oracle
     * side; the 0.01·n + 1 slack covers tie-run boundaries). Measured max
     * rank error ≤ 4.1e-4 at all three SFs and the sketch is
@@ -763,7 +763,7 @@ object Scale {
     // cross-joined onto the stats row (1 row × 1 row): a string min/max
     // buffer is immutable and would force the whole Expand-based
     // multi-distinct aggregate into SortAggregate — a full sort of the
-    // corpus×6 expanded rows (round-15 measurement; the Quality.profile
+    // corpus×6 expanded rows (measured; the Quality.profile
     // fix applied to the same plan shape). All remaining buffers are
     // mutable longs/dates, so the NDV pass stays a HashAggregate.
     o.agg(

@@ -270,7 +270,7 @@ object Similarity {
     * sim_search shape at any corpus size). The greedy selection itself is
     * inherently sequential over the 50-row shortlist, so it runs on the
     * driver over BOUNDED collects (50 rel rows + 50 vectors → 1225
-    * pairwise cosines, the pqTopK bounded-collect class); each pairwise
+    * pairwise cosines, the `pqQueryTopK` bounded-collect class); each pairwise
     * dot is the same left-fold accumulation as the distributed
     * DotProduct, so every score is bit-identical to the oracle's
     * list_dot_product replay. The oracle unrolls the 4 greedy steps as

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import Det._
 
-/** Probabilistic-filter / sketch operators (SURVEY.md §2.7b, round 7).
+/** Probabilistic-filter / sketch operators (SURVEY.md §2.7b).
   *
   * Both operators are built from md5 — the one hash both engines compute
   * bit-identically (§2.9) — so their probabilistic behavior (bloom false
@@ -437,13 +437,13 @@ object Sketch {
       // (user_id, d) tiebreak makes the bottom-k slice a TOTAL order: an
       // xxhash64 collision at the k-th boundary would otherwise make the
       // kept set — and the gated membership-share booleans —
-      // partition-order dependent (review finding)
+      // partition-order dependent
       .orderBy("uh", "user_id", "d").limit(k)
     // standard KMV under-full rule: while the sketch holds every element
     // (n < k) the "estimate" IS the exact kept count — (k−1)/u_(k) is
     // only the k-th order statistic's estimator once the sketch is full
-    // (review finding: the smallest SF's union sits 8 elements above k,
-    // so the fallback guards a thinner fixture, not the current gates)
+    // (the smallest SF's union sits 8 elements above k, so the fallback
+    // guards a thinner fixture, not the current gates)
     val est = sk.agg(max(col("uh")).as("uk"), count(lit(1)).as("n_kept"),
         sum(when(col("in_a") && col("in_b"), 1L).otherwise(0L)).as("k_int"),
         sum(when(col("in_a") && !col("in_b"), 1L).otherwise(0L)).as("k_a"),

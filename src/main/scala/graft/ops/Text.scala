@@ -50,10 +50,10 @@ object Text {
     *
     * Candidate generation is a shingle equi-join (never a cartesian): only
     * documents sharing at least one shingle meet. At 100 TB the candidate
-    * generator swaps to MinHash-LSH banding (see Dedup.minHashCandidates) —
-    * the final exact-Jaccard filter below stays the same, so results are
-    * scale-invariant for any candidate set with perfect recall at the
-    * threshold.
+    * generator swaps to MinHash-LSH banding (`dedup_minhash`, see
+    * Dedup.minHashNearDupFromShingles) — the final exact-Jaccard filter
+    * below stays the same, so results are scale-invariant for any
+    * candidate set with perfect recall at the threshold.
     */
   def nearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     nearDupPairsFromShingles(Functions.shingles(docs), threshold)

@@ -226,7 +226,7 @@ object Unigram {
     * WITHOUT a final SELECT, so the train oracle and the encode oracle
     * both concatenate onto it — rather than one string-splitting the
     * other, which made a harmless reformat of the train oracle silently
-    * corrupt the encode oracle (round-12 advice). */
+    * corrupt the encode oracle. */
   def trainPrefixSql: String =
     s"""WITH wd AS (
        |  SELECT w, CAST(count(*) AS BIGINT) AS wc, CAST(length(w) AS INT) AS len

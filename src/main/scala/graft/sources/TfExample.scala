@@ -293,13 +293,15 @@ object TfExample {
     *   sparse_value            : FloatList, the cell weights
     * Each shard is encoded by the one executor task that owns it
     * (`Sources.writeShardFiles`), so nothing shard-sized ever sits on the
-    * driver; a rerun into the same `dir` first deletes the old grid.
+    * driver; a rerun into the same `dir` first deletes the old grid. An
+    * empty vocabulary has zero shards: the old grid is deleted and no
+    * file is written.
     */
   def writeSwivelPbShards(shards: DataFrame, numShards: Int, vocabSize: Int,
       dir: String): Unit = {
-    require(numShards > 0 && vocabSize % numShards == 0,
+    val rowsPerShard = if (numShards == 0) 0 else vocabSize / numShards
+    require(numShards >= 0 && rowsPerShard * numShards == vocabSize,
       s"vocabSize $vocabSize must be a multiple of numShards $numShards")
-    val rowsPerShard = vocabSize / numShards
     Sources.writeShardFiles(
       shards.select(col("row_shard").cast("long"), col("col_shard").cast("long"),
         col("local_row").cast("long"), col("local_col").cast("long"),

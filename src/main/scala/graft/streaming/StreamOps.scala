@@ -7,90 +7,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming operators (SURVEY.md §2.7 streaming truth;
-  * NORTH-STAR). These are the real streaming forms of the batch analogs in
-  * graft.ops.Events — `readStream → transform → writeStream` pipelines
-  * with event-time watermarks. StreamingSpec drives them over
-  * MemoryStream with controlled disorder (late-row drop, session merge);
-  * they are not oracle-checkable (SURVEY §5.2-4). The checkpointed
-  * file-stream gates, which are hash-checked against DuckDB oracles,
-  * run through one runner, [[StreamOps.fileStream]], with the
-  * foreachBatch sinks defined here.
+  * NORTH-STAR): the custom-state sessionizer behind
+  * `stream_stateful_session`, the foreachBatch sinks, and
+  * [[StreamOps.fileStream]], the one runner for the checkpointed
+  * file-stream gates that are hash-checked against DuckDB oracles.
+  * StreamingSpec also drives the sessionizer over MemoryStream with
+  * controlled disorder (late-row drop, session bridging, timeout
+  * emission).
   *
-  * Expects an event-time column `ts`, plus `event_type`/`user_id`/`value`
-  * as in the events table. At scale these are the standard shuffle-on-key
-  * stateful aggregations; the watermark bounds state size.
+  * At scale these are the standard shuffle-on-key stateful operators;
+  * the watermark bounds state size.
   */
 object StreamOps {
-
-  /** 30-minute-gap sessions per user — the streaming form of
-    * graft.ops.Events.sessionize (state merges as rows arrive; watermark
-    * finalizes sessions). */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("t_start"),
-        col("session_window.end").as("t_end"), col("user_id"), col("n_events"))
-
-  /** Streaming exact deduplication by event id within the watermark
-    * horizon — the in-flight form of batch `dedup_exact`: the first
-    * arrival of an id wins, re-deliveries inside the watermark window are
-    * dropped, and (the scale property) the id-set state is EVICTED once
-    * the watermark passes it, so state is proportional to the disorder
-    * window, not the stream's lifetime — `dropDuplicates` without a
-    * watermark would grow state forever. A re-delivery arriving later
-    * than the watermark horizon is NOT caught (the standard at-least-once
-    * → effectively-once trade; catching it exactly needs the batch dedup
-    * over the landed data).
-    */
-  def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream interval join — left events paired with right events
-    * by the same user within (0, maxGap] after them: the two-stream form
-    * of `graft.ops.Events.intervalJoin` (the `stream_join` key's batch
-    * relation). Both sides are watermarked and the join condition bounds
-    * event time on BOTH sides, so each side's buffered state is evicted
-    * once the watermark passes the interval — the condition is what
-    * makes unbounded two-stream state bounded. Output: (user_id,
-    * l_event_id, r_event_id, l_ts, r_ts) per qualifying pair.
-    */
-  def streamIntervalJoin(left: DataFrame, right: DataFrame,
-      maxGap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    intervalJoin(left, right, maxGap, watermark, "inner")
-
-  /** LEFT OUTER stream-stream interval join — the unmatched-detection
-    * form of `streamIntervalJoin` ("views that never got a click"): a
-    * left row that finds no right partner cannot emit immediately (its
-    * match window is still open); it emits WITH NULLS only once the
-    * watermark passes the end of its interval and the engine can prove no
-    * partner will arrive. Same time-bound condition, so both buffers
-    * evict; the null-row latency is the disorder horizon — the inherent
-    * cost of proving absence on an unbounded stream. */
-  def streamIntervalJoinOuter(left: DataFrame, right: DataFrame,
-      maxGap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    intervalJoin(left, right, maxGap, watermark, "left_outer")
-
-  /** Both interval joins: the watermarked `l_`/`r_` projections, the
-    * time-bounded condition and the output columns, under `joinType`. */
-  private def intervalJoin(left: DataFrame, right: DataFrame, maxGap: String,
-      watermark: String, joinType: String): DataFrame = {
-    def side(df: DataFrame, p: String): DataFrame =
-      df.select(col("event_id").as(s"${p}_event_id"),
-          col("user_id").as(s"${p}_user_id"), col("ts").as(s"${p}_ts"))
-        .withWatermark(s"${p}_ts", watermark)
-    side(left, "l").join(side(right, "r"),
-        col("l_user_id") === col("r_user_id") &&
-        col("r_ts") > col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"interval $maxGap"),
-        joinType)
-      .select(col("l_user_id").as("user_id"),
-        col("l_event_id"), col("r_event_id"), col("l_ts"), col("r_ts"))
-  }
 
   /** Open-session state per user: (session start, last event, count),
     * all epoch-µs. */
@@ -115,15 +43,16 @@ object StreamOps {
     (merged :: far).sortBy(_._1)
   }
 
-  /** Watermark-integrated form of [[statefulSessions]]: the same
-    * custom-state sessionizer driven by a real event-time watermark
-    * (`GroupStateTimeout.EventTimeTimeout`), closing the semantic gap the
-    * best-effort form documents. Guarantee: the emitted sessions are
-    * EXACTLY batch `sessionize` over the events the watermark admitted —
+  /** CUSTOM-state sessionization via `flatMapGroupsWithState` — the
+    * KeyValueGroupedDataset stateful surface, with per-key state the
+    * built-in `session_window` aggregation cannot hold — driven by a real
+    * event-time watermark (`GroupStateTimeout.EventTimeTimeout`).
+    * Guarantee: the emitted sessions are EXACTLY batch `sessionize` over
+    * the events the watermark admitted —
     *
     *  - events older than the watermark are dropped DETERMINISTICALLY by
-    *    the stateful operator before they reach the merge logic (the
-    *    best-effort "very late singleton" path cannot fire);
+    *    the stateful operator before they reach the merge logic, so a
+    *    late event never opens a wrong singleton session;
     *  - state holds ALL of a user's still-mutable sessions (those with
     *    `last + gap >= watermark`), not just the newest, so an admitted
     *    out-of-order event always lands in its true session — including
@@ -179,72 +108,6 @@ object StreamOps {
               math.max(nextUs / 1000L + 1L, state.getCurrentWatermarkMs() + 1L))
           }
           closed.map { case (s0, l0, n0) => (uid, s0, l0, n0) }.iterator
-      }
-  }
-
-  /** CUSTOM-state sessionization via `flatMapGroupsWithState` — the
-    * KeyValueGroupedDataset stateful surface, demonstrating semantics
-    * the built-in aggregation can't give you: sessions EMIT exactly when
-    * a later event closes them (incremental output, not a re-aggregated
-    * window), with arbitrary state per key.
-    *
-    * Input: (user_id, epoch-µs event time). Output: CLOSED sessions
-    * `(user_id, t_start, t_end, n_events)` — a session closes when a
-    * later event arrives more than `gapUs` after it (the same
-    * strictly-greater boundary as batch `sessionize` AND as
-    * `session_window`, which also merges at exactly gap distance); the
-    * still-open tail session stays in the group state. State is one
-    * 3-long tuple per active user — bounded, shuffled once on user_id,
-    * the standard stateful-op shape at any scale.
-    *
-    * Ordering contract: events sort by event time WITHIN a micro-batch,
-    * so any time-respecting batch split yields exactly the batch
-    * `sessionize` sessions (StreamingSpec proves this on the real
-    * events table). A cross-batch LATE event — older than the open
-    * session's last event — is handled BEST-EFFORT, without watermark
-    * machinery: if it falls inside (or within gap before) the open
-    * session's span it merges there, extending the start backwards if
-    * needed; if it is older than that it is emitted immediately as a
-    * singleton. Both late paths can deviate from what a batch over the
-    * full history would produce (the event's true session, or a bridge
-    * to it, may already have been emitted) — the guarantees are only
-    * that no event is silently dropped and no emitted interval is
-    * inverted. Exact batch parity for late data needs the watermarking
-    * `sessionCounts` form above.
-    */
-  def statefulSessions(events: Dataset[(Long, Long)],
-      gapUs: Long = 1800000000L): Dataset[(Long, Long, Long, Long)] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, (Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[(Long, Long)], state: GroupState[SessionState]) =>
-          val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long, Long)]
-          var st: Option[SessionState] = state.getOption
-          it.map(_._2).toSeq.sorted.foreach { eus =>
-            st match {
-              case None => st = Some((eus, eus, 1L))
-              case Some((s0, l0, n0)) =>
-                if (eus >= l0) {
-                  if (eus - l0 > gapUs) { // strictly greater: == gap stays
-                    out += ((uid, s0, l0, n0))
-                    st = Some((eus, eus, 1L))
-                  } else st = Some((s0, eus, n0 + 1))
-                } else if (eus >= s0 - gapUs) {
-                  // late but within (or adjacent to) the open session's
-                  // span: merge, extending the start backwards if needed
-                  st = Some((math.min(s0, eus), l0, n0 + 1))
-                } else {
-                  // older than anything the open session can absorb —
-                  // its session may already be emitted; best-effort
-                  // singleton rather than corrupting open state
-                  out += ((uid, eus, eus, 1L))
-                }
-            }
-          }
-          st.foreach(state.update)
-          out.iterator
       }
   }
 

@@ -2,11 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, GraftFunctions}
+import graft.functions.DotProduct
 
 /** The codegen dot product: value equality with the higher-order-function
-  * fold it replaced (bit-for-bit), float/double input handling, SQL
-  * registration. */
+  * fold it replaced (bit-for-bit), float/double input handling, nulls. */
 class DotProductSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -39,16 +38,5 @@ class DotProductSpec extends AnyFunSuite {
       .toDF("a", "b")
     val r = withNull.select(DotProduct.dot(col("a"), col("b"))).collect()
     assert(r.head.isNullAt(0))
-  }
-
-  test("SQL registration: dot_product usable from spark.sql") {
-    GraftFunctions.register(spark)
-    df.createOrReplaceTempView("dp_test")
-    val r = spark.sql(
-      """SELECT dot_product(transform(a, x -> CAST(x AS DOUBLE)),
-        |                   transform(b, x -> CAST(x AS DOUBLE))) AS d
-        |FROM dp_test ORDER BY d DESC""".stripMargin)
-      .as[Double].collect()
-    assert(r.head == 32.0) // 1*4 + 2*5 + 3*6
   }
 }

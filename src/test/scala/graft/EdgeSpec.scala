@@ -555,7 +555,7 @@ class EdgeSpec extends AnyFunSuite {
     // nodes 2 and 3 sit in both; 1 and 4 in one each.
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
     val sym = (und ++ und.map(_.swap)).toDF("u", "v")
-    val got = graft.ops.Graph.triangleCounts(sym)
+    val got = graft.ops.Graph.wedgeTriangles(graft.ops.Graph.orientByDegree(sym))
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L), s"got $got")
   }
@@ -563,7 +563,8 @@ class EdgeSpec extends AnyFunSuite {
   test("triangleCounts: star graph has no triangles; orientation points at the hub") {
     val und = Seq((1L, 2L), (1L, 3L), (1L, 4L))
     val sym = (und ++ und.map(_.swap)).toDF("u", "v")
-    assert(graft.ops.Graph.triangleCounts(sym).count() == 0)
+    assert(graft.ops.Graph.wedgeTriangles(graft.ops.Graph.orientByDegree(sym))
+      .count() == 0)
     // deg(hub 1) = 3, leaves = 1 → every oriented edge starts at a leaf,
     // so the degree-3 hub never pays the wedge join
     val ed = graft.ops.Graph.orientByDegree(sym)
@@ -963,7 +964,12 @@ class EdgeSpec extends AnyFunSuite {
     val full = graft.ops.Similarity.pairRecallReport(
       Text.nearDupPairs(docs), Dedup.minHashNearDup(docs))
       .as[(Long, Long, Long, Long)].collect().head
-    val collapsed = Dedup.minhashRecallCollapsed(docs)
+    // the gate's collapsed relations (landed there), built inline
+    val reps = Dedup.repsOf(docs)
+    val sh = graft.ops.Functions.shingles(reps.select("doc_id", "text"))
+    val collapsed = Dedup.recallCollapsedCore(reps,
+        Text.nearDupPairsFromShingles(sh).select("i", "j"),
+        Dedup.minHashNearDupFromShingles(sh).select("i", "j"))
       .as[(Long, Long, Long, Long)].collect().head
     assert(collapsed == full, s"collapsed $collapsed != full $full")
     // liveness: same-content terms C(3,2)+C(2,2)=4 must be inside the count

@@ -706,9 +706,7 @@ class PlanSpec extends AnyFunSuite {
     // the 100 TB property the cluster contract rides on: candidates
     // come from the posexplode band join — an all-pairs fallback would
     // surface as a nested-loop/cartesian here
-    val sh = graft.ops.Functions.shingles(graft.Tables.documents(spark, d))
-    val p = graft.ops.Dedup.minHashCandidates(sh)
-      .queryExecution.executedPlan.toString
+    val p = plan(graft.ops.Dedup.dedupMinhash)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"banded candidates degenerated to all-pairs:\n$p")

@@ -35,6 +35,29 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("n"))
 
+  /** Stream-stream interval join: left events paired with right events
+    * by the same user within (0, 5 minutes] after them, both sides
+    * watermarked at 10 minutes. The condition bounds event time on both
+    * sides, so each side's buffered state is evicted once the watermark
+    * passes the interval; under `left_outer` an unmatched left row emits
+    * with nulls only once the watermark proves no partner can arrive.
+    * The streaming form of the `stream_join` and `stream_join_outer`
+    * batch relations (`graft.ops.Events.intervalJoin`). */
+  private def streamIntervalJoin(left: DataFrame, right: DataFrame,
+      joinType: String): DataFrame = {
+    def side(df: DataFrame, p: String): DataFrame =
+      df.select(col("event_id").as(s"${p}_event_id"),
+          col("user_id").as(s"${p}_user_id"), col("ts").as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", "10 minutes")
+    side(left, "l").join(side(right, "r"),
+        col("l_user_id") === col("r_user_id") &&
+        col("r_ts") > col("l_ts") &&
+        col("r_ts") <= col("l_ts") + expr("interval 5 minutes"),
+        joinType)
+      .select(col("l_user_id").as("user_id"),
+        col("l_event_id"), col("r_event_id"), col("l_ts"), col("r_ts"))
+  }
+
   test("tumbling watermark: on-time rows aggregate, row behind watermark is dropped") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
@@ -72,9 +95,11 @@ class StreamingSpec extends AnyFunSuite {
   test("session_window: rows within gap merge into one session, across gap split") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val sess = StreamOps.sessionCounts(
-      input.toDF().toDF("ts", "user_id").withColumn("value", lit(1.0)),
-      gap = "30 minutes", watermark = "1 hour")
+    val sess = input.toDF().toDF("ts", "user_id")
+      .withWatermark("ts", "1 hour")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("session_window.start").as("t_start"), col("user_id"), col("n_events"))
     val q = sess.writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     try {
@@ -173,67 +198,23 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("flatMapGroupsWithState sessions equal batch sessionize on real events") {
-    // feed the sf0.001 events through the CUSTOM-state sessionizer in two
-    // micro-batches (split mid-stream to exercise cross-batch state),
-    // then a far-future sentinel per user to close every tail session;
-    // the closed sessions must be exactly the batch sessionize relation.
-    implicit val sqlCtx = spark.sqlContext
+    // the stream_stateful_session gate: the sf0.001 events staged in three
+    // file batches plus a flush sentinel, sessionized by
+    // statefulSessionsWatermarked through the checkpointed file-stream
+    // runner; the landed sessions must be exactly the batch sessionize
+    // relation.
     val d = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, d)
+    val got = graft.ops.Events.streamStatefulSession.fn(spark, d)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    val want = graft.ops.Events.sessionize(Tables.events(spark, d))
       .select(col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("eus"))
-      .as[(Long, Long)].collect().toSeq
-      .sortBy(_._2) // time-respecting batch split — the ordering contract
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val sentinelEus = rows.map(_._2).max + 86400000000L // +1 day closes all
-    val input = MemoryStream[(Long, Long)]
-    val q = StreamOps.statefulSessions(input.toDS())
-      .toDF("user_id", "s_eus", "e_eus", "n_events")
-      .writeStream.format("memory").queryName("fmgws_out")
-      .outputMode("append").start()
-    try {
-      input.addData(b1); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
-      input.addData(rows.map(_._1).distinct.map(u => (u, sentinelEus)))
-      q.processAllAvailable()
-      val got = spark.table("fmgws_out")
-        .filter(col("s_eus") < sentinelEus) // drop the sentinel sessions themselves
-        .orderBy("user_id", "s_eus")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      val want = graft.ops.Events.sessionize(Tables.events(spark, d))
-        .select(col("user_id"),
-          unix_micros(col("t_start").cast("timestamp")).as("s_eus"),
-          unix_micros(col("t_end").cast("timestamp")).as("e_eus"),
-          col("n_events"))
-        .orderBy("user_id", "s_eus")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      assert(got == want)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("statefulSessions: cross-batch late events never corrupt the open session") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Long)]
-    val q = StreamOps.statefulSessions(input.toDS(), gapUs = 1800L)
-      .toDF("user_id", "s", "e", "n")
-      .writeStream.format("memory").queryName("late_out")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, 10000L)); q.processAllAvailable()
-      // batch 2: one event 1000 before the open session's span (merges,
-      // extending start backwards) and one far older (emitted as a
-      // best-effort singleton — its session may already be gone)
-      input.addData((1L, 9000L), (1L, 1L)); q.processAllAvailable()
-      // close everything with a far-future event
-      input.addData((1L, 100000L)); q.processAllAvailable()
-      val got = spark.table("late_out")
-        .filter(col("s") < 100000L).orderBy("s")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      // singleton for the very-late event; merged session (9000..10000, n=2)
-      assert(got == Seq((1L, 1L, 1L, 1L), (1L, 9000L, 10000L, 2L)))
-      got.foreach { case (_, s, e, _) => assert(s <= e) } // never inverted
-    } finally q.stop()
+        unix_micros(col("t_start").cast("timestamp")).as("s_eus"),
+        unix_micros(col("t_end").cast("timestamp")).as("e_eus"),
+        col("n_events"))
+      .orderBy("user_id", "s_eus")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(got == want)
+    assert(got.nonEmpty)
   }
 
   test("statefulSessionsWatermarked: late-beyond-watermark dropped, timeout closes sessions") {
@@ -252,8 +233,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       // batch 2: another user far ahead → watermark rises to 12:00, which
       // passes user 1's last+gap (10:50) → the session closes by TIMEOUT,
-      // with no closing event from user 1 (the capability the best-effort
-      // form lacks)
+      // with no closing event from user 1
       input.addData((9L, ts("2024-01-01 13:00:00")))
       q.processAllAvailable()
       val afterTimeout = spark.table("wm_sess_out")
@@ -261,8 +241,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(afterTimeout ==
         Set((1L, us("2024-01-01 10:00:00"), us("2024-01-01 10:20:00"), 2L)))
       // batch 3: user 1 event at 10:30 — inside the emitted session's gap
-      // reach but BEHIND the 12:00 watermark → deterministically dropped
-      // (the best-effort form would emit a wrong singleton)
+      // reach but BEHIND the 12:00 watermark → deterministically dropped,
+      // never emitted as a singleton
       input.addData((1L, ts("2024-01-01 10:30:00")))
       q.processAllAvailable()
       // batch 4: advance far so anything pending would flush
@@ -303,7 +283,7 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(got ==
         Set((1L, us("2024-01-01 10:00:00"), us("2024-01-01 10:50:00"), 3L)))
-      // the single-open-session best-effort form CANNOT produce this
+      // a state holding only the newest open session CANNOT produce this
       // bridge — it would have closed 10:00 on 10:50's arrival
     } finally q.stop()
   }
@@ -312,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
     // replay the sf0.001 events in two time-respecting micro-batches, then
     // advance the watermark with one sentinel on an unused user: EVERY real
     // session must emit by timeout and equal the batch relation exactly —
-    // no per-user closing sentinels (the best-effort test needs those).
+    // no per-user closing sentinels.
     implicit val sqlCtx = spark.sqlContext
     val d = "/root/testdata/sf0.001"
     val rows = Tables.events(spark, d)
@@ -344,28 +324,6 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(got == want)
       assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("dedupEvents: within-watermark re-delivery dropped, first arrival wins") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StreamOps.dedupEvents(
-      input.toDF().toDF("event_id", "ts", "payload"), watermark = "1 hour")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:00:00"), "first"),
-        (2L, ts("2024-01-01 10:05:00"), "other"))
-      q.processAllAvailable()
-      // batch 2: id 1 re-delivered (same ts and a different-ts replay) —
-      // both inside the watermark window → dropped, "first" stands
-      input.addData((1L, ts("2024-01-01 10:00:00"), "dup"),
-        (1L, ts("2024-01-01 10:10:00"), "late-dup"))
-      q.processAllAvailable()
-      val got = spark.table("dedup_out")
-        .select("event_id", "payload").as[(Long, String)].collect().toSet
-      assert(got == Set((1L, "first"), (2L, "other")))
     } finally q.stop()
   }
 
@@ -413,9 +371,9 @@ class StreamingSpec extends AnyFunSuite {
     // streaming form: two MemoryStreams, watermarked, time-bound condition
     val lIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     val rIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val joined = StreamOps.streamIntervalJoin(
+    val joined = streamIntervalJoin(
       lIn.toDF().toDF("event_id", "ts", "user_id"),
-      rIn.toDF().toDF("event_id", "ts", "user_id"))
+      rIn.toDF().toDF("event_id", "ts", "user_id"), "inner")
     val q = joined.writeStream.format("memory").queryName("ssj_out")
       .outputMode("append").start()
     try {
@@ -438,9 +396,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val lIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     val rIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val joined = StreamOps.streamIntervalJoinOuter(
+    val joined = streamIntervalJoin(
       lIn.toDF().toDF("event_id", "ts", "user_id"),
-      rIn.toDF().toDF("event_id", "ts", "user_id"))
+      rIn.toDF().toDF("event_id", "ts", "user_id"), "left_outer")
     val q = joined.writeStream.format("memory").queryName("ssoj_out")
       .outputMode("append").start()
     try {

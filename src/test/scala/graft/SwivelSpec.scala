@@ -175,6 +175,23 @@ class SwivelSpec extends AnyFunSuite {
     assert(ColdWork.count - c0 == 1)
   }
 
+  test("the nine swivel_* keys return their typed empty relation on empty documents") {
+    // a zero-row documents table has an empty vocabulary and zero shards;
+    // every key must still return the schema it returns on real data, as
+    // its DuckDB oracle does
+    val sf = "/root/testdata/sf0.001"
+    val empty = Files.createTempDirectory("graft_empty_docs").toString
+    Tables.documents(spark, sf).limit(0).write.parquet(s"$empty/documents.parquet")
+    for (q <- Swivel.all) {
+      val real = q.fn(spark, sf)
+      val got = q.fn(spark, empty)
+      assert(got.count() == 0L, s"${q.name}: rows on empty documents")
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        real.schema.map(f => (f.name, f.dataType)),
+        s"${q.name}: ${got.schema.simpleString} vs ${real.schema.simpleString}")
+    }
+  }
+
   test("SwivelMain.run: a rerun with fewer shards leaves exactly its own .pb grid") {
     val dir = corpus("a b a c b a d", "c a b b a d d", "b c a a c b d")
     val out = dir.resolve("out").toString
