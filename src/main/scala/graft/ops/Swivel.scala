@@ -73,7 +73,9 @@ object Swivel {
     * the path it gates. */
   private def prepared(s: org.apache.spark.sql.SparkSession, d: String) =
     Memo.once(s, d, "swivel.counts") {
-      SwivelPrep.prepare(Tables.documents(s, d), MinCount, ShardSize, WindowSize)
+      val docs = Tables.documents(s, d)
+      SwivelPrep.prepare(docs, SwivelPrep.rankVocab(docs, MinCount, ShardSize), ShardSize,
+        WindowSize)
     }
 
   private val cellsOracle =

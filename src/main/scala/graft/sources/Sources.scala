@@ -36,10 +36,9 @@ object Sources {
     if (contiguousIds) {
       // Dense ids WITHOUT a single-partition global window: zipWithIndex
       // assigns contiguous indices from per-partition offsets (one small
-      // count pass over partition sizes), preserving partition order —
-      // the same distributed ranking buildVocab uses. The order is the
-      // file/partition order, matching what the line-offset ids of the
-      // reference's text ingest imply.
+      // count pass over partition sizes), preserving partition order.
+      // The order is the file/partition order, matching what the
+      // line-offset ids of the reference's text ingest imply.
       import spark.implicits._
       lines.select(col("value")).as[String].rdd
         .zipWithIndex()

@@ -295,14 +295,14 @@ object TfExample {
     * (`Sources.writeShardFiles`), so nothing shard-sized ever sits on the
     * driver; a rerun into the same `dir` first deletes the old grid. An
     * empty vocabulary has zero shards: the old grid is deleted and no
-    * file is written.
+    * file is written. Returns the number of cells written.
     */
   def writeSwivelPbShards(shards: DataFrame, numShards: Int, vocabSize: Int,
-      dir: String): Unit = {
+      dir: String): Long = {
     val rowsPerShard = if (numShards == 0) 0 else vocabSize / numShards
     require(numShards >= 0 && rowsPerShard * numShards == vocabSize,
       s"vocabSize $vocabSize must be a multiple of numShards $numShards")
-    Sources.writeShardFiles(
+    val written = Sources.writeShardFiles(
       shards.select(col("row_shard").cast("long"), col("col_shard").cast("long"),
         col("local_row").cast("long"), col("local_col").cast("long"),
         col("weight").cast("double")),
@@ -323,6 +323,7 @@ object TfExample {
       if (!java.nio.file.Files.exists(p))
         java.nio.file.Files.write(p, shardExample(r, c, numShards, rowsPerShard, Nil))
     }
+    written.map(_._2).sum
   }
 
   private def pbName(r: Long, c: Long): String = f"shard-$r%03d-$c%03d.pb"

@@ -7,10 +7,11 @@ import graft.sources.Sources
   * reference driver's flag surface (SURVEY.md §3.1 E1: --input,
   * --output_dir, --shard_size, --min_count, --window_size).
   *
-  * Reads a corpus (plain-text lines or a parquet documents table) and
-  * lands it once with `SwivelPrep.prepare` (the vocab and the per-cell
-  * distance counts of the one pair pass); the cells, the marginals, the
-  * shards and the final cell count all read that landing. Writes:
+  * Reads a corpus (plain-text lines or a parquet documents table), ranks
+  * its vocab on the driver (`SwivelPrep.rankVocab`) and lands the per-cell
+  * distance counts of the one pair pass once (`SwivelPrep.prepare`); the
+  * cells, the marginals and the shards all read that landing, and the
+  * sizes it reports are driver facts. Writes:
   *   <output_dir>/shards/   parquet partitioned by (row_shard, col_shard)
   *                          (or shards_pb/ + the .txt side files for pb)
   *   <output_dir>/vocab/    (id, token, cnt)
@@ -54,52 +55,79 @@ object SwivelMain {
     try run(spark, opts) finally spark.stop()
   }
 
-  /** The whole pipeline on `spark`, corpus to every output file. */
+  /** Runs one layer of `run`, then logs to stderr its seconds and the
+    * driver facts `facts` reads off its result. */
+  private def layer[A](name: String)(f: => A)(facts: A => String): A = {
+    val t0 = System.nanoTime()
+    val a = f
+    System.err.println(f"swivel-prep $name%s: ${facts(a)}%s in ${(System.nanoTime() - t0) / 1e9}%.3f s")
+    a
+  }
+
+  /** The whole pipeline on `spark`, corpus to every output file, with one
+    * stderr line per layer. */
   def run(spark: SparkSession, opts: Options): Unit = {
     import opts._
     val docs = inputFormat match {
       case "parquet" => spark.read.parquet(input).select("doc_id", "text")
       case _         => Sources.textCorpus(spark, input)
     }
-    val prepared = SwivelPrep.prepare(docs, minCount, shardSize, windowSize)
-    import prepared.{counts, marginals, numShards, shards, vocab, vocabSize}
-    if (vocabSize == 0) {
+    val ranked = layer("vocab")(SwivelPrep.rankVocab(docs, minCount, shardSize))(r =>
+      s"${r.length} rows")
+    val prepared = layer("cells")(SwivelPrep.prepare(docs, ranked, shardSize, windowSize))(_ =>
+      "counts landed")
+    import prepared.{counts, marginals, numShards, shards, tokens, vocab, vocabSize}
+    val pb = outputFormat == "pb"
+    val cells = if (vocabSize == 0) {
       // corpus smaller than one shard: vocab truncates to zero — mirror
       // the parquet path's graceful empty output instead of crashing in
       // the .pb writer's require
       System.err.println(
         s"swivel-prep: vocabulary is empty after truncation to a multiple " +
           s"of shard_size=$shardSize — no shards to write")
-    } else if (outputFormat == "pb") {
+      0L
+    } else if (pb) {
       // the reference trainer's own input layout: one serialized
-      // tensorflow.Example per shard (shard-RRR-CCC.pb) plus the
-      // vocab/sums TEXT side files it loads alongside them. Vocab and
-      // sums are driver-bounded (truncated vocabulary), so a driver-side
-      // text write is the honest scale story; the matrix is symmetric,
-      // so row and col files are identical.
-      graft.sources.TfExample.writeSwivelPbShards(shards,
-        numShards, vocabSize, s"$outDir/shards_pb")
-      import spark.implicits._
-      val tokens = vocab.orderBy("id").select("token").as[String].collect()
-      // every vocab id gets a sum line; ids with no in-window pairs are 0
-      val sums = Array.fill(vocabSize)(0.0)
-      marginals.as[(Long, Double)].collect().foreach { case (id, m) => sums(id.toInt) = m }
-      def writeLines(name: String, lines: Iterable[String]): Unit =
-        java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
-          (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      writeLines("row_vocab.txt", tokens)
-      writeLines("col_vocab.txt", tokens)
-      // plain-decimal, never scientific: Double.toString renders small
-      // 4dp-rounded marginals as "1.0E-4", which diverges from the
-      // reference tooling's one-plain-value-per-line sums layout. The
-      // marginals are 4dp-rounded upstream, so fixed %.4f is exact.
-      writeLines("row_sums.txt", sums.map(v => f"$v%.4f"))
-      writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
-    } else Sources.writeShards(shards, s"$outDir/shards")
-    Sources.writeSideOutput(vocab, s"$outDir/vocab")
-    Sources.writeSideOutput(marginals, s"$outDir/row_sums")
-    println(s"swivel-prep done: vocab=$vocabSize cells=${counts.count()} -> $outDir")
-    // free the landed blocks: `run` may share a long-lived session
-    Seq(counts, vocab).foreach(org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint)
+      // tensorflow.Example per shard (shard-RRR-CCC.pb)
+      layer("shards")(graft.sources.TfExample.writeSwivelPbShards(shards,
+        numShards, vocabSize, s"$outDir/shards_pb"))(n =>
+        s"${numShards * numShards} files, $n cells")
+    } else layer("shards") {
+      Sources.writeShards(shards, s"$outDir/shards")
+      counts.count()
+    }(n => s"$n cells")
+    layer("side files") {
+      // vocab and sums are driver-bounded (truncated vocabulary): the
+      // marginals are collected once and feed both the sums text files
+      // and the row_sums/ parquet
+      val margRows = marginals.collect()
+      if (pb && vocabSize > 0) {
+        // the vocab/sums TEXT side files the reference trainer loads
+        // beside the .pb shards; the matrix is symmetric, so row and col
+        // files are identical. Every vocab id gets a sum line; ids with
+        // no in-window pairs are 0
+        val sums = Array.fill(vocabSize)(0.0)
+        margRows.foreach(r => sums(r.getLong(0).toInt) = r.getDouble(1))
+        def writeLines(name: String, lines: Iterable[String]): Unit =
+          java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
+            (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+        writeLines("row_vocab.txt", tokens)
+        writeLines("col_vocab.txt", tokens)
+        // plain-decimal, never scientific: Double.toString renders small
+        // 4dp-rounded marginals as "1.0E-4", which diverges from the
+        // reference tooling's one-plain-value-per-line sums layout. The
+        // marginals are 4dp-rounded upstream, so fixed %.4f is exact.
+        writeLines("row_sums.txt", sums.map(v => f"$v%.4f"))
+        writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
+      }
+      Sources.writeSideOutput(vocab, s"$outDir/vocab")
+      Sources.writeSideOutput(
+        spark.createDataFrame(java.util.Arrays.asList(margRows: _*), marginals.schema),
+        s"$outDir/row_sums")
+      if (pb && vocabSize > 0) 6 else 2
+    }(n => s"$n files")
+    println(s"swivel-prep done: vocab=$vocabSize cells=$cells -> $outDir")
+    // free the landed counts: `run` may share a long-lived session
+    org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint(counts)
   }
 }

@@ -1,7 +1,9 @@
 package graft.swivel
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Swivel embedding-prep pipeline, re-expressed relationally
   * (SURVEY.md §2.6; semantics follow the published Swivel prep algorithm —
@@ -21,14 +23,18 @@ import org.apache.spark.sql.functions._
   * nondeterminism), in Spark and in the DuckDB oracle alike.
   *
   * Scale posture (100 TB corpus): tokenize is embarrassingly parallel per
-  * document; the vocab is the only global structure and is bounded by
-  * truncation (broadcast-joined, never collected); pair generation is one
-  * doc_id shuffle of in-vocab token ids, then linear work per document (a
-  * sorted sliding window — one huge document is one sorted linear-time
-  * task, never a quadratic one); cooc cells shuffle once on
-  * (row_id, col_id); sharding is a pure projection. Hot (Zipfian) tokens
-  * skew the cooc shuffle — AQE skew-join handles it, and the groupBy key
-  * (row_id, col_id) already spreads a hot row across its column partners.
+  * document; the vocab is the only global structure: one token-count
+  * aggregate, filtered on minCount, is collected and ranked on the driver.
+  * It holds fewer than vocabSize + shardSize rows, the same bound the
+  * vocab broadcast and the `.txt` side files bring to the driver. Pair
+  * generation is one doc_id shuffle of in-vocab token ids, then linear
+  * work per document (a sorted sliding window — one huge document is one
+  * sorted linear-time task, never a quadratic one) whose pairs each task
+  * counts per cell in a bounded table; the partial cell counts shuffle
+  * once on (row_id, col_id); sharding is a pure projection. Hot (Zipfian)
+  * tokens skew the cooc shuffle — AQE skew-join handles it, and the
+  * groupBy key (row_id, col_id) already spreads a hot row across its
+  * column partners.
   */
 object SwivelPrep {
 
@@ -53,44 +59,34 @@ object SwivelPrep {
     if (res != 0) res else a.length - b.length
   }
 
-  /** Frequency-ranked vocabulary: keep count ≥ minCount, rank by
-    * (count DESC, token ASC), truncate to the largest multiple of
-    * shardSize; ids dense in [0, vocabSize).
-    *
-    * Ranking is a distributed range-partitioned sort + zipWithIndex — a
-    * deliberate RDD drop-down: a global `row_number()` window would pull
-    * every surviving token into ONE partition, which dies at 100 TB corpus
-    * scale (10⁷–10⁸ distinct tokens pre-truncation), while zipWithIndex
-    * assigns the identical dense ranks from per-partition offsets. Output
-    * ids are byte-identical to the window formulation ((count DESC,
-    * token ASC) is a total order).
-    */
-  def buildVocab(docs: DataFrame, minCount: Int, shardSize: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // The token-count relation has three consumers (the truncation count,
-    // the sortBy sample pass, the sort shuffle): persist it so the corpus
-    // is tokenized exactly ONCE — at 100 TB each extra evaluation is a
-    // full corpus scan. The returned vocab is materialized with an eager
-    // localCheckpoint (bounded by truncation — the same structure the
-    // reference writes out as a vocab file), so the counts cache can be
-    // released before returning: no unbounded storage blocks outlive the
-    // call, and the caller's DataFrame never re-executes the corpus scan.
-    val counts = tokenize(docs).groupBy("token").agg(count(lit(1)).as("cnt"))
+  /** The frequency-ranked vocabulary on the driver: the (token, cnt) of
+    * every token with count ≥ minCount, ranked by (count DESC, token's
+    * UTF-8 bytes ASC) and truncated to the largest multiple of shardSize;
+    * a token's id is its index. One token-count aggregate is collected:
+    * it holds fewer than vocabSize + shardSize rows, the same bound the
+    * vocab broadcast and the `.txt` side files already bring to the
+    * driver. */
+  def rankVocab(docs: DataFrame, minCount: Int, shardSize: Int): Array[(String, Long)] = {
+    import docs.sparkSession.implicits._
+    val kept = tokenize(docs).groupBy("token").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      .persist()
-    try {
-      val total = counts.count()
-      val keep = (total / shardSize) * shardSize
-      counts.select(col("token"), col("cnt")).as[(String, Long)].rdd
-        .sortBy({ case (t, c) =>
-          (-c, t.getBytes(java.nio.charset.StandardCharsets.UTF_8)) })
-        .zipWithIndex()
-        .collect { case ((t, c), i) if i < keep => (i, t, c) }
-        .toDF("id", "token", "cnt")
-        .localCheckpoint()
-    } finally counts.unpersist(blocking = false)
+      .as[(String, Long)].collect()
+    kept.sortBy { case (t, c) => (-c, t.getBytes(java.nio.charset.StandardCharsets.UTF_8)) }
+      .take(kept.length / shardSize * shardSize)
   }
+
+  /** A ranked vocabulary as a local (id, token, cnt) relation. */
+  private def vocabRelation(spark: SparkSession, ranked: Array[(String, Long)]): DataFrame = {
+    import spark.implicits._
+    ranked.toSeq.zipWithIndex.map { case ((t, c), i) => (i.toLong, t, c) }
+      .toDF("id", "token", "cnt")
+  }
+
+  /** Frequency-ranked vocabulary (`rankVocab`) as (id, token, cnt), ids
+    * dense in [0, vocabSize): a local relation, so it holds no storage
+    * blocks and nothing has to release it. */
+  def buildVocab(docs: DataFrame, minCount: Int, shardSize: Int): DataFrame =
+    vocabRelation(docs.sparkSession, rankVocab(docs, minCount, shardSize))
 
   /** Ordered in-window pairs with distance: for every in-vocab token pair
     * in the same document with 0 < d = pos_b − pos_a ≤ windowSize, BOTH
@@ -107,6 +103,16 @@ object SwivelPrep {
     */
   def coocPairs(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame = {
     import docs.sparkSession.implicits._
+    docTokens(docs, vocab)
+      .mapPartitions(rows => windowPairs(windowSize, rows))
+      .toDF("row_id", "col_id", "dd")
+  }
+
+  /** The in-vocab (doc_id, pos, id) of every token, shuffled on doc_id and
+    * sorted by (doc_id, pos) within each partition: the input both pair
+    * kernels walk. */
+  private def docTokens(docs: DataFrame, vocab: DataFrame): Dataset[(Long, Long, Long)] = {
+    import docs.sparkSession.implicits._
     // Out-of-vocab tokens drop at this broadcast join, BEFORE pair
     // generation — order matters for semantics (distances are measured on
     // original positions, but pairs only form between in-vocab tokens).
@@ -117,45 +123,22 @@ object SwivelPrep {
       .repartition(col("doc_id"))
       .sortWithinPartitions("doc_id", "pos")
       .as[(Long, Long, Long)]
-      .mapPartitions(rows => windowPairs(windowSize, rows))
-      .toDF("row_id", "col_id", "dd")
   }
 
-  /** Both orientations of every in-window pair over `rows` sorted by
-    * (doc_id, pos): each token pairs with the current document's earlier
-    * tokens at most `w` positions back, held in a deque that drops entries
-    * as the window slides past them. */
-  private def windowPairs(w: Int, rows: Iterator[(Long, Long, Long)])
-      : Iterator[(Long, Long, Int)] = new Iterator[(Long, Long, Int)] {
-    // the deque: (pos, id) of the current document's tokens in [lo, hi),
-    // in primitive arrays (a boxed ArrayDeque of tuples measured ~20%
-    // slower on the pair pass); `slide` compacts them to the front when
-    // full and doubles them when more than half is live
-    private var poss = new Array[Long](64)
-    private var ids = new Array[Long](64)
-    private var lo, hi = 0
+  /** fastprep's sliding window over rows sorted by (doc_id, pos): after
+    * `push` of a token, the current document's earlier tokens at most `w`
+    * positions back sit at [lo, end) of `poss`/`ids`. The deque lives in
+    * primitive arrays (a boxed ArrayDeque of tuples measured ~20% slower
+    * on the pair pass); `push` compacts them to the front when full and
+    * doubles them when more than half is live. */
+  private final class Window(w: Int) {
+    var poss = new Array[Long](64)
+    var ids = new Array[Long](64)
+    var lo, end = 0
+    private var hi = 0
     private var doc = 0L
-    // the newest token, and the deque entries [at, end) it still pairs
-    // with; `mirror` marks the (id, y) orientation of entry `at` as due
-    private var pos, id = 0L
-    private var at, end = 0
-    private var mirror = false
 
-    def hasNext: Boolean = {
-      while (at >= end && rows.hasNext) slide()
-      at < end
-    }
-
-    def next(): (Long, Long, Int) = {
-      if (!hasNext) throw new NoSuchElementException
-      val y = ids(at)
-      val dd = (pos - poss(at)).toInt
-      if (mirror) { mirror = false; at += 1; (id, y, dd) }
-      else { mirror = true; (y, id, dd) }
-    }
-
-    private def slide(): Unit = {
-      val (d, p, t) = rows.next()
+    def push(d: Long, p: Long, t: Long): Unit = {
       if (lo == hi || d != doc) { lo = 0; hi = 0; doc = d }
       while (lo < hi && poss(lo) < p - w) lo += 1
       if (hi == poss.length) {
@@ -169,9 +152,123 @@ object SwivelPrep {
         lo = 0; hi = live
       }
       poss(hi) = p; ids(hi) = t; hi += 1
-      pos = p; id = t
-      at = lo; end = hi - 1
+      end = hi - 1
       while (end > lo && poss(end - 1) == p) end -= 1
+    }
+  }
+
+  /** Both orientations of every in-window pair over `rows` sorted by
+    * (doc_id, pos). */
+  private def windowPairs(w: Int, rows: Iterator[(Long, Long, Long)])
+      : Iterator[(Long, Long, Int)] = new Iterator[(Long, Long, Int)] {
+    private val win = new Window(w)
+    // the newest token, and the window entries [at, end) it still pairs
+    // with; `mirror` marks the (id, y) orientation of entry `at` as due
+    private var pos, id = 0L
+    private var at, end = 0
+    private var mirror = false
+
+    def hasNext: Boolean = {
+      while (at >= end && rows.hasNext) {
+        val (d, p, t) = rows.next()
+        win.push(d, p, t)
+        pos = p; id = t; at = win.lo; end = win.end
+      }
+      at < end
+    }
+
+    def next(): (Long, Long, Int) = {
+      if (!hasNext) throw new NoSuchElementException
+      val y = win.ids(at)
+      val dd = (pos - win.poss(at)).toInt
+      if (mirror) { mirror = false; at += 1; (id, y, dd) }
+      else { mirror = true; (y, id, dd) }
+    }
+  }
+
+  /** Slots the pair-counting table grows to before it flushes: at
+    * W = 10 a slot is 88 bytes, so a full table is 23 MB per task. */
+  private val CellSlots = 1 << 18
+
+  /** The window's pairs counted per cell inside the task: an
+    * open-addressing table of (row_id, col_id) keys, packed into one long
+    * (ids are below vocabSize, an Int), with `w` long counters per key.
+    * The table starts at 1024 slots and doubles up to `maxSlots`, kept at
+    * most half full; when a token's ≤ 2w pairs might not fit, it flushes
+    * every key as a partial (row_id, col_id, n1..nW) row, so memory stays
+    * bounded on any partition and a key may come out more than once. */
+  private[graft] def countCells(w: Int, rows: Iterator[(Long, Long, Long)],
+      maxSlots: Int): Iterator[Row] = new Iterator[Row] {
+    require(Integer.bitCount(maxSlots) == 1 && maxSlots >= 8 * w,
+      s"maxSlots $maxSlots must be a power of two of at least ${8 * w}")
+    private val win = new Window(w)
+    private var keys = Array.fill(math.min(1024, maxSlots))(-1L)
+    private var counts = new Array[Long](keys.length * w)
+    private var live = 0
+    private var out: Iterator[Row] = Iterator.empty
+
+    def hasNext: Boolean = {
+      while (!out.hasNext && rows.hasNext) {
+        while (live + 2 * w <= maxSlots / 2 && rows.hasNext) {
+          val (d, p, t) = rows.next()
+          win.push(d, p, t)
+          var i = win.lo
+          while (i < win.end) {
+            val y = win.ids(i)
+            val k = (p - win.poss(i)).toInt - 1
+            add((y << 32) | t, k)
+            add((t << 32) | y, k)
+            i += 1
+          }
+        }
+        out = flush()
+      }
+      out.hasNext
+    }
+
+    def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      out.next()
+    }
+
+    private def slot(key: Long, ks: Array[Long]): Int = {
+      val mask = ks.length - 1
+      val h = key * 0x9e3779b97f4a7c15L
+      var i = (h ^ (h >>> 32)).toInt & mask
+      while (ks(i) != -1L && ks(i) != key) i = (i + 1) & mask
+      i
+    }
+
+    private def add(key: Long, k: Int): Unit = {
+      if (live * 2 >= keys.length && keys.length < maxSlots) grow()
+      val i = slot(key, keys)
+      if (keys(i) == -1L) { keys(i) = key; live += 1 }
+      counts(i * w + k) += 1
+    }
+
+    private def grow(): Unit = {
+      val (oldKeys, oldCounts) = (keys, counts)
+      keys = Array.fill(oldKeys.length * 2)(-1L)
+      counts = new Array[Long](keys.length * w)
+      for (j <- oldKeys.indices if oldKeys(j) != -1L) {
+        val i = slot(oldKeys(j), keys)
+        keys(i) = oldKeys(j)
+        System.arraycopy(oldCounts, j * w, counts, i * w, w)
+      }
+    }
+
+    /** Every key as a row, clearing its slot as the row is read. */
+    private def flush(): Iterator[Row] = {
+      live = 0
+      keys.indices.iterator.filter(keys(_) != -1L).map { i =>
+        val row = new Array[Any](w + 2)
+        row(0) = keys(i) >>> 32
+        row(1) = keys(i) & 0xffffffffL
+        for (k <- 0 until w) row(k + 2) = counts(i * w + k)
+        keys(i) = -1L
+        java.util.Arrays.fill(counts, i * w, i * w + w, 0L)
+        new GenericRow(row)
+      }
     }
   }
 
@@ -199,9 +296,20 @@ object SwivelPrep {
   /** Per-cell pair counts: (row_id, col_id, n1..nW), n_k the number of
     * in-window co-occurrences at distance k. Every other Swivel relation
     * (cells, marginals, shards) derives from these exact integers, so
-    * `prepare` lands them once and every consumer reads that landing. */
+    * `prepare` lands them once and every consumer reads that landing.
+    * Each pair task counts its own cells (`countCells`); one sum per n_k
+    * merges the tasks' partial rows. */
   def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
-    distanceCounts(coocPairs(docs, vocab, windowSize), windowSize, "row_id", "col_id")
+    cellCounts(docs, vocab, windowSize, CellSlots)
+
+  private[graft] def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int,
+      maxSlots: Int): DataFrame = {
+    val schema = StructType(("row_id" +: "col_id" +: (1 to windowSize).map(k => s"n$k"))
+      .map(StructField(_, LongType, nullable = false)))
+    val partial = docTokens(docs, vocab)
+      .mapPartitions(rows => countCells(windowSize, rows, maxSlots))(Encoders.row(schema))
+    distanceCounts(partial, windowSize, "row_id", "col_id")
+  }
 
   /** Co-occurrence cells from `cellCounts`: (row_id, col_id, weight). */
   def cellsFromCounts(counts: DataFrame, windowSize: Int): DataFrame =
@@ -281,37 +389,42 @@ object SwivelPrep {
     * id / numShards, with numShards = vocabSize / shardSize (vocabSize is
     * a multiple of shardSize by construction). The 1-row numShards scalar
     * broadcasts. */
-  def shard(coocCells: DataFrame, vocab: DataFrame, shardSize: Int): DataFrame = {
-    val ns = vocab.agg((count(lit(1)) / shardSize).cast("long").as("num_shards"))
-    coocCells.crossJoin(broadcast(ns))
-      .select(
-        (col("row_id") % col("num_shards")).as("row_shard"),
-        (col("col_id") % col("num_shards")).as("col_shard"),
-        expr("row_id div num_shards").as("local_row"),
-        expr("col_id div num_shards").as("local_col"),
-        col("row_id").as("global_row"),
-        col("col_id").as("global_col"),
-        col("weight"))
-  }
+  def shard(coocCells: DataFrame, vocab: DataFrame, shardSize: Int): DataFrame =
+    shardBy(coocCells.crossJoin(broadcast(
+      vocab.agg((count(lit(1)) / shardSize).cast("long").as("num_shards")))))
 
-  /** Swivel prep landed once: the vocab, its size and the per-cell
-    * distance counts of the one pair pass. The cells, the marginals and
-    * the shards all derive from `counts`. */
-  final case class Prepared(vocab: DataFrame, vocabSize: Int, counts: DataFrame,
+  /** `shard` over cells that carry their long `num_shards` column. */
+  private def shardBy(cells: DataFrame): DataFrame =
+    cells.select(
+      (col("row_id") % col("num_shards")).as("row_shard"),
+      (col("col_id") % col("num_shards")).as("col_shard"),
+      expr("row_id div num_shards").as("local_row"),
+      expr("col_id div num_shards").as("local_col"),
+      col("row_id").as("global_row"),
+      col("col_id").as("global_col"),
+      col("weight"))
+
+  /** Swivel prep landed once: the ranked vocab's tokens in id order, the
+    * vocab relation and the per-cell distance counts of the one pair pass.
+    * The cells, the marginals and the shards all derive from `counts`;
+    * the sizes are driver facts, so no derived relation runs a job to
+    * learn them. */
+  final case class Prepared(tokens: IndexedSeq[String], vocab: DataFrame, counts: DataFrame,
       windowSize: Int, shardSize: Int) {
+    def vocabSize: Int = tokens.length
     def numShards: Int = vocabSize / shardSize
     lazy val cells: DataFrame = cellsFromCounts(counts, windowSize)
     lazy val marginals: DataFrame = marginalsFromCounts(counts, windowSize)
-    lazy val shards: DataFrame = shard(cells, vocab, shardSize)
+    lazy val shards: DataFrame = shardBy(cells.withColumn("num_shards", lit(numShards.toLong)))
   }
 
-  /** The vocab (landed by `buildVocab`), its size, then the cell counts
-    * landed with an eager local checkpoint. Both landings hold storage
-    * blocks until the caller releases them or its session stops. */
-  def prepare(docs: DataFrame, minCount: Int, shardSize: Int, windowSize: Int): Prepared = {
-    val vocab = buildVocab(docs, minCount, shardSize)
-    val vocabSize = vocab.count().toInt
-    Prepared(vocab, vocabSize, cellCounts(docs, vocab, windowSize).localCheckpoint(),
-      windowSize, shardSize)
+  /** The vocab of `ranked` (from `rankVocab`), then the cell counts over
+    * it landed with an eager local checkpoint, whose storage blocks stay
+    * until the caller releases them or its session stops. */
+  def prepare(docs: DataFrame, ranked: Array[(String, Long)], shardSize: Int,
+      windowSize: Int): Prepared = {
+    val vocab = vocabRelation(docs.sparkSession, ranked)
+    Prepared(ranked.map(_._1).toIndexedSeq, vocab,
+      cellCounts(docs, vocab, windowSize).localCheckpoint(), windowSize, shardSize)
   }
 }

@@ -58,41 +58,82 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // frequent and rare tokens, so minCount > 1 leaves OOV gaps; documents
+  // from 1 token (shorter than any window) up to 25; the last generated
+  // row reuses the first row's doc_id and one more row has a null doc_id
+  private val rowsGen: Gen[Seq[(Option[Long], String)]] = for {
+    nDocs <- Gen.choose(2, 5)
+    texts <- Gen.listOfN(nDocs, for {
+      n <- Gen.choose(1, 25)
+      toks <- Gen.listOfN(n, Gen.frequency(
+        8 -> Gen.oneOf("a", "b", "c", "d"), 1 -> Gen.oneOf("p", "q", "r", "s", "t")))
+    } yield toks.mkString(" "))
+    nullText <- Gen.listOfN(6, Gen.oneOf("a", "b", "c"))
+  } yield texts.zipWithIndex.map { case (t, i) =>
+    (Some(if (i == nDocs - 1) 0L else i.toLong), t)
+  } :+ (None, nullText.mkString(" "))
+
+  /** Each non-null doc_id's in-vocab (pos, id) tokens, its rows merged. */
+  private def docTokens(rows: Seq[(Option[Long], String)],
+      ids: Map[String, Long]): Map[Long, Seq[(Long, Long)]] =
+    rows.collect { case (Some(doc), text) =>
+      doc -> text.split(" ").zipWithIndex.collect {
+        case (tok, p) if ids.contains(tok) => (p + 1L, ids(tok))
+      }.toSeq
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+
+  /** Both orientations of every in-window pair, by nested loops. */
+  private def nestedPairs(byDoc: Map[Long, Seq[(Long, Long)]], w: Int): Seq[(Long, Long, Int)] =
+    for {
+      toks <- byDoc.values.toSeq
+      (pa, x) <- toks
+      (pb, y) <- toks if pb > pa && pb - pa <= w
+      pair <- Seq((x, y, (pb - pa).toInt), (y, x, (pb - pa).toInt))
+    } yield pair
+
+  private def vocabIds(vocab: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    vocab.select("token", "id").as[(String, Long)].collect().toMap
+
   test("coocPairs equals a nested-loop reference over (doc_id, pos, id)") {
-    // frequent and rare tokens, so minCount > 1 leaves OOV gaps; documents
-    // from 1 token (shorter than any window) up to 25; the last generated
-    // row reuses the first row's doc_id and one more row has a null doc_id
-    val rowsGen: Gen[Seq[(Option[Long], String)]] = for {
-      nDocs <- Gen.choose(2, 5)
-      texts <- Gen.listOfN(nDocs, for {
-        n <- Gen.choose(1, 25)
-        toks <- Gen.listOfN(n, Gen.frequency(
-          8 -> Gen.oneOf("a", "b", "c", "d"), 1 -> Gen.oneOf("p", "q", "r", "s", "t")))
-      } yield toks.mkString(" "))
-      nullText <- Gen.listOfN(6, Gen.oneOf("a", "b", "c"))
-    } yield texts.zipWithIndex.map { case (t, i) =>
-      (Some(if (i == nDocs - 1) 0L else i.toLong), t)
-    } :+ (None, nullText.mkString(" "))
     for ((rows, i) <- samples(rowsGen, 4).zipWithIndex) {
       val d = rows.toDF("doc_id", "text")
       val vocab = SwivelPrep.buildVocab(d, minCount = 1 + i % 3, shardSize = 1)
-      val ids = vocab.select("token", "id").as[(String, Long)].collect().toMap
-      val byDoc = rows.collect { case (Some(doc), text) =>
-        doc -> text.split(" ").zipWithIndex.collect {
-          case (tok, p) if ids.contains(tok) => (p + 1L, ids(tok))
-        }.toSeq
-      }.groupMapReduce(_._1)(_._2)(_ ++ _)
+      val byDoc = docTokens(rows, vocabIds(vocab))
       for (w <- Seq(1, 3, 10)) {
-        val want = for {
-          toks <- byDoc.values.toSeq
-          (pa, x) <- toks
-          (pb, y) <- toks if pb > pa && pb - pa <= w
-          pair <- Seq((x, y, (pb - pa).toInt), (y, x, (pb - pa).toInt))
-        } yield pair
         val got = SwivelPrep.coocPairs(d, vocab, w).as[(Long, Long, Int)].collect().toSeq
-        assert(got.sorted == want.sorted, s"sample $i, window $w")
+        assert(got.sorted == nestedPairs(byDoc, w).sorted, s"sample $i, window $w")
       }
     }
+  }
+
+  test("countCells equals a nested-loop reference, alone and in Spark, across its flush cap") {
+    // the smallest table a window allows flushes every few tokens, so a
+    // cell's counts arrive in several partial rows that the merge sums
+    def cell(r: org.apache.spark.sql.Row, w: Int) =
+      (r.getLong(0), r.getLong(1)) -> (2 until w + 2).map(r.getLong)
+    var flushed = Set.empty[Int]
+    for ((rows, i) <- samples(rowsGen, 4).zipWithIndex) {
+      val d = rows.toDF("doc_id", "text")
+      val vocab = SwivelPrep.buildVocab(d, minCount = 1 + i % 3, shardSize = 1)
+      val byDoc = docTokens(rows, vocabIds(vocab))
+      for (w <- Seq(1, 3, 10)) {
+        val want = nestedPairs(byDoc, w).groupBy(p => (p._1, p._2)).map { case (k, ps) =>
+          k -> (1 to w).map(dd => ps.count(_._3 == dd).toLong)
+        }
+        val cap = Integer.highestOneBit(8 * w - 1) * 2 // the least power of two ≥ 8w
+        // the kernel alone, on (doc_id, pos, id) sorted as the pair shuffle hands them over
+        val sorted = byDoc.toSeq.flatMap { case (doc, toks) =>
+          toks.map { case (p, id) => (doc, p, id) } }.sorted
+        val partial = SwivelPrep.countCells(w, sorted.iterator, cap).map(cell(_, w)).toSeq
+        if (partial.map(_._1).distinct.size < partial.size) flushed += w
+        assert(partial.groupMapReduce(_._1)(_._2)(_.zip(_).map { case (a, b) => a + b }) == want,
+          s"kernel, sample $i, window $w")
+        // the whole pair pass, with its null doc_id and merged rows
+        for (got <- Seq(SwivelPrep.cellCounts(d, vocab, w, cap), SwivelPrep.cellCounts(d, vocab, w)))
+          assert(got.collect().map(cell(_, w)).toMap == want, s"cellCounts, sample $i, window $w")
+      }
+    }
+    assert(flushed == Set(1, 3, 10))
   }
 
   test("vocab: size is a multiple of shard_size and ids are dense") {

@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -160,6 +166,55 @@ class SwivelSpec extends AnyFunSuite {
       .select("global_row", "global_col", "weight").as[(Long, Long, Float)].collect().toSet
     assert(cells == SwivelPrep.cooc(d, vocab, 3).as[(Long, Long, Double)].collect()
       .map { case (r, c, w) => (r, c, w.toFloat) }.toSet)
+  }
+
+  /** The Spark jobs `f` starts on `session`'s context. */
+  private def jobCount(session: SparkSession)(f: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(session)
+    session.sparkContext.addSparkListener(listener)
+    try { f; ListenerBus.drain(session) } finally session.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("SwivelMain.run: a budget of 12 Spark jobs on the .pb path, 14 on parquet") {
+    // vocab aggregate 2, pair pass and cell merge 3, .pb shard write 2,
+    // marginals 2, vocab/ and row_sums/ writes 1 each (the parquet path
+    // writes its shards in 2 jobs and counts the cells in 1)
+    val dir = corpus("a b a c b a", "c a b b a", "b c a a c b")
+    for ((fmt, budget) <- Seq("pb" -> 12, "parquet" -> 14)) {
+      val opts = SwivelMain.Options(input = dir.resolve("corpus.txt").toString,
+        outDir = dir.resolve(s"out_$fmt").toString, shardSize = 1, minCount = 1,
+        windowSize = 3, outputFormat = fmt)
+      assert(jobCount(spark)(SwivelMain.run(spark, opts)) == budget, fmt)
+    }
+  }
+
+  test("SwivelMain.run: vocab/ and row_sums/ keep their parquet schema on both formats") {
+    // required (non-null) id and cnt, optional token and marginal
+    def footer(dir: String): Seq[String] = {
+      val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, dir)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HadoopPath(files.head.toString), new Configuration()))
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.toString).toSeq
+      finally reader.close()
+    }
+    val dir = corpus("a b a c b a", "c a b b a", "b c a a c b")
+    for (fmt <- Seq("pb", "parquet")) {
+      val out = dir.resolve(s"out_$fmt").toString
+      SwivelMain.run(spark, SwivelMain.Options(input = dir.resolve("corpus.txt").toString,
+        outDir = out, shardSize = 1, minCount = 1, windowSize = 3, outputFormat = fmt))
+      assert(footer(s"$out/vocab") ==
+        Seq("required int64 id", "optional binary token (STRING)", "required int64 cnt"), fmt)
+      assert(footer(s"$out/row_sums") == Seq("required int64 id", "optional double marginal"),
+        fmt)
+      assert(spark.read.parquet(s"$out/vocab").as[(Long, String, Long)].collect().toSeq ==
+        Seq((0L, "a", 7L), (1L, "b", 6L), (2L, "c", 4L)), fmt)
+    }
   }
 
   test("the nine swivel_* keys in one session: two pair passes, one cold landing") {
