@@ -173,7 +173,8 @@ object Swivel {
   /** The `.pb` shard sink + source under the driver's hash — the
     * reference's own `shard-RRR-CCC.pb` tensorflow.Example output format,
     * gated end to end rather than only by golden-byte specs: write the
-    * sharded cooc matrix through `TfExample.writeSwivelPbShards`, read
+    * landed cell counts through `TfExample.writeSwivelPbShards` (the
+    * writer SwivelMain feeds with the pair pass's partial counts), read
     * the files back via `readSwivelPbShards` (one `binaryFile` scan), and
     * emit the cell relation, as the csv/json/orc/xml/bucketed/partitioned
     * sinks are gated. The oracle is `swivel_shard`'s SQL with ONE honest change:
@@ -193,7 +194,7 @@ object Swivel {
     // deterministic temp dir per sfDir (join_bucketed/scan_csv convention);
     // the sink deletes a stale grid from an older vocab before writing
     val dir = QueryDef.tmpRoot("pb", d)
-    graft.sources.TfExample.writeSwivelPbShards(p.shards, p.numShards, p.vocabSize, dir)
+    graft.sources.TfExample.writeSwivelPbShards(p.counts, p.numShards, p.vocabSize, dir)
     graft.sources.TfExample.readSwivelPbShards(s, dir)
       .select("row_shard", "col_shard", "local_row", "local_col",
         "global_row", "global_col", "weight")

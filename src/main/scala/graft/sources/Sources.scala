@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sources and sinks (SURVEY.md §2.1).
@@ -87,25 +87,54 @@ object Sources {
       .format("parquet")
       .saveAsTable(table)
 
+  /** What one task of `writeShardFiles` runs: `encode` writes one
+    * shard's rows, in order, to the shard's stream and returns its record
+    * count; `result` is the task's one result once every shard it owns is
+    * written. */
+  trait ShardTask[S] {
+    def encode(out: OutputStream, shard: Iterator[Row]): Long
+    def result: S
+  }
+
+  /** `writeShardFiles` with a stateless encoder, one task per shard key
+    * (AQE may coalesce small shards into one task); returns each file
+    * with its record count. */
+  def writeShardFiles(rows: DataFrame, dir: String, glob: String,
+      key: Seq[String], sortBy: Seq[String], fileName: Row => String)(
+      encode: (OutputStream, Iterator[Row]) => Long): Seq[(String, Long)] =
+    writeShardFiles(rows, dir, glob, key, (key ++ sortBy).map(col), fileName, stripes = 0) { () =>
+      val f = encode
+      new ShardTask[Boolean] {
+        def encode(out: OutputStream, shard: Iterator[Row]): Long = f(out, shard)
+        def result: Boolean = true
+      }
+    }(Encoders.scalaBoolean)._1
+
   /** The executor-owned shard-file sink every hand-rolled binary writer
     * shares. One file per distinct `key` value:
     * - files under `dir` matching `glob` are deleted first, so a rerun
     *   that lands fewer shards leaves no stale file for a reader's glob;
-    * - rows are repartitioned on `key` and sorted by `key ++ sortBy`
-    *   within each partition, so one task owns each shard and its bytes
-    *   are deterministic;
-    * - the owning task opens one buffered stream at `dir/fileName(row)`
-    *   (named from the shard's first row) and hands `encode` the stream
-    *   and the shard's rows in order; `encode` consumes them all and
-    *   returns its record count;
-    * - the driver collects `(file, records)` — one entry per shard — and
-    *   requires every reported file to be visible. An executor writes
-    *   through java.nio, so `dir` must be on a filesystem the executors
-    *   share with the driver.
+    * - rows are repartitioned on `key`, or with `stripes` > 0 into
+    *   exactly `stripes` tasks on the first key column alone (its value
+    *   is the task's index, in [0, stripes); AQE cannot coalesce an
+    *   explicit count), so one task owns each shard, or each stripe of
+    *   shards;
+    * - within a task rows are sorted by `order`, which must keep each
+    *   shard's rows together (a shard whose rows come apart fails the
+    *   write) and makes a shard's bytes deterministic;
+    * - each task makes one `ShardTask` with `task`; for each of its
+    *   shards it opens one buffered stream at `dir/fileName(row)` (named
+    *   from the shard's first row) and hands `encode` the stream and the
+    *   shard's rows in order, which it must consume;
+    * - the driver collects each task's `(file, records)` and its
+    *   `result` (task-count-bounded) and requires every reported file to
+    *   be visible. An executor writes through java.nio, so `dir` must be
+    *   on a filesystem the executors share with the driver.
+    * Returns every file with its record count, and every task's result.
     */
-  def writeShardFiles(rows: DataFrame, dir: String, glob: String,
-      key: Seq[String], sortBy: Seq[String], fileName: Row => String)(
-      encode: (OutputStream, Iterator[Row]) => Long): Seq[(String, Long)] = {
+  def writeShardFiles[S: Encoder](rows: DataFrame, dir: String, glob: String,
+      key: Seq[String], order: Seq[Column], fileName: Row => String,
+      stripes: Int)(task: () => ShardTask[S]): (Seq[(String, Long)], Seq[S]) = {
     val root = Paths.get(dir)
     Files.createDirectories(root)
     val stale = root.getFileSystem.getPathMatcher(s"glob:$glob")
@@ -114,36 +143,40 @@ object Sources {
     finally old.close()
     import rows.sparkSession.implicits._
     val keyIdx = key.map(rows.schema.fieldIndex).toArray
-    val written = rows
-      .repartition(key.map(col): _*)
-      .sortWithinPartitions((key ++ sortBy).map(col): _*)
+    val parted =
+      if (stripes > 0) rows.repartitionById(stripes, col(key.head).cast("int"))
+      else rows.repartition(key.map(col): _*)
+    val perTask = parted
+      .sortWithinPartitions(order: _*)
       .mapPartitions { it: Iterator[Row] =>
+        val t = task()
         val buf = it.buffered
-        new Iterator[(String, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (String, Long) = {
-            val first = buf.head
-            val name = fileName(first)
-            val shard = new Iterator[Row] {
-              def hasNext: Boolean =
-                buf.hasNext && keyIdx.forall(i => buf.head.get(i) == first.get(i))
-              def next(): Row = buf.next()
-            }
-            val out = new BufferedOutputStream(Files.newOutputStream(Paths.get(dir, name)))
-            val n = try encode(out, shard) finally out.close()
-            require(!shard.hasNext, s"encoder for $name left rows unwritten")
-            (name, n)
+        val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+        while (buf.hasNext) {
+          val first = buf.head
+          val name = fileName(first)
+          require(!files.exists(_._1 == name), s"the rows of $name are not together in their task")
+          val shard = new Iterator[Row] {
+            def hasNext: Boolean =
+              buf.hasNext && keyIdx.forall(i => buf.head.get(i) == first.get(i))
+            def next(): Row = buf.next()
           }
+          val out = new BufferedOutputStream(Files.newOutputStream(Paths.get(dir, name)))
+          val n = try t.encode(out, shard) finally out.close()
+          require(!shard.hasNext, s"encoder for $name left rows unwritten")
+          files += name -> n
         }
-      }
-      .collect() // shard-count-bounded
+        Iterator.single((files.toSeq, t.result))
+      }(Encoders.tuple(implicitly[Encoder[Seq[(String, Long)]]], implicitly[Encoder[S]]))
+      .collect() // task-count-bounded
+    val written = perTask.toSeq.flatMap(_._1)
     val invisible = written.map(_._1).filterNot(n => Files.exists(Paths.get(dir, n)))
     if (invisible.nonEmpty)
       throw new IllegalStateException(
         s"${invisible.length} executor-written shard file(s) under $dir are not visible " +
           s"to the driver (e.g. ${invisible.head}): deploy with a filesystem shared " +
           "between executors and driver")
-    written.toSeq
+    (written, perTask.toSeq.map(_._2))
   }
 
   /** The read half of `writeShardFiles`: every file under `dir` whose name

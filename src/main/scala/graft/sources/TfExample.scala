@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
+import graft.swivel.SwivelPrep
 
 /** Dependency-free encoder for `tensorflow.Example` protos and TFRecord
   * framing — the reference pipeline's ACTUAL output format (one serialized
@@ -284,6 +285,12 @@ object TfExample {
         "global_row", "global_col", "weight")
   }
 
+  /** What `writeSwivelPbShards` wrote: its cell count, and from a counts
+    * relation with n1..nW each row's integer totals over its cells,
+    * `rowTotals(id * W + k - 1)` = Σ n_k of row id (empty from a weighted
+    * relation). */
+  final case class PbShards(cells: Long, rowTotals: Array[Long])
+
   /** Write the sharded co-occurrence matrix in the reference's own output
     * format: one `shard-RRR-CCC.pb` file per (row_shard, col_shard), each a
     * serialized Example with the shard's row/col id lists and its nonzero
@@ -291,51 +298,107 @@ object TfExample {
     *   global_row / global_col : Int64List, ids k*numShards + shardIdx
     *   sparse_local_row/col    : Int64List, one entry per nonzero cell
     *   sparse_value            : FloatList, the cell weights
-    * Each shard is encoded by the one executor task that owns it
-    * (`Sources.writeShardFiles`), so nothing shard-sized ever sits on the
-    * driver; a rerun into the same `dir` first deletes the old grid. An
-    * empty vocabulary has zero shards: the old grid is deleted and no
-    * file is written. Returns the number of cells written.
+    * `cells` is a counts relation (row_id, col_id, n1..nW) whose cells may
+    * be split over several rows (`SwivelPrep.partialCounts`, or the
+    * merged `cellCounts`), or a weighted relation as `SwivelPrep.shard`
+    * returns it (global_row, global_col, weight; one row per cell).
+    *
+    * The rows shuffle once, on the row stripe row_id % numShards, into
+    * exactly numShards tasks (`Sources.writeShardFiles`). Each task sorts
+    * its stripe by (col_id % numShards, row_id, col_id), sums each cell's
+    * partial n_k, weighs it (`SwivelPrep.cellWeight`), writes the stripe's
+    * files and returns the n_k totals of its rows; nothing shard-sized
+    * ever sits on the driver. A rerun into the same `dir` first deletes
+    * the old grid; an empty vocabulary has zero shards, so the old grid is
+    * deleted and no file is written.
     */
-  def writeSwivelPbShards(shards: DataFrame, numShards: Int, vocabSize: Int,
-      dir: String): Long = {
+  def writeSwivelPbShards(cells: DataFrame, numShards: Int, vocabSize: Int,
+      dir: String): PbShards = {
     val rowsPerShard = if (numShards == 0) 0 else vocabSize / numShards
     require(numShards >= 0 && rowsPerShard * numShards == vocabSize,
       s"vocabSize $vocabSize must be a multiple of numShards $numShards")
-    val written = Sources.writeShardFiles(
-      shards.select(col("row_shard").cast("long"), col("col_shard").cast("long"),
-        col("local_row").cast("long"), col("local_col").cast("long"),
-        col("weight").cast("double")),
-      dir, "shard-*.pb", Seq("row_shard", "col_shard"), Seq("local_row", "local_col"),
-      r => pbName(r.getLong(0), r.getLong(1))) { (out, shard) =>
-      val cells = shard.toIndexedSeq
-      out.write(shardExample(cells.head.getLong(0), cells.head.getLong(1),
-        numShards, rowsPerShard, cells))
-      cells.length.toLong
-    }
+    val w = cells.columns.count(_.matches("n\\d+"))
+    val (rowId, colId) =
+      if (w == 0) (col("global_row"), col("global_col")) else (col("row_id"), col("col_id"))
+    val values = if (w == 0) Seq(col("weight").cast("double")) else (1 to w).map(k => col(s"n$k"))
+    val stripes = math.max(numShards, 1)
+    val rows = cells.select(Seq((rowId % stripes).as("row_shard"), (colId % stripes).as("col_shard"),
+      rowId.cast("long").as("row_id"), colId.cast("long").as("col_id")) ++ values: _*)
+    // a stripe's cells in (col_shard, row_id, col_id) order as one long,
+    // below vocabSize², so the sort compares prefixes only
+    val order = expr(s"(col_shard * $rowsPerShard + row_id div $stripes) * $vocabSize + col_id")
+    import cells.sparkSession.implicits._
+    val (written, totals) = Sources.writeShardFiles(rows, dir, "shard-*.pb",
+      Seq("row_shard", "col_shard"), Seq(order), r => pbName(r.getLong(0), r.getLong(1)),
+      stripes)(() => new StripeTask(numShards, rowsPerShard, w))
     // the reference layout contains ALL numShards² files — a shard with
     // zero nonzero cells still carries its global id stripes. Such pairs
-    // never appear in the shards DataFrame, so backfill them here (each
-    // missing file is a few hundred bytes; the loop touches only the
-    // holes, usually none on a dense co-occurrence matrix)
+    // never appear in `cells`, so backfill them here (each missing file
+    // is a few hundred bytes; the loop touches only the holes, usually
+    // none on a dense co-occurrence matrix)
     for (r <- 0L until numShards; c <- 0L until numShards) {
       val p = java.nio.file.Paths.get(dir, pbName(r, c))
       if (!java.nio.file.Files.exists(p))
-        java.nio.file.Files.write(p, shardExample(r, c, numShards, rowsPerShard, Nil))
+        java.nio.file.Files.write(p, shardExample(r, c, numShards, rowsPerShard, Nil, Nil, Nil))
     }
-    written.map(_._2).sum
+    val rowTotals = new Array[Long](if (w == 0) 0 else vocabSize * w)
+    for ((r, t) <- totals.flatten; local <- 0 until rowsPerShard)
+      System.arraycopy(t, local * w, rowTotals, (local * numShards + r.toInt) * w, w)
+    PbShards(written.map(_._2).sum, rowTotals)
+  }
+
+  /** One stripe task of `writeSwivelPbShards` over rows (row_shard,
+    * col_shard, row_id, col_id, n1..nW | weight) sorted by (col_shard,
+    * row_id, col_id): encodes each shard, and keeps the n_k totals of
+    * each stripe's rows by local row. */
+  private final class StripeTask(numShards: Int, rowsPerShard: Int, w: Int)
+      extends Sources.ShardTask[Seq[(Long, Array[Long])]] {
+    private val totals = scala.collection.mutable.LinkedHashMap.empty[Long, Array[Long]]
+    private val n = new Array[Long](w)
+
+    def encode(out: java.io.OutputStream, shard: Iterator[Row]): Long = {
+      val rows = shard.buffered
+      val (r, c) = (rows.head.getLong(0), rows.head.getLong(1))
+      val rowTotals = totals.getOrElseUpdate(r, new Array[Long](rowsPerShard * w))
+      val localRows, localCols = Seq.newBuilder[Long]
+      val weights = Seq.newBuilder[Float]
+      var cells = 0L
+      while (rows.hasNext) {
+        val first = rows.next()
+        val (x, y) = (first.getLong(2), first.getLong(3))
+        val weight = if (w == 0) first.getDouble(4) else {
+          for (k <- 0 until w) n(k) = first.getLong(4 + k)
+          while (rows.hasNext && rows.head.getLong(2) == x && rows.head.getLong(3) == y) {
+            val more = rows.next()
+            for (k <- 0 until w) n(k) += more.getLong(4 + k)
+          }
+          val at = (x / numShards).toInt * w
+          for (k <- 0 until w) rowTotals(at + k) += n(k)
+          SwivelPrep.cellWeight(n, 0, w)
+        }
+        localRows += x / numShards
+        localCols += y / numShards
+        weights += weight.toFloat
+        cells += 1
+      }
+      out.write(shardExample(r, c, numShards, rowsPerShard, localRows.result(),
+        localCols.result(), weights.result()))
+      cells
+    }
+
+    def result: Seq[(Long, Array[Long])] = totals.toSeq
   }
 
   private def pbName(r: Long, c: Long): String = f"shard-$r%03d-$c%03d.pb"
 
   /** One shard's Example: global id stripes + the (possibly empty)
     * sparse cell lists in (local_row, local_col) order. */
-  private def shardExample(r: Long, c: Long, numShards: Int,
-      rowsPerShard: Int, cells: Seq[Row]): Array[Byte] =
+  private def shardExample(r: Long, c: Long, numShards: Int, rowsPerShard: Int,
+      localRows: Seq[Long], localCols: Seq[Long], weights: Seq[Float]): Array[Byte] =
     example(Seq(
       "global_row" -> int64Feature((0 until rowsPerShard).map(k => k.toLong * numShards + r)),
       "global_col" -> int64Feature((0 until rowsPerShard).map(k => k.toLong * numShards + c)),
-      "sparse_local_row" -> int64Feature(cells.map(_.getLong(2))),
-      "sparse_local_col" -> int64Feature(cells.map(_.getLong(3))),
-      "sparse_value" -> floatFeature(cells.map(_.getDouble(4).toFloat))))
+      "sparse_local_row" -> int64Feature(localRows),
+      "sparse_local_col" -> int64Feature(localCols),
+      "sparse_value" -> floatFeature(weights)))
 }

@@ -1,17 +1,21 @@
 package graft.swivel
 
-import org.apache.spark.sql.SparkSession
-import graft.sources.Sources
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.sources.{Sources, TfExample}
 
 /** End-to-end Swivel-prep CLI — the spark-submit entry point mirroring the
   * reference driver's flag surface (SURVEY.md §3.1 E1: --input,
   * --output_dir, --shard_size, --min_count, --window_size).
   *
-  * Reads a corpus (plain-text lines or a parquet documents table), ranks
-  * its vocab on the driver (`SwivelPrep.rankVocab`) and lands the per-cell
-  * distance counts of the one pair pass once (`SwivelPrep.prepare`); the
-  * cells, the marginals and the shards all read that landing, and the
-  * sizes it reports are driver facts. Writes:
+  * Reads a corpus (plain-text lines or a parquet documents table) and
+  * ranks its vocab on the driver (`SwivelPrep.rankVocab`). For `.pb`
+  * output the pair pass's partial cell counts go straight to
+  * `TfExample.writeSwivelPbShards`: one shuffle on the row stripe, whose
+  * tasks write the shards and return their rows' n_k totals, from which
+  * the driver computes the marginals; nothing lands. For parquet output
+  * the counts land once (`SwivelPrep.prepare`) and the shards and the
+  * marginals read that landing. Writes:
   *   <output_dir>/shards/   parquet partitioned by (row_shard, col_shard)
   *                          (or shards_pb/ + the .txt side files for pb)
   *   <output_dir>/vocab/    (id, token, cnt)
@@ -28,23 +32,49 @@ object SwivelMain {
       minCount: Int = 5, windowSize: Int = 10, inputFormat: String = "text",
       outputFormat: String = "parquet")
 
-  /** Flag parsing; prints the usage and exits 2 without --input/--output_dir. */
-  private def parse(args: Array[String]): Options = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    def required(k: String) = opts.getOrElse(k, { System.err.println(usage); sys.exit(2) })
-    val d = Options(required("input"), required("output_dir"))
-    d.copy(
-      shardSize = opts.get("shard_size").fold(d.shardSize)(_.toInt),
-      minCount = opts.get("min_count").fold(d.minCount)(_.toInt),
-      windowSize = opts.get("window_size").fold(d.windowSize)(_.toInt),
-      inputFormat = opts.getOrElse("input_format", d.inputFormat),
-      outputFormat = opts.getOrElse("output_format", d.outputFormat))
+  private val flags = Set("input", "output_dir", "shard_size", "min_count", "window_size",
+    "input_format", "output_format")
+
+  /** Flag parsing: the options, or what is wrong with `args` — a flag
+    * that is unknown, repeated or has no value, a missing --input or
+    * --output_dir, a size that is not a positive integer, or a format
+    * outside its choices. */
+  private[graft] def parse(args: Array[String]): Either[String, Options] = {
+    val pairs = args.grouped(2).toSeq
+    val bad = pairs.collectFirst {
+      case Array(k, _) if !k.startsWith("--") || !flags(k.drop(2)) => s"unknown flag $k"
+      case Array(k) => s"flag $k has no value"
+      case Array(k, v) if v.startsWith("--") => s"flag $k has no value"
+    }
+    val opts = pairs.collect { case Array(k, v) => k.drop(2) -> v }.toMap
+    def int(k: String, default: Int): Either[String, Int] = opts.get(k) match {
+      case None => Right(default)
+      case Some(v) => v.toIntOption.filter(_ > 0).toRight(s"--$k must be a positive integer, not $v")
+    }
+    def choice(k: String, default: String, of: Set[String]): Either[String, String] = {
+      val v = opts.getOrElse(k, default)
+      if (of(v)) Right(v) else Left(s"--$k must be one of ${of.mkString("|")}, not $v")
+    }
+    def required(k: String) = opts.get(k).toRight(s"--$k is required")
+    val d = Options("", "")
+    for {
+      _ <- bad.toLeft(())
+      _ <- Either.cond(opts.size == pairs.size, (), "a flag is given twice")
+      input <- required("input")
+      outDir <- required("output_dir")
+      shardSize <- int("shard_size", d.shardSize)
+      minCount <- int("min_count", d.minCount)
+      windowSize <- int("window_size", d.windowSize)
+      inputFormat <- choice("input_format", d.inputFormat, Set("text", "parquet"))
+      outputFormat <- choice("output_format", d.outputFormat, Set("parquet", "pb"))
+    } yield Options(input, outDir, shardSize, minCount, windowSize, inputFormat, outputFormat)
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = parse(args)
+    val opts = parse(args).fold({ err =>
+      System.err.println(s"swivel-prep: $err\n$usage")
+      sys.exit(2)
+    }, identity)
     val builder = SparkSession.builder()
       .appName("swivel-prep")
       .config("spark.sql.session.timeZone", "UTC")
@@ -64,6 +94,10 @@ object SwivelMain {
     a
   }
 
+  /** The schema of `row_sums/`, as `SwivelPrep.marginalsFromCounts` has it. */
+  private val marginalSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false), StructField("marginal", DoubleType)))
+
   /** The whole pipeline on `spark`, corpus to every output file, with one
     * stderr line per layer. */
   def run(spark: SparkSession, opts: Options): Unit = {
@@ -74,40 +108,51 @@ object SwivelMain {
     }
     val ranked = layer("vocab")(SwivelPrep.rankVocab(docs, minCount, shardSize))(r =>
       s"${r.length} rows")
-    val prepared = layer("cells")(SwivelPrep.prepare(docs, ranked, shardSize, windowSize))(_ =>
-      "counts landed")
-    import prepared.{counts, marginals, numShards, shards, tokens, vocab, vocabSize}
+    val tokens = ranked.map(_._1)
+    val vocab = SwivelPrep.vocabRelation(spark, ranked)
+    val vocabSize = tokens.length
+    val numShards = vocabSize / shardSize
     val pb = outputFormat == "pb"
-    val cells = if (vocabSize == 0) {
+    // each (id, marginal) of a row with any in-window pair; the sums are
+    // driver-bounded (truncated vocabulary) and feed both the sums text
+    // files and the row_sums/ parquet
+    val (cells, marginals) = if (vocabSize == 0) {
       // corpus smaller than one shard: vocab truncates to zero — mirror
       // the parquet path's graceful empty output instead of crashing in
       // the .pb writer's require
       System.err.println(
         s"swivel-prep: vocabulary is empty after truncation to a multiple " +
           s"of shard_size=$shardSize — no shards to write")
-      0L
-    } else if (pb) {
+      (0L, Array.empty[(Long, Double)])
+    } else if (pb) layer("shards") {
       // the reference trainer's own input layout: one serialized
       // tensorflow.Example per shard (shard-RRR-CCC.pb)
-      layer("shards")(graft.sources.TfExample.writeSwivelPbShards(shards,
-        numShards, vocabSize, s"$outDir/shards_pb"))(n =>
-        s"${numShards * numShards} files, $n cells")
-    } else layer("shards") {
-      Sources.writeShards(shards, s"$outDir/shards")
-      counts.count()
-    }(n => s"$n cells")
+      val written = TfExample.writeSwivelPbShards(
+        SwivelPrep.partialCounts(docs, vocab, windowSize), numShards, vocabSize,
+        s"$outDir/shards_pb")
+      val totals = written.rowTotals
+      (written.cells, (0 until vocabSize).iterator
+        .filter(id => (0 until windowSize).exists(k => totals(id * windowSize + k) != 0L))
+        .map(id => id.toLong -> SwivelPrep.cellWeight(totals, id * windowSize, windowSize))
+        .toArray)
+    }(r => s"${numShards * numShards} files, ${r._1} cells")
+    else layer("shards") {
+      val prepared = SwivelPrep.prepare(docs, ranked, shardSize, windowSize)
+      Sources.writeShards(prepared.shards, s"$outDir/shards")
+      val result = (prepared.counts.count(),
+        prepared.marginals.collect().map(r => r.getLong(0) -> r.getDouble(1)))
+      // free the landed counts: `run` may share a long-lived session
+      org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint(prepared.counts)
+      result
+    }(r => s"${r._1} cells")
     layer("side files") {
-      // vocab and sums are driver-bounded (truncated vocabulary): the
-      // marginals are collected once and feed both the sums text files
-      // and the row_sums/ parquet
-      val margRows = marginals.collect()
       if (pb && vocabSize > 0) {
         // the vocab/sums TEXT side files the reference trainer loads
         // beside the .pb shards; the matrix is symmetric, so row and col
         // files are identical. Every vocab id gets a sum line; ids with
         // no in-window pairs are 0
         val sums = Array.fill(vocabSize)(0.0)
-        margRows.foreach(r => sums(r.getLong(0).toInt) = r.getDouble(1))
+        marginals.foreach { case (id, m) => sums(id.toInt) = m }
         def writeLines(name: String, lines: Iterable[String]): Unit =
           java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name"),
             (lines.mkString("\n") + "\n").getBytes("UTF-8"))
@@ -121,13 +166,10 @@ object SwivelMain {
         writeLines("col_sums.txt", sums.map(v => f"$v%.4f"))
       }
       Sources.writeSideOutput(vocab, s"$outDir/vocab")
-      Sources.writeSideOutput(
-        spark.createDataFrame(java.util.Arrays.asList(margRows: _*), marginals.schema),
-        s"$outDir/row_sums")
+      Sources.writeSideOutput(spark.createDataFrame(java.util.Arrays.asList(
+        marginals.map { case (id, m) => Row(id, m) }: _*), marginalSchema), s"$outDir/row_sums")
       if (pb && vocabSize > 0) 6 else 2
     }(n => s"$n files")
     println(s"swivel-prep done: vocab=$vocabSize cells=$cells -> $outDir")
-    // free the landed counts: `run` may share a long-lived session
-    org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint(counts)
   }
 }

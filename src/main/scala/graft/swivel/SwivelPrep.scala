@@ -30,11 +30,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * generation is one doc_id shuffle of in-vocab token ids, then linear
   * work per document (a sorted sliding window — one huge document is one
   * sorted linear-time task, never a quadratic one) whose pairs each task
-  * counts per cell in a bounded table; the partial cell counts shuffle
-  * once on (row_id, col_id); sharding is a pure projection. Hot (Zipfian)
-  * tokens skew the cooc shuffle — AQE skew-join handles it, and the
-  * groupBy key (row_id, col_id) already spreads a hot row across its
-  * column partners.
+  * counts per cell in a bounded table. Those partial counts shuffle
+  * once more: for `prepare`'s landing on (row_id, col_id), where a hot
+  * (Zipfian) row spreads across its column partners; for SwivelMain's
+  * `.pb` shards on the row stripe row_id % numShards, one task per
+  * stripe, which merges each cell's partial rows in sorted order, writes
+  * the stripe's numShards shard files and returns its rows' integer n_k
+  * totals, from which the driver computes the marginals
+  * (`TfExample.writeSwivelPbShards`). A stripe holds 1/numShards of the
+  * cells, and its task sorts them with Spark's spilling sorter.
   */
 object SwivelPrep {
 
@@ -76,7 +80,7 @@ object SwivelPrep {
   }
 
   /** A ranked vocabulary as a local (id, token, cnt) relation. */
-  private def vocabRelation(spark: SparkSession, ranked: Array[(String, Long)]): DataFrame = {
+  private[swivel] def vocabRelation(spark: SparkSession, ranked: Array[(String, Long)]): DataFrame = {
     import spark.implicits._
     ranked.toSeq.zipWithIndex.map { case ((t, c), i) => (i.toLong, t, c) }
       .toDF("id", "token", "cnt")
@@ -293,22 +297,45 @@ object SwivelPrep {
   private def weight(windowSize: Int): Column =
     round(fromCounts(windowSize)((n, k) => n / lit(k.toDouble)), 4)
 
+  /** `weight` in Scala, over n_1..n_w at `n(from)`..`n(from + w - 1)`:
+    * the same left-to-right double sum of n_k/k, then Spark's `round(_, 4)`
+    * on a double (HALF_UP on its shortest decimal form, which is what
+    * `BigDecimal.valueOf` reads). The `.pb` stripe tasks weigh cells with
+    * it and the driver weighs the marginals; PropertySpec pins it to
+    * `cellsFromCounts` and `marginalsFromCounts` bit for bit. */
+  private[graft] def cellWeight(n: Array[Long], from: Int, w: Int): Double = {
+    var sum = n(from).toDouble
+    var k = 2
+    while (k <= w) {
+      sum += n(from + k - 1).toDouble / k
+      k += 1
+    }
+    java.math.BigDecimal.valueOf(sum).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+  }
+
   /** Per-cell pair counts: (row_id, col_id, n1..nW), n_k the number of
     * in-window co-occurrences at distance k. Every other Swivel relation
     * (cells, marginals, shards) derives from these exact integers, so
     * `prepare` lands them once and every consumer reads that landing.
-    * Each pair task counts its own cells (`countCells`); one sum per n_k
-    * merges the tasks' partial rows. */
+    * One sum per n_k merges the pair tasks' `partialCounts`. */
   def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
     cellCounts(docs, vocab, windowSize, CellSlots)
 
   private[graft] def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int,
-      maxSlots: Int): DataFrame = {
+      maxSlots: Int): DataFrame =
+    distanceCounts(partialCounts(docs, vocab, windowSize, maxSlots), windowSize,
+      "row_id", "col_id")
+
+  /** The pair pass's own output: each pair task counts its cells
+    * (`countCells`) into (row_id, col_id, n1..nW) rows, so a cell's counts
+    * may be split over several rows, from several tasks or flushes; their
+    * integer sums are `cellCounts`. */
+  private[graft] def partialCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int,
+      maxSlots: Int = CellSlots): DataFrame = {
     val schema = StructType(("row_id" +: "col_id" +: (1 to windowSize).map(k => s"n$k"))
       .map(StructField(_, LongType, nullable = false)))
-    val partial = docTokens(docs, vocab)
+    docTokens(docs, vocab)
       .mapPartitions(rows => countCells(windowSize, rows, maxSlots))(Encoders.row(schema))
-    distanceCounts(partial, windowSize, "row_id", "col_id")
   }
 
   /** Co-occurrence cells from `cellCounts`: (row_id, col_id, weight). */

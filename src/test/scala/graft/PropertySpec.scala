@@ -58,6 +58,39 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("cellWeight equals the cellsFromCounts and marginalsFromCounts columns bit for bit") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val rng = new scala.util.Random(7)
+    for (w <- Seq(1, 3, 10, 32)) {
+      // 30 rows of random counts, small and large, many zero; with w = 32
+      // an odd n32 alone puts the sum on a .00005 tie (1/32 = 0.03125)
+      val counts = (0 until 600).map { i =>
+        val n = Array.tabulate(w)(_ =>
+          if (rng.nextInt(3) == 0) 0L else rng.nextInt(if (i % 2 == 0) 7 else 1000000).toLong)
+        if (w == 32 && i % 5 == 0) { java.util.Arrays.fill(n, 0L); n(31) = 2L * i + 1 }
+        ((i % 30).toLong, i.toLong, n)
+      }
+      val schema = StructType(("row_id" +: "col_id" +: (1 to w).map(k => s"n$k"))
+        .map(StructField(_, LongType, nullable = false)))
+      val df = spark.createDataFrame(java.util.Arrays.asList(
+        counts.map { case (r, c, n) => Row.fromSeq(r +: c +: n.toSeq) }: _*), schema)
+      def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+      val cells = SwivelPrep.cellsFromCounts(df, w).as[(Long, Long, Double)].collect()
+        .map { case (_, c, x) => c -> bits(x) }.toMap
+      assert(counts.map { case (_, c, n) => c -> bits(SwivelPrep.cellWeight(n, 0, w)) }.toMap ==
+        cells, s"cells, window $w")
+      val totals = counts.groupMapReduce(_._1)(_._3)(_.zip(_).map { case (a, b) => a + b })
+      val marg = SwivelPrep.marginalsFromCounts(df, w).as[(Long, Double)].collect()
+        .map { case (r, x) => r -> bits(x) }.toMap
+      assert(totals.map { case (r, n) => r -> bits(SwivelPrep.cellWeight(n, 0, w)) } == marg,
+        s"marginals, window $w")
+    }
+    // the tie rounds half up, as Spark's round does
+    assert(SwivelPrep.cellWeight(Array.fill(31)(0L) :+ 1L, 0, 32) == 0.0313)
+    assert(SwivelPrep.cellWeight(Array.fill(31)(0L) :+ 3L, 0, 32) == 0.0938)
+  }
+
   // frequent and rare tokens, so minCount > 1 leaves OOV gaps; documents
   // from 1 token (shorter than any window) up to 25; the last generated
   // row reuses the first row's doc_id and one more row has a null doc_id

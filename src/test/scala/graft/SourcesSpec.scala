@@ -91,8 +91,11 @@ class SourcesSpec extends AnyFunSuite {
 
   test("join_bucketed declared key: no Exchange below the SortMergeJoin") {
     import graft.ops.Extras
+    // an own session: the `finally` drops the tables its memo entry
+    // points at, which must not be the shared session's entry
+    val s = spark.newSession()
     try {
-      val df = Extras.joinBucketedPlan(spark, "/root/testdata/sf0.001")
+      val df = Extras.joinBucketedPlan(s, "/root/testdata/sf0.001")
       df.collect() // materialize → final AQE plan
       val p = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -108,9 +111,9 @@ class SourcesSpec extends AnyFunSuite {
       assert(!belowJoin.contains("Exchange"),
         s"bucketed join key still shuffles below the join:\n$belowJoin")
     } finally {
-      val sfx = graft.ops.Extras.bucketedTableSuffix(spark, "/root/testdata/sf0.001")
-      spark.sql(s"DROP TABLE IF EXISTS graft_bkt_orders_$sfx")
-      spark.sql(s"DROP TABLE IF EXISTS graft_bkt_lineitem_$sfx")
+      val sfx = graft.ops.Extras.bucketedTableSuffix(s, "/root/testdata/sf0.001")
+      s.sql(s"DROP TABLE IF EXISTS graft_bkt_orders_$sfx")
+      s.sql(s"DROP TABLE IF EXISTS graft_bkt_lineitem_$sfx")
     }
   }
 

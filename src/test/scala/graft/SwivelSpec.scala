@@ -180,17 +180,40 @@ class SwivelSpec extends AnyFunSuite {
     jobs.get
   }
 
-  test("SwivelMain.run: a budget of 12 Spark jobs on the .pb path, 14 on parquet") {
-    // vocab aggregate 2, pair pass and cell merge 3, .pb shard write 2,
-    // marginals 2, vocab/ and row_sums/ writes 1 each (the parquet path
-    // writes its shards in 2 jobs and counts the cells in 1)
+  test("SwivelMain.run: a budget of 8 Spark jobs on the .pb path, 14 on parquet") {
+    // both: vocab aggregate 2, vocab broadcast 1, vocab/ and row_sums/
+    // writes 1 each. .pb: pair pass 1, stripe shuffle and shard write 2,
+    // and nothing left persisted. Parquet: counts landing 3, shard write 2,
+    // cell count 2, marginals 2
     val dir = corpus("a b a c b a", "c a b b a", "b c a a c b")
-    for ((fmt, budget) <- Seq("pb" -> 12, "parquet" -> 14)) {
+    for ((fmt, budget) <- Seq("pb" -> 8, "parquet" -> 14)) {
       val opts = SwivelMain.Options(input = dir.resolve("corpus.txt").toString,
         outDir = dir.resolve(s"out_$fmt").toString, shardSize = 1, minCount = 1,
         windowSize = 3, outputFormat = fmt)
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
       assert(jobCount(spark)(SwivelMain.run(spark, opts)) == budget, fmt)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, s"$fmt left an RDD persisted")
     }
+  }
+
+  test("SwivelMain.parse rejects an unknown, dangling or repeated flag and a bad value") {
+    val base = Array("--input", "in", "--output_dir", "out")
+    assert(SwivelMain.parse(base ++ Array("--window_size", "2", "--output_format", "pb")) ==
+      Right(SwivelMain.Options("in", "out", windowSize = 2, outputFormat = "pb")))
+    val rejected = Seq(
+      Array("--window", "2"),                   // misspelled flag
+      Array("--window_size", "2", "--min_count"), // dangling flag
+      Array("--window_size", "--min_count", "5"), // flag with a flag for its value
+      Array("--window_size", "2", "--window_size", "3"),
+      Array("window_size", "2"),
+      Array("--output_format", "tfrecord"),
+      Array("--input_format", "csv"),
+      Array("--shard_size", "0"),
+      Array("--min_count", "five"))
+    for (extra <- rejected)
+      assert(SwivelMain.parse(base ++ extra).isLeft, extra.mkString(" "))
+    assert(SwivelMain.parse(Array("--input", "in")).isLeft)
+    assert(SwivelMain.parse(Array.empty).isLeft)
   }
 
   test("SwivelMain.run: vocab/ and row_sums/ keep their parquet schema on both formats") {

@@ -171,7 +171,8 @@ class TfExampleSpec extends AnyFunSuite {
     val numShards = vocabSize // shardSize = 1
     val shards = SwivelPrep.shard(SwivelPrep.cooc(docs, vocab, 2), vocab, 1)
     val dir = Files.createTempDirectory("graft_pb_grid").toString
-    TfExample.writeSwivelPbShards(shards, numShards, vocabSize, dir)
+    TfExample.writeSwivelPbShards(SwivelPrep.cellCounts(docs, vocab, 2), numShards, vocabSize,
+      dir)
     val files = new java.io.File(dir).listFiles().map(_.getName).toSet
     val expected = (for (r <- 0 until numShards; c <- 0 until numShards)
       yield f"shard-$r%03d-$c%03d.pb").toSet
@@ -241,5 +242,39 @@ class TfExampleSpec extends AnyFunSuite {
       assert(parsed("sparse_local_col")._1 == sorted.map(_._4).toSeq)
       assert(parsed("sparse_value")._2 == sorted.map(_._5.toFloat).toSeq)
     }
+  }
+
+  test("writeSwivelPbShards: split counts, merged counts and the shard relation write the same files") {
+    import org.apache.spark.sql.functions.{col, expr}
+    val docs = Seq((0L, "a a b b c c d d"), (1L, "a b c d a b c d"), (2L, "d c b a a"))
+      .toDF("doc_id", "text")
+    val vocab = SwivelPrep.buildVocab(docs, minCount = 1, shardSize = 2)
+    val (vocabSize, numShards, w) = (4, 2, 3)
+    val counts = SwivelPrep.cellCounts(docs, vocab, w)
+    // every cell's counts in two rows, as the pair tasks may split them
+    def part(f: Int => String) =
+      counts.select(col("row_id") +: col("col_id") +: (1 to w).map(k => expr(f(k)).as(s"n$k")): _*)
+    val split = part(k => s"n$k div 2").union(part(k => s"n$k - n$k div 2"))
+    def write(cells: org.apache.spark.sql.DataFrame) = {
+      val dir = Files.createTempDirectory("graft_pb_forms").toString
+      (dir, TfExample.writeSwivelPbShards(cells, numShards, vocabSize, dir))
+    }
+    def files(dir: String) = new java.io.File(dir).listFiles().sortBy(_.getName)
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toSeq
+    val (splitDir, fromSplit) = write(split)
+    val (countsDir, fromCounts) = write(counts)
+    val (shardsDir, fromShards) = write(SwivelPrep.shard(SwivelPrep.cellsFromCounts(counts, w),
+      vocab, 2))
+    assert(files(splitDir).length == numShards * numShards)
+    assert(files(splitDir) == files(countsDir))
+    assert(files(splitDir) == files(shardsDir))
+    assert(fromSplit.cells == counts.count())
+    assert(fromCounts.cells == fromSplit.cells && fromShards.cells == fromSplit.cells)
+    // the row totals are each row's summed n_k, which weigh to the marginals
+    assert(fromSplit.rowTotals.toSeq == fromCounts.rowTotals.toSeq)
+    assert(fromShards.rowTotals.isEmpty)
+    val marg = SwivelPrep.marginalsFromCounts(counts, w).as[(Long, Double)].collect().toMap
+    assert((0 until vocabSize).map(id => SwivelPrep.cellWeight(fromSplit.rowTotals, id * w, w)) ==
+      (0 until vocabSize).map(id => marg.getOrElse(id.toLong, 0.0)))
   }
 }
